@@ -71,6 +71,57 @@ object Bench {
     ts(ts.length / 2)
   }
 
+  /** One query's outcome: name, median and spread (max − min) seconds
+    * over the timed passes, and the first error a pass raised. */
+  type QueryResult = (String, Double, Double, Option[String])
+
+  // 3-decimal rounding: ms resolution is well inside every recorded
+  // number's own run-internal spread, and it roughly HALVES the full
+  // JSON line — 18 rounds of BENCH_r* carried `parsed: null` because
+  // the unrounded ~232-query line outgrew the driver's bounded stdout
+  // window (r18 verdict finding #1)
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+
+  /** Seconds over the queries that ran clean — errored ones are
+    * excluded (a crash must not record as a speedup). */
+  private[graft] def cleanTotal(results: Seq[QueryResult]): Double =
+    results.collect { case (_, med, _, None) => med }.sum
+
+  /** Mean seconds per CLEAN query — the errored ones neither add time
+    * to [[cleanTotal]] nor count in the divisor. */
+  private[graft] def secondsPerQuery(results: Seq[QueryResult]): Double = {
+    val clean = results.count(_._4.isEmpty)
+    if (clean > 0) cleanTotal(results) / clean else 0.0
+  }
+
+  /** The FULL result line. `queries` stays a flat name->seconds map
+    * (the driver contract) and `spread` its parallel dispersion map;
+    * both carry only clean queries, so a per-query diff never reads an
+    * errored query's phantom near-zero time as a speedup — errored ones
+    * ride the `errors` map (name -> message) and `n_errors` instead.
+    * `run` is the run-level fields, spliced in before the counts. Field
+    * order: the big maps FIRST, the contract scalars
+    * (`metric`/`value`/`unit`) LAST — a JSON parser is order-blind, but
+    * a bounded stdout TAIL truncates from the front, and the r8
+    * artifact lost its head including the total; this way any tail
+    * window ends with `..."metric":"total","unit":"sec","value":N}`. */
+  private[graft] def resultLine(results: Seq[QueryResult],
+                                run: String): String = {
+    val clean = results.filter(_._4.isEmpty)
+    val qs = clean.map { case (k, med, _, _) => "\"" + k + "\":" + r3(med) }
+      .mkString("{", ",", "}")
+    val spreads = clean.map { case (k, _, sp, _) => "\"" + k + "\":" + r3(sp) }
+      .mkString("{", ",", "}")
+    val errored = results.collect { case (k, _, _, Some(e)) => (k, e) }
+    val errJson = errored.map { case (k, e) =>
+      // MiniJson.escape covers every char below 0x20: exception
+      // messages carry CR, tab and newline, and one raw control char
+      // makes the whole line invalid JSON
+      "\"" + k + "\":\"" + graft.core.MiniJson.escape(e) + "\""
+    }.mkString("{", ",", "}")
+    s"""{"queries":$qs,"spread":$spreads,"errors":$errJson,$run,"n_errors":${errored.size},"n_queries":${results.size},"metric":"total","unit":"sec","value":${r3(cleanTotal(results))}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -107,7 +158,7 @@ object Bench {
     // — correctness is Verify's job, but the bench must not reward a
     // crash with a speedup).
     final case class Attempt(
-        results: Seq[(String, Double, Double, Option[String])],
+        results: Seq[QueryResult],
         calBefore: Double, calAfter: Double) {
       val contended: Boolean = contendedVerdict(Seq(calBefore, calAfter))
       // RUN-LEVEL NOISE VERDICT: a pass where many queries' run-internal
@@ -179,22 +230,7 @@ object Bench {
         f"WARNING: calibration probe $calBefore%.2fs/$calAfter%.2fs vs " +
           f"effective healthy ${effectiveHealthySec(Seq(calBefore, calAfter))}%.2fs " +
           "— container contended; timings below overstate the engine's cost")
-    // 3-decimal rounding: ms resolution is well inside every recorded
-    // number's own run-internal spread, and it roughly HALVES the full
-    // JSON line — 18 rounds of BENCH_r* carried `parsed: null` because
-    // the unrounded ~232-query line outgrew the driver's bounded stdout
-    // window (r18 verdict finding #1)
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
-    // "queries" stays a flat name->seconds map (the driver contract);
-    // per-query dispersion is a SEPARATE parallel map
-    val qs = results.map { case (k, med, _, _) => "\"" + k + "\":" + r3(med) }
-      .mkString("{", ",", "}")
-    val spreads = results.map { case (k, _, sp, _) => "\"" + k + "\":" + r3(sp) }
-      .mkString("{", ",", "}")
-    // errored queries: excluded from the total (a crash must not record
-    // as a speedup), carried in a parallel `errors` map plus a loud count
     val errored = results.collect { case (k, _, _, Some(e)) => (k, e) }
-    val total = results.collect { case (_, med, _, None) => med }.sum
     if (errored.nonEmpty) {
       System.err.println(
         s"ERROR: ${errored.size} quer${if (errored.size == 1) "y" else "ies"} " +
@@ -202,10 +238,6 @@ object Bench {
           errored.map(_._1).mkString(", "))
       errored.foreach { case (k, e) => System.err.println(s"  $k: $e") }
     }
-    val errJson = errored.map { case (k, e) =>
-      "\"" + k + "\":\"" + e.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", " ") + "\""
-    }.mkString("{", ",", "}")
     // EVERY attempt's verdict rides along (not just the kept one): a
     // reviewer of a retried run can see what the discarded attempt
     // looked like instead of trusting the selection — the recorded
@@ -214,16 +246,10 @@ object Bench {
       s"""{"calibration_sec":[${r3(a.calBefore)},${r3(a.calAfter)}],""" +
         s""""noisy":${a.noisy},"noisy_count":${a.noisyCount},""" +
         s""""contended":${a.contended},"kept":${a eq att},""" +
-        s""""total":${r3(a.results.collect {
-          case (_, med, _, None) => med }.sum)}}"""
+        s""""total":${r3(cleanTotal(a.results))}}"""
     }.mkString("[", ",", "]")
-    // field order inside the object: the big maps FIRST, the contract
-    // scalars (`metric`/`value`/`unit`) LAST — a JSON parser is order-
-    // blind, but a bounded stdout TAIL truncates from the front, and
-    // the r8 artifact lost its head including the total; this way any
-    // tail window ends with `..."metric":"total","unit":"sec","value":N}`
-    val json =
-      s"""{"queries":$qs,"spread":$spreads,"errors":$errJson,"attempt_log":$attemptLog,"passes":$passes,"sf":"$sfDir","calibration_sec":[${r3(calBefore)},${r3(calAfter)}],"contended":$contended,"noisy":$noisy,"noisy_count":$noisyCount,"attempts":$attempts,"n_errors":${errored.size},"n_queries":${names.size},"metric":"total","unit":"sec","value":${r3(total)}}"""
+    val json = resultLine(results,
+      s""""attempt_log":$attemptLog,"passes":$passes,"sf":"$sfDir","calibration_sec":[${r3(calBefore)},${r3(calAfter)}],"contended":$contended,"noisy":$noisy,"noisy_count":$noisyCount,"attempts":$attempts""")
     // Self-record to a file first — best-effort; a read-only cwd must
     // not fail the bench itself.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
@@ -235,9 +261,8 @@ object Bench {
     // to survive any stdout window, valid JSON carrying the
     // driver-contract scalars (`metric`/`value`/`unit`) plus the noise
     // verdict — the human-readable TL;DR.
-    val sPerQ = if (names.nonEmpty) total / names.size else 0.0
     println(
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","s_per_q":${r3(sPerQ)},"n_queries":${names.size},"n_errors":${errored.size},"noisy":$noisy,"noisy_count":$noisyCount,"contended":$contended,"attempts":$attempts,"summary":true}""")
+      s"""{"metric":"total","value":${r3(cleanTotal(results))},"unit":"sec","sf":"$sfDir","s_per_q":${r3(secondsPerQuery(results))},"n_queries":${names.size},"n_errors":${errored.size},"noisy":$noisy,"noisy_count":$noisyCount,"contended":$contended,"attempts":$attempts,"summary":true}""")
     // The FULL per-query JSON is the FINAL stdout line: the driver reads
     // a bounded stdout tail and had parsed `null` for 18 rounds because
     // this line used to print BEFORE the summary (and unrounded) — last

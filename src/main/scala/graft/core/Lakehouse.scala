@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   * carries its physical address as the hidden `_metadata.file_path` /
   * `_metadata.row_index` columns, so a tombstone is just that pair
   * projected from the rows a predicate matched. Files are immutable
-  * (appends create new files; [[compact]] swaps whole directories), so
-  * a recorded position stays valid until the file itself is replaced —
-  * and replacement ([[compact]], [[Layout.maintainLayout]]'s rebuild)
-  * clears the tombstone set it folded in.
+  * (appends create new files; [[compact]] lands a fresh base and flips
+  * the commit), so a recorded position stays valid until the file
+  * itself is replaced — and replacement ([[compact]],
+  * [[Layout.maintainLayout]]'s rebuild) clears the tombstone set it
+  * folded in.
   *
   * Scan cost model: tombstones name their FILES, so [[scan]] splits
   * the read — files with no tombstones stream through UNTOUCHED (no
@@ -43,7 +44,7 @@ import org.apache.spark.sql.functions._
   * stamped with the table's max generation at delete time. A snapshot
   * at generation g is "data files with gen ≤ g minus tombstones
   * stamped ≤ g" ([[scanAsOf]]); [[rollback]] makes a snapshot
-  * permanent by deleting everything stamped later. Snapshot
+  * permanent by de-committing everything stamped later. Snapshot
   * granularity is the generation: deletes issued while the table sat
   * at generation g fold into g's snapshot. Base files written before
   * any generation (plain `part-*`) belong to every snapshot.
@@ -89,8 +90,8 @@ object Lakehouse {
   // forms' per-batch bodies) is SINGLE-WRITER per table. The mechanics
   // are racy without it: two writers that both read [[currentGen]]
   // land the SAME generation, and [[Layout.appendGeneration]]'s
-  // replay-delete (correct under a single stream's redeliveries) then
-  // silently destroys the other writer's freshly landed rows. Every
+  // replay rule (correct under a single stream's redeliveries) then
+  // silently de-commits the other writer's freshly landed rows. Every
   // public mutator therefore serializes through [[withTableLock]] — a
   // best-effort lease file under `<path>_lock`. Best-effort means: on
   // a filesystem with atomic create-if-absent (HDFS, local) two
@@ -329,48 +330,24 @@ object Lakehouse {
   }
 
   // ------------------------------------------------------------------
-  // Compaction epochs + the snapshot floor: one tiny `<path>_epoch`
-  // marker holding (epoch, floor). [[compact]] (and the
-  // [[Layout.maintainLayout]] rebuild, which IS a compact) bumps the
-  // epoch — generation ids are reused afterwards, so any window a
-  // replica captured before it is meaningless; [[changesBetween]] /
-  // [[scanAsOf]] / [[rollback]] raise on an epoch mismatch instead of
-  // silently serving wrong deltas. [[compactRetaining]] keeps the
-  // epoch (post-floor generations stay addressable) and raises the
-  // FLOOR instead: snapshots below it are expired and raise
-  // unconditionally. The marker is written BEFORE the destructive
-  // swap — a crash between the two leaves replicas raising spuriously
-  // (loud, recoverable), never reading wrong data.
+  // Compaction epochs + the snapshot floor ride every commit marker.
+  // [[compact]] (and the [[Layout.maintainLayout]] rebuild, which IS a
+  // compact) and [[rollback]] bump the epoch — generation ids are
+  // reused afterwards, so any window a replica captured before it is
+  // meaningless; [[changesBetween]] / [[scanAsOf]] / [[rollback]] raise
+  // on an epoch mismatch instead of silently serving wrong deltas.
+  // [[compactRetaining]] keeps the epoch (post-floor generations stay
+  // addressable) and raises the FLOOR instead: snapshots below it are
+  // expired and raise unconditionally. Epoch, floor and the live sets
+  // move in ONE atomic marker rename, so no crash point separates them.
   // ------------------------------------------------------------------
 
-  private def epochPath(path: String) = new Path(s"${path}_epoch")
-
   /** (compact epoch, snapshot floor) — (0, −1) for a table never
-    * compacted. Replicas capture the epoch alongside their `fromGen`
-    * and pass it back to [[changesBetween]]. */
+    * compacted or rolled back. Replicas capture the epoch alongside
+    * their `fromGen` and pass it back to [[changesBetween]]. */
   def epochAndFloor(spark: SparkSession, path: String): (Long, Long) = {
-    // a pointered table's epoch/floor ride its commit (one atomic
-    // marker for data + deletes + epoch + floor); the standalone
-    // `_epoch` file is the legacy (never-compacted) form
-    readCommit(spark, path) match {
-      case Some(c) => return (c.epoch, c.floor)
-      case None => ()
-    }
-    val f = fs(spark, path)
-    def readMarker(p: Path): (Long, Long) = {
-      val in = f.open(p)
-      try (in.readLong(), in.readLong()) finally in.close()
-    }
-    // `_epoch_next` is the in-flight update's fully-written new value
-    // (landed by an atomic rename) — prefer it: reading the NEW marker
-    // early is the safe direction (a spurious loud raise at worst,
-    // never a silently-served expired window), and a crash between the
-    // old marker's delete and the final rename must NOT revert the
-    // table to (0, −1)
-    val next = new Path(s"${path}_epoch_next")
-    if (f.exists(next)) readMarker(next)
-    else if (f.exists(epochPath(path))) readMarker(epochPath(path))
-    else (0L, -1L)
+    val c = resolve(spark, path)
+    (c.epoch, c.floor)
   }
 
   /** The table's compaction epoch; bumped by every history-collapsing
@@ -382,36 +359,6 @@ object Lakehouse {
     * [[compactRetaining]]. See [[epochAndFloor]]. */
   def snapshotFloor(spark: SparkSession, path: String): Long =
     epochAndFloor(spark, path)._2
-
-  /** Crash-atomic marker update: the new value lands COMPLETE at
-    * `_epoch_next` by rename before the old marker is touched, and
-    * [[epochAndFloor]] prefers `_epoch_next` — so no crash point
-    * reverts the table to (0, −1) (which would silently stop expired
-    * windows from raising). A lingering `_epoch_next` is finished by
-    * the next update or by [[recover]]. */
-  private def writeEpochFloor(spark: SparkSession, path: String,
-                              epoch: Long, floor: Long): Unit = {
-    val f = fs(spark, path)
-    val tmp = new Path(s"${path}_epoch_tmp")
-    val next = new Path(s"${path}_epoch_next")
-    // FINISH a prior crashed update first (never delete its `_epoch_next`
-    // outright: between that delete and our own rename a reader would
-    // find NO marker at all — the exact revert this method exists to
-    // prevent)
-    if (f.exists(next)) {
-      f.delete(epochPath(path), false)
-      require(f.rename(next, epochPath(path)),
-        s"writeEpochFloor: finishing stale $next failed")
-    }
-    val out = f.create(tmp, true)
-    try { out.writeLong(epoch); out.writeLong(floor) } finally out.close()
-    require(f.rename(tmp, next),
-      s"writeEpochFloor: rename $tmp -> $next failed")
-    // from here the NEW value is what readers see, whatever happens
-    f.delete(epochPath(path), false)
-    require(f.rename(next, epochPath(path)),
-      s"writeEpochFloor: rename $next -> ${epochPath(path)} failed")
-  }
 
   private def requireEpoch(spark: SparkSession, path: String,
                            asOfEpoch: Long, what: String): Unit =
@@ -449,9 +396,9 @@ object Lakehouse {
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   // ------------------------------------------------------------------
-  // Version-pointer commits: once a table is COMPACTED (or its schema
-  // evolved), its live state is named by a commit LOG under
-  // `<path>_commit/` — the Delta/Iceberg log pattern, both halves:
+  // Version-pointer commits: a table's live state is named by a commit
+  // LOG under `<path>_commit/` — the Delta/Iceberg log pattern, both
+  // halves:
   //
   //  - CHECKPOINT markers `v<NNN>.json` carry the FULL live state
   //    (every data file name, every tombstone file name, epoch/floor,
@@ -473,13 +420,20 @@ object Lakehouse {
   // LOUD raise, never a silent partial state — and [[vacuum]] only
   // sweeps markers strictly BELOW the newest checkpoint, so the tail
   // a reader needs is never collectible. Files themselves never move
-  // after they land: a compact writes its fresh base ALONGSIDE the
-  // old files and flips the pointer, so a long-running scan that
-  // resolved the old file list keeps reading files that still exist —
-  // replaced files are removed by [[vacuum]] after a grace window,
-  // never at commit time. Tables never compacted have no marker and
-  // keep the plain directory-listing contract — nothing is pointered
-  // until the first operation that needs it.
+  // after they land: a writer lands new files ALONGSIDE the old ones
+  // and flips the pointer, so a long-running scan that resolved the
+  // old file list keeps reading files that still exist — replaced
+  // files are removed by [[vacuum]] after a grace window, never at
+  // commit time, and files no commit names (a crashed writer's) are
+  // invisible.
+  //
+  // The log is the ONLY way a table changes: every mutator first
+  // [[migrateToCommit]]s under its lock. A folder with no log (a plain
+  // `df.write.parquet` output, or a table written before the log) is
+  // read as a listing snapshot — every parquet file in it and in its
+  // `_deletes` sidecar live, epoch/floor from the legacy `<path>_epoch`
+  // marker — and its first mutation persists exactly that snapshot as
+  // v1 ([[resolve]]).
   // ------------------------------------------------------------------
 
   /** One committed table version: live file NAMES (relocatable, like
@@ -495,23 +449,10 @@ object Lakehouse {
   /** Checkpoint cadence: every Nth version lands as a full marker so
     * the reader's delta-replay tail never exceeds N−1 small files.
     * Compacts/retention rewrites checkpoint unconditionally (their
-    * "delta" would BE the full state). Overridable per session via
-    * `spark.graft.commit.checkpointEvery` (≥ 2) — a minutes-cadence
-    * CDC table may prefer a longer tail (fewer O(live-files)
-    * checkpoint writes) while a read-heavy one prefers a shorter
-    * resolve. Changing the cadence mid-table is safe: readers resolve
-    * whatever checkpoint/tail structure the log holds, and vacuum
-    * keys off the markers present, not the setting. */
+    * "delta" would BE the full state). Readers resolve whatever
+    * checkpoint/tail structure the log holds, and vacuum keys off the
+    * markers present, not this constant. */
   private[core] val CommitCheckpointEvery = 8L
-
-  private def checkpointEvery(spark: SparkSession): Long = {
-    val v = spark.conf.getOption("spark.graft.commit.checkpointEvery")
-      .map(_.toLong).getOrElse(CommitCheckpointEvery)
-    require(v >= 2L,
-      s"spark.graft.commit.checkpointEvery must be >= 2, got $v — " +
-        "1 would checkpoint every commit (use compact for that shape)")
-    v
-  }
 
   private def commitVersionOf(name: String): Long = {
     val core =
@@ -579,7 +520,7 @@ object Lakehouse {
 
   /** The table's current commit — the latest checkpoint marker plus
     * its contiguous delta tail replayed in version order — or None for
-    * a never-pointered (plain-directory) table. ≤
+    * a folder with no log (see [[resolve]]). ≤
     * [[CommitCheckpointEvery]] small marker reads; a gap in the tail
     * (an over-swept or corrupted log) raises loudly rather than
     * resolving a partial state. */
@@ -658,7 +599,7 @@ object Lakehouse {
       ".json", body)
   }
 
-  /** Advance a pointered table by ONE commit, landing a marker sized
+  /** Advance a table by ONE commit, landing a marker sized
     * by the commit's ACTIONS, not the table: added/removed data names,
     * added/removed tombstone names, plus the scalar epoch/floor/schema
     * (every marker carries those in full, so the reader never chases
@@ -683,7 +624,7 @@ object Lakehouse {
     val data = ((prior.data.toSet -- removeData) ++ addData).toSeq.sorted
     val dels =
       ((prior.deletes.toSet -- removeDeletes) ++ addDeletes).toSeq.sorted
-    if (version % checkpointEvery(spark) == 0L)
+    if (version % CommitCheckpointEvery == 0L)
       commitWrite(spark, path, version, data, dels, newEpoch, newFloor,
         newSchema)
     else {
@@ -701,42 +642,59 @@ object Lakehouse {
     TableCommit(version, data, dels, newEpoch, newFloor, newSchema)
   }
 
-  /** Pointerize a legacy table: snapshot its directory-listing state
-    * (on-disk data + tombstone files, the legacy epoch/floor marker,
-    * the current schema) as commit v1. Idempotent-ish: returns the
-    * existing commit when one is already present. Lock-holding callers
-    * only. */
+  /** The live state of a folder with NO log: every parquet file in it
+    * and in its `_deletes` sidecar, epoch/floor from the legacy
+    * `<path>_epoch` marker, no recorded schema — as version 0, the
+    * state [[migrateToCommit]] persists as v1. The legacy marker is
+    * read only here, as migration input; its `_epoch_next` form (an
+    * update that crashed after landing its new value) wins, since
+    * reading the newer value errs toward a loud epoch raise. */
+  private def listingSnapshot(spark: SparkSession,
+                              path: String): TableCommit = {
+    val f = fs(spark, path)
+    val (epoch, floor) =
+      Seq(s"${path}_epoch_next", s"${path}_epoch").map(new Path(_))
+        .find(f.exists).map { p =>
+          val in = f.open(p)
+          try (in.readLong(), in.readLong()) finally in.close()
+        }.getOrElse((0L, -1L))
+    TableCommit(0L, parquetFiles(spark, path).map(_.getName).sorted,
+      parquetFiles(spark, deletesDir(path)).map(_.getName).sorted,
+      epoch, floor, None)
+  }
+
+  /** THE read resolution every reader rides: the logged commit, or the
+    * [[listingSnapshot]] of a folder with no log. */
+  private def resolve(spark: SparkSession, path: String): TableCommit =
+    readCommit(spark, path).getOrElse(listingSnapshot(spark, path))
+
+  /** The table's current commit, landing the [[listingSnapshot]] as v1
+    * first when the folder has no log yet (an empty or missing path
+    * gets an empty v1) — the schema is read from ONE footer, as
+    * [[tableSchema]] does. Idempotent: every mutator calls it under
+    * its lock before committing anything. Lock-holding callers only. */
   private[core] def migrateToCommit(spark: SparkSession,
                                     path: String): TableCommit =
     readCommit(spark, path).getOrElse {
-      val data = parquetFiles(spark, path).map(_.getName)
-      val dels = parquetFiles(spark, deletesDir(path)).map(_.getName)
-      val (epoch, floor) = epochAndFloor(spark, path)
-      val schemaJson =
-        if (data.isEmpty) None
-        else Some(spark.read.parquet(path).schema.json)
-      commitWrite(spark, path, 1L, data, dels, epoch, floor, schemaJson)
-      TableCommit(1L, data, dels, epoch, floor, schemaJson)
+      val s = listingSnapshot(spark, path)
+      val schemaJson = s.data.headOption
+        .map(n => spark.read.parquet(s"$path/$n").schema.json)
+      commitWrite(spark, path, 1L, s.data, s.deletes, s.epoch, s.floor,
+        schemaJson)
+      s.copy(version = 1L, schemaJson = schemaJson)
     }
 
-  /** The table's LIVE data files: the commit's named set for a
-    * pointered table (dead files may sit alongside until [[vacuum]]),
-    * the plain directory listing otherwise. */
+  /** The table's LIVE data files — the resolved commit's named set
+    * (dead files may sit alongside until [[vacuum]]). */
   private[core] def dataFilePaths(spark: SparkSession,
                                   path: String): Seq[Path] =
-    readCommit(spark, path) match {
-      case Some(c) => c.data.map(n => new Path(path, n))
-      case None => parquetFiles(spark, path)
-    }
+    resolve(spark, path).data.map(n => new Path(path, n))
 
-  /** The table's LIVE tombstone files — commit-resolved like
+  /** The table's LIVE tombstone files, resolved like
     * [[dataFilePaths]]. */
   private[core] def deleteFilePaths(spark: SparkSession,
                                     path: String): Seq[Path] =
-    readCommit(spark, path) match {
-      case Some(c) => c.deletes.map(n => new Path(deletesDir(path), n))
-      case None => parquetFiles(spark, deletesDir(path))
-    }
+    resolve(spark, path).deletes.map(n => new Path(deletesDir(path), n))
 
   /** True when the table carries a schema CONTRACT a batch must honor
     * — resident data files, or a committed schema (possibly evolved,
@@ -744,32 +702,26 @@ object Lakehouse {
     * against it BEFORE their retraction half, so a drifted batch
     * raises without having mutated anything. */
   private def hasSchemaContract(spark: SparkSession,
-                                path: String): Boolean =
-    readCommit(spark, path) match {
-      case Some(c) => c.data.nonEmpty || c.schemaJson.isDefined
-      case None => parquetFiles(spark, path).nonEmpty
-    }
+                                path: String): Boolean = {
+    val c = resolve(spark, path)
+    c.data.nonEmpty || c.schemaJson.isDefined
+  }
 
   /** The table's SCAN schema: the committed schema-JSON when recorded
     * (survives additive evolution and answers even a zero-file table),
-    * else inferred from the live files. */
+    * else ONE live file's footer (same-schema is append-enforced), else
+    * empty. */
   def tableSchema(spark: SparkSession,
-                  path: String): org.apache.spark.sql.types.StructType =
-    readCommit(spark, path) match {
-      case Some(c) if c.schemaJson.isDefined =>
-        org.apache.spark.sql.types.DataType.fromJson(c.schemaJson.get)
+                  path: String): org.apache.spark.sql.types.StructType = {
+    val c = resolve(spark, path)
+    c.schemaJson match {
+      case Some(js) =>
+        org.apache.spark.sql.types.DataType.fromJson(js)
           .asInstanceOf[org.apache.spark.sql.types.StructType]
-      case Some(c) if c.data.isEmpty =>
-        new org.apache.spark.sql.types.StructType()
-      case Some(c) =>
-        // same-schema is append-enforced, so ONE footer carries the
-        // table schema — no need to index every live file for inference
-        spark.read.parquet(s"$path/${c.data.head}").schema
-      case None =>
-        val files = parquetFiles(spark, path)
-        if (files.isEmpty) spark.read.parquet(path).schema // loud, as before
-        else spark.read.parquet(files.head.toString).schema
+      case None if c.data.isEmpty => new org.apache.spark.sql.types.StructType()
+      case None => spark.read.parquet(s"$path/${c.data.head}").schema
     }
+  }
 
   private def parquetFiles(spark: SparkSession, path: String): Seq[Path] = {
     val p = new Path(path)
@@ -890,6 +842,24 @@ object Lakehouse {
       tombstoneBytes(spark, path) <= broadcastTombstoneBytes)
   }
 
+  /** The manifest must name EXACTLY the live files: replaced files
+    * linger on disk until vacuum, so a stale manifest (a crash between
+    * a commit and its manifest rebuild) would silently serve dead data
+    * — raise instead. Compares file NAMES (manifests record build-time
+    * paths; tables relocate). Shared by both pruned scans. */
+  private[core] def requireManifestLive(spark: SparkSession, path: String,
+                                        manifest: DataFrame): Unit = {
+    val live = resolve(spark, path).data.toSet
+    val manifested = manifest.select("__file").collect()
+      .map(r => fileName(r.getString(0))).toSet
+    require(manifested == live,
+      s"prunedScan: the manifest at ${path}_manifest names " +
+        s"${(manifested -- live).size} dead and misses " +
+        s"${(live -- manifested).size} live files — it predates the " +
+        "table's current commit (a crashed rewrite?). Run " +
+        "Lakehouse.recover and rebuild with Layout.writeManifest")
+  }
+
   /** [[Layout.prunedScan]] with the delete debt applied: resolve the
     * box against the manifest (file-count-sized), subtract tombstones
     * from only the kept files, re-apply the predicate. Manifest stats
@@ -901,22 +871,7 @@ object Lakehouse {
     val manifest = spark.read.parquet(s"${path}_manifest")
     val kept = Layout.pruneFiles(manifest, box)
       .select("__file").collect().map(r => r.getString(0))
-    // on a pointered table the manifest must name EXACTLY the live
-    // files: replaced files linger on disk until vacuum, so a stale
-    // manifest (a crash between a commit and its manifest rebuild)
-    // would silently serve dead data — raise instead. File-name
-    // comparison (manifests record build-time paths; tables relocate).
-    readCommit(spark, path).foreach { c =>
-      val live = c.data.toSet
-      val manifested = manifest.select("__file").collect()
-        .map(r => fileName(r.getString(0))).toSet
-      require(manifested == live,
-        s"prunedScan: the manifest at ${path}_manifest names " +
-          s"${(manifested -- live).size} dead and misses " +
-          s"${(live -- manifested).size} live files — it predates the " +
-          "table's current commit (a crashed rewrite?). Run " +
-          "Lakehouse.recover and rebuild with Layout.writeManifest")
-    }
+    requireManifestLive(spark, path, manifest)
     val schema = tableSchema(spark, path)
     val pred = box.map { case (c, lo, hi) => col(c).between(lo, hi) }
       .reduce(_ && _)
@@ -937,7 +892,8 @@ object Lakehouse {
   def deleteWhere(spark: SparkSession, path: String, cond: Column,
                   rowsPerFile: Long = tombstoneRowsPerFile): Long =
     withTableLock(spark, path) {
-      val live = dataFilePaths(spark, path).map(_.toString)
+      val live = migrateToCommit(spark, path).data
+        .map(n => new Path(path, n).toString)
       if (live.isEmpty) 0L
       else {
         val hits = spark.read.schema(tableSchema(spark, path))
@@ -958,6 +914,7 @@ object Lakehouse {
                      keys: DataFrame, keyCol: String,
                      rowsPerFile: Long = tombstoneRowsPerFile): Long =
     withTableLock(spark, path) {
+      migrateToCommit(spark, path)
       deleteMatchingIn(spark, path,
         dataFilePaths(spark, path).map(_.toString), keys, keyCol,
         rowsPerFile)._1
@@ -1013,8 +970,8 @@ object Lakehouse {
   /** [[deleteMatching]] over an explicit file subset — the building
     * block [[upsertByKeyStream]] needs: a REPLAYED upsert batch must
     * not tombstone the rows its own first attempt landed (its
-    * generation's files are rewritten under the same deterministic
-    * names, so stale positions would kill rewritten rows). The pass is
+    * generation's files are replaced by the replay's, so the tombstones
+    * would die with them and the rows come back). The pass is
     * [[bloomNarrow]]-bounded: with a Bloom manifest present and a
     * lookup-sized batch, only files that might hold a batch key are
     * read — a CDC micro-batch's cost stops tracking the table size. */
@@ -1029,8 +986,7 @@ object Lakehouse {
     val narrowed = bloomNarrow(spark, path, files, keys, keyCol)
     if (narrowed.isEmpty) return (0L, Seq.empty)
     // callers that just drift-checked the table pass the schema they
-    // proved — skipping the footer-inference job an unpointered
-    // table's tableSchema pays per resolve
+    // proved — skipping a second resolve
     val schema = schemaHint.getOrElse(tableSchema(spark, path))
     val addressed = spark.read.schema(schema).parquet(narrowed: _*)
       .select(col(keyCol),
@@ -1115,13 +1071,12 @@ object Lakehouse {
       }
       f.delete(new Path(s"${path}_incoming/del$gen-$seq"), true)
       landedNames = landed.toSeq
-      // a pointered table's live tombstone set advances by commit —
-      // an O(landed-files) delta marker, not a full-state rewrite —
-      // unless the caller asked to fold the names into its OWN commit
+      // the live tombstone set advances by commit — an O(landed-files)
+      // delta marker, not a full-state rewrite — unless the caller
+      // asked to fold the names into its OWN commit
       if (commit)
-        readCommit(spark, path).foreach { c =>
-          commitAdvance(spark, path, c, addDeletes = landedNames)
-        }
+        commitAdvance(spark, path, migrateToCommit(spark, path),
+          addDeletes = landedNames)
     }
     f.delete(new Path(raw), true)
     (n, landedNames)
@@ -1226,8 +1181,8 @@ object Lakehouse {
 
   /** The LOCKED generation append — [[Layout.appendGeneration]] under
     * the table lease. Two concurrent unlocked generation appends that
-    * both read [[currentGen]] land the SAME id, and the replay-delete
-    * silently destroys the other writer's rows; the lock is what makes
+    * both read [[currentGen]] land the SAME id, and the replay rule
+    * silently de-commits the other writer's rows; the lock is what makes
     * that impossible. See [[append]] for the discipline. */
   def appendAt(spark: SparkSession, path: String, batch: DataFrame,
                cols: Seq[String], gen: Long, bits: Int = 12,
@@ -1242,18 +1197,18 @@ object Lakehouse {
   private val sidecarSuffixes = Seq("_deletes", "_manifest", "_commit",
     "_lock", "_incoming", "_rebuild", "_retain_rebuild",
     "_retain_deletes", "_pre_compact", "_pre_rebuild", "_del_ckpt",
-    "_upsert_ckpt", "_apply_ckpt", "_ckpt", "_epoch", "_epoch_next",
-    "_epoch_tmp")
+    "_upsert_ckpt", "_apply_ckpt", "_ckpt")
 
   /** The CATALOG surface: one row per lakehouse table found directly
-    * under `root` — path, commit version (−1 for a legacy table),
+    * under `root` — path, commit version (0 for a folder with no log),
     * epoch, snapshot floor, current generation, live file/byte counts,
     * delete debt, and the manifest-read layout health (null without a
     * manifest; its columns are recovered from the manifest's own
     * `__min_<col>` schema, so no cols argument is needed). A directory
     * is a table when it is not itself a sidecar and carries at least
-    * one lakehouse sidecar (`_commit`, `_manifest`, `_deletes`,
-    * `_epoch`, `_lock`, or a `_bloom_*`); plain parquet dirs stay out.
+    * one lakehouse sidecar directory (`_commit`, `_manifest`,
+    * `_deletes`, `_lock`, or a `_bloom_*`); plain parquet dirs stay
+    * out.
     * Day-N at fleet scale operates tables by DISCOVERY, not by
     * remembering raw paths — this is the list verb's engine (CLI
     * `lake-catalog <root>`). Cost: table-count-bounded driver listing
@@ -1282,9 +1237,8 @@ object Lakehouse {
     }
     val rows = tables.map { p =>
       val path = p.toString
-      val (epoch, floor) = epochAndFloor(spark, path)
-      val data = dataFilePaths(spark, path)
-      val dels = deleteFilePaths(spark, path)
+      val c = resolve(spark, path)
+      val data = c.data.map(n => new Path(path, n))
       val bytes = data.map(x => f.getFileStatus(x).getLen).sum
       val mDir = s"${path}_manifest"
       val health: Option[Layout.LayoutHealth] =
@@ -1297,10 +1251,9 @@ object Lakehouse {
           if (cols.isEmpty) None
           else Some(Layout.layoutHealth(m, cols))
         }
-      (p.getName, path,
-        readCommit(spark, path).map(_.version).getOrElse(-1L),
-        epoch, floor, currentGen(spark, path), data.size.toLong,
-        dels.size.toLong, deleteDebt(spark, path), bytes,
+      (p.getName, path, c.version, c.epoch, c.floor,
+        currentGen(spark, path), data.size.toLong,
+        c.deletes.size.toLong, deleteDebt(spark, path), bytes,
         health.map(_.files), health.map(_.pointCost))
     }
     rows.toDF("table", "path", "version", "epoch", "floor",
@@ -1315,8 +1268,7 @@ object Lakehouse {
     * is name-addressed and every scan reads with the committed schema,
     * so resident files null-fill the new columns from the next query
     * on, and old-generation snapshots and the change feed answer with
-    * the evolved shape too (oracled). Pointerizes a legacy table (the
-    * schema has to live somewhere atomic). Single-writer. */
+    * the evolved shape too (oracled). Single-writer. */
   def evolveSchema(spark: SparkSession, path: String,
                    wider: org.apache.spark.sql.types.StructType): Unit =
     withTableLock(spark, path) {
@@ -1328,7 +1280,7 @@ object Lakehouse {
     * opt-in auto-evolve rides this inside its own hold. */
   private[core] def evolveSchemaBody(spark: SparkSession, path: String,
       wider: org.apache.spark.sql.types.StructType): Unit = {
-    migrateToCommit(spark, path)
+    val c = migrateToCommit(spark, path)
     val resident = tableSchema(spark, path)
     Layout.requireSameSchema(resident, wider, "evolveSchema",
       allowAdditive = true)
@@ -1337,7 +1289,6 @@ object Lakehouse {
     if (added.nonEmpty) {
       val evolved = org.apache.spark.sql.types.StructType(
         resident.fields ++ added)
-      val c = readCommit(spark, path).get
       commitAdvance(spark, path, c, schemaJson = Some(evolved.json))
       ()
     }
@@ -1368,11 +1319,12 @@ object Lakehouse {
     * [[withTableLock]] hold, so two concurrent upserts serialize —
     * each reads [[currentGen]] after the other's append landed and
     * claims its own generation, instead of both landing the same id
-    * and the replay-delete destroying one batch. */
+    * and the replay rule de-committing one batch. */
   def upsertByKey(spark: SparkSession, path: String, updates: DataFrame,
                   keyCol: String, cols: Seq[String], bits: Int = 12,
                   partitions: Int = 0): Unit =
     withTableLock(spark, path) {
+      migrateToCommit(spark, path)
       // schema drift raises BEFORE the retraction half mutates; the
       // proven schema rides into the retraction so it never re-infers
       val tSchema =
@@ -1407,9 +1359,9 @@ object Lakehouse {
     * at-least-once replays because both halves are replay-safe — the
     * delete half is content-idempotent AND excludes the batch's own
     * generation files (a replay must not tombstone what its first
-    * attempt landed: those files are rewritten under the same
-    * deterministic names), and the append half is
-    * [[Layout.appendGeneration]]'s rewrite-your-own-files discipline.
+    * attempt landed: the replay replaces those files), and the append
+    * half is [[Layout.appendGeneration]]'s replace-your-own-files
+    * discipline.
     * Generations are `base + micro-batch id`, with `base` pinned to a
     * file under the checkpoint on first use so restarts map replayed
     * ids to the SAME generations. AvailableNow drain. */
@@ -1451,6 +1403,7 @@ object Lakehouse {
                                  cols: Seq[String], bits: Int,
                                  partitions: Int, gen: Long): Unit =
     withTableLock(spark, path) {
+      migrateToCommit(spark, path)
       val tSchema =
         if (hasSchemaContract(spark, path)) Some(tableSchema(spark, path))
         else None
@@ -1725,6 +1678,7 @@ object Lakehouse {
                         partitions: Int = 0,
                         evolve: Boolean = false): Unit =
     withTableLock(spark, replicaPath) {
+      migrateToCommit(spark, replicaPath)
       val cached = feed.cache()
       try {
         val inserts = cached.filter(col("__op") === "insert").drop("__op")
@@ -1821,6 +1775,7 @@ object Lakehouse {
                                 partitions: Int, gen: Long,
                                 evolve: Boolean = false): Unit =
     withTableLock(spark, replicaPath) {
+      migrateToCommit(spark, replicaPath)
       val inserts = batch.filter(col("__op") === "insert").drop("__op")
       if (hasSchemaContract(spark, replicaPath)) {
         if (evolve) evolveSchemaBody(spark, replicaPath, inserts.schema)
@@ -1836,7 +1791,7 @@ object Lakehouse {
       // retract delete keys AND insert keys (the upsert treatment,
       // like the one-shot form) from every file EXCEPT the pinned
       // generation's own — a replay must not tombstone what its first
-      // attempt landed (those files are rewritten in place)
+      // attempt landed (the replay replaces those files)
       val older = dataFilePaths(spark, replicaPath)
         .filter(p => genOf(p.getName) != gen).map(_.toString)
       // deferred-commit fusion: one delta marker per micro-batch
@@ -1846,51 +1801,32 @@ object Lakehouse {
         partitions, gen, extraAddDeletes = landedDels)
     }
 
-  /** Make the `gen` snapshot permanent: delete data files, manifest
-    * slices (min/max AND Bloom), and tombstone files stamped AFTER it.
-    * File-system arithmetic only — never a data pass. The next
-    * [[Layout.appendGeneration]] may reuse the rolled-back ids (each
-    * rewrites exactly its own files, so reuse is safe) — which makes a
-    * rollback as HISTORY-COLLAPSING as a [[compact]]: any window a
-    * replica captured before it would silently address the re-appended
-    * data under the reused ids, so the [[compactEpoch]] bumps here too
-    * (BEFORE the deletions — a crash leaves replicas raising
-    * spuriously, never reading wrong deltas). Single-writer
+  /** Make the `gen` snapshot permanent: ONE commit drops data files
+    * and tombstone files stamped AFTER it from the live sets, and the
+    * manifest slices (min/max AND Bloom) past it are deleted.
+    * File-system arithmetic only — never a data pass. The de-committed
+    * files STAY on disk for [[vacuum]]'s grace window (a scan that
+    * resolved the pre-rollback commit finishes unharmed); a re-append
+    * of the same generation lands under commit-version-salted names
+    * ([[Layout.appendGeneration]]), so they never collide. Reusing the
+    * rolled-back ids makes a rollback as HISTORY-COLLAPSING as a
+    * [[compact]]: any window a replica captured before it would
+    * silently address the re-appended data under the reused ids, so
+    * the [[compactEpoch]] bumps in the same commit. Single-writer
     * ([[withTableLock]]); raises below the [[snapshotFloor]], and on
     * an `asOfEpoch` mismatch when the caller passes the epoch its
     * target generation was captured at. */
   def rollback(spark: SparkSession, path: String, gen: Long,
                asOfEpoch: Long = -1L): Unit =
     withTableLock(spark, path) {
+      val c = migrateToCommit(spark, path)
       requireEpoch(spark, path, asOfEpoch, "rollback")
       requireAboveFloor(spark, path, gen, "rollback")
       val f = fs(spark, path)
-      // the epoch bump and the live-set shrink ride ONE commit on a
-      // pointered table — and the rolled-back files STAY on disk for
-      // [[vacuum]]'s grace window (a scan that resolved the
-      // pre-rollback commit finishes unharmed): a pointered re-append
-      // of the same generation lands under commit-version-salted
-      // names ([[Layout.appendGeneration]]), so the dead files never
-      // collide with the replacement's rename-in. Legacy tables keep
-      // the immediate-delete form — their generation names ARE
-      // deterministic, so leaving dead files would collide
-      readCommit(spark, path) match {
-        case Some(c) =>
-          commitAdvance(spark, path, c,
-            removeData = c.data.filter(n => genOf(n) > gen),
-            removeDeletes = c.deletes.filter(n => delGenOf(n) > gen),
-            epoch = c.epoch + 1)
-          ()
-        case None =>
-          val (epoch, floor) = epochAndFloor(spark, path)
-          writeEpochFloor(spark, path, epoch + 1, floor)
-          parquetFiles(spark, path)
-            .filter(p => genOf(p.getName) > gen)
-            .foreach(p => f.delete(p, false))
-          parquetFiles(spark, deletesDir(path))
-            .filter(p => delGenOf(p.getName) > gen)
-            .foreach(p => f.delete(p, false))
-      }
+      commitAdvance(spark, path, c,
+        removeData = c.data.filter(n => genOf(n) > gen),
+        removeDeletes = c.deletes.filter(n => delGenOf(n) > gen),
+        epoch = c.epoch + 1)
       def genSlicesAfter(dir: String): Seq[Path] =
         parquetFiles(spark, dir).filter { p =>
           val digits = p.getName.stripPrefix("gen").stripSuffix(".parquet")
@@ -1931,8 +1867,7 @@ object Lakehouse {
     * them, so a long-running scan that resolved the old file list
     * (a 30-minute query racing a scheduled compact is routine at
     * 100 TB) completes against the pre-compact version instead of
-    * dying mid-job on vanished paths (spec'd). A legacy
-    * (never-compacted) table is pointerized by its first compact. */
+    * dying mid-job on vanished paths (spec'd). */
   def compact(spark: SparkSession, path: String, cols: Seq[String],
               bits: Int = 12, partitions: Int = 0,
               targetBytes: Long = 0L): Unit =
@@ -2005,49 +1940,46 @@ object Lakehouse {
     * commit markers; crash orphans (staged files never committed) age
     * into the same sweep. File-count-bounded driver work; takes the
     * table lock so a mid-land writer's uncommitted files are never
-    * candidates. No-op on a never-pointered table. Returns the
-    * removed paths. */
+    * candidates. A no-op on a folder with no log (its listing snapshot
+    * holds every file). Returns the removed paths. */
   def vacuum(spark: SparkSession, path: String,
              graceMs: Long = 7L * 24 * 60 * 60 * 1000): Seq[String] =
     withTableLock(spark, path) {
-      readCommit(spark, path) match {
-        case None => Seq.empty
-        case Some(c) =>
-          val f = fs(spark, path)
-          val cutoff = System.currentTimeMillis() - graceMs
-          def sweep(dir: String, live: Set[String]): Seq[String] =
-            parquetFiles(spark, dir)
-              .filter(p => !live.contains(p.getName) &&
-                f.getFileStatus(p).getModificationTime <= cutoff)
-              .map { p => f.delete(p, false); p.toString }
-          val deadData = sweep(path, c.data.toSet)
-          val deadDels = sweep(deletesDir(path), c.deletes.toSet)
-          // a fully-swept tombstone dir disappears with its last file
-          // (a debt-free table should look debt-free on disk too)
-          val dPath = new Path(deletesDir(path))
-          if (c.deletes.isEmpty && f.exists(dPath) &&
-              f.listStatus(dPath).isEmpty)
-            f.delete(dPath, true)
-          // markers at or above the newest CHECKPOINT are the
-          // readable log (checkpoint + replay tail) — only the
-          // consumed tail strictly below it is sweepable
-          val cDir = new Path(commitDir(path))
-          val oldCommits =
-            if (!f.exists(cDir)) Seq.empty
-            else {
-              val all = f.listStatus(cDir).toSeq.filter(s =>
-                s.isFile && commitVersionOf(s.getPath.getName) >= 0)
-              val ckpt = all
-                .filterNot(s => isDeltaMarker(s.getPath.getName))
-                .map(s => commitVersionOf(s.getPath.getName))
-                .foldLeft(-1L)(math.max)
-              all.filter { s =>
-                commitVersionOf(s.getPath.getName) < ckpt &&
-                  s.getModificationTime <= cutoff
-              }.map { s => f.delete(s.getPath, false); s.getPath.toString }
-            }
-          deadData ++ deadDels ++ oldCommits
-      }
+      val c = resolve(spark, path)
+      val f = fs(spark, path)
+      val cutoff = System.currentTimeMillis() - graceMs
+      def sweep(dir: String, live: Set[String]): Seq[String] =
+        parquetFiles(spark, dir)
+          .filter(p => !live.contains(p.getName) &&
+            f.getFileStatus(p).getModificationTime <= cutoff)
+          .map { p => f.delete(p, false); p.toString }
+      val deadData = sweep(path, c.data.toSet)
+      val deadDels = sweep(deletesDir(path), c.deletes.toSet)
+      // a fully-swept tombstone dir disappears with its last file
+      // (a debt-free table should look debt-free on disk too)
+      val dPath = new Path(deletesDir(path))
+      if (c.deletes.isEmpty && f.exists(dPath) &&
+          f.listStatus(dPath).isEmpty)
+        f.delete(dPath, true)
+      // markers at or above the newest CHECKPOINT are the
+      // readable log (checkpoint + replay tail) — only the
+      // consumed tail strictly below it is sweepable
+      val cDir = new Path(commitDir(path))
+      val oldCommits =
+        if (!f.exists(cDir)) Seq.empty
+        else {
+          val all = f.listStatus(cDir).toSeq.filter(s =>
+            s.isFile && commitVersionOf(s.getPath.getName) >= 0)
+          val ckpt = all
+            .filterNot(s => isDeltaMarker(s.getPath.getName))
+            .map(s => commitVersionOf(s.getPath.getName))
+            .foldLeft(-1L)(math.max)
+          all.filter { s =>
+            commitVersionOf(s.getPath.getName) < ckpt &&
+              s.getModificationTime <= cutoff
+          }.map { s => f.delete(s.getPath, false); s.getPath.toString }
+        }
+      deadData ++ deadDels ++ oldCommits
     }
 
   /** The executable form of every swap's documented crash recovery:
@@ -2145,10 +2077,10 @@ object Lakehouse {
       // scans would fail loudly on them forever. Detect (file-count-
       // bounded read) and drop, telling the operator to rebuild.
       if (f.exists(root)) {
-        // LIVE names (commit-resolved): on a pointered table a
-        // manifest naming a vacuum-pending dead file is just as
-        // dangling as one naming a vanished file
-        val live = dataFilePaths(spark, path).map(_.getName).toSet
+        // LIVE names still ON DISK: a manifest naming a vacuum-pending
+        // dead file is just as dangling as one naming a vanished file
+        val live = dataFilePaths(spark, path).map(_.getName).toSet &
+          parquetFiles(spark, path).map(_.getName).toSet
         (Seq(new Path(s"${path}_manifest")) ++ bloomDirsOf(spark, path))
           .filter(m => f.exists(m) &&
             parquetFiles(spark, m.toString).nonEmpty)
@@ -2187,17 +2119,6 @@ object Lakehouse {
             f.delete(s.getPath, false)
             actions += s"discarded uncommitted marker ${s.getPath}"
           }
-      // finish a crashed epoch/floor marker update: `_epoch_next` holds
-      // the complete NEW value (readers already prefer it) — install it
-      val next = new Path(s"${path}_epoch_next")
-      if (f.exists(next)) {
-        f.delete(epochPath(path), false)
-        require(f.rename(next, epochPath(path)),
-          s"recover: finishing $next -> ${epochPath(path)} failed")
-        actions += s"finished epoch/floor marker update at " +
-          s"${epochPath(path)}"
-      }
-      f.delete(new Path(s"${path}_epoch_tmp"), false)
       ()
     }
     val lease = new Path(s"${path}_lock/lease")
@@ -2256,14 +2177,13 @@ object Lakehouse {
     * place and simply carry over into the new commit's live set (the
     * version-pointer protocol removed the old tail copy entirely).
     * Replaced files await [[vacuum]] like any compact's. Cost: one
-    * pass over the rows live at `retainAfter`. Single-writer; a
-    * legacy table is pointerized first. */
+    * pass over the rows live at `retainAfter`. Single-writer. */
   def compactRetaining(spark: SparkSession, path: String,
                        cols: Seq[String], retainAfter: Long,
                        bits: Int = 12, partitions: Int = 0,
                        rowsPerFile: Long = tombstoneRowsPerFile): Unit =
     withTableLock(spark, path) {
-      migrateToCommit(spark, path)
+      val cur = migrateToCommit(spark, path)
       val all = dataFilePaths(spark, path)
       val fold = all.filter(p => genOf(p.getName) <= retainAfter)
       val keep = all.filter(p => genOf(p.getName) > retainAfter)
@@ -2271,7 +2191,7 @@ object Lakehouse {
         // nothing newer than the floor: this IS a full compact
         compactBody(spark, path, cols, bits, partitions, 0L)
       else if (fold.nonEmpty)
-        compactRetainingBody(spark, path, cols, retainAfter, bits,
+        compactRetainingBody(spark, path, cur, cols, retainAfter, bits,
           partitions, fold, keep, rowsPerFile)
       // else: nothing at or below the floor to fold — a no-op
     }
@@ -2288,12 +2208,12 @@ object Lakehouse {
       .foldLeft(-1)(math.max) + 1
 
   private def compactRetainingBody(spark: SparkSession, path: String,
+                                   cur: TableCommit,
                                    cols: Seq[String], retainAfter: Long,
                                    bits: Int, partitions: Int,
                                    fold: Seq[Path], keep: Seq[Path],
                                    rowsPerFile: Long): Unit = {
       val f = fs(spark, path)
-      val cur = readCommit(spark, path).get // the wrapper migrated
       val next = cur.version + 1
       val schema = tableSchema(spark, path)
       val foldPaths = fold.map(_.toString)

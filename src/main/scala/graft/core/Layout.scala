@@ -153,9 +153,8 @@ object Layout {
   def writeManifest(spark: org.apache.spark.sql.SparkSession,
                     path: String, cols: Seq[String]): String = {
     val mPath = s"${path}_manifest"
-    // LIVE files (commit-resolved on a pointered table — the directory
-    // may hold vacuum-pending dead files); identical to the plain
-    // directory listing otherwise
+    // LIVE files (commit-resolved — the directory may hold
+    // vacuum-pending dead files)
     val live = Lakehouse.dataFilePaths(spark, path).map(_.toString)
     statsManifest(spark.read.parquet(live: _*), cols)
       .coalesce(1).write.mode("overwrite").parquet(mPath)
@@ -240,22 +239,9 @@ object Layout {
                  box: Seq[(String, Column, Column)]): DataFrame = {
     require(box.nonEmpty, "prunedScan needs a box predicate")
     val manifest = spark.read.parquet(s"${path}_manifest")
-    // on a POINTERED table the manifest must name exactly the live
-    // files — replaced files linger on disk until vacuum, so a stale
-    // manifest would silently serve dead data (the same guard
-    // Lakehouse.prunedScan carries; plain directory-listing tables
-    // have no dead-file hazard and skip the check)
-    Lakehouse.readCommit(spark, path).foreach { c =>
-      val live = c.data.toSet
-      val manifested = manifest.select("__file").collect()
-        .map(r => r.getString(0).split('/').last).toSet
-      require(manifested == live,
-        s"prunedScan: the manifest at ${path}_manifest names " +
-          s"${(manifested -- live).size} dead and misses " +
-          s"${(live -- manifested).size} live files — it predates the " +
-          "table's current commit (a crashed rewrite?). Run " +
-          "Lakehouse.recover and rebuild with Layout.writeManifest")
-    }
+    // the manifest must name exactly the live files (a stale one would
+    // silently serve dead data)
+    Lakehouse.requireManifestLive(spark, path, manifest)
     val kept = pruneFiles(manifest, box)
       .select("__file").collect().map(_.getString(0))
     val schema = Lakehouse.tableSchema(spark, path)
@@ -372,30 +358,26 @@ object Layout {
                      path: String, batch: DataFrame, cols: Seq[String],
                      bits: Int = 12, partitions: Int = 0,
                      extraAddDeletes: Seq[String] = Seq.empty): Unit = {
-    val before = dataFiles(spark, path)
-    val cur = Lakehouse.readCommit(spark, path)
+    val c = Lakehouse.migrateToCommit(spark, path)
     // the drift guard also fires against a COMMITTED schema with no
     // resident files yet (an evolveSchema'd empty table): the commit
     // is the contract the first batch must honor too
-    if (cur.exists(c => c.data.nonEmpty || c.schemaJson.isDefined) ||
-        before.nonEmpty)
+    if (c.data.nonEmpty || c.schemaJson.isDefined)
       requireSameSchema(Lakehouse.tableSchema(spark, path), batch.schema,
         "appendZordered")
+    val before = dataFiles(spark, path)
     zorder(batch, cols, bits, partitions)
       .write.mode("append").parquet(path)
     val fresh = (dataFiles(spark, path) -- before).toSeq
-    // a pointered table's live set advances by commit — files in the
-    // directory are invisible to readers until this lands
-    cur.foreach { c =>
-      val freshNames = fresh.map(p => p.substring(p.lastIndexOf('/') + 1))
-      // `extraAddDeletes`: a lock-holding upsert's DEFERRED tombstone
-      // names ride the append's marker — one commit per mutation, not
-      // two (see [[graft.core.Lakehouse.upsertByKey]])
-      Lakehouse.commitAdvance(spark, path, c, addData = freshNames,
-        addDeletes = extraAddDeletes,
-        schemaJson = c.schemaJson.orElse(Some(batch.schema.json)))
-      ()
-    }
+    // the live set advances by commit — files in the directory are
+    // invisible to readers until this lands. `extraAddDeletes`: a
+    // lock-holding upsert's DEFERRED tombstone names ride the append's
+    // marker — one commit per mutation, not two (see
+    // [[graft.core.Lakehouse.upsertByKey]])
+    Lakehouse.commitAdvance(spark, path, c,
+      addData = fresh.map(p => p.substring(p.lastIndexOf('/') + 1)),
+      addDeletes = extraAddDeletes,
+      schemaJson = c.schemaJson.orElse(Some(batch.schema.json)))
     if (fresh.nonEmpty) {
       // the just-written files carry the batch's schema — manifest
       // passes skip the footer-inference job
@@ -432,100 +414,73 @@ object Layout {
   /** Idempotent per-generation append — the exactly-once building
     * block under [[appendZorderedStream]], usable directly for any
     * at-least-once delivery (a replayed call with the same `gen`
-    * rewrites EXACTLY its own files and manifest slice, nothing else —
+    * replaces EXACTLY its own files and manifest slice, nothing else —
     * the [[graft.streaming.Streaming.foldLedgerStream]] discipline
     * applied to table files): the batch is z-ordered into a staging
-    * dir, any previous `gen<id>-*` data files are deleted (the replay
-    * case), the staged parts move in under DETERMINISTIC names
-    * (`gen<id>-part<k>`), and the generation's manifest slice lands as
-    * one deterministically-named file (`gen<id>.parquet`) in the
-    * manifest dir, replacing its own previous version. Works against
-    * an empty `path` too — streamed ingestion can create the table.
+    * dir, the staged parts move in under commit-version-SALTED names
+    * (`gen<id>-v<version>-part<k>`), and ONE commit adds them while
+    * dropping any prior attempt's `gen<id>-*` entries (the replay
+    * case) from the live set — the dead files ride
+    * [[graft.core.Lakehouse.vacuum]]'s grace window, so a reader that
+    * resolved the pre-replay commit keeps reading files that exist.
+    * The generation's manifest slice lands as one
+    * deterministically-named file (`gen<id>.parquet`) in the manifest
+    * dir, replacing its own previous version. Works against an empty
+    * `path` too — streamed ingestion can create the table.
     *
     * UNLOCKED internal form (see [[appendZordered]]'s discipline):
     * lock-holding callers ([[graft.core.Lakehouse.upsertByKey]], the
     * streamed per-batch bodies) call this directly; everyone else
     * goes through [[graft.core.Lakehouse.appendAt]] — two unlocked
-    * writers landing the same generation id would have the
-    * replay-delete destroy each other's rows. */
+    * writers landing the same generation id would each drop the
+    * other's files from the live set. */
   def appendGeneration(spark: org.apache.spark.sql.SparkSession,
                        path: String, batch: DataFrame,
                        cols: Seq[String], bits: Int = 12,
                        partitions: Int = 0, gen: Long = 0L,
                        extraAddDeletes: Seq[String] = Seq.empty): Unit = {
-    val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    val cur = Lakehouse.readCommit(spark, path)
-    if (cur.exists(c => c.data.nonEmpty || c.schemaJson.isDefined) ||
-        (cur.isEmpty && (dataFiles(spark, path).nonEmpty ||
-          (fs.exists(root) && fs.listStatus(root)
-            .exists(s => s.isFile &&
-              s.getPath.getName.endsWith(".parquet"))))))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val c = Lakehouse.migrateToCommit(spark, path)
+    if (c.data.nonEmpty || c.schemaJson.isDefined)
       requireSameSchema(Lakehouse.tableSchema(spark, path), batch.schema,
         "appendGeneration")
     val staging = s"${path}_incoming/gen$gen"
     zorder(batch, cols, bits, partitions)
       .write.mode("overwrite").parquet(staging)
-    // legacy (directory-listed) tables: a replay physically replaces
-    // its own prior attempt under the SAME deterministic names, so
-    // the prior files delete first. Pointered tables NEVER delete
-    // here — the replacement lands under commit-version-SALTED names
-    // (`gen<g>-v<version>-part<k>`), the commit drops the prior
-    // attempt's entries from the live set, and the dead files ride
-    // [[graft.core.Lakehouse.vacuum]]'s grace window — a reader that
-    // resolved the pre-replay commit keeps reading files that exist
-    if (fs.exists(root)) {
-      if (cur.isEmpty)
-        fs.listStatus(root)
-          .filter(_.getPath.getName.startsWith(s"gen$gen-"))
-          .foreach(s => fs.delete(s.getPath, false))
-    } else fs.mkdirs(root)
-    val salt = cur.map(c => s"v${c.version + 1}-").getOrElse("")
+    fs.mkdirs(root)
     val staged = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
         s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath).sortBy(_.getName)
     val mine = staged.zipWithIndex.map { case (p, k) =>
       val dst = new org.apache.hadoop.fs.Path(root,
-        f"gen$gen-${salt}part$k%05d.parquet")
+        f"gen$gen-v${c.version + 1}-part$k%05d.parquet")
       // a CRASHED same-version attempt's orphan (its commit never
       // landed, so the name is provably not in any readable live set)
       if (fs.exists(dst)) fs.delete(dst, false)
       require(fs.rename(p, dst), s"appendGeneration: $p -> $dst failed")
-      dst.getName
+      dst
     }
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    // pointered: the generation replaces exactly its own names in the
-    // live set (the replay case drops the prior attempt's entries) —
-    // an O(generation) delta marker, not a full-state rewrite
-    cur.foreach { c =>
-      // `extraAddDeletes`: a lock-holding upsert/CDC-apply's DEFERRED
-      // tombstone names ride this marker too — ONE delta commit per
-      // micro-batch (tombstone adds + data adds), not two
-      Lakehouse.commitAdvance(spark, path, c,
-        addData = mine.toSeq,
-        removeData = c.data.filter(_.startsWith(s"gen$gen-")),
-        addDeletes = extraAddDeletes,
-        schemaJson = c.schemaJson.orElse(Some(batch.schema.json)))
-      ()
-    }
+    // the generation replaces exactly its own names in the live set —
+    // an O(generation) delta marker, not a full-state rewrite.
+    // `extraAddDeletes`: a lock-holding upsert/CDC-apply's DEFERRED
+    // tombstone names ride this marker too — ONE delta commit per
+    // micro-batch (tombstone adds + data adds), not two
+    Lakehouse.commitAdvance(spark, path, c,
+      addData = mine.map(_.getName).toSeq,
+      removeData = c.data.filter(_.startsWith(s"gen$gen-")),
+      addDeletes = extraAddDeletes,
+      schemaJson = c.schemaJson.orElse(Some(batch.schema.json)))
     val mDir = new org.apache.hadoop.fs.Path(s"${path}_manifest")
     fs.mkdirs(mDir)
     val mFile = new org.apache.hadoop.fs.Path(mDir, s"gen$gen.parquet")
     if (fs.exists(mFile)) fs.delete(mFile, false)
-    // the slice covers THIS attempt's files, not a raw-dir glob — a
-    // pointered replay's dead prior attempt may still sit alongside
-    val genFiles: Array[String] =
-      if (cur.isDefined)
-        mine.map(n => new org.apache.hadoop.fs.Path(root, n).toString)
-      else fs.listStatus(root)
-        .filter(_.getPath.getName.startsWith(s"gen$gen-"))
-        .map(_.getPath.toString)
-    if (genFiles.nonEmpty) {
+    if (mine.nonEmpty) {
       val tmp = s"${path}_incoming/manifest$gen"
       val genDf = spark.read.schema(Lakehouse.nullableCopy(batch.schema))
-        .parquet(genFiles: _*)
+        .parquet(mine.map(_.toString).toSeq: _*)
       statsManifest(genDf, cols)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
@@ -560,7 +515,7 @@ object Layout {
     * micro-batch lands as one z-ordered GENERATION through
     * [[appendGeneration]], keyed by the micro-batch id — so
     * `foreachBatch`'s at-least-once replay contract becomes
-    * exactly-once by construction (a replayed batch rewrites exactly
+    * exactly-once by construction (a replayed batch replaces exactly
     * its own `gen<id>-*` files and manifest slice; the checkpoint
     * under `<path>_ckpt` carries the source offsets). AvailableNow
     * drain: returns when every available input is committed. Health

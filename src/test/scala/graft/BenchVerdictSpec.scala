@@ -39,4 +39,29 @@ class BenchVerdictSpec extends AnyFunSuite {
     assert(!Bench.contendedVerdict(Seq(0.164, 0.162), pin = 0.15))
     assert(!Bench.contendedVerdict(Seq(0.203, 0.142), pin = 0.15))
   }
+
+  test("the result line stays valid JSON around an errored query whose " +
+      "message carries control chars, and errored queries leave the " +
+      "per-query maps and the per-query mean") {
+    val results: Seq[Bench.QueryResult] = Seq(
+      ("q_ok", 2.0, 0.5, None),
+      ("q_ok2", 4.0, 0.25, None),
+      ("q_bad", 0.001, 0.0,
+        Some("SparkException: line1\r\n\tat x \"quoted\" back\\slash")))
+    val line = Bench.resultLine(results, "\"passes\":5")
+    // a strict parser: raw control chars inside strings are rejected
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(line)
+    assert(root.get("queries").size() == 2 &&
+      !root.get("queries").has("q_bad"), line)
+    assert(root.get("spread").size() == 2 &&
+      !root.get("spread").has("q_bad"), line)
+    assert(root.get("errors").get("q_bad").asText() ==
+      "SparkException: line1\r\n\tat x \"quoted\" back\\slash")
+    assert(root.get("n_errors").asInt() == 1 &&
+      root.get("n_queries").asInt() == 3 &&
+      root.get("passes").asInt() == 5)
+    assert(root.get("value").asDouble() == 6.0)
+    assert(Bench.secondsPerQuery(results) == 3.0)
+  }
 }

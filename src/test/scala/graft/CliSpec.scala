@@ -304,16 +304,20 @@ class CliSpec extends SparkSpec {
     assert(code == 0, outTxt)
     val lines = outTxt.linesIterator.toSeq
     assert(lines.size == 3, outTxt)
-    assert(lines.exists(_.contains("\"table\":\"acc_bloom_test\"")),
-      outTxt)
+    // a folder never mutated has no log yet: its listing snapshot is v0
+    assert(lines.exists(l => l.contains("\"table\":\"acc_bloom_test\"") &&
+      l.contains("\"version\":0")), outTxt)
+    // the delete committed through the log: v1 (the migrated listing)
+    // then v2 (the tombstone)
     val l1 = lines.find(_.contains("\"table\":\"t1\"")).get
     assert(l1.contains("\"delete_debt\":100") &&
       l1.contains("\"data_files\":4") &&
-      l1.contains("\"version\":-1"), l1)
+      l1.contains("\"version\":2"), l1)
+    // t2: v1 (the empty path's log), v2 (the generation), v3 (compact)
     val l2 = lines.find(_.contains("\"table\":\"t2\"")).get
     assert(l2.contains("\"epoch\":1") &&
       l2.contains("\"delete_debt\":0") &&
-      l2.contains("\"version\":2"), l2)
+      l2.contains("\"version\":3"), l2)
     // usage error without a root
     val (bad, err) = cli("lake-catalog")
     assert(bad == 2 && err.contains("root"), err)

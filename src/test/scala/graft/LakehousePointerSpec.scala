@@ -55,8 +55,8 @@ class LakehousePointerSpec extends SparkSpec {
     val path = tmp("lake-ptr-commit")
     Layout.appendGeneration(spark, path, mk(0L, 400L), Seq("x", "y"),
       bits = 6, partitions = 2, gen = 0L)
-    assert(Lakehouse.readCommit(spark, path).isEmpty,
-      "no commit until the first compact pointerizes the table")
+    assert(Lakehouse.readCommit(spark, path).isDefined,
+      "the first write lands the table's log")
     Lakehouse.compact(spark, path, Seq("x", "y"), bits = 6,
       partitions = 2)
     val c1 = Lakehouse.readCommit(spark, path).get
@@ -468,37 +468,25 @@ class LakehousePointerSpec extends SparkSpec {
     assert(Lakehouse.scan(spark, path).count() == 310L)
   }
 
-  test("the checkpoint cadence is session-configurable: a shorter " +
-      "spark.graft.commit.checkpointEvery lands more full markers, " +
-      "resolution and the sweep follow the log's actual structure") {
+  test("a log longer than the checkpoint cadence resolves from its " +
+      "newest checkpoint plus the delta tail") {
     val path = tmp("lake-ptr-cadence")
-    spark.conf.set("spark.graft.commit.checkpointEvery", "4")
-    try {
-      Layout.zorder(mk(0L, 100L), Seq("x", "y"), bits = 6,
-        partitions = 1).write.parquet(path)
-      Lakehouse.compact(spark, path, Seq("x", "y"), bits = 6,
-        partitions = 1) // v1+v2 full
-      (0 until 7).foreach { k => // v3..v9: deltas except v4 AND v8
-        Lakehouse.appendAt(spark, path, mk(100L + k * 10, 110L + k * 10),
-          Seq("x", "y"), gen = k.toLong, bits = 6, partitions = 1)
-      }
-      val names = new java.io.File(Lakehouse.commitDir(path)).listFiles()
-        .map(_.getName).filter(_.startsWith("v")).sorted.toSeq
-      val fulls = names.filterNot(_.endsWith(".delta.json"))
-      assert(fulls.exists(_.contains("00000000000000000004")) &&
-        fulls.exists(_.contains("00000000000000000008")),
-        fulls.mkString(","))
-      assert(Lakehouse.readCommit(spark, path).get.version == 9L)
-      assert(Lakehouse.scan(spark, path).count() == 170L)
-      // a cadence of 1 is a config error, loudly
-      spark.conf.set("spark.graft.commit.checkpointEvery", "1")
-      val e = intercept[IllegalArgumentException] {
-        Lakehouse.appendAt(spark, path, mk(900L, 910L), Seq("x", "y"),
-          gen = 7L, bits = 6, partitions = 1)
-      }
-      assert(e.getMessage.contains("checkpointEvery"), e.getMessage)
-    } finally
-      spark.conf.unset("spark.graft.commit.checkpointEvery")
+    (0 until 10).foreach { k => // v1 (the empty path's log) + v2..v11
+      Lakehouse.appendAt(spark, path, mk(k * 10L, k * 10L + 10L),
+        Seq("x", "y"), gen = k.toLong, bits = 6, partitions = 1)
+    }
+    val cDir = new java.io.File(Lakehouse.commitDir(path))
+    def version(n: String) = n.stripPrefix("v").takeWhile(_.isDigit).toLong
+    val names = cDir.listFiles().map(_.getName).filter(_.startsWith("v"))
+      .sorted.toSeq
+    assert(names.filterNot(_.endsWith(".delta.json")).map(version) ==
+      Seq(1L, 8L), names.mkString(","))
+    // the markers below the newest checkpoint are not needed to resolve
+    names.filter(n => version(n) < 8L)
+      .foreach(n => assert(new java.io.File(cDir, n).delete()))
+    val c = Lakehouse.readCommit(spark, path).get
+    assert(c.version == 11L && c.data.size == 10)
+    assert(Lakehouse.scan(spark, path).count() == 100L)
   }
 
   test("vacuum sweeps only the CONSUMED tail below the newest " +
@@ -577,33 +565,18 @@ class LakehousePointerSpec extends SparkSpec {
   test("fused upsert commit: ONE delta marker carries both the " +
       "tombstone adds and the data adds, a crash-orphaned uncommitted " +
       "tombstone is invisible and replay-safe, and vacuum sweeps it") {
+    // the table is built by appendGeneration alone — the fused commit
+    // must be atomic on every table, not only on compacted ones
     val path = tmp("lake-ptr-fused")
     Layout.appendGeneration(spark, path, mk(0L, 400L), Seq("x", "y"),
       bits = 6, partitions = 2, gen = 0L)
-    Lakehouse.compact(spark, path, Seq("x", "y"), bits = 6,
-      partitions = 2) // pointerize
-    val c0 = Lakehouse.readCommit(spark, path).get
-    // one upsert micro-batch: replace keys 0..49 — the retraction half
-    // and the append half must land as ONE commit (version +1, both
-    // action kinds in the same resolved state), not two
-    Lakehouse.upsertBatch(spark, path, mk(0L, 50L), "id", Seq("x", "y"),
-      bits = 6, partitions = 1,
-      gen = Lakehouse.currentGen(spark, path) + 1)
-    val c1 = Lakehouse.readCommit(spark, path).get
-    assert(c1.version == c0.version + 1,
-      s"upsert must advance the commit by exactly ONE version " +
-        s"(fused marker), got ${c0.version} -> ${c1.version}")
-    assert(c1.deletes.nonEmpty && c1.deletes.forall(_.startsWith("del")))
-    assert((c1.data.toSet -- c0.data.toSet).nonEmpty &&
-      (c1.data.toSet -- c0.data.toSet).forall(_.startsWith("gen")))
-    assert(Lakehouse.scan(spark, path).count() == 400L)
-    val liveIds = Lakehouse.scan(spark, path)
-      .select("id").collect().map(_.getLong(0)).toSet
-    // CRASH WINDOW of the deferred tombstone commit: debt landed in
-    // the deletes dir but the fused commit never happened. Fabricate
-    // exactly that state — a tombstone addressing LIVE rows of a base
-    // file, never named by any marker — and require it invisible
-    val victim = c1.data.filter(_.startsWith("base")).head
+    // CRASH WINDOW of the deferred tombstone commit: an upsert's
+    // retraction landed its debt in the deletes dir, then the writer
+    // died before the fused commit. Fabricate exactly that state — a
+    // tombstone addressing LIVE rows of a generation-0 file, never
+    // named by any marker — and require it invisible
+    val victim = new java.io.File(path).listFiles().map(_.getName)
+      .filter(n => n.startsWith("gen0-") && n.endsWith(".parquet")).min
     val orphan = spark.createDataFrame(
       java.util.List.of[org.apache.spark.sql.Row](
         org.apache.spark.sql.Row(victim, 0L, 99L),
@@ -619,13 +592,34 @@ class LakehousePointerSpec extends SparkSpec {
       .parquet(s"${path}_orphanstage")
     val part = new java.io.File(s"${path}_orphanstage").listFiles()
       .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(Lakehouse.deletesDir(path)))
     java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(
       Lakehouse.deletesDir(path), "del99-0.parquet"))
     assert(Lakehouse.scan(spark, path).count() == 400L,
       "an uncommitted (crash-orphaned) tombstone must be invisible " +
         "to commit-resolved readers")
-    // a REPLAY of the same micro-batch against that state converges to
-    // the clean run's content (the orphan never contaminates it)
+    val c0 = Lakehouse.readCommit(spark, path).get
+    // the crashed micro-batch replays: replace keys 0..49 — the
+    // retraction half and the append half must land as ONE commit
+    // (version +1, both action kinds in the same resolved state)
+    Lakehouse.upsertBatch(spark, path, mk(0L, 50L), "id", Seq("x", "y"),
+      bits = 6, partitions = 1,
+      gen = Lakehouse.currentGen(spark, path) + 1)
+    val c1 = Lakehouse.readCommit(spark, path).get
+    assert(c1.version == c0.version + 1,
+      s"upsert must advance the commit by exactly ONE version " +
+        s"(fused marker), got ${c0.version} -> ${c1.version}")
+    assert(c1.deletes.nonEmpty && c1.deletes.forall(_.startsWith("del")) &&
+      !c1.deletes.contains("del99-0.parquet"))
+    assert((c1.data.toSet -- c0.data.toSet).nonEmpty &&
+      (c1.data.toSet -- c0.data.toSet).forall(_.startsWith("gen")))
+    assert(Lakehouse.scan(spark, path).count() == 400L)
+    val liveIds = Lakehouse.scan(spark, path)
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(liveIds == (0L until 400L).toSet)
+    // a further REPLAY of the same micro-batch converges to the same
+    // content (the orphan never contaminates it)
     Lakehouse.upsertBatch(spark, path, mk(0L, 50L), "id", Seq("x", "y"),
       bits = 6, partitions = 1, gen = Lakehouse.currentGen(spark, path))
     assert(Lakehouse.scan(spark, path)
@@ -635,5 +629,59 @@ class LakehousePointerSpec extends SparkSpec {
     assert(swept.exists(_.endsWith("del99-0.parquet")),
       swept.mkString(","))
     assert(Lakehouse.scan(spark, path).count() == 400L)
+  }
+
+  test("every mutator commits through the log: after any mutation of " +
+      "a plain folder readCommit is Some, and an empty path gets its " +
+      "log at its first write") {
+    val cols = Seq("x", "y")
+    val feed = mk(0L, 20L).withColumn("__op", lit("insert"))
+    val wider = mk(0L, 1L).withColumn("lang", lit("en")).schema
+    // (mutator, live rows after it, starting from a 200-row plain folder)
+    val mutators: Seq[(String, String => Any, Long)] = Seq(
+      ("append", p => Lakehouse.append(spark, p, mk(200L, 220L), cols,
+        bits = 6, partitions = 1), 220L),
+      ("appendAt", p => Lakehouse.appendAt(spark, p, mk(200L, 220L),
+        cols, gen = 0L, bits = 6, partitions = 1), 220L),
+      ("Layout.appendZordered", p => Layout.appendZordered(spark, p,
+        mk(200L, 220L), cols, bits = 6, partitions = 1), 220L),
+      ("Layout.appendGeneration", p => Layout.appendGeneration(spark, p,
+        mk(200L, 220L), cols, bits = 6, partitions = 1, gen = 0L), 220L),
+      ("deleteWhere", p => Lakehouse.deleteWhere(spark, p,
+        col("id") < 10L), 190L),
+      ("deleteMatching", p => Lakehouse.deleteMatching(spark, p,
+        spark.range(0L, 5L).toDF("id"), "id"), 195L),
+      ("upsertByKey", p => Lakehouse.upsertByKey(spark, p, mk(0L, 20L),
+        "id", cols, bits = 6, partitions = 1), 200L),
+      ("upsertBatch", p => Lakehouse.upsertBatch(spark, p, mk(0L, 20L),
+        "id", cols, 6, 1, gen = 0L), 200L),
+      ("applyChangesByKey", p => Lakehouse.applyChangesByKey(spark, p,
+        feed, "id", cols, bits = 6, partitions = 1), 200L),
+      ("applyBatch", p => Lakehouse.applyBatch(spark, p, feed, "id", cols,
+        6, 1, gen = 0L), 200L),
+      ("rollback", p => Lakehouse.rollback(spark, p, -1L), 200L),
+      ("compact", p => Lakehouse.compact(spark, p, cols, bits = 6,
+        partitions = 1), 200L),
+      ("compactRetaining", p => Lakehouse.compactRetaining(spark, p, cols,
+        retainAfter = 0L, bits = 6, partitions = 1), 200L),
+      ("evolveSchema", p => Lakehouse.evolveSchema(spark, p, wider),
+        200L))
+    mutators.foreach { case (name, mutate, rows) =>
+      val path = tmp(s"lake-ptr-every-$name")
+      Layout.zorder(mk(0L, 200L), cols, bits = 6, partitions = 2)
+        .write.parquet(path)
+      assert(Lakehouse.readCommit(spark, path).isEmpty, name)
+      mutate(path)
+      assert(Lakehouse.readCommit(spark, path).isDefined,
+        s"$name left the table without a log")
+      assert(Lakehouse.scan(spark, path).count() == rows, name)
+    }
+    val empty = tmp("lake-ptr-every-empty")
+    Layout.appendGeneration(spark, empty, mk(0L, 50L), cols, bits = 6,
+      partitions = 1, gen = 0L)
+    val c = Lakehouse.readCommit(spark, empty).get
+    assert(c.version == 2L && c.data.nonEmpty && c.schemaJson.isDefined,
+      "v1 is the empty path's log, v2 the first append")
+    assert(Lakehouse.scan(spark, empty).count() == 50L)
   }
 }

@@ -211,6 +211,11 @@ class LakehouseSpec extends SparkSpec {
     assert(Lakehouse.deleteDebt(spark, path) == 0L)
     // manifest slices past the snapshot are gone too
     assert(spark.read.parquet(s"${path}_manifest").count() == 2L)
+    // the rolled-back generation and its tombstone left the live sets;
+    // their files wait for vacuum, which sweeps them past grace
+    val swept = Lakehouse.vacuum(spark, path, graceMs = 0L)
+    assert(swept.count(_.contains("/gen1-")) == 2 &&
+      swept.exists(_.contains("/del1-")), swept.mkString(","))
     // life goes on: the freed generation id is reusable
     Layout.appendGeneration(spark, path, mk(500L, 600L), Seq("x", "y"),
       bits = 6, partitions = 1, gen = 1L)
@@ -1157,34 +1162,39 @@ class LakehouseSpec extends SparkSpec {
     assert(fresh.filter(col("__op") === "insert").count() == 500L)
   }
 
-  test("the epoch/floor marker update is crash-atomic: a lingering " +
-      "_epoch_next is preferred by readers and finished by recover") {
-    // the standalone marker is the LEGACY (never-pointered) form —
-    // rollback on a plain generation table writes it; pointered tables
-    // carry epoch/floor inside their atomic commit instead
-    val path = tmp("lake-epochnext")
-    val mk = (lo: Long, hi: Long) => spark.range(lo, hi).select(
-      col("id"), (col("id") % 100).cast("double").as("x"))
-    Layout.appendGeneration(spark, path, mk(0L, 200L), Seq("x", "id"),
-      bits = 6, partitions = 1, gen = 0L)
-    Layout.appendGeneration(spark, path, mk(200L, 400L), Seq("x", "id"),
-      bits = 6, partitions = 1, gen = 1L)
-    Lakehouse.rollback(spark, path, 0L)
-    val (epoch, floor) = Lakehouse.epochAndFloor(spark, path)
-    assert(epoch == 1L)
-    // simulate the crash window: the new marker landed at _epoch_next,
-    // the old marker was already deleted — the value must NOT revert
-    // to (0, -1), which would silently stop expired windows raising
+  test("migrating an old on-disk table reads its legacy epoch marker: " +
+      "v1 lands with the _epoch (or a crashed update's _epoch_next) " +
+      "epoch and floor") {
+    // the standalone `<path>_epoch` marker is what tables written
+    // before the commit log carry; it is read only as migration input
     val conf = spark.sessionState.newHadoopConf()
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val f = p(path).getFileSystem(conf)
-    assert(f.rename(p(s"${path}_epoch"), p(s"${path}_epoch_next")))
-    assert(Lakehouse.epochAndFloor(spark, path) == ((epoch, floor)))
-    val actions = Lakehouse.recover(spark, path)
-    assert(actions.exists(_.contains("epoch/floor")), actions.toString)
-    assert(f.exists(p(s"${path}_epoch")))
-    assert(!f.exists(p(s"${path}_epoch_next")))
-    assert(Lakehouse.epochAndFloor(spark, path) == ((epoch, floor)))
+    def marker(path: String, suffix: String, epoch: Long,
+               floor: Long): Unit = {
+      val out = p(path).getFileSystem(conf).create(p(s"$path$suffix"), true)
+      try { out.writeLong(epoch); out.writeLong(floor) } finally out.close()
+    }
+    val old = tmp("lake-legacy-epoch")
+    freshTable(old)
+    marker(old, "_epoch", 3L, 5L)
+    // read before any mutation: the listing snapshot, no log written
+    assert(Lakehouse.epochAndFloor(spark, old) == ((3L, 5L)))
+    assert(Lakehouse.readCommit(spark, old).isEmpty)
+    Lakehouse.deleteWhere(spark, old, col("id") < 10L)
+    val c = Lakehouse.readCommit(spark, old).get
+    assert((c.epoch, c.floor) == ((3L, 5L)))
+    assert(Lakehouse.scan(spark, old).count() == 990L)
+    // an update that crashed after landing its new value at
+    // `_epoch_next` (the old `_epoch` still beside it): the newer value
+    // wins — reverting would silently stop expired windows raising
+    val crashed = tmp("lake-legacy-epochnext")
+    freshTable(crashed)
+    marker(crashed, "_epoch", 1L, -1L)
+    marker(crashed, "_epoch_next", 2L, 4L)
+    Lakehouse.deleteWhere(spark, crashed, col("id") < 10L)
+    val c2 = Lakehouse.readCommit(spark, crashed).get
+    assert(c2.version == 2L && (c2.epoch, c2.floor) == ((2L, 4L)))
+    assert(Lakehouse.epochAndFloor(spark, crashed) == ((2L, 4L)))
   }
 
   test("recover refuses the unlocked mid-swap restore under a LIVE " +
