@@ -85,8 +85,8 @@ object Cli {
       |  layout -o <dir> --cols a,b --apply-feed <feedDir> --key <col>
       |                                   consume a feed into this replica table
       |  layout -o <dir> --cols a,b --recover
-      |                                   finish/undo a crashed swap; clean
-      |                                   staging leftovers and stale leases
+      |                                   drop a crashed writer's staging,
+      |                                   dangling manifests, stale leases
       |  layout -o <dir> --cols a,b --vacuum <graceMs>
       |                                   remove files a past commit replaced,
       |                                   once older than the grace window
@@ -409,8 +409,8 @@ object Cli {
           kv("--vacuum").toLong).size.toLong
         false
       case Some("--recover") =>
-        // finish or undo whatever a crashed swap left behind; the
-        // action log rides the JSON line
+        // clean up whatever a crashed writer left behind; the action
+        // log rides the JSON line
         val acts = graft.core.Lakehouse.recover(spark, outDir)
         out.println(s"""{"recovered":[${acts.map(a =>
           s""""${jsonEscape(a)}"""").mkString(",")}]}""")

@@ -360,28 +360,23 @@ object Lakehouse {
   def snapshotFloor(spark: SparkSession, path: String): Long =
     epochAndFloor(spark, path)._2
 
-  private def requireEpoch(spark: SparkSession, path: String,
-                           asOfEpoch: Long, what: String): Unit =
-    if (asOfEpoch >= 0) {
-      val cur = compactEpoch(spark, path)
-      require(asOfEpoch == cur,
-        s"$what: the caller's window was captured at compact epoch " +
-          s"$asOfEpoch but the table is at epoch $cur — a compaction " +
-          "collapsed the generation history in between (ids are " +
-          "reused), so the window no longer addresses what it did. " +
-          "Re-sync the replica from a full scan and re-capture the " +
-          "epoch (Lakehouse.compactEpoch)")
-    }
+  private def requireEpoch(c: TableCommit, asOfEpoch: Long,
+                           what: String): Unit =
+    require(asOfEpoch < 0 || asOfEpoch == c.epoch,
+      s"$what: the caller's window was captured at compact epoch " +
+        s"$asOfEpoch but the table is at epoch ${c.epoch} — a compaction " +
+        "collapsed the generation history in between (ids are " +
+        "reused), so the window no longer addresses what it did. " +
+        "Re-sync the replica from a full scan and re-capture the " +
+        "epoch (Lakehouse.compactEpoch)")
 
-  private def requireAboveFloor(spark: SparkSession, path: String,
-                                gen: Long, what: String): Unit = {
-    val floor = snapshotFloor(spark, path)
-    require(gen >= floor,
-      s"$what: generation $gen predates the snapshot floor $floor — " +
+  private def requireAboveFloor(c: TableCommit, gen: Long,
+                                what: String): Unit =
+    require(gen >= c.floor,
+      s"$what: generation $gen predates the snapshot floor ${c.floor} — " +
         "a retention-preserving compaction expired that history " +
         "(Lakehouse.compactRetaining); only snapshots at or after the " +
         "floor remain addressable")
-  }
 
   /** The schema with every field nullable — what a parquet round-trip
     * reads back; passing it explicitly to a re-read of our own write
@@ -434,6 +429,15 @@ object Lakehouse {
   // `_deletes` sidecar live, epoch/floor from the legacy `<path>_epoch`
   // marker — and its first mutation persists exactly that snapshot as
   // v1 ([[resolve]]).
+  //
+  // ONE CALL, ONE COMMIT: every operation resolves the log once — a
+  // reader through [[resolve]], a mutator through [[migrateToCommit]]
+  // under its lock — and takes its data files, tombstones, schema,
+  // epoch and floor from that one [[TableCommit]], handing it to every
+  // helper instead of letting a helper re-resolve from the path. A
+  // commit that lands mid-call (a compact racing a scan) therefore
+  // cannot mix two versions into one answer: the call completes
+  // against the version it resolved, whose files vacuum spares.
   // ------------------------------------------------------------------
 
   /** One committed table version: live file NAMES (relocatable, like
@@ -585,18 +589,21 @@ object Lakehouse {
     * Compacts and retention rewrites call this directly (their data
     * set changes wholesale); incremental mutators go through
     * [[commitAdvance]], which lands O(actions) delta markers and only
-    * checkpoints on cadence. Callers hold the table lock. */
+    * checkpoints on cadence. Returns the landed commit. Callers hold
+    * the table lock. */
   private[core] def commitWrite(spark: SparkSession, path: String,
                                 version: Long, data: Seq[String],
                                 deletes: Seq[String], epoch: Long,
                                 floor: Long,
-                                schemaJson: Option[String]): Unit = {
+                                schemaJson: Option[String]): TableCommit = {
     val body = MiniJson.write(Map(
       "version" -> version, "data" -> data.sorted,
       "deletes" -> deletes.sorted, "epoch" -> epoch, "floor" -> floor,
       "schema" -> schemaJson.orNull))
     markerRenameIn(fs(spark, path), new Path(commitDir(path)), version,
       ".json", body)
+    TableCommit(version, data.sorted, deletes.sorted, epoch, floor,
+      schemaJson)
   }
 
   /** Advance a table by ONE commit, landing a marker sized
@@ -664,15 +671,18 @@ object Lakehouse {
   }
 
   /** THE read resolution every reader rides: the logged commit, or the
-    * [[listingSnapshot]] of a folder with no log. */
-  private def resolve(spark: SparkSession, path: String): TableCommit =
+    * [[listingSnapshot]] of a folder with no log. Called ONCE per
+    * operation; everything the operation reads comes from its result. */
+  private[core] def resolve(spark: SparkSession,
+                            path: String): TableCommit =
     readCommit(spark, path).getOrElse(listingSnapshot(spark, path))
 
   /** The table's current commit, landing the [[listingSnapshot]] as v1
     * first when the folder has no log yet (an empty or missing path
     * gets an empty v1) — the schema is read from ONE footer, as
-    * [[tableSchema]] does. Idempotent: every mutator calls it under
-    * its lock before committing anything. Lock-holding callers only. */
+    * [[tableSchema]] does. Idempotent: every mutator calls it ONCE
+    * under its lock and threads the result through everything it
+    * commits. Lock-holding callers only. */
   private[core] def migrateToCommit(spark: SparkSession,
                                     path: String): TableCommit =
     readCommit(spark, path).getOrElse {
@@ -681,39 +691,20 @@ object Lakehouse {
         .map(n => spark.read.parquet(s"$path/$n").schema.json)
       commitWrite(spark, path, 1L, s.data, s.deletes, s.epoch, s.floor,
         schemaJson)
-      s.copy(version = 1L, schemaJson = schemaJson)
     }
 
-  /** The table's LIVE data files — the resolved commit's named set
-    * (dead files may sit alongside until [[vacuum]]). */
-  private[core] def dataFilePaths(spark: SparkSession,
-                                  path: String): Seq[Path] =
-    resolve(spark, path).data.map(n => new Path(path, n))
+  /** The commit's LIVE data files as full paths (dead files may sit
+    * alongside until [[vacuum]]). */
+  private[core] def livePaths(path: String, c: TableCommit): Seq[String] =
+    c.data.map(n => new Path(path, n).toString)
 
-  /** The table's LIVE tombstone files, resolved like
-    * [[dataFilePaths]]. */
-  private[core] def deleteFilePaths(spark: SparkSession,
-                                    path: String): Seq[Path] =
-    resolve(spark, path).deletes.map(n => new Path(deletesDir(path), n))
-
-  /** True when the table carries a schema CONTRACT a batch must honor
-    * — resident data files, or a committed schema (possibly evolved,
-    * possibly on a still-empty table). The keyed mutators check drift
-    * against it BEFORE their retraction half, so a drifted batch
-    * raises without having mutated anything. */
-  private def hasSchemaContract(spark: SparkSession,
-                                path: String): Boolean = {
-    val c = resolve(spark, path)
-    c.data.nonEmpty || c.schemaJson.isDefined
-  }
-
-  /** The table's SCAN schema: the committed schema-JSON when recorded
+  /** The commit's SCAN schema: the committed schema-JSON when recorded
     * (survives additive evolution and answers even a zero-file table),
     * else ONE live file's footer (same-schema is append-enforced), else
     * empty. */
-  def tableSchema(spark: SparkSession,
-                  path: String): org.apache.spark.sql.types.StructType = {
-    val c = resolve(spark, path)
+  private[core] def schemaOf(spark: SparkSession, path: String,
+                             c: TableCommit)
+      : org.apache.spark.sql.types.StructType =
     c.schemaJson match {
       case Some(js) =>
         org.apache.spark.sql.types.DataType.fromJson(js)
@@ -721,7 +712,22 @@ object Lakehouse {
       case None if c.data.isEmpty => new org.apache.spark.sql.types.StructType()
       case None => spark.read.parquet(s"$path/${c.data.head}").schema
     }
-  }
+
+  /** The schema CONTRACT a batch must honor — present when the commit
+    * has resident data files or a committed schema (possibly evolved,
+    * possibly on a still-empty table). Appends and the keyed merge
+    * check drift against it BEFORE mutating anything. */
+  private[core] def schemaContract(spark: SparkSession, path: String,
+                                   c: TableCommit)
+      : Option[org.apache.spark.sql.types.StructType] =
+    if (c.data.nonEmpty || c.schemaJson.isDefined)
+      Some(schemaOf(spark, path, c))
+    else None
+
+  /** The table's SCAN schema ([[schemaOf]] its current commit). */
+  def tableSchema(spark: SparkSession,
+                  path: String): org.apache.spark.sql.types.StructType =
+    schemaOf(spark, path, resolve(spark, path))
 
   private def parquetFiles(spark: SparkSession, path: String): Seq[Path] = {
     val p = new Path(path)
@@ -745,18 +751,22 @@ object Lakehouse {
       } else -1L
     } else -1L
 
-  /** Max generation among the table's data files; −1 for a table with
-    * only base files. New tombstones are stamped with this. */
-  def currentGen(spark: SparkSession, path: String): Long = {
-    val gens = dataFilePaths(spark, path).map(p => genOf(p.getName))
-    if (gens.isEmpty) -1L else gens.max
-  }
+  /** Max generation among the commit's data files; −1 for a table
+    * with only base files. New tombstones are stamped with this. */
+  private def maxGen(c: TableCommit): Long =
+    c.data.map(genOf).foldLeft(-1L)(math.max)
 
+  /** [[maxGen]] of the table's current commit. */
+  def currentGen(spark: SparkSession, path: String): Long =
+    maxGen(resolve(spark, path))
+
+  /** The commit's tombstones stamped at or before `maxGen`. */
   private def tombstoneFrame(spark: SparkSession, path: String,
-                             maxGen: Long = Long.MaxValue): Option[DataFrame] = {
-    val files = deleteFilePaths(spark, path)
-      .filter(p => maxGen == Long.MaxValue || delGenOf(p.getName) <= maxGen)
-      .map(_.toString)
+                             c: TableCommit,
+                             maxGen: Long = Long.MaxValue)
+      : Option[DataFrame] = {
+    val files = c.deletes.filter(n => delGenOf(n) <= maxGen)
+      .map(n => new Path(deletesDir(path), n).toString)
     if (files.isEmpty) None
     else Some(spark.read.schema(TombstoneSchema).parquet(files: _*)
       .filter(col(GenCol) <= maxGen)
@@ -775,24 +785,34 @@ object Lakehouse {
     * merge-on-read debt every [[scan]] pays and [[compact]] clears.
     * Tombstone storage is debt-row-bounded, never table-bounded. */
   def deleteDebt(spark: SparkSession, path: String): Long =
-    tombstoneFrame(spark, path).map(_.count()).getOrElse(0L)
+    debtOf(spark, path, resolve(spark, path))
 
-  private def tombstoneBytes(spark: SparkSession, path: String): Long =
-    deleteFilePaths(spark, path)
-      .map(p => fs(spark, path).getFileStatus(p).getLen).sum
+  private def debtOf(spark: SparkSession, path: String,
+                     c: TableCommit): Long =
+    tombstoneFrame(spark, path, c).map(_.count()).getOrElse(0L)
 
-  /** Read `files` minus `tombstones`, with the clean-file split: files
-    * no tombstone names are read bare (no metadata, no join); touched
-    * files ride a left-anti join on (file, pos), broadcast while the
-    * debt is small. Empty `files` → empty frame with `schema`. */
-  private def readMinus(spark: SparkSession, files: Seq[String],
+  /** Whether the commit's tombstone set is small enough on disk
+    * ([[broadcastTombstoneBytes]]) to broadcast into an anti-join. */
+  private def tombstonesBroadcastable(spark: SparkSession, path: String,
+                                      c: TableCommit): Boolean = {
+    val f = fs(spark, path)
+    c.deletes.map(n => f.getFileStatus(new Path(deletesDir(path), n))
+      .getLen).sum <= broadcastTombstoneBytes
+  }
+
+  /** Read `files` minus the commit's tombstones stamped at or before
+    * `maxGen`, with the clean-file split: files no tombstone names are
+    * read bare (no metadata, no join); touched files ride a left-anti
+    * join on (file, pos), broadcast while the debt is small. Empty
+    * `files` → empty frame with `schema`. */
+  private def readMinus(spark: SparkSession, path: String, c: TableCommit,
+                        files: Seq[String],
                         schema: org.apache.spark.sql.types.StructType,
-                        tombstones: Option[DataFrame],
-                        broadcastable: Boolean): DataFrame = {
+                        maxGen: Long = Long.MaxValue): DataFrame = {
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    tombstones match {
+    tombstoneFrame(spark, path, c, maxGen) match {
       case None => spark.read.schema(schema).parquet(files: _*)
       case Some(ts) =>
         // file-count-bounded driver list: which files have debt at all
@@ -810,13 +830,15 @@ object Lakehouse {
               .withColumn(FileCol,
                 element_at(split(col("_metadata.file_path"), "/"), -1))
               .withColumn(PosCol, col("_metadata.row_index"))
-            val side = if (broadcastable) broadcast(ts) else ts
+            val side =
+              if (tombstonesBroadcastable(spark, path, c)) broadcast(ts)
+              else ts
             Some(keyed.join(side, Seq(FileCol, PosCol), "left_anti")
               .drop(FileCol, PosCol))
           }
         (cleanDf, touchedDf) match {
-          case (Some(c), Some(t)) => c.unionByName(t)
-          case (Some(c), None) => c
+          case (Some(cl), Some(t)) => cl.unionByName(t)
+          case (Some(cl), None) => cl
           case (None, Some(t)) => t
           case (None, None) =>
             spark.createDataFrame(
@@ -835,21 +857,21 @@ object Lakehouse {
     * parquet scan — the read path costs nothing until a delete exists,
     * and after one it costs a broadcast probe on only the files the
     * debt names. */
-  def scan(spark: SparkSession, path: String): DataFrame = {
-    val files = dataFilePaths(spark, path).map(_.toString)
-    val schema = tableSchema(spark, path)
-    readMinus(spark, files, schema, tombstoneFrame(spark, path),
-      tombstoneBytes(spark, path) <= broadcastTombstoneBytes)
-  }
+  def scan(spark: SparkSession, path: String): DataFrame =
+    scanOf(spark, path, resolve(spark, path))
 
-  /** The manifest must name EXACTLY the live files: replaced files
-    * linger on disk until vacuum, so a stale manifest (a crash between
-    * a commit and its manifest rebuild) would silently serve dead data
-    * — raise instead. Compares file NAMES (manifests record build-time
-    * paths; tables relocate). Shared by both pruned scans. */
-  private[core] def requireManifestLive(spark: SparkSession, path: String,
+  private def scanOf(spark: SparkSession, path: String,
+                     c: TableCommit): DataFrame =
+    readMinus(spark, path, c, livePaths(path, c), schemaOf(spark, path, c))
+
+  /** The manifest must name EXACTLY the commit's live files: replaced
+    * files linger on disk until vacuum, so a stale manifest (a crash
+    * between a commit and its manifest rebuild) would silently serve
+    * dead data — raise instead. Compares file NAMES (manifests record
+    * build-time paths; tables relocate). Shared by both pruned scans. */
+  private[core] def requireManifestLive(path: String, c: TableCommit,
                                         manifest: DataFrame): Unit = {
-    val live = resolve(spark, path).data.toSet
+    val live = c.data.toSet
     val manifested = manifest.select("__file").collect()
       .map(r => fileName(r.getString(0))).toSet
     require(manifested == live,
@@ -871,12 +893,11 @@ object Lakehouse {
     val manifest = spark.read.parquet(s"${path}_manifest")
     val kept = Layout.pruneFiles(manifest, box)
       .select("__file").collect().map(r => r.getString(0))
-    requireManifestLive(spark, path, manifest)
-    val schema = tableSchema(spark, path)
-    val pred = box.map { case (c, lo, hi) => col(c).between(lo, hi) }
+    val c = resolve(spark, path)
+    requireManifestLive(path, c, manifest)
+    val pred = box.map { case (cn, lo, hi) => col(cn).between(lo, hi) }
       .reduce(_ && _)
-    readMinus(spark, kept.toSeq, schema, tombstoneFrame(spark, path),
-      tombstoneBytes(spark, path) <= broadcastTombstoneBytes)
+    readMinus(spark, path, c, kept.toSeq, schemaOf(spark, path, c))
       .filter(pred)
   }
 
@@ -892,16 +913,15 @@ object Lakehouse {
   def deleteWhere(spark: SparkSession, path: String, cond: Column,
                   rowsPerFile: Long = tombstoneRowsPerFile): Long =
     withTableLock(spark, path) {
-      val live = migrateToCommit(spark, path).data
-        .map(n => new Path(path, n).toString)
-      if (live.isEmpty) 0L
+      val c = migrateToCommit(spark, path)
+      if (c.data.isEmpty) 0L
       else {
-        val hits = spark.read.schema(tableSchema(spark, path))
-          .parquet(live: _*).filter(cond)
+        val hits = spark.read.schema(schemaOf(spark, path, c))
+          .parquet(livePaths(path, c): _*).filter(cond)
           .select(element_at(split(col("_metadata.file_path"), "/"), -1)
             .as(FileCol),
             col("_metadata.row_index").as(PosCol))
-        writeTombstones(spark, path, hits, rowsPerFile)._1
+        writeTombstones(spark, path, c, hits, rowsPerFile)._1
       }
     }
 
@@ -914,9 +934,8 @@ object Lakehouse {
                      keys: DataFrame, keyCol: String,
                      rowsPerFile: Long = tombstoneRowsPerFile): Long =
     withTableLock(spark, path) {
-      migrateToCommit(spark, path)
-      deleteMatchingIn(spark, path,
-        dataFilePaths(spark, path).map(_.toString), keys, keyCol,
+      val c = migrateToCommit(spark, path)
+      deleteMatchingIn(spark, path, c, livePaths(path, c), keys, keyCol,
         rowsPerFile)._1
     }
 
@@ -933,17 +952,18 @@ object Lakehouse {
     * absent from the manifest (appended after it — staleness degrades
     * the skip, never correctness, exactly [[pointLookup]]'s contract).
     * Applies only when the manifest exists, the batch key expression
-    * has EXACTLY the key column's type (no join-coercion ambiguity to
-    * reason about), and the batch is lookup-sized
+    * has EXACTLY the key column's type in commit `c` (no join-coercion
+    * ambiguity to reason about), and the batch is lookup-sized
     * ([[bloomRetractionMaxKeys]] — the key sample is k-bounded driver
     * work); otherwise returns `files` unchanged. */
   private[graft] def bloomNarrow(spark: SparkSession, path: String,
-                                 files: Seq[String], keys: DataFrame,
+                                 c: TableCommit, files: Seq[String],
+                                 keys: DataFrame,
                                  keyCol: String): Seq[String] = {
     val bDir = s"${path}_bloom_$keyCol"
     if (files.isEmpty || !fs(spark, path).exists(new Path(bDir)))
       return files
-    val kt = tableSchema(spark, path)(keyCol).dataType
+    val kt = schemaOf(spark, path, c)(keyCol).dataType
     if (keys.schema(keyCol).dataType != kt) return files
     val sample = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
       .distinct().limit(bloomRetractionMaxKeys + 1)
@@ -967,45 +987,38 @@ object Lakehouse {
       !manifested.contains(fileName(fp)))
   }
 
-  /** [[deleteMatching]] over an explicit file subset — the building
-    * block [[upsertByKeyStream]] needs: a REPLAYED upsert batch must
-    * not tombstone the rows its own first attempt landed (its
+  /** [[deleteMatching]] over an explicit file subset of commit `c` —
+    * the building block the keyed merge needs: a REPLAYED upsert batch
+    * must not tombstone the rows its own first attempt landed (its
     * generation's files are replaced by the replay's, so the tombstones
     * would die with them and the rows come back). The pass is
     * [[bloomNarrow]]-bounded: with a Bloom manifest present and a
     * lookup-sized batch, only files that might hold a batch key are
     * read — a CDC micro-batch's cost stops tracking the table size. */
   private def deleteMatchingIn(spark: SparkSession, path: String,
-                               files: Seq[String], keys: DataFrame,
-                               keyCol: String,
+                               c: TableCommit, files: Seq[String],
+                               keys: DataFrame, keyCol: String,
                                rowsPerFile: Long = tombstoneRowsPerFile,
-                               schemaHint: Option[org.apache.spark.sql
-                                 .types.StructType] = None,
                                commit: Boolean = true)
       : (Long, Seq[String]) = {
-    val narrowed = bloomNarrow(spark, path, files, keys, keyCol)
+    val narrowed = bloomNarrow(spark, path, c, files, keys, keyCol)
     if (narrowed.isEmpty) return (0L, Seq.empty)
-    // callers that just drift-checked the table pass the schema they
-    // proved — skipping a second resolve
-    val schema = schemaHint.getOrElse(tableSchema(spark, path))
-    val addressed = spark.read.schema(schema).parquet(narrowed: _*)
+    val addressed = spark.read.schema(schemaOf(spark, path, c))
+      .parquet(narrowed: _*)
       .select(col(keyCol),
         element_at(split(col("_metadata.file_path"), "/"), -1).as(FileCol),
         col("_metadata.row_index").as(PosCol))
     val hits = addressed
       .join(keys.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi")
       .select(FileCol, PosCol)
-    writeTombstones(spark, path, hits, rowsPerFile, commit)
+    writeTombstones(spark, path, c, hits, rowsPerFile, commit)
   }
 
-  /** Stage `hits` minus already-recorded tombstones (natural
-    * partitioning — the table pass never funnels one task), count the
-    * staged rows (a tombstone-sized read, never a second job over the
-    * table), normalize into `ceil(n / rowsPerFile)` shards, and land
-    * each under a deterministic generation-stamped name
-    * (`del<g>-<seq+k>.parquet`) via the [[Layout.appendGeneration]]
-    * staging-then-rename discipline. Takedown-sized deletes land as
-    * one file; a ~10⁹-row retraction shards instead of funneling.
+  /** Land `hits` minus the tombstones commit `c` already records,
+    * stamped with its max generation, through [[stageSharded]] as
+    * `del<g>-<seq+k>.parquet`: takedown-sized deletes land as one
+    * file; a ~10⁹-row retraction shards instead of funneling. Returns
+    * the newly tombstoned row count and the landed names.
     *
     * `commit = false` DEFERS the pointer advance: the landed names are
     * returned for the caller to fold into ITS commit (the upsert/CDC
@@ -1015,71 +1028,93 @@ object Lakehouse {
     * into [[vacuum]]'s sweep, and the mutation as a whole is ATOMIC —
     * a replay recomputes the same hits against the un-advanced state. */
   private def writeTombstones(spark: SparkSession, path: String,
-                              hits: DataFrame,
+                              c: TableCommit, hits: DataFrame,
                               rowsPerFile: Long = tombstoneRowsPerFile,
                               commit: Boolean = true)
       : (Long, Seq[String]) = {
     require(rowsPerFile > 0, s"writeTombstones: rowsPerFile must be " +
       s"positive, got $rowsPerFile")
-    val gen = currentGen(spark, path)
-    val fresh = tombstoneFrame(spark, path) match {
+    val gen = maxGen(c)
+    val fresh = tombstoneFrame(spark, path, c) match {
       case Some(ts) => hits.join(ts, Seq(FileCol, PosCol), "left_anti")
       case None => hits
     }
-    val dDir = deletesDir(path)
+    val (n, landed) = stageSharded(spark, path,
+      fresh.withColumn(GenCol, lit(gen)), deletesDir(path), s"del$gen-",
+      rowsPerFile)
+    // the live tombstone set advances by commit — an O(landed-files)
+    // delta marker, not a full-state rewrite — unless the caller asked
+    // to fold the names into its OWN commit
+    if (commit && landed.nonEmpty)
+      commitAdvance(spark, path, c, addDeletes = landed)
+    (n, landed)
+  }
+
+  /** Stage `df` (natural partitioning — a table pass never funnels one
+    * task), count the staged rows (a staged-size read, never a second
+    * job over the source), normalize into `ceil(n / rowsPerFile)`
+    * shards, and land them in `destDir` under DETERMINISTIC names
+    * `<prefix><k>.parquet`, k past any on-disk sibling (live and
+    * vacuum-pending files both occupy their names). The staged write
+    * usually already holds the right shard count (AQE coalesces a
+    * takedown-sized frame to one file) — then its parts rename in
+    * directly, and only a mismatched layout pays the normalizing
+    * reshard. Returns the staged row count and the landed names. */
+  private def stageSharded(spark: SparkSession, path: String,
+                           df: DataFrame, destDir: String, prefix: String,
+                           rowsPerFile: Long): (Long, Seq[String]) = {
     val f = fs(spark, path)
-    var landedNames: Seq[String] = Seq.empty
-    val seq = parquetFiles(spark, dDir)
-      .map(_.getName).filter(_.startsWith(s"del$gen-"))
-      .map(n => n.stripPrefix(s"del$gen-").stripSuffix(".parquet").toLong)
-      .foldLeft(-1L)(math.max) + 1
-    val raw = s"${path}_incoming/del$gen-$seq-raw"
-    val stamped = fresh.withColumn(GenCol, lit(gen))
-    stamped.write.mode("overwrite").parquet(raw)
-    // the schema is in hand — re-reads of the staged debt skip footer
+    val raw = s"${path}_incoming/$prefix-raw"
+    df.write.mode("overwrite").parquet(raw)
+    // the schema is in hand — re-reads of the staged frame skip footer
     // inference
-    val rawDf = spark.read.schema(nullableCopy(stamped.schema)).parquet(raw)
+    val rawDf = spark.read.schema(nullableCopy(df.schema)).parquet(raw)
     val n = rawDf.count()
-    if (n > 0) {
+    if (n == 0) { f.delete(new Path(raw), true); (0L, Seq.empty) }
+    else {
       val shards = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
-      val rawParts = f.listStatus(new Path(raw))
-        .filter(s => s.getPath.getName.startsWith("part-") &&
-          s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath).sortBy(_.getName)
-      // the staged write usually already holds the right shard count
-      // (AQE coalesces a takedown-sized debt to one file) — then the
-      // parts rename in directly, skipping a full second
-      // read→shuffle→write of the debt; only a mismatched layout pays
-      // the normalizing reshard
-      val parts: Array[Path] =
-        if (rawParts.length == shards) rawParts
+      val parts =
+        if (stagedParts(f, raw).length == shards) raw
         else {
-          val staging = s"${path}_incoming/del$gen-$seq"
-          rawDf.repartition(shards)
-            .write.mode("overwrite").parquet(staging)
-          val ps = f.listStatus(new Path(staging))
-            .filter(_.getPath.getName.startsWith("part-"))
-            .map(_.getPath).sortBy(_.getName)
-          ps
+          val norm = s"${path}_incoming/$prefix-norm"
+          rawDf.repartition(shards).write.mode("overwrite").parquet(norm)
+          norm
         }
-      f.mkdirs(new Path(dDir))
-      val landed = parts.zipWithIndex.map { case (p, k) =>
-        val dst = new Path(dDir, s"del$gen-${seq + k}.parquet")
-        require(f.rename(p, dst),
-          s"writeTombstones: $p -> $dst failed")
-        dst.getName
-      }
-      f.delete(new Path(s"${path}_incoming/del$gen-$seq"), true)
-      landedNames = landed.toSeq
-      // the live tombstone set advances by commit — an O(landed-files)
-      // delta marker, not a full-state rewrite — unless the caller
-      // asked to fold the names into its OWN commit
-      if (commit)
-        commitAdvance(spark, path, migrateToCommit(spark, path),
-          addDeletes = landedNames)
+      val firstIdx = nextIndexFor(spark, destDir, prefix)
+      val names = renameStagedIn(spark, parts, destDir,
+        k => s"$prefix${firstIdx + k}.parquet")
+      f.delete(new Path(raw), true)
+      (n, names)
     }
-    f.delete(new Path(raw), true)
-    (n, landedNames)
+  }
+
+  private def stagedParts(f: FileSystem, staged: String): Seq[Path] =
+    f.listStatus(new Path(staged)).toSeq
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
+        s.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath).sortBy(_.getName)
+
+  /** Move the `part-*.parquet` files a Spark write left under `staged`
+    * into `destDir` as `name(k)` (k in part-name order) and drop the
+    * staging dir — the one landing step of every staged write. A
+    * destination that already exists is a crashed attempt's orphan
+    * (names are claimed by the next commit version or past every
+    * on-disk sibling, so no live set names it) and is replaced.
+    * Returns the landed names. */
+  private[core] def renameStagedIn(spark: SparkSession, staged: String,
+                                   destDir: String,
+                                   name: Int => String): Seq[String] = {
+    val f = fs(spark, destDir)
+    val parts = stagedParts(f, staged)
+    f.mkdirs(new Path(destDir))
+    val names = parts.zipWithIndex.map { case (p, k) =>
+      val dst = new Path(destDir, name(k))
+      if (f.exists(dst)) f.delete(dst, false)
+      require(f.rename(p, dst), s"rename $p -> $dst failed")
+      dst.getName
+    }
+    f.delete(new Path(staged), true)
+    names
   }
 
   /** Point lookup through the Bloom membership manifest
@@ -1103,7 +1138,8 @@ object Lakehouse {
       s"pointLookup: no Bloom manifest at $bDir — run " +
         s"Layout.writeBloomManifest(spark, path, \"$keyCol\") first")
     val bm = spark.read.parquet(bDir)
-    val schema = tableSchema(spark, path)
+    val c = resolve(spark, path)
+    val schema = schemaOf(spark, path, c)
     // probe hashes computed THROUGH Spark's own xxhash64 (one 1-row
     // job), each literal TRY_CAST to the key column's type first — the
     // build side hashed xxhash64(col(keyCol)), and xxhash64 is
@@ -1131,11 +1167,10 @@ object Lakehouse {
     val manifested = probed.map(r => fileName(r.getString(0))).toSet
     val kept = probed.filter(r => r.getAs[Any]("__might") == true)
       .map(r => fileName(r.getString(0))).toSet
-    val files = dataFilePaths(spark, path).map(_.toString)
+    val files = livePaths(path, c)
       .filter(f => kept.contains(fileName(f)) ||
         !manifested.contains(fileName(f)))
-    readMinus(spark, files, schema, tombstoneFrame(spark, path),
-      tombstoneBytes(spark, path) <= broadcastTombstoneBytes)
+    readMinus(spark, path, c, files, schema)
       // the re-applied exact predicate uses the SAME casts the hashes
       // rode, so probe typing can never split the two answers
       .filter(col(keyCol).isin(typed: _*))
@@ -1168,10 +1203,11 @@ object Lakehouse {
   /** The LOCKED public append surface — [[Layout.appendZordered]]
     * serialized through [[withTableLock]] like every other mutator.
     * The unlocked Layout form stays for lock-HOLDING callers (the
-    * lease is not reentrant): two unlocked appends racing can read the
-    * same before-listing and mis-slice the manifest, and an unlocked
-    * append racing a locked [[deleteWhere]] can tombstone rows in
-    * files a replay then rewrites. Route concurrent ingest here. */
+    * lease is not reentrant): two unlocked appends racing resolve the
+    * same commit and claim the same next version (the loser's commit
+    * raises after its files landed), and an unlocked append racing a
+    * locked [[deleteWhere]] can tombstone rows in files a replay then
+    * rewrites. Route concurrent ingest here. */
   def append(spark: SparkSession, path: String, batch: DataFrame,
              cols: Seq[String], bits: Int = 12,
              partitions: Int = 0): Unit =
@@ -1195,8 +1231,7 @@ object Lakehouse {
   /** Sidecar suffixes a lakehouse table hangs off its path — used to
     * tell tables from their own metadata dirs during discovery. */
   private val sidecarSuffixes = Seq("_deletes", "_manifest", "_commit",
-    "_lock", "_incoming", "_rebuild", "_retain_rebuild",
-    "_retain_deletes", "_pre_compact", "_pre_rebuild", "_del_ckpt",
+    "_lock", "_incoming", "_rebuild", "_retain_rebuild", "_del_ckpt",
     "_upsert_ckpt", "_apply_ckpt", "_ckpt")
 
   /** The CATALOG surface: one row per lakehouse table found directly
@@ -1251,9 +1286,9 @@ object Lakehouse {
           if (cols.isEmpty) None
           else Some(Layout.layoutHealth(m, cols))
         }
-      (p.getName, path, c.version, c.epoch, c.floor,
-        currentGen(spark, path), data.size.toLong,
-        c.deletes.size.toLong, deleteDebt(spark, path), bytes,
+      (p.getName, path, c.version, c.epoch, c.floor, maxGen(c),
+        data.size.toLong, c.deletes.size.toLong, debtOf(spark, path, c),
+        bytes,
         health.map(_.files), health.map(_.pointCost))
     }
     rows.toDF("table", "path", "version", "epoch", "floor",
@@ -1272,26 +1307,26 @@ object Lakehouse {
   def evolveSchema(spark: SparkSession, path: String,
                    wider: org.apache.spark.sql.types.StructType): Unit =
     withTableLock(spark, path) {
-      evolveSchemaBody(spark, path, wider)
+      evolveSchemaBody(spark, path, migrateToCommit(spark, path), wider)
+      ()
     }
 
-  /** UNLOCKED internal form of [[evolveSchema]] for callers already
-    * holding the (non-reentrant) table lock — [[applyChangesByKey]]'s
-    * opt-in auto-evolve rides this inside its own hold. */
-  private[core] def evolveSchemaBody(spark: SparkSession, path: String,
-      wider: org.apache.spark.sql.types.StructType): Unit = {
-    val c = migrateToCommit(spark, path)
-    val resident = tableSchema(spark, path)
+  /** UNLOCKED internal form of [[evolveSchema]] over commit `c`, for
+    * callers already holding the (non-reentrant) table lock — the keyed
+    * merge's opt-in auto-evolve rides this inside its own hold. Returns
+    * the commit the caller continues from (`c` when nothing widened). */
+  private def evolveSchemaBody(spark: SparkSession, path: String,
+                               c: TableCommit,
+                               wider: org.apache.spark.sql.types.StructType)
+      : TableCommit = {
+    val resident = schemaOf(spark, path, c)
     Layout.requireSameSchema(resident, wider, "evolveSchema",
       allowAdditive = true)
     val have = resident.fieldNames.toSet
     val added = wider.fields.filterNot(f => have.contains(f.name))
-    if (added.nonEmpty) {
-      val evolved = org.apache.spark.sql.types.StructType(
-        resident.fields ++ added)
-      commitAdvance(spark, path, c, schemaJson = Some(evolved.json))
-      ()
-    }
+    if (added.isEmpty) c
+    else commitAdvance(spark, path, c, schemaJson = Some(
+      org.apache.spark.sql.types.StructType(resident.fields ++ added).json))
   }
 
   /** [[append]] with additive evolution in one call: widen the schema
@@ -1323,34 +1358,59 @@ object Lakehouse {
   def upsertByKey(spark: SparkSession, path: String, updates: DataFrame,
                   keyCol: String, cols: Seq[String], bits: Int = 12,
                   partitions: Int = 0): Unit =
+    mergeByKey(spark, path, updates, updates, keyCol, cols, bits,
+      partitions, pinnedGen = None, evolve = false, "upsertByKey")
+
+  /** THE keyed merge under [[upsertByKey]], [[upsertBatch]],
+    * [[applyChangesByKey]] and [[applyBatch]], in ONE lock hold from
+    * ONE resolved commit:
+    *  - drift: `inserts` must match the table's schema contract — or,
+    *    with `evolve`, the contract first widens to it (drops/retypes
+    *    still raise; the evolution commits before the retraction, so a
+    *    refused batch has mutated nothing);
+    *  - `inserts` must be key-unique;
+    *  - retraction: every live row whose key appears in `batch` is
+    *    tombstoned, from every live file — or, with a `pinnedGen`,
+    *    every file but that generation's own (a replay must not
+    *    tombstone what its first attempt landed: the replay replaces
+    *    those files);
+    *  - landing: `inserts` land as the pinned generation, as max+1 on
+    *    a generation-managed table, or as a plain append.
+    * The retraction DEFERS its commit: its tombstone names ride the
+    * landing's marker — ONE atomic commit per merge (a crash between
+    * the halves leaves only vacuum-aged orphans, never a
+    * deleted-but-not-replaced visible state). */
+  private def mergeByKey(spark: SparkSession, path: String,
+                         batch: DataFrame, inserts: DataFrame,
+                         keyCol: String, cols: Seq[String], bits: Int,
+                         partitions: Int, pinnedGen: Option[Long],
+                         evolve: Boolean, what: String): Unit =
     withTableLock(spark, path) {
-      migrateToCommit(spark, path)
-      // schema drift raises BEFORE the retraction half mutates; the
-      // proven schema rides into the retraction so it never re-infers
-      val tSchema =
-        if (hasSchemaContract(spark, path)) Some(tableSchema(spark, path))
-        else None
-      tSchema.foreach(Layout.requireSameSchema(_, updates.schema,
-        "upsertByKey"))
-      val dup = updates.groupBy(col(keyCol)).count()
+      val c0 = migrateToCommit(spark, path)
+      val c = schemaContract(spark, path, c0) match {
+        case Some(_) if evolve =>
+          evolveSchemaBody(spark, path, c0, inserts.schema)
+        case Some(s) =>
+          Layout.requireSameSchema(s, inserts.schema, what); c0
+        case None => c0
+      }
+      val dup = inserts.groupBy(col(keyCol)).count()
         .filter(col("count") > 1).limit(1).collect()
       require(dup.isEmpty,
-        s"upsertByKey: updates carry duplicate $keyCol=${dup.headOption
-          .map(_.get(0)).orNull} — last-writer-wins needs one row per key")
-      // the retraction DEFERS its commit: the landed tombstone names
-      // ride the append's delta marker — ONE commit per upsert (and an
-      // atomic one: a crash between the halves leaves only vacuum-aged
-      // orphans, never a deleted-but-not-replaced visible state)
-      val (_, landedDels) = deleteMatchingIn(spark, path,
-        dataFilePaths(spark, path).map(_.toString),
-        updates.select(keyCol), keyCol, schemaHint = tSchema,
-        commit = false)
-      val gen = currentGen(spark, path)
-      if (gen >= 0)
-        Layout.appendGeneration(spark, path, updates, cols, bits,
-          partitions, gen + 1, extraAddDeletes = landedDels)
-      else Layout.appendZordered(spark, path, updates, cols, bits,
-        partitions, extraAddDeletes = landedDels)
+        s"$what: ${pinnedGen.fold("")(g => s"generation $g's ")}inserts " +
+          s"carry duplicate $keyCol=${dup.headOption.map(_.get(0)).orNull}" +
+          " — last-writer-wins needs one row per key")
+      val files = livePaths(path, c)
+        .filter(p => !pinnedGen.contains(genOf(fileName(p))))
+      val (_, landedDels) = deleteMatchingIn(spark, path, c, files,
+        batch.select(col(keyCol)), keyCol, commit = false)
+      val gen = maxGen(c)
+      pinnedGen.orElse(if (gen >= 0) Some(gen + 1) else None) match {
+        case Some(g) => Layout.appendGenerationFrom(spark, path, c,
+          inserts, cols, bits, partitions, g, landedDels)
+        case None => Layout.appendZorderedFrom(spark, path, c, inserts,
+          cols, bits, partitions, landedDels)
+      }
     }
 
   /** Streamed keyed upserts — the CDC-consumption form: each
@@ -1362,27 +1422,15 @@ object Lakehouse {
     * attempt landed: the replay replaces those files), and the append
     * half is [[Layout.appendGeneration]]'s replace-your-own-files
     * discipline.
-    * Generations are `base + micro-batch id`, with `base` pinned to a
-    * file under the checkpoint on first use so restarts map replayed
-    * ids to the SAME generations. AvailableNow drain. */
+    * Generations are `base + micro-batch id`, with `base` pinned under
+    * the checkpoint on first use ([[pinnedGenBase]]). AvailableNow
+    * drain. */
   def upsertByKeyStream(updates: DataFrame, path: String, keyCol: String,
                         cols: Seq[String], bits: Int = 12,
                         partitions: Int = 0): Unit = {
     val spark = updates.sparkSession
     val ckpt = s"${path}_upsert_ckpt"
-    val f = fs(spark, path)
-    val baseFile = new Path(ckpt, "graft_gen_base")
-    val base: Long =
-      if (f.exists(baseFile)) {
-        val in = f.open(baseFile)
-        try in.readLong() finally in.close()
-      } else {
-        val b = currentGen(spark, path) + 1
-        f.mkdirs(new Path(ckpt))
-        val out = f.create(baseFile, false)
-        try out.writeLong(b) finally out.close()
-        b
-      }
+    val base = pinnedGenBase(spark, ckpt, currentGen(spark, path) + 1)
     val q = updates.writeStream
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1394,6 +1442,26 @@ object Lakehouse {
     q.awaitTermination()
   }
 
+  /** The generation a streamed keyed form adds its micro-batch ids to:
+    * `fresh` (the table's max generation + 1) pinned to
+    * `<ckpt>/graft_gen_base` on first use, so restarts map replayed ids
+    * to the SAME generations. */
+  private def pinnedGenBase(spark: SparkSession, ckpt: String,
+                            fresh: => Long): Long = {
+    val f = fs(spark, ckpt)
+    val baseFile = new Path(ckpt, "graft_gen_base")
+    if (f.exists(baseFile)) {
+      val in = f.open(baseFile)
+      try in.readLong() finally in.close()
+    } else {
+      val b = fresh
+      f.mkdirs(new Path(ckpt))
+      val out = f.create(baseFile, false)
+      try out.writeLong(b) finally out.close()
+      b
+    }
+  }
+
   /** One upsert micro-batch at a pinned generation — the replay-safe
     * body under [[upsertByKeyStream]] (exposed for direct redelivery
     * testing): tombstone prior versions from every file EXCEPT the
@@ -1402,28 +1470,8 @@ object Lakehouse {
                                  batch: DataFrame, keyCol: String,
                                  cols: Seq[String], bits: Int,
                                  partitions: Int, gen: Long): Unit =
-    withTableLock(spark, path) {
-      migrateToCommit(spark, path)
-      val tSchema =
-        if (hasSchemaContract(spark, path)) Some(tableSchema(spark, path))
-        else None
-      tSchema.foreach(Layout.requireSameSchema(_, batch.schema,
-        "upsertBatch"))
-      val dup = batch.groupBy(col(keyCol)).count()
-        .filter(col("count") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"upsertBatch: generation $gen carries duplicate " +
-          s"$keyCol=${dup.headOption.map(_.get(0)).orNull}")
-      val older = dataFilePaths(spark, path)
-        .filter(p => genOf(p.getName) != gen).map(_.toString)
-      // deferred-commit fusion: one delta marker per micro-batch
-      // carrying both the tombstone adds and the data adds
-      val (_, landedDels) = deleteMatchingIn(spark, path, older,
-        batch.select(keyCol), keyCol, schemaHint = tSchema,
-        commit = false)
-      Layout.appendGeneration(spark, path, batch, cols, bits, partitions,
-        gen, extraAddDeletes = landedDels)
-    }
+    mergeByKey(spark, path, batch, batch, keyCol, cols, bits, partitions,
+      pinnedGen = Some(gen), evolve = false, "upsertBatch")
 
   /** The table as of generation `gen`: data files born at or before it,
     * minus tombstones stamped at or before it. Requires a
@@ -1438,13 +1486,12 @@ object Lakehouse {
     * epoch check — the generation floor still applies). */
   def scanAsOf(spark: SparkSession, path: String, gen: Long,
                asOfEpoch: Long = -1L): DataFrame = {
-    requireEpoch(spark, path, asOfEpoch, "scanAsOf")
-    requireAboveFloor(spark, path, gen, "scanAsOf")
-    val files = dataFilePaths(spark, path)
-      .filter(p => genOf(p.getName) <= gen).map(_.toString)
-    val schema = tableSchema(spark, path)
-    readMinus(spark, files, schema, tombstoneFrame(spark, path, gen),
-      tombstoneBytes(spark, path) <= broadcastTombstoneBytes)
+    val c = resolve(spark, path)
+    requireEpoch(c, asOfEpoch, "scanAsOf")
+    requireAboveFloor(c, gen, "scanAsOf")
+    readMinus(spark, path, c,
+      livePaths(path, c).filter(p => genOf(fileName(p)) <= gen),
+      schemaOf(spark, path, c), maxGen = gen)
   }
 
   /** Change data feed between two snapshots — `(fromGen, toGen]`, net
@@ -1488,32 +1535,34 @@ object Lakehouse {
     * same-process callers that know no compact ran). */
   def changesBetween(spark: SparkSession, path: String,
                      fromGen: Long, toGen: Long,
-                     asOfEpoch: Long = -1L): DataFrame = {
+                     asOfEpoch: Long = -1L): DataFrame =
+    changesOf(spark, path, resolve(spark, path), fromGen, toGen, asOfEpoch)
+
+  private def changesOf(spark: SparkSession, path: String, c: TableCommit,
+                        fromGen: Long, toGen: Long,
+                        asOfEpoch: Long): DataFrame = {
     require(fromGen <= toGen,
       s"changesBetween: need fromGen <= toGen, got ($fromGen, $toGen]")
-    requireEpoch(spark, path, asOfEpoch, "changesBetween")
-    requireAboveFloor(spark, path, fromGen, "changesBetween")
-    val schema = tableSchema(spark, path)
-    val bc = tombstoneBytes(spark, path) <= broadcastTombstoneBytes
-    val allData = dataFilePaths(spark, path)
-    val newFiles = allData
-      .filter(p => genOf(p.getName) > fromGen && genOf(p.getName) <= toGen)
-      .map(_.toString)
-    val inserts = readMinus(spark, newFiles, schema,
-      tombstoneFrame(spark, path, toGen), bc)
+    requireEpoch(c, asOfEpoch, "changesBetween")
+    requireAboveFloor(c, fromGen, "changesBetween")
+    val schema = schemaOf(spark, path, c)
+    val newFiles = livePaths(path, c).filter { p =>
+      val g = genOf(fileName(p))
+      g > fromGen && g <= toGen
+    }
+    val inserts = readMinus(spark, path, c, newFiles, schema, maxGen = toGen)
     val windowTs = {
-      val files = deleteFilePaths(spark, path)
-        .filter { p =>
-          val g = delGenOf(p.getName)
+      val files = c.deletes
+        .filter { n =>
+          val g = delGenOf(n)
           g > fromGen && g <= toGen
-        }.map(_.toString)
+        }.map(n => new Path(deletesDir(path), n).toString)
       if (files.isEmpty) None
       else Some(spark.read.schema(TombstoneSchema).parquet(files: _*)
         .filter(col(GenCol) > fromGen && col(GenCol) <= toGen)
         .select(FileCol, PosCol))
     }
-    val oldFiles = allData
-      .filter(p => genOf(p.getName) <= fromGen).map(_.toString)
+    val oldFiles = livePaths(path, c).filter(p => genOf(fileName(p)) <= fromGen)
     val deletes = windowTs match {
       case None =>
         spark.createDataFrame(
@@ -1530,7 +1579,8 @@ object Lakehouse {
             .withColumn(FileCol,
               element_at(split(col("_metadata.file_path"), "/"), -1))
             .withColumn(PosCol, col("_metadata.row_index"))
-          val side = if (bc) broadcast(ts) else ts
+          val side =
+            if (tombstonesBroadcastable(spark, path, c)) broadcast(ts) else ts
           keyed.join(side, Seq(FileCol, PosCol), "left_semi")
             .drop(FileCol, PosCol)
         }
@@ -1539,27 +1589,6 @@ object Lakehouse {
       .unionByName(deletes.withColumn("__op", lit("delete")))
   }
 
-  /** Apply a [[changesBetween]] feed to a KEYED replica table — the
-    * consumer half of the CDC loop, as one operator: the feed's
-    * `delete` rows retract their keys (content-idempotent — a replayed
-    * feed retracts nothing new), the `insert` rows land as one new
-    * generation (the replica IS a lakehouse table, so scans, point
-    * lookups, snapshots, and compaction all compose on it). Keys must
-    * be unique in the source — the replica enforces it per feed with a
-    * loud raise, like [[upsertByKey]]. A key UPDATED across the window
-    * arrives as delete(old)+insert(new) of the same key; the
-    * retraction half applies first, so last-writer-wins holds. The
-    * retraction covers the feed's delete keys AND its insert keys
-    * (an upsert, not a blind append) — that is what makes the apply
-    * REPLAY-IDEMPOTENT in effect: re-applying the same feed retracts
-    * the first application's landed rows and lands them again, so
-    * counts never double, and re-pulling a still-open window (the
-    * open-window rule on [[changesBetween]]) refreshes rather than
-    * duplicates. Cost: one pass over the replica's key column (the
-    * retraction join) plus one over the feed — never over the source
-    * table; that is the entire point of consuming the feed.
-    * Single-writer on the replica. Oracled: bootstrap + feed ≡ a
-    * direct scan of the source's target snapshot, hash-for-hash. */
   private def feedPtrDir(outDir: String) =
     s"${outDir.stripSuffix("/")}/_ptr"
 
@@ -1637,6 +1666,9 @@ object Lakehouse {
     withTableLock(spark, outDir.stripSuffix("/")) {
       val f = fs(spark, outDir)
       val pd = new Path(feedPtrDir(outDir))
+      // the source is read, never locked: ONE resolved commit answers
+      // the epoch, the newest closed generation and the window itself
+      val src = resolve(spark, path)
       val (epoch, from, nextVersion) = readFeedMarker(f, pd) match {
         case Some((v, e, g)) => (e, g, v + 1)
         case None =>
@@ -1644,14 +1676,13 @@ object Lakehouse {
             s"landChangesTracked: $outDir has no watermark yet — the " +
               "first call must pass initFromGen (the generation " +
               "consumers bootstrapped their snapshot at)")
-          val (e, _) = epochAndFloor(spark, path)
           markerRenameIn(f, pd, 1L, ".json", MiniJson.write(Map(
-            "version" -> 1L, "epoch" -> e, "gen" -> initFromGen)))
-          (e, initFromGen, 2L)
+            "version" -> 1L, "epoch" -> src.epoch, "gen" -> initFromGen)))
+          (src.epoch, initFromGen, 2L)
       }
       val cur =
         if (toGen >= 0L) toGen
-        else math.max(from, currentGen(spark, path) - 1)
+        else math.max(from, maxGen(src) - 1)
       if (cur == from) None
       else {
         require(cur > from,
@@ -1661,7 +1692,7 @@ object Lakehouse {
         val dst = new Path(s"$base/win${from}_$cur")
         if (!f.exists(dst)) {
           val staging = s"$base/_staging/win${from}_$cur"
-          changesBetween(spark, path, from, cur, asOfEpoch = epoch)
+          changesOf(spark, path, src, from, cur, asOfEpoch = epoch)
             .write.mode("overwrite").parquet(staging)
           require(f.rename(new Path(staging), dst),
             s"landChangesTracked: $staging -> $dst failed")
@@ -1672,55 +1703,43 @@ object Lakehouse {
       }
     }
 
+  /** Apply a [[changesBetween]] feed to a KEYED replica table — the
+    * consumer half of the CDC loop, as one operator: the feed's
+    * `delete` rows retract their keys (content-idempotent — a replayed
+    * feed retracts nothing new), the `insert` rows land as one new
+    * generation (the replica IS a lakehouse table, so scans, point
+    * lookups, snapshots, and compaction all compose on it). Keys must
+    * be unique in the source — the replica enforces it per feed with a
+    * loud raise, like [[upsertByKey]]. A key UPDATED across the window
+    * arrives as delete(old)+insert(new) of the same key; the
+    * retraction half applies first, so last-writer-wins holds. The
+    * retraction covers the feed's delete keys AND its insert keys
+    * (an upsert, not a blind append) — that is what makes the apply
+    * REPLAY-IDEMPOTENT in effect: re-applying the same feed retracts
+    * the first application's landed rows and lands them again, so
+    * counts never double, and re-pulling a still-open window (the
+    * open-window rule on [[changesBetween]]) refreshes rather than
+    * duplicates. Cost: one pass over the replica's key column (the
+    * retraction join) plus one over the feed — never over the source
+    * table; that is the entire point of consuming the feed.
+    * Single-writer on the replica. Oracled: bootstrap + feed ≡ a
+    * direct scan of the source's target snapshot, hash-for-hash. */
   def applyChangesByKey(spark: SparkSession, replicaPath: String,
                         feed: DataFrame, keyCol: String,
                         cols: Seq[String], bits: Int = 12,
                         partitions: Int = 0,
-                        evolve: Boolean = false): Unit =
-    withTableLock(spark, replicaPath) {
-      migrateToCommit(spark, replicaPath)
-      val cached = feed.cache()
-      try {
-        val inserts = cached.filter(col("__op") === "insert").drop("__op")
-        // `evolve = true`: FOLLOW an additively-evolved source without
-        // operator intervention — widen the replica to the feed's
-        // shape first (drops/retypes still raise, and the evolution
-        // commits BEFORE the retraction half, so a refused feed has
-        // mutated nothing). Default stays the loud drift raise.
-        val tSchema: Option[org.apache.spark.sql.types.StructType] =
-          if (hasSchemaContract(spark, replicaPath)) {
-            if (evolve) {
-              evolveSchemaBody(spark, replicaPath, inserts.schema)
-              // post-evolution the commit carries the widened schema —
-              // resolving it is a marker read, not a footer job
-              Some(tableSchema(spark, replicaPath))
-            } else {
-              val s = tableSchema(spark, replicaPath)
-              Layout.requireSameSchema(s, inserts.schema,
-                "applyChangesByKey")
-              Some(s)
-            }
-          } else None
-        val dup = inserts.groupBy(col(keyCol)).count()
-          .filter(col("count") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"applyChangesByKey: the feed's inserts carry duplicate " +
-            s"$keyCol=${dup.headOption.map(_.get(0)).orNull} — a keyed " +
-            "replica needs a key-unique source")
-        // deferred-commit fusion (see [[upsertByKey]]): the retraction's
-        // tombstone names ride the append's marker — one atomic commit
-        val (_, landedDels) = deleteMatchingIn(spark, replicaPath,
-          dataFilePaths(spark, replicaPath).map(_.toString),
-          cached.select(col(keyCol)), keyCol, schemaHint = tSchema,
-          commit = false)
-        val gen = currentGen(spark, replicaPath)
-        if (gen >= 0)
-          Layout.appendGeneration(spark, replicaPath, inserts, cols,
-            bits, partitions, gen + 1, extraAddDeletes = landedDels)
-        else Layout.appendZordered(spark, replicaPath, inserts, cols,
-          bits, partitions, extraAddDeletes = landedDels)
-      } finally { cached.unpersist(); () }
-    }
+                        evolve: Boolean = false): Unit = {
+    // the feed is read by the drift and key checks, the retraction and
+    // the landing — cache it once (it is typically a changesBetween plan)
+    val cached = feed.cache()
+    try mergeByKey(spark, replicaPath, cached, feedInserts(cached), keyCol,
+      cols, bits, partitions, pinnedGen = None, evolve, "applyChangesByKey")
+    finally { cached.unpersist(); () }
+  }
+
+  /** A change feed's `insert` rows, untagged. */
+  private def feedInserts(feed: DataFrame): DataFrame =
+    feed.filter(col("__op") === "insert").drop("__op")
 
   /** Streamed [[applyChangesByKey]] — the replica's live consumption
     * form: feed batches (tagged `__op` rows, e.g. the parquet dirs a
@@ -1742,19 +1761,8 @@ object Lakehouse {
                               evolve: Boolean = false): Unit = {
     val spark = feed.sparkSession
     val ckpt = s"${replicaPath}_apply_ckpt"
-    val f = fs(spark, replicaPath)
-    val baseFile = new Path(ckpt, "graft_gen_base")
-    val base: Long =
-      if (f.exists(baseFile)) {
-        val in = f.open(baseFile)
-        try in.readLong() finally in.close()
-      } else {
-        val b = currentGen(spark, replicaPath) + 1
-        f.mkdirs(new Path(ckpt))
-        val out = f.create(baseFile, false)
-        try out.writeLong(b) finally out.close()
-        b
-      }
+    val base = pinnedGenBase(spark, ckpt,
+      currentGen(spark, replicaPath) + 1)
     val q = feed.writeStream
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1774,32 +1782,8 @@ object Lakehouse {
                                 cols: Seq[String], bits: Int,
                                 partitions: Int, gen: Long,
                                 evolve: Boolean = false): Unit =
-    withTableLock(spark, replicaPath) {
-      migrateToCommit(spark, replicaPath)
-      val inserts = batch.filter(col("__op") === "insert").drop("__op")
-      if (hasSchemaContract(spark, replicaPath)) {
-        if (evolve) evolveSchemaBody(spark, replicaPath, inserts.schema)
-        else Layout.requireSameSchema(tableSchema(spark, replicaPath),
-          inserts.schema, "applyBatch")
-      }
-      val dup = inserts.groupBy(col(keyCol)).count()
-        .filter(col("count") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"applyBatch: generation $gen's feed inserts carry duplicate " +
-          s"$keyCol=${dup.headOption.map(_.get(0)).orNull} — a keyed " +
-          "replica needs a key-unique source")
-      // retract delete keys AND insert keys (the upsert treatment,
-      // like the one-shot form) from every file EXCEPT the pinned
-      // generation's own — a replay must not tombstone what its first
-      // attempt landed (the replay replaces those files)
-      val older = dataFilePaths(spark, replicaPath)
-        .filter(p => genOf(p.getName) != gen).map(_.toString)
-      // deferred-commit fusion: one delta marker per micro-batch
-      val (_, landedDels) = deleteMatchingIn(spark, replicaPath, older,
-        batch.select(col(keyCol)), keyCol, commit = false)
-      Layout.appendGeneration(spark, replicaPath, inserts, cols, bits,
-        partitions, gen, extraAddDeletes = landedDels)
-    }
+    mergeByKey(spark, replicaPath, batch, feedInserts(batch), keyCol, cols,
+      bits, partitions, pinnedGen = Some(gen), evolve, "applyBatch")
 
   /** Make the `gen` snapshot permanent: ONE commit drops data files
     * and tombstone files stamped AFTER it from the live sets, and the
@@ -1820,8 +1804,8 @@ object Lakehouse {
                asOfEpoch: Long = -1L): Unit =
     withTableLock(spark, path) {
       val c = migrateToCommit(spark, path)
-      requireEpoch(spark, path, asOfEpoch, "rollback")
-      requireAboveFloor(spark, path, gen, "rollback")
+      requireEpoch(c, asOfEpoch, "rollback")
+      requireAboveFloor(c, gen, "rollback")
       val f = fs(spark, path)
       commitAdvance(spark, path, c,
         removeData = c.data.filter(n => genOf(n) > gen),
@@ -1872,64 +1856,40 @@ object Lakehouse {
               bits: Int = 12, partitions: Int = 0,
               targetBytes: Long = 0L): Unit =
     withTableLock(spark, path) {
-      compactBody(spark, path, cols, bits, partitions, targetBytes)
+      compactBody(spark, path, migrateToCommit(spark, path), cols, bits,
+        partitions, targetBytes)
     }
 
   private def compactBody(spark: SparkSession, path: String,
-                          cols: Seq[String], bits: Int,
+                          cur: TableCommit, cols: Seq[String], bits: Int,
                           partitions: Int, targetBytes: Long): Unit = {
     val f = fs(spark, path)
-    val cur = migrateToCommit(spark, path)
     val parts =
       if (partitions > 0) partitions
       else if (targetBytes > 0L) {
-        val bytes = dataFilePaths(spark, path)
-          .map(p => f.getFileStatus(p).getLen).sum
+        val bytes = livePaths(path, cur)
+          .map(p => f.getFileStatus(new Path(p)).getLen).sum
         math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       } else 0
     val schemaJson = cur.schemaJson
-      .getOrElse(tableSchema(spark, path).json)
+      .getOrElse(schemaOf(spark, path, cur).json)
     // the fresh base lands ALONGSIDE the old files under names no
     // other commit can claim (the next version is ours — the lock
     // serializes writers), so nothing is destroyed before the commit
     val staged = s"${path}_rebuild"
-    Layout.zorder(scan(spark, path), cols, bits, parts)
+    Layout.zorder(scanOf(spark, path, cur), cols, bits, parts)
       .write.mode("overwrite").parquet(staged)
     val next = cur.version + 1
-    val stagedParts = f.listStatus(new Path(staged)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
-    val newNames = stagedParts.zipWithIndex.map { case (p, k) =>
-      val name = f"base$next-part$k%05d.parquet"
-      val dst = new Path(path, name)
-      if (f.exists(dst)) f.delete(dst, false) // a crashed attempt's orphan
-      require(f.rename(p, dst), s"compact: rename $p -> $dst failed")
-      name
-    }
-    f.delete(new Path(staged), true)
+    val newNames = renameStagedIn(spark, staged, path,
+      k => f"base$next-part$k%05d.parquet")
     // THE commit: new data set, zero tombstones, epoch+1, floor reset —
     // one atomic marker rename. A crash before this line leaves only
     // orphaned base files (vacuum's job); after it, only stale
     // manifests (recover drops them, prunedScan raises on them)
-    commitWrite(spark, path, next, newNames, Seq.empty,
+    val now = commitWrite(spark, path, next, newNames, Seq.empty,
       cur.epoch + 1, -1L, Some(schemaJson))
-    writeManifestFromLive(spark, path, cols)
-    rebuildBloomManifests(spark, path)
-  }
-
-  /** Rebuild the min/max manifest from the table's LIVE files — the
-    * directory may hold vacuum-pending dead files a raw-path rebuild
-    * would wrongly include. */
-  private def writeManifestFromLive(spark: SparkSession, path: String,
-                                    cols: Seq[String]): Unit = {
-    val f = fs(spark, path)
-    val live = dataFilePaths(spark, path).map(_.toString)
-    f.delete(new Path(s"${path}_manifest"), true)
-    if (live.nonEmpty)
-      Layout.statsManifest(spark.read.parquet(live: _*), cols)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${path}_manifest")
+    Layout.writeManifestFrom(spark, path, now, cols)
+    rebuildBloomManifests(spark, path, now)
   }
 
   /** Remove files a past commit replaced, once they are older than
@@ -1982,26 +1942,23 @@ object Lakehouse {
       deadData ++ deadDels ++ oldCommits
     }
 
-  /** The executable form of every swap's documented crash recovery:
-    * inspect the table's on-disk state and FINISH or UNDO whatever a
-    * crashed [[compact]] / [[compactRetaining]] / rebuild left behind.
-    * Idempotent; safe on a healthy table (a no-op). Returns a short
-    * action log (empty = nothing to do).
+  /** Inspect the table's on-disk state and clean up whatever a crashed
+    * writer left behind. With every change a single marker rename,
+    * a crash never leaves a half-swapped table — only residue that is
+    * invisible to readers, which recover removes. Idempotent; safe on a
+    * healthy table (a no-op). Returns a short action log (empty =
+    * nothing to do).
     *
-    * Cases, in the order the swaps create them:
-    *  - table dir MISSING but `<path>_pre_compact/data` present: the
-    *    crash hit between the move-out and the move-in — the old table
-    *    (and its tombstone dir, if it was moved) renames BACK; the
-    *    staged rewrite under `<path>_rebuild` / `_retain_rebuild` is
-    *    discarded (it may be incomplete).
-    *  - table dir PRESENT and `<path>_pre_compact` lingers: the swap
-    *    completed but the cleanup didn't — the leftover (old data +
-    *    old tombstones) deletes, matching what the successful path
-    *    would have done.
-    *  - orphaned staging (`_incoming`, `_rebuild`, `_retain_rebuild`,
-    *    `_retain_deletes`) with the table present: discarded — every
-    *    writer stages fresh under `mode("overwrite")`, so leftovers
-    *    are dead bytes.
+    * Cases:
+    *  - a manifest (min/max or Bloom) naming a file that is not live
+    *    on disk — a rewrite that crashed after its commit, before its
+    *    manifest rebuild: dropped (pruned/point scans would raise on it
+    *    forever), with a note to rebuild it.
+    *  - orphaned staging (`_incoming`, `_rebuild`, `_retain_rebuild`):
+    *    discarded — every writer stages fresh under
+    *    `mode("overwrite")`, so leftovers are dead bytes.
+    *  - a commit marker's `tmp-` file: a commit that crashed mid-stage
+    *    (the rename IS the commit), discarded.
     *  - a lease under `<path>_lock` older than `staleLockMs`:
     *    removed (the holder heartbeats every third of its window, so
     *    a day-old lease is a crashed writer).
@@ -2012,74 +1969,11 @@ object Lakehouse {
               leaseMs: Long = 15L * 60 * 1000): Seq[String] = {
     val f = fs(spark, path)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    val root = new Path(path)
-    val pre = new Path(s"${path}_pre_compact")
-    // phase 1, WITHOUT the lock: an interrupted swap left no table, so
-    // a lock wait would be pointless. But mid-swap-looking state under
-    // a FRESH lease is a LIVE compactor inside its two-rename window,
-    // not a crash — restoring under it would rename the old table back
-    // while the compact's staged move-in is in flight. Only a stale or
-    // absent lease (holders heartbeat every leaseMs/3) marks a
-    // genuinely dead writer.
-    if (!f.exists(root) && f.exists(new Path(pre, "data"))) {
-      val lease = new Path(s"${path}_lock/lease")
-      require(!f.exists(lease) || System.currentTimeMillis() -
-          f.getFileStatus(lease).getModificationTime > leaseMs,
-        s"recover: $path looks mid-swap but a LIVE writer lease sits " +
-          s"at $lease — a compactor may be inside its swap window " +
-          "right now, and restoring would race it. Wait out the " +
-          s"lease window (${leaseMs}ms without a heartbeat) and re-run")
-      require(f.rename(new Path(pre, "data"), root),
-        s"recover: rename $pre/data back to $path failed")
-      actions += s"restored $path from $pre/data"
-      val movedDeletes = new Path(pre, "deletes")
-      if (f.exists(movedDeletes)) {
-        val dDir = new Path(deletesDir(path))
-        if (f.exists(dDir)) f.delete(dDir, true)
-        require(f.rename(movedDeletes, dDir),
-          s"recover: rename $pre/deletes back to $dDir failed")
-        actions += s"restored $dDir from $pre/deletes"
-      }
-      f.delete(pre, true)
-    }
     withTableLock(spark, path, leaseMs = leaseMs, waitMs = 60 * 1000L) {
-      // a RETENTION swap that crashed between its data rename and its
-      // tombstone install (new data live, `_retain_rebuild` consumed,
-      // `_retain_deletes` still staged) must be FINISHED, not cleaned:
-      // the staged remapped tombstones are the ONLY valid debt for the
-      // folded table — discarding them would permanently resurrect
-      // every row a later stamp doomed
-      val retainDeletes = new Path(s"${path}_retain_deletes")
-      if (f.exists(root) && f.exists(retainDeletes) &&
-          !f.exists(new Path(s"${path}_retain_rebuild"))) {
-        val dDir = new Path(deletesDir(path))
-        if (f.exists(dDir)) f.delete(dDir, true)
-        require(f.rename(retainDeletes, dDir),
-          s"recover: install $retainDeletes -> $dDir failed")
-        actions += s"finished retention swap: installed $dDir"
-        // manifests predate the fold and would name vanished files —
-        // drop them (performance structures: scans stay correct, a
-        // pruned/point scan raises loudly until rebuilt) and say so
-        (Seq(new Path(s"${path}_manifest")) ++ bloomDirsOf(spark, path))
-          .filter(f.exists)
-          .foreach { m =>
-            f.delete(m, true)
-            actions += s"dropped pre-fold manifest $m — rebuild with " +
-              "Layout.writeManifest / writeBloomManifest"
-          }
-      }
-      if (f.exists(root) && f.exists(pre)) {
-        f.delete(pre, true)
-        actions += s"dropped completed-swap leftover $pre"
-      }
-      // a rewrite that crashed after its swap but before its manifest
-      // rebuild leaves manifests naming vanished files — pruned/point
-      // scans would fail loudly on them forever. Detect (file-count-
-      // bounded read) and drop, telling the operator to rebuild.
-      if (f.exists(root)) {
+      if (f.exists(new Path(path))) {
         // LIVE names still ON DISK: a manifest naming a vacuum-pending
         // dead file is just as dangling as one naming a vanished file
-        val live = dataFilePaths(spark, path).map(_.getName).toSet &
+        val live = resolve(spark, path).data.toSet &
           parquetFiles(spark, path).map(_.getName).toSet
         (Seq(new Path(s"${path}_manifest")) ++ bloomDirsOf(spark, path))
           .filter(m => f.exists(m) &&
@@ -2096,8 +1990,7 @@ object Lakehouse {
             }
           }
       }
-      Seq("_incoming", "_rebuild", "_retain_rebuild", "_retain_deletes",
-          "_pre_rebuild")
+      Seq("_incoming", "_rebuild", "_retain_rebuild")
         .map(s => new Path(s"$path$s"))
         .filter(f.exists)
         .foreach { p =>
@@ -2130,22 +2023,17 @@ object Lakehouse {
     actions.toSeq
   }
 
-  /** Rebuild every `<path>_bloom_*` manifest found, each under ITS OWN
-    * recorded geometry, so point lookups keep their skip rate after a
-    * rewrite instead of falling back to stale-safe full keeps. */
-  private def rebuildBloomManifests(spark: SparkSession,
-                                    path: String): Unit =
+  /** Rebuild every `<path>_bloom_*` manifest found over commit `c`'s
+    * live files, each under ITS OWN recorded geometry, so point lookups
+    * keep their skip rate after a rewrite instead of falling back to
+    * stale-safe full keeps. */
+  private def rebuildBloomManifests(spark: SparkSession, path: String,
+                                    c: TableCommit): Unit =
     bloomDirsOf(spark, path).foreach { p =>
-      val prefix = s"${new Path(path).getName}_bloom_"
-      val old = spark.read.parquet(p.toString)
-      val geom =
-        if (old.columns.contains("__keys"))
-          old.select("__keys", "__fpp").take(1).headOption
-        else None
-      val (keys, fpp) = geom.map(r => (r.getLong(0), r.getDouble(1)))
-        .getOrElse((1L << 21, 0.01))
-      Layout.writeBloomManifest(spark, path,
-        p.getName.stripPrefix(prefix), keys, fpp)
+      val (keys, fpp) = Layout.bloomGeometry(spark, p.toString)
+      Layout.writeBloomManifestFrom(spark, path, c,
+        p.getName.stripPrefix(s"${new Path(path).getName}_bloom_"), keys,
+        fpp)
     }
 
   /** Retention-preserving compaction: fold the delete debt and small
@@ -2184,12 +2072,10 @@ object Lakehouse {
                        rowsPerFile: Long = tombstoneRowsPerFile): Unit =
     withTableLock(spark, path) {
       val cur = migrateToCommit(spark, path)
-      val all = dataFilePaths(spark, path)
-      val fold = all.filter(p => genOf(p.getName) <= retainAfter)
-      val keep = all.filter(p => genOf(p.getName) > retainAfter)
+      val (fold, keep) = cur.data.partition(n => genOf(n) <= retainAfter)
       if (keep.isEmpty)
         // nothing newer than the floor: this IS a full compact
-        compactBody(spark, path, cols, bits, partitions, 0L)
+        compactBody(spark, path, cur, cols, bits, partitions, 0L)
       else if (fold.nonEmpty)
         compactRetainingBody(spark, path, cur, cols, retainAfter, bits,
           partitions, fold, keep, rowsPerFile)
@@ -2211,17 +2097,17 @@ object Lakehouse {
                                    cur: TableCommit,
                                    cols: Seq[String], retainAfter: Long,
                                    bits: Int, partitions: Int,
-                                   fold: Seq[Path], keep: Seq[Path],
+                                   fold: Seq[String], keep: Seq[String],
                                    rowsPerFile: Long): Unit = {
       val f = fs(spark, path)
       val next = cur.version + 1
-      val schema = tableSchema(spark, path)
-      val foldPaths = fold.map(_.toString)
-      val keepNames = keep.map(_.getName)
+      val schema = schemaOf(spark, path, cur)
+      val foldPaths = fold.map(n => new Path(path, n).toString)
       val dDir = deletesDir(path)
       // later tombstones (stamp > floor), still meaningful afterwards
-      val laterDelFiles = deleteFilePaths(spark, path)
-        .filter(p => delGenOf(p.getName) > retainAfter).map(_.toString)
+      val laterDelFiles = cur.deletes
+        .filter(n => delGenOf(n) > retainAfter)
+        .map(n => new Path(dDir, n).toString)
       val laterTs =
         if (laterDelFiles.isEmpty) None
         else Some(spark.read.schema(TombstoneSchema)
@@ -2231,72 +2117,14 @@ object Lakehouse {
       // rows of folded files that survive EVERY tombstone, any stamp:
       // the new base — staged, then renamed in ALONGSIDE the old files
       // (nothing is destroyed before the commit; vacuum cleans later)
-      val baseLive = readMinus(spark, foldPaths, schema,
-        tombstoneFrame(spark, path),
-        tombstoneBytes(spark, path) <= broadcastTombstoneBytes)
       val staging = s"${path}_retain_rebuild"
       f.delete(new Path(staging), true)
-      Layout.zorder(baseLive, cols, bits, partitions)
-        .write.mode("overwrite").parquet(staging)
-      val baseNames = f.listStatus(new Path(staging)).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-          s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath).sortBy(_.getName).zipWithIndex
-        .map { case (p0, k) =>
-          val name = f"base$next-part$k%05d.parquet"
-          val dst = new Path(path, name)
-          if (f.exists(dst)) f.delete(dst, false) // crashed attempt
-          require(f.rename(p0, dst),
-            s"compactRetaining: rename $p0 -> $dst failed")
-          name
-        }
-      f.delete(new Path(staging), true)
-      // stage a frame into size-bounded files under DETERMINISTIC
-      // names (`<prefix><k>.parquet`, k past any on-disk sibling) —
-      // the writeTombstones discipline: never a single-task funnel,
-      // shard count derived from the staged row count. Returns the
-      // landed file names.
-      def stageSharded(df: DataFrame, destDir: String,
-                       prefix: String): Seq[String] = {
-        val raw = s"${path}_incoming/$prefix-raw"
-        df.write.mode("overwrite").parquet(raw)
-        // schema in hand; and when the staged layout already holds the
-        // right shard count the parts rename in directly instead of a
-        // second read->shuffle->write of the frame (the writeTombstones
-        // discipline, r18)
-        val rawDf = spark.read.schema(nullableCopy(df.schema)).parquet(raw)
-        val n = rawDf.count()
-        if (n == 0) { f.delete(new Path(raw), true); Seq.empty }
-        else {
-          val shards = math.max(1L,
-            (n + rowsPerFile - 1) / rowsPerFile).toInt
-          val rawParts = f.listStatus(new Path(raw))
-            .filter(st => st.getPath.getName.startsWith("part-") &&
-              st.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath).sortBy(_.getName)
-          val tmp = s"${path}_incoming/$prefix-norm"
-          val parts: Array[Path] =
-            if (rawParts.length == shards) rawParts
-            else {
-              rawDf.repartition(shards)
-                .write.mode("overwrite").parquet(tmp)
-              f.listStatus(new Path(tmp))
-                .filter(_.getPath.getName.startsWith("part-"))
-                .map(_.getPath).sortBy(_.getName)
-            }
-          val firstIdx = nextIndexFor(spark, destDir, prefix)
-          f.mkdirs(new Path(destDir))
-          val names = parts.zipWithIndex.map { case (p0, k) =>
-            val name = s"$prefix${firstIdx + k}.parquet"
-            require(f.rename(p0, new Path(destDir, name)),
-              s"compactRetaining: $p0 -> $destDir/$name failed")
-            name
-          }
-          f.delete(new Path(tmp), true)
-          f.delete(new Path(raw), true)
-          names.toSeq
-        }
-      }
+      Layout.zorder(readMinus(spark, path, cur, foldPaths, schema), cols,
+        bits, partitions).write.mode("overwrite").parquet(staging)
+      val baseNames = renameStagedIn(spark, staging, path,
+        k => f"base$next-part$k%05d.parquet")
+      def stage(df: DataFrame, destDir: String, prefix: String) =
+        stageSharded(spark, path, df, destDir, prefix, rowsPerFile)._2
       val doomNames = scala.collection.mutable.ArrayBuffer.empty[String]
       val delNames = scala.collection.mutable.ArrayBuffer.empty[String]
       laterTs.foreach { ts =>
@@ -2319,7 +2147,7 @@ object Lakehouse {
           .collect().map(_.getLong(0)).sorted
         stamps.foreach { st =>
           val rows = doomed.filter(col(GenCol) === st).drop(GenCol)
-          val landedDoom = stageSharded(rows, path, s"doom$st-")
+          val landedDoom = stage(rows, path, s"doom$st-")
           doomNames ++= landedDoom
           // the remapped tombstones: every doom file dies WHOLE at
           // stamp st, so its positions are read straight off the
@@ -2332,14 +2160,14 @@ object Lakehouse {
                   -1).as(FileCol),
                 col("_metadata.row_index").as(PosCol),
                 lit(st).as(GenCol))
-            delNames ++= stageSharded(remapped, dDir, s"del$st-")
+            delNames ++= stage(remapped, dDir, s"del$st-")
           }
         }
         // later tombstones addressing KEPT files carry over verbatim
         // (their files are untouched), re-landed under fresh names so
         // the old tombstone files can be vacuumed with the fold
         val keepNamesDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(keepNames.map(
+          spark.sparkContext.parallelize(keep.map(
             org.apache.spark.sql.Row(_)), 1),
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField(FileCol,
@@ -2348,8 +2176,8 @@ object Lakehouse {
         val keptStamps = onKept.select(GenCol).distinct()
           .collect().map(_.getLong(0)).sorted
         keptStamps.foreach { st =>
-          delNames ++= stageSharded(onKept.filter(col(GenCol) === st),
-            dDir, s"del$st-")
+          delNames ++= stage(onKept.filter(col(GenCol) === st), dDir,
+            s"del$st-")
         }
         doomed.unpersist()
         ts.unpersist()
@@ -2360,8 +2188,8 @@ object Lakehouse {
       // set, the floor at `retainAfter`, the epoch unchanged — one
       // atomic marker rename. Everything before this line was additive
       // (orphans at worst); everything after is manifest hygiene.
-      commitWrite(spark, path, next,
-        baseNames ++ doomNames ++ keepNames, delNames.toSeq,
+      val now = commitWrite(spark, path, next,
+        baseNames ++ doomNames ++ keep, delNames.toSeq,
         cur.epoch, retainAfter,
         cur.schemaJson.orElse(Some(schema.json)))
       // manifest: drop folded slices (old base part-*/base.parquet and
@@ -2376,21 +2204,15 @@ object Lakehouse {
             digits.toLong > retainAfter
           if (!isKeptSlice) f.delete(p, false)
         }
-        val baseFiles = dataFilePaths(spark, path)
-          .filter(p => genOf(p.getName) <= retainAfter).map(_.toString)
+        val baseFiles = (baseNames ++ doomNames)
+          .map(n => new Path(path, n).toString)
         if (baseFiles.nonEmpty) {
           val tmp = s"${path}_incoming/manifestbase"
           Layout.statsManifest(spark.read.parquet(baseFiles: _*), cols)
             .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = f.listStatus(new Path(tmp))
-            .filter(_.getPath.getName.startsWith("part-")).head.getPath
-          val dst = new Path(mDir, "base.parquet")
-          if (f.exists(dst)) f.delete(dst, false)
-          require(f.rename(part, dst),
-            s"compactRetaining: base manifest slice failed")
-          f.delete(new Path(tmp), true)
+          renameStagedIn(spark, tmp, mDir, _ => "base.parquet")
         }
       }
-      rebuildBloomManifests(spark, path)
+      rebuildBloomManifests(spark, path, now)
   }
 }

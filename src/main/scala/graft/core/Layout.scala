@@ -151,13 +151,23 @@ object Layout {
     * predicate, so stale = wrong file set = read error, never silent
     * wrong data). */
   def writeManifest(spark: org.apache.spark.sql.SparkSession,
-                    path: String, cols: Seq[String]): String = {
+                    path: String, cols: Seq[String]): String =
+    writeManifestFrom(spark, path, Lakehouse.resolve(spark, path), cols)
+
+  /** [[writeManifest]] over commit `c`'s LIVE files (the directory may
+    * hold vacuum-pending dead files); a commit with no files leaves no
+    * manifest. */
+  private[core] def writeManifestFrom(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      c: Lakehouse.TableCommit, cols: Seq[String]): String = {
     val mPath = s"${path}_manifest"
-    // LIVE files (commit-resolved — the directory may hold
-    // vacuum-pending dead files)
-    val live = Lakehouse.dataFilePaths(spark, path).map(_.toString)
-    statsManifest(spark.read.parquet(live: _*), cols)
-      .coalesce(1).write.mode("overwrite").parquet(mPath)
+    val live = Lakehouse.livePaths(path, c)
+    if (live.isEmpty) {
+      val m = new org.apache.hadoop.fs.Path(mPath)
+      m.getFileSystem(spark.sessionState.newHadoopConf()).delete(m, true)
+    } else
+      statsManifest(spark.read.parquet(live: _*), cols)
+        .coalesce(1).write.mode("overwrite").parquet(mPath)
     mPath
   }
 
@@ -203,11 +213,18 @@ object Layout {
   def writeBloomManifest(spark: org.apache.spark.sql.SparkSession,
                          path: String, keyCol: String,
                          expectedKeysPerFile: Long = 1L << 21,
-                         fpp: Double = 0.01): String = {
+                         fpp: Double = 0.01): String =
+    writeBloomManifestFrom(spark, path, Lakehouse.resolve(spark, path),
+      keyCol, expectedKeysPerFile, fpp)
+
+  /** [[writeBloomManifest]] over commit `c`'s live files. */
+  private[core] def writeBloomManifestFrom(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      c: Lakehouse.TableCommit, keyCol: String, expectedKeysPerFile: Long,
+      fpp: Double): String = {
     val bPath = s"${path}_bloom_$keyCol"
-    val live = Lakehouse.dataFilePaths(spark, path).map(_.toString)
-    bloomManifest(spark.read.parquet(live: _*), keyCol,
-        expectedKeysPerFile, fpp)
+    bloomManifest(spark.read.parquet(Lakehouse.livePaths(path, c): _*),
+        keyCol, expectedKeysPerFile, fpp)
       .coalesce(1).write.mode("overwrite").parquet(bPath)
     bPath
   }
@@ -241,11 +258,12 @@ object Layout {
     val manifest = spark.read.parquet(s"${path}_manifest")
     // the manifest must name exactly the live files (a stale one would
     // silently serve dead data)
-    Lakehouse.requireManifestLive(spark, path, manifest)
+    val c = Lakehouse.resolve(spark, path)
+    Lakehouse.requireManifestLive(path, c, manifest)
     val kept = pruneFiles(manifest, box)
       .select("__file").collect().map(_.getString(0))
-    val schema = Lakehouse.tableSchema(spark, path)
-    val pred = box.map { case (c, lo, hi) => col(c).between(lo, hi) }
+    val schema = Lakehouse.schemaOf(spark, path, c)
+    val pred = box.map { case (cn, lo, hi) => col(cn).between(lo, hi) }
       .reduce(_ && _)
     if (kept.isEmpty)
       spark.createDataFrame(
@@ -326,63 +344,60 @@ object Layout {
         "else is a rewrite (zorder the unioned frame)")
   }
 
-  private def dataFiles(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).toSet
-  }
-
   /** Append a new batch to an existing layout WITHOUT touching the
     * resident data: the batch is z-ordered over its own observed
     * domain (each new file still covers a tight box — cross-batch key
     * compatibility is irrelevant, per-file min/max is what prunes),
-    * written alongside, and the manifest extended with JUST the new
-    * files' stats (manifest dirs are append-friendly parquet). The
-    * incremental cost is one pass over the BATCH — the 100 TB history
-    * is never rescanned. Appends degrade [[layoutHealth]] by ≈ 1 per
-    * batch (each generation tiles the space again);
-    * [[maintainLayout]] is the measured repair loop.
+    * staged under `<path>_incoming/`, renamed in alongside under
+    * commit-version-salted names (`part-v<version>-<k>.parquet`), and
+    * the manifest extended with JUST the new files' stats (manifest
+    * dirs are append-friendly parquet). The incremental cost is one
+    * pass over the BATCH — the 100 TB history is never rescanned.
+    * Appends degrade [[layoutHealth]] by ≈ 1 per batch (each
+    * generation tiles the space again); [[maintainLayout]] is the
+    * measured repair loop.
     *
     * UNLOCKED internal form: the table's mutation surface is
     * single-writer, and this does not take the (non-reentrant) lease —
-    * it exists for callers already HOLDING it ([[graft.core.Lakehouse
-    * .upsertByKey]]'s append half, the streamed bodies). Concurrent
-    * ingest goes through [[graft.core.Lakehouse.append]], which wraps
-    * exactly this under [[graft.core.Lakehouse.withTableLock]]. */
+    * it exists for callers already HOLDING it. Concurrent ingest goes
+    * through [[graft.core.Lakehouse.append]], which wraps exactly this
+    * under [[graft.core.Lakehouse.withTableLock]]. */
   def appendZordered(spark: org.apache.spark.sql.SparkSession,
                      path: String, batch: DataFrame, cols: Seq[String],
                      bits: Int = 12, partitions: Int = 0,
-                     extraAddDeletes: Seq[String] = Seq.empty): Unit = {
-    val c = Lakehouse.migrateToCommit(spark, path)
+                     extraAddDeletes: Seq[String] = Seq.empty): Unit =
+    appendZorderedFrom(spark, path, Lakehouse.migrateToCommit(spark, path),
+      batch, cols, bits, partitions, extraAddDeletes)
+
+  /** [[appendZordered]] advancing from the caller's resolved commit `c`
+    * (lock-holding callers: the keyed merge's landing half).
+    * `extraAddDeletes`: a lock-holding merge's DEFERRED tombstone names
+    * ride the append's marker — one commit per mutation, not two. */
+  private[core] def appendZorderedFrom(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      c: Lakehouse.TableCommit, batch: DataFrame, cols: Seq[String],
+      bits: Int, partitions: Int, extraAddDeletes: Seq[String]): Unit = {
     // the drift guard also fires against a COMMITTED schema with no
     // resident files yet (an evolveSchema'd empty table): the commit
     // is the contract the first batch must honor too
-    if (c.data.nonEmpty || c.schemaJson.isDefined)
-      requireSameSchema(Lakehouse.tableSchema(spark, path), batch.schema,
-        "appendZordered")
-    val before = dataFiles(spark, path)
+    Lakehouse.schemaContract(spark, path, c)
+      .foreach(requireSameSchema(_, batch.schema, "appendZordered"))
+    val version = c.version + 1
+    val staging = s"${path}_incoming/part-v$version"
     zorder(batch, cols, bits, partitions)
-      .write.mode("append").parquet(path)
-    val fresh = (dataFiles(spark, path) -- before).toSeq
+      .write.mode("overwrite").parquet(staging)
+    val fresh = Lakehouse.renameStagedIn(spark, staging, path,
+      k => f"part-v$version-$k%05d.parquet")
     // the live set advances by commit — files in the directory are
-    // invisible to readers until this lands. `extraAddDeletes`: a
-    // lock-holding upsert's DEFERRED tombstone names ride the append's
-    // marker — one commit per mutation, not two (see
-    // [[graft.core.Lakehouse.upsertByKey]])
-    Lakehouse.commitAdvance(spark, path, c,
-      addData = fresh.map(p => p.substring(p.lastIndexOf('/') + 1)),
+    // invisible to readers until this lands
+    Lakehouse.commitAdvance(spark, path, c, addData = fresh,
       addDeletes = extraAddDeletes,
       schemaJson = c.schemaJson.orElse(Some(batch.schema.json)))
     if (fresh.nonEmpty) {
       // the just-written files carry the batch's schema — manifest
       // passes skip the footer-inference job
       val freshDf = spark.read.schema(Lakehouse.nullableCopy(batch.schema))
-        .parquet(fresh: _*)
+        .parquet(fresh.map(n => s"$path/$n"): _*)
       statsManifest(freshDf, cols)
         .coalesce(1).write.mode("append").parquet(s"${path}_manifest")
       // Bloom manifests extend at append time too (the min/max one
@@ -401,8 +416,8 @@ object Layout {
 
   /** A Bloom manifest's recorded (expectedKeysPerFile, fpp) geometry —
     * the sizing its extension slices and rebuilds must reproduce. */
-  private def bloomGeometry(spark: org.apache.spark.sql.SparkSession,
-                            bDir: String): (Long, Double) = {
+  private[core] def bloomGeometry(spark: org.apache.spark.sql.SparkSession,
+                                  bDir: String): (Long, Double) = {
     val df = spark.read.parquet(bDir)
     val geom =
       if (df.columns.contains("__keys"))
@@ -429,84 +444,66 @@ object Layout {
     * `path` too — streamed ingestion can create the table.
     *
     * UNLOCKED internal form (see [[appendZordered]]'s discipline):
-    * lock-holding callers ([[graft.core.Lakehouse.upsertByKey]], the
-    * streamed per-batch bodies) call this directly; everyone else
-    * goes through [[graft.core.Lakehouse.appendAt]] — two unlocked
-    * writers landing the same generation id would each drop the
-    * other's files from the live set. */
+    * lock-holding callers (the streamed per-batch bodies) call this
+    * directly; everyone else goes through
+    * [[graft.core.Lakehouse.appendAt]] — two unlocked writers landing
+    * the same generation id would each drop the other's files from the
+    * live set. */
   def appendGeneration(spark: org.apache.spark.sql.SparkSession,
                        path: String, batch: DataFrame,
                        cols: Seq[String], bits: Int = 12,
                        partitions: Int = 0, gen: Long = 0L,
-                       extraAddDeletes: Seq[String] = Seq.empty): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val c = Lakehouse.migrateToCommit(spark, path)
-    if (c.data.nonEmpty || c.schemaJson.isDefined)
-      requireSameSchema(Lakehouse.tableSchema(spark, path), batch.schema,
-        "appendGeneration")
+                       extraAddDeletes: Seq[String] = Seq.empty): Unit =
+    appendGenerationFrom(spark, path, Lakehouse.migrateToCommit(spark, path),
+      batch, cols, bits, partitions, gen, extraAddDeletes)
+
+  /** [[appendGeneration]] advancing from the caller's resolved commit
+    * `c` (lock-holding callers: the keyed merge's landing half). */
+  private[core] def appendGenerationFrom(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      c: Lakehouse.TableCommit, batch: DataFrame, cols: Seq[String],
+      bits: Int, partitions: Int, gen: Long,
+      extraAddDeletes: Seq[String]): Unit = {
+    Lakehouse.schemaContract(spark, path, c)
+      .foreach(requireSameSchema(_, batch.schema, "appendGeneration"))
     val staging = s"${path}_incoming/gen$gen"
     zorder(batch, cols, bits, partitions)
       .write.mode("overwrite").parquet(staging)
-    fs.mkdirs(root)
-    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
-    val mine = staged.zipWithIndex.map { case (p, k) =>
-      val dst = new org.apache.hadoop.fs.Path(root,
-        f"gen$gen-v${c.version + 1}-part$k%05d.parquet")
-      // a CRASHED same-version attempt's orphan (its commit never
-      // landed, so the name is provably not in any readable live set)
-      if (fs.exists(dst)) fs.delete(dst, false)
-      require(fs.rename(p, dst), s"appendGeneration: $p -> $dst failed")
-      dst
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    val mine = Lakehouse.renameStagedIn(spark, staging, path,
+      k => f"gen$gen-v${c.version + 1}-part$k%05d.parquet")
     // the generation replaces exactly its own names in the live set —
     // an O(generation) delta marker, not a full-state rewrite.
     // `extraAddDeletes`: a lock-holding upsert/CDC-apply's DEFERRED
     // tombstone names ride this marker too — ONE delta commit per
     // micro-batch (tombstone adds + data adds), not two
-    Lakehouse.commitAdvance(spark, path, c,
-      addData = mine.map(_.getName).toSeq,
+    Lakehouse.commitAdvance(spark, path, c, addData = mine,
       removeData = c.data.filter(_.startsWith(s"gen$gen-")),
       addDeletes = extraAddDeletes,
       schemaJson = c.schemaJson.orElse(Some(batch.schema.json)))
     val mDir = new org.apache.hadoop.fs.Path(s"${path}_manifest")
-    fs.mkdirs(mDir)
-    val mFile = new org.apache.hadoop.fs.Path(mDir, s"gen$gen.parquet")
-    if (fs.exists(mFile)) fs.delete(mFile, false)
+    mDir.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(new org.apache.hadoop.fs.Path(mDir, s"gen$gen.parquet"), false)
     if (mine.nonEmpty) {
       val tmp = s"${path}_incoming/manifest$gen"
       val genDf = spark.read.schema(Lakehouse.nullableCopy(batch.schema))
-        .parquet(mine.map(_.toString).toSeq: _*)
+        .parquet(mine.map(n => s"$path/$n"): _*)
       statsManifest(genDf, cols)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .filter(_.getPath.getName.startsWith("part-")).head.getPath
-      require(fs.rename(part, mFile),
-        s"appendGeneration: manifest $part -> $mFile failed")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      Lakehouse.renameStagedIn(spark, tmp, mDir.toString,
+        _ => s"gen$gen.parquet")
       // Bloom manifests get the generation's slice under the SAME
       // replace-your-own-slice discipline (a replay rewrites exactly
       // its own gen<id>.parquet), so point lookups keep pruning
       // appended generations instead of stale-safe full-keeping them
       graft.core.Lakehouse.bloomDirsOf(spark, path).foreach { bDir =>
         val key = bDir.getName.stripPrefix(
-          s"${root.getName}_bloom_")
+          s"${new org.apache.hadoop.fs.Path(path).getName}_bloom_")
         val (keys, fpp) = bloomGeometry(spark, bDir.toString)
         val bTmp = s"${path}_incoming/bloom$gen-$key"
         bloomManifest(genDf, key, keys, fpp)
           .coalesce(1).write.mode("overwrite").parquet(bTmp)
-        val bPart = fs.listStatus(new org.apache.hadoop.fs.Path(bTmp))
-          .filter(_.getPath.getName.startsWith("part-")).head.getPath
-        val bFile = new org.apache.hadoop.fs.Path(bDir,
-          s"gen$gen.parquet")
-        if (fs.exists(bFile)) fs.delete(bFile, false)
-        require(fs.rename(bPart, bFile),
-          s"appendGeneration: bloom slice $bPart -> $bFile failed")
-        fs.delete(new org.apache.hadoop.fs.Path(bTmp), true)
+        Lakehouse.renameStagedIn(spark, bTmp, bDir.toString,
+          _ => s"gen$gen.parquet")
       }
     }
   }
@@ -548,8 +545,9 @@ object Layout {
     * [[graft.llm.Similarity.maintainVectorIndex]] discipline applied
     * to storage): append the batch ([[appendZordered]]), READ the
     * health off the manifest, and when the point cost exceeds
-    * `maxPointCost` re-layout the WHOLE table ([[zorder]] rewrite via
-    * a staging dir, swapped in, manifest rebuilt). Returns true when
+    * `maxPointCost` re-layout the WHOLE table (a
+    * [[graft.core.Lakehouse.compact]]: [[zorder]] rewrite, one pointer
+    * commit, manifest rebuilt). Returns true when
     * the rebuild fired. The threshold is generations-of-files: a
     * fresh layout costs ≈ 1 and each append adds ≈ 1, so
     * `maxPointCost = 3` re-layouts after roughly two appends — tune
@@ -569,11 +567,11 @@ object Layout {
     else {
       // the rebuild IS a compaction, and runs as one: rewriting from
       // Lakehouse.scan (LIVE rows only) and clearing the folded
-      // tombstone directory inside the same crash-safe swap — a
-      // rebuild that read the raw parquet would RESURRECT every
-      // tombstoned row and leave stale tombstones addressing vanished
-      // file names. Bloom manifests rebuild, the compact epoch bumps
-      // (generation history collapses), recovery mirrors compact's.
+      // tombstones in the same pointer commit — a rebuild that read
+      // the raw parquet would RESURRECT every tombstoned row and leave
+      // stale tombstones addressing vanished file names. Bloom
+      // manifests rebuild, the compact epoch bumps (generation
+      // history collapses).
       Lakehouse.compact(spark, path, cols, bits, partitions)
       true
     }

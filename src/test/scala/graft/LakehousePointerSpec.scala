@@ -354,24 +354,25 @@ class LakehousePointerSpec extends SparkSpec {
     val allFiles = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
     assert(allFiles.length >= 16)
+    val c = Lakehouse.readCommit(spark, path).get
     // READ-SET AUDIT, directly on the narrowing: keys from one
     // generation's disjoint id range must keep a file-bounded subset,
     // never the whole table (the per-micro-batch full key-column pass
     // this exists to remove)
-    val narrowed = Lakehouse.bloomNarrow(spark, path, allFiles.toSeq,
+    val narrowed = Lakehouse.bloomNarrow(spark, path, c, allFiles.toSeq,
       spark.range(100L, 150L).select(col("id")), "id")
     assert(narrowed.nonEmpty && narrowed.size < allFiles.length / 2,
       s"narrowed ${narrowed.size} of ${allFiles.length}")
     // keys matching NOTHING: every manifested file is provably clean
-    assert(Lakehouse.bloomNarrow(spark, path, allFiles.toSeq,
+    assert(Lakehouse.bloomNarrow(spark, path, c, allFiles.toSeq,
       spark.range(900000L, 900010L).select(col("id")), "id").isEmpty)
     // past the size threshold the pass stays full (no narrow)
-    assert(Lakehouse.bloomNarrow(spark, path, allFiles.toSeq,
+    assert(Lakehouse.bloomNarrow(spark, path, c, allFiles.toSeq,
       spark.range(0L, Lakehouse.bloomRetractionMaxKeys + 10L)
         .select(col("id")), "id").toSet == allFiles.toSet)
     // a type-mismatched key expression disables the narrow (join
     // coercion is the semi-join's business, not the sketch's)
-    assert(Lakehouse.bloomNarrow(spark, path, allFiles.toSeq,
+    assert(Lakehouse.bloomNarrow(spark, path, c, allFiles.toSeq,
       spark.range(100L, 150L).select(col("id").cast("int").as("id")),
       "id").toSet == allFiles.toSet)
     // end-to-end through the narrowed pass: delete, replay, upsert

@@ -1011,9 +1011,8 @@ class LakehouseSpec extends SparkSpec {
       Lakehouse.scan(spark, path).count())
   }
 
-  test("recover: every documented crash window is executable — an " +
-      "interrupted swap restores, a completed one cleans up, staging " +
-      "orphans drop, a healthy table is a no-op") {
+  test("recover: a healthy table is a no-op, orphaned staging drops, " +
+      "and the table reads and mutates unchanged afterwards") {
     val path = tmp("lake-recover")
     freshTable(path)
     Lakehouse.deleteWhere(spark, path, col("x") >= 90.0)
@@ -1024,88 +1023,44 @@ class LakehouseSpec extends SparkSpec {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     // healthy table: recover does nothing
     assert(Lakehouse.recover(spark, path).isEmpty)
-    // CRASH WINDOW 1 (between move-out and move-in): table and its
-    // tombstones sit under _pre_compact, an incomplete rewrite staged
-    f.mkdirs(p(s"${path}_pre_compact"))
-    assert(f.rename(p(path), p(s"${path}_pre_compact/data")))
-    assert(f.rename(p(Lakehouse.deletesDir(path)),
-      p(s"${path}_pre_compact/deletes")))
+    // a crashed writer's staging: an empty rebuild dir and a staged
+    // generation under _incoming
     f.mkdirs(p(s"${path}_rebuild"))
-    val acts1 = Lakehouse.recover(spark, path)
-    assert(acts1.exists(_.contains("restored")), acts1.mkString("; "))
-    assert(Lakehouse.scan(spark, path)
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq == before,
-      "recovery must restore the table WITH its delete debt")
-    assert(Lakehouse.deleteDebt(spark, path) == 100L)
-    assert(!f.exists(p(s"${path}_rebuild")))
-    assert(!f.exists(p(s"${path}_pre_compact")))
-    // CRASH WINDOW 2 (after move-in, before cleanup): a leftover
-    // pre_compact with the OLD data must drop, the new table stays
-    f.mkdirs(p(s"${path}_pre_compact/data"))
     f.mkdirs(p(s"${path}_incoming/gen9"))
-    val acts2 = Lakehouse.recover(spark, path)
-    assert(acts2.exists(_.contains("leftover")) &&
-      acts2.exists(_.contains("orphaned")), acts2.mkString("; "))
-    assert(!f.exists(p(s"${path}_pre_compact")))
+    val acts = Lakehouse.recover(spark, path)
+    assert(acts.exists(_.contains("orphaned")), acts.mkString("; "))
+    assert(!f.exists(p(s"${path}_rebuild")))
     assert(!f.exists(p(s"${path}_incoming")))
     assert(Lakehouse.scan(spark, path)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq == before)
+    assert(Lakehouse.deleteDebt(spark, path) == 100L)
     // and the table still mutates normally afterwards
     assert(Lakehouse.deleteWhere(spark, path, col("x") >= 80.0) == 100L)
   }
 
-  test("recover FINISHES a LEGACY retention swap that crashed before " +
-      "its tombstone install — the staged remapped tombstones are the " +
-      "folded table's only valid debt, never a discardable orphan") {
-    // the pointer protocol has no such window (data + tombstones +
-    // floor flip in ONE commit) — this exercises recover's handling of
-    // the PRE-pointer on-disk state an old deployment may still carry
-    val path = tmp("lake-retaincrash")
+  test("recover drops a manifest naming vanished files and leaves a " +
+      "healthy one alone") {
+    val path = tmp("lake-recovermanifest")
     val mk = (lo: Long, hi: Long) => spark.range(lo, hi).select(
       col("id"), (col("id") % 100).cast("double").as("x"))
     Layout.appendGeneration(spark, path, mk(0L, 500L), Seq("x", "id"),
       bits = 6, partitions = 2, gen = 0L)
     Layout.appendGeneration(spark, path, mk(500L, 1000L), Seq("x", "id"),
       bits = 6, partitions = 2, gen = 1L)
-    // a delete stamped 1: the debt whose staged install crashed
     Lakehouse.deleteMatching(spark, path,
       spark.range(0, 10).select(col("id")), "id")
-    def ids(g: Option[Long]): Set[Long] =
-      (g match {
-        case Some(gen) => Lakehouse.scanAsOf(spark, path, gen)
-        case None => Lakehouse.scan(spark, path)
-      }).select("id").collect().map(_.getLong(0)).toSet
-    val wantLive = ids(None)
-    assert(wantLive.size == 990)
-    // simulate the legacy crash window: tombstones staged at
-    // _retain_deletes (not yet installed), the old table parked under
-    // _pre_compact, the staged rebuild already consumed
     val conf = spark.sessionState.newHadoopConf()
     val f = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    assert(f.rename(p(Lakehouse.deletesDir(path)),
-      p(s"${path}_retain_deletes")))
-    f.mkdirs(p(s"${path}_pre_compact/data"))
-    val acts = Lakehouse.recover(spark, path)
-    assert(acts.exists(_.contains("finished retention swap")),
-      acts.mkString("; "))
-    assert(!f.exists(p(s"${path}_retain_deletes")))
-    assert(!f.exists(p(s"${path}_pre_compact")))
-    assert(ids(None) == wantLive, "doomed rows resurrected")
-    assert(Lakehouse.deleteDebt(spark, path) == 10L)
-    // pre-fold manifests were dropped loudly, not left naming the
-    // folded files
-    assert(!f.exists(p(s"${path}_manifest")))
-    // the generic heal: a manifest naming vanished files (any rewrite
-    // crashed after its swap, before its manifest rebuild) is detected
-    // and dropped; a HEALTHY manifest is left alone
     Layout.writeManifest(spark, path, Seq("x", "id"))
     assert(Lakehouse.recover(spark, path).isEmpty,
       "a healthy manifest must survive recover")
+    assert(Lakehouse.deleteDebt(spark, path) == 10L)
     val manifestPart = f.listStatus(p(s"${path}_manifest"))
       .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
     // corrupt the addressing: rename a DATA file so the manifest's
-    // entry for it dangles
+    // entry for it dangles (any rewrite that crashed after its commit,
+    // before its manifest rebuild, leaves the same state)
     val victim = f.listStatus(p(path)).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).head
     assert(f.rename(victim,
@@ -1197,32 +1152,23 @@ class LakehouseSpec extends SparkSpec {
     assert(Lakehouse.epochAndFloor(spark, crashed) == ((2L, 4L)))
   }
 
-  test("recover refuses the unlocked mid-swap restore under a LIVE " +
-      "writer lease — only a stale or absent lease marks a dead writer") {
+  test("recover takes over a crashed writer's stale lease and leaves " +
+      "the table intact and mutable") {
     val path = tmp("lake-recoverlease")
     freshTable(path)
     val conf = spark.sessionState.newHadoopConf()
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val f = p(path).getFileSystem(conf)
-    // manufacture the mid-swap state WITH a fresh lease: a live
-    // compactor inside its two-rename window
-    f.mkdirs(p(s"${path}_pre_compact"))
-    assert(f.rename(p(path), p(s"${path}_pre_compact/data")))
+    val lease = p(s"${path}_lock/lease")
     f.mkdirs(p(s"${path}_lock"))
-    val out = f.create(p(s"${path}_lock/lease"), false)
-    out.write("live-compactor".getBytes); out.close()
-    val e = intercept[IllegalArgumentException] {
-      Lakehouse.recover(spark, path)
-    }
-    assert(e.getMessage.contains("LIVE writer lease"), e.getMessage)
-    assert(f.exists(p(s"${path}_pre_compact/data")),
-      "the mid-swap state must be untouched under a live lease")
-    // age the lease past the window: now it IS a crashed writer
-    f.setTimes(p(s"${path}_lock/lease"),
-      System.currentTimeMillis() - 1000L, -1L)
-    val actions = Lakehouse.recover(spark, path, leaseMs = 500L)
-    assert(actions.exists(_.contains("restored")), actions.toString)
+    val out = f.create(lease, false)
+    out.write("crashed-writer".getBytes); out.close()
+    // age the lease past the window: its holder stopped heartbeating
+    f.setTimes(lease, System.currentTimeMillis() - 1000L, -1L)
+    Lakehouse.recover(spark, path, leaseMs = 500L)
+    assert(!f.exists(lease), "the stale lease must be cleared")
     assert(Lakehouse.scan(spark, path).count() == 1000L)
+    assert(Lakehouse.deleteWhere(spark, path, col("x") >= 90.0) == 100L)
   }
 
   test("Lakehouse.append serializes concurrent ingest through the " +
