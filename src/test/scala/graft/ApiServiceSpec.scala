@@ -9,7 +9,7 @@ import graft.api.{ApiService, Jwt}
   * debug token mint, and 404-for-everything information hiding. */
 class ApiServiceSpec extends SparkSpec {
 
-  private val srcDir = "/root/reference/tests/fixtures/src"
+  private val srcDir = Fixtures.src
   private val secret = "test-secret"
 
   private lazy val archive: GraftArchive = {

@@ -7,7 +7,7 @@ import java.io.{ByteArrayOutputStream, PrintStream}
   * (ftm_datalake/cli.py:213-292) end-to-end. */
 class CliSpec extends SparkSpec {
 
-  private val srcDir = "/root/reference/tests/fixtures/src"
+  private val srcDir = Fixtures.src
 
   private def cli(args: String*): (Int, String) = {
     val buf = new ByteArrayOutputStream()
@@ -93,15 +93,17 @@ class CliSpec extends SparkSpec {
   }
 
   test("migrate-reference brings a reference-layout dataset into the archive") {
+    val refArchive = Fixtures.referencePath("archive")
+    Fixtures.assumePresent(refArchive)
     val lake = java.nio.file.Files.createTempDirectory("cli-mig-lake").toString
     val (c, outStr) = cli("--archive", lake, "-d", "test_dataset",
-      "migrate-reference", "-i", "/root/reference/tests/fixtures/archive")
+      "migrate-reference", "-i", refArchive)
     assert(c == 0 && outStr.contains("\"added\":"), outStr)
     val (_, keys) = cli("--archive", lake, "-d", "test_dataset", "ls", "--keys")
     assert(keys.linesIterator.toSet.contains("utf.txt"))
     // unknown dataset in the source lake errors clearly
     val (c2, msg) = cli("--archive", lake, "-d", "nope",
-      "migrate-reference", "-i", "/root/reference/tests/fixtures/archive")
+      "migrate-reference", "-i", refArchive)
     assert(c2 == 2 && msg.contains("not found"), msg)
   }
 
@@ -473,7 +475,8 @@ class CliSpec extends SparkSpec {
 
   test("config prints archive and dataset configuration (cli.py:97-108)") {
     // golden output against the reference fixture's own config.yml
-    val archive = "/root/reference/tests/fixtures/archive"
+    val archive = Fixtures.referencePath("archive")
+    Fixtures.assumePresent(s"$archive/test_dataset/.leakrfc/config.yml")
     val (c1, archOnly) = cli("--archive", archive, "config")
     assert(c1 == 0)
     assert(archOnly.trim ==

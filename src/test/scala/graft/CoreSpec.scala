@@ -142,8 +142,9 @@ class CoreSpec extends SparkSpec {
 
   test("reference fixture documents.csv parses with the documents schema") {
     // the golden CSV written by the reference round-trips through our codec
-    val df = DocumentsStore.readCsv(spark,
-      "/root/reference/tests/fixtures/archive/test_dataset/.leakrfc/documents.csv")
+    val metaDir = Fixtures.referencePath("archive/test_dataset/.leakrfc")
+    Fixtures.assumePresent(s"$metaDir/documents.csv", s"$metaDir/size")
+    val df = DocumentsStore.readCsv(spark, s"$metaDir/documents.csv")
     assert(df.count() > 60)
     assert(df.filter($"key".isNull || $"content_hash".isNull || $"size".isNull).isEmpty)
     // microsecond timestamps survive ("2024-09-29 22:52:24.613038")
@@ -154,13 +155,14 @@ class CoreSpec extends SparkSpec {
     assert(df.select("key").distinct().count() == df.count())
     // golden total size from the sidecar `size` file
     val want = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      "/root/reference/tests/fixtures/archive/test_dataset/.leakrfc/size")).trim.toLong
+      s"$metaDir/size")).trim.toLong
     assert(df.agg(sum("size")).as[Long].head() == want)
   }
 
   test("config.yml of the reference fixture parses (read in place)") {
-    val cfg = Config.loadDatasetConfig(
-      "/root/reference/tests/fixtures/archive/test_dataset/.leakrfc/config.yml")
+    val path = Fixtures.referencePath("archive/test_dataset/.leakrfc/config.yml")
+    Fixtures.assumePresent(path)
+    val cfg = Config.loadDatasetConfig(path)
     assert(cfg.name == "test_dataset")
   }
 

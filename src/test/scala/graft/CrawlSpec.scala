@@ -5,16 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.core.Stats
 import graft.pipelines.{Crawl, Export, Make, PointLookup}
 
-/** End-to-end crawl of the reference's golden fixture corpus
-  * (tests/fixtures/src, read in place as test data). Assertions are pinned
-  * to the published oracle vectors where the on-disk corpus matches them
-  * (the two known sha1s) and to filesystem ground truth for counts (the
-  * checked-out corpus has 71 files vs the README's historical 74).
+/** End-to-end crawl of the golden fixture corpus ([[Fixtures.src]]: the
+  * reference's tests/fixtures/src where it is checked out, else the
+  * generated corpus of the same shape). Assertions are pinned to the
+  * published oracle vectors (the two known sha1s, which both corpora
+  * carry) and to filesystem ground truth for counts and sizes, since the
+  * two corpora differ in both.
   */
 class CrawlSpec extends SparkSpec {
   import spark.implicits._
 
-  private val srcDir = "/root/reference/tests/fixtures/src"
+  private val srcDir = Fixtures.src
 
   private def fsFiles(): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =

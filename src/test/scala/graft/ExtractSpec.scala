@@ -85,7 +85,7 @@ class ExtractSpec extends SparkSpec {
 
   test("7z from the golden corpus extracts (commons-compress path)") {
     val archives = spark.read.format("binaryFile")
-      .load("/root/reference/tests/fixtures/src")
+      .load(Fixtures.src)
       .filter($"path".endsWith(".7z"))
       .select(element_at(split($"path", "/"), -1).as("key"), $"content")
     assert(archives.count() >= 1)

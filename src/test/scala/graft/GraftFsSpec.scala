@@ -65,7 +65,7 @@ class GraftFsSpec extends SparkSpec {
     conf.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
     val lakeLocal = java.nio.file.Files.createTempDirectory("graftfs-lake")
     val lake = s"graftfs://$lakeLocal"
-    val src = "graftfs:///root/reference/tests/fixtures/src"
+    val src = s"graftfs://${Fixtures.src}"
     GraftTestFileSystem.ops.set(0)
 
     val archive = new GraftArchive(spark, lake)

@@ -11,12 +11,13 @@ import graft.pipelines.{Crawl, HttpCrawl}
 /** Remote-vs-local crawl parity over a directory-index HTTP server — the
   * analog of tests/test_crawl.py:5-22 (which crawls `http://localhost:8000/
   * src` and the same fixture dir locally, asserting identical key sets and
-  * the pinned testdir/test.txt sha1).
+  * the pinned testdir/test.txt sha1). Here both crawls read the golden
+  * corpus [[Fixtures.src]]: once served over HTTP, once from disk.
   */
 class HttpCrawlSpec extends SparkSpec {
   import spark.implicits._
 
-  private val srcDir = Paths.get("/root/reference/tests/fixtures/src")
+  private val srcDir = Paths.get(Fixtures.src)
 
   /** Minimal index-page file server (the shape `python -m http.server`
     * presents): directories render percent-encoded href listings with

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** End-to-end dataset lifecycle over the golden corpus: crawl → layout →
-  * re-crawl skip → make heal → entities → catalog → export — the full
+/** End-to-end dataset lifecycle over the golden corpus ([[Fixtures.src]]:
+  * the reference's tests/fixtures/src where it is checked out, else the
+  * generated corpus of the same shape): crawl → layout → re-crawl skip →
+  * make heal → entities → catalog → export — the full
   * `ftm-datalake crawl/make/export` story in one lake (SURVEY §3). */
 class LifecycleSpec extends SparkSpec {
   import spark.implicits._
 
-  private val srcDir = "/root/reference/tests/fixtures/src"
+  private val srcDir = Fixtures.src
   private lazy val lake = java.nio.file.Files.createTempDirectory("graft-lake").toString
   private lazy val archive = new GraftArchive(spark, lake)
   private lazy val ds = archive.dataset("test_dataset")

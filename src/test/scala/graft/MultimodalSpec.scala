@@ -38,15 +38,17 @@ class MultimodalSpec extends SparkSpec {
   }
 
   // ------------------------------------------------------- real decode
-  // Real images from the reference's shipped fixture corpus; expected
-  // dimensions parsed independently from the JPEG SOF / GIF LSD / TIFF IFD
-  // headers (reference: tests/fixtures/src).
-  private val fixtureImages = Seq(
+  // Real encoded images from the golden corpus (Fixtures.src). Where the
+  // reference's tests/fixtures/src is checked out these are its shipped
+  // files, whose dimensions were parsed independently from the JPEG SOF /
+  // GIF LSD / TIFF IFD headers; the generated corpus encodes its images
+  // at these same geometries by construction.
+  private lazy val fixtureImages = Seq(
     // (path, width, height)
-    ("/root/reference/tests/fixtures/src/regression_jpg.jpg", 1350, 282),
-    ("/root/reference/tests/fixtures/src/regression_gif.gif", 320, 180),
-    ("/root/reference/tests/fixtures/src/regression_tiff.tiff", 1350, 282),
-    ("/root/reference/tests/fixtures/src/hello_world_tiff.tif", 819, 460))
+    (s"${Fixtures.src}/regression_jpg.jpg", 1350, 282),
+    (s"${Fixtures.src}/regression_gif.gif", 320, 180),
+    (s"${Fixtures.src}/regression_tiff.tiff", 1350, 282),
+    (s"${Fixtures.src}/hello_world_tiff.tif", 819, 460))
 
   test("decodeImages decodes real fixture images to their true geometry") {
     val rows = fixtureImages.zipWithIndex.map { case ((p, _, _), i) =>
@@ -75,7 +77,9 @@ class MultimodalSpec extends SparkSpec {
     // fixture images (geometry independently header-parsed; JPEG↔TIFF
     // luminance cross-validated — see golden/README.md). Regressions in
     // the codec path, band profile, or fallback shape surface as an
-    // artifact diff here, not just as geometry assertions.
+    // artifact diff here, not just as geometry assertions. It needs the
+    // reference's own images, so it runs only where they are checked out.
+    Fixtures.assumePresent(graft.tools.GoldenDecode.SrcDir)
     val recomputed = graft.tools.GoldenDecode.decodeFixtures(spark)
     val golden = spark.read.parquet("golden/decode_images.parquet")
     assert(golden.count() == graft.tools.GoldenDecode.FixtureFiles.size.toLong)
@@ -236,7 +240,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("sampleFrames really decodes animated-GIF frames; stub only for true video") {
-    val gifPath = "/root/reference/tests/fixtures/src/regression_gif.gif"
+    val gifPath = s"${Fixtures.src}/regression_gif.gif"
     val gif = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(gifPath))
     val expectFrames = gifFrameCount(gif)
     assert(expectFrames > 1, "fixture must be a genuinely animated GIF")
