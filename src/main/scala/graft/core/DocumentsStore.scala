@@ -24,11 +24,15 @@ object DocumentsStore {
       spark.read.schema(Model.documentsSchema).option("header", "true")
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS").csv(path)
 
+  /** Parquet scan with the fixed documents schema — every writer of the
+    * table (crawl, make, migrate, the bucketed layout) lands exactly
+    * that schema, so the read launches no schema-inference job; a
+    * missing path yields an empty frame like [[readCsv]]. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
     if (!exists(spark, path))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Model.documentsSchema)
-    else spark.read.parquet(path)
+    else spark.read.schema(Model.documentsSchema).parquet(path)
 
   /** Write a snapshot: parquet system-of-record + single-file CSV for RFC
     * interop (coalesce(1) only at this small metadata boundary — the

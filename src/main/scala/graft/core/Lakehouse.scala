@@ -262,7 +262,15 @@ object Lakehouse {
     * form wraps exactly this over [[FsLeaseBackend]], and the race
     * specs exercise the mechanics through the interface). */
   def withTableLock[T](backend: LeaseBackend, leaseMs: Long,
-                       waitMs: Long)(body: => T): T = {
+                       waitMs: Long)(body: => T): T =
+    lockedWith(backend, leaseMs, waitMs, _ => ())(body)
+
+  /** [[withTableLock]]'s body, calling `onTakeover` with the stale
+    * lease's age each time acquisition removes one — how [[recover]]
+    * reports the takeover. */
+  private def lockedWith[T](backend: LeaseBackend, leaseMs: Long,
+                            waitMs: Long, onTakeover: Long => Unit)
+                           (body: => T): T = {
     val token = java.util.UUID.randomUUID().toString
     val deadline = System.currentTimeMillis() + waitMs
     var acquired = false
@@ -277,10 +285,12 @@ object Lakehouse {
       val stale = backend.holderToken()
       val age = backend.ageMs()
       if (age != Long.MaxValue && age > leaseMs) {
-        if (stale.nonEmpty) backend.releaseIf(stale)
-        else backend.release() // token-less stale lease: a writer
-        // crashed between creating the file and writing its token —
-        // nothing to compare against, and nothing fresh to protect
+        val removed =
+          if (stale.nonEmpty) backend.releaseIf(stale)
+          else { backend.release(); true } // token-less stale lease: a
+          // writer crashed between creating the file and writing its
+          // token — nothing to compare against, nothing fresh to protect
+        if (removed) onTakeover(age)
       }
       // double-check: the acquire need not be atomic; proceed only if
       // OUR token survived the race
@@ -688,7 +698,7 @@ object Lakehouse {
     readCommit(spark, path).getOrElse {
       val s = listingSnapshot(spark, path)
       val schemaJson = s.data.headOption
-        .map(n => spark.read.parquet(s"$path/$n").schema.json)
+        .map(n => ParquetFooter.schema(spark, s"$path/$n").json)
       commitWrite(spark, path, 1L, s.data, s.deletes, s.epoch, s.floor,
         schemaJson)
     }
@@ -710,7 +720,7 @@ object Lakehouse {
         org.apache.spark.sql.types.DataType.fromJson(js)
           .asInstanceOf[org.apache.spark.sql.types.StructType]
       case None if c.data.isEmpty => new org.apache.spark.sql.types.StructType()
-      case None => spark.read.parquet(s"$path/${c.data.head}").schema
+      case None => ParquetFooter.schema(spark, s"$path/${c.data.head}")
     }
 
   /** The schema CONTRACT a batch must honor — present when the commit
@@ -890,7 +900,7 @@ object Lakehouse {
   def prunedScan(spark: SparkSession, path: String,
                  box: Seq[(String, Column, Column)]): DataFrame = {
     require(box.nonEmpty, "prunedScan needs a box predicate")
-    val manifest = spark.read.parquet(s"${path}_manifest")
+    val manifest = Layout.readManifest(spark, path)
     val kept = Layout.pruneFiles(manifest, box)
       .select("__file").collect().map(r => r.getString(0))
     val c = resolve(spark, path)
@@ -975,7 +985,7 @@ object Lakehouse {
     val hashes = spark.range(1)
       .select(sample.toSeq.map(v => xxhash64(lit(v).cast(kt))): _*)
       .head().toSeq.map(_.asInstanceOf[Long])
-    val probed = spark.read.parquet(bDir)
+    val probed = spark.read.schema(Layout.BloomManifestSchema).parquet(bDir)
       .select(col("__file"),
         graft.expressions.GraftExpressions
           .bloomMightContainAny(col("__bloom"), hashes).as("__might"))
@@ -1137,7 +1147,7 @@ object Lakehouse {
     require(fs(spark, path).exists(new Path(bDir)),
       s"pointLookup: no Bloom manifest at $bDir — run " +
         s"Layout.writeBloomManifest(spark, path, \"$keyCol\") first")
-    val bm = spark.read.parquet(bDir)
+    val bm = spark.read.schema(Layout.BloomManifestSchema).parquet(bDir)
     val c = resolve(spark, path)
     val schema = schemaOf(spark, path, c)
     // probe hashes computed THROUGH Spark's own xxhash64 (one 1-row
@@ -1280,7 +1290,7 @@ object Lakehouse {
         if (!f.exists(new Path(mDir)) ||
             parquetFiles(spark, mDir).isEmpty) None
         else {
-          val m = spark.read.parquet(mDir)
+          val m = Layout.readManifest(spark, path)
           val cols = m.columns.filter(_.startsWith("__min_"))
             .map(_.stripPrefix("__min_")).toSeq
           if (cols.isEmpty) None
@@ -1959,17 +1969,21 @@ object Lakehouse {
     *    `mode("overwrite")`, so leftovers are dead bytes.
     *  - a commit marker's `tmp-` file: a commit that crashed mid-stage
     *    (the rename IS the commit), discarded.
-    *  - a lease under `<path>_lock` older than `staleLockMs`:
-    *    removed (the holder heartbeats every third of its window, so
-    *    a day-old lease is a crashed writer).
+    *  - a lease under `<path>_lock` older than `leaseMs`: taken over
+    *    when recover acquires the lock (the holder heartbeats every
+    *    third of its window, so an older lease is a crashed writer's)
+    *    and reported with its age.
     * Single-writer: takes the table lock itself (run it when no
     * mutation is in flight — the lock enforces that). */
   def recover(spark: SparkSession, path: String,
-              staleLockMs: Long = 24L * 60 * 60 * 1000,
               leaseMs: Long = 15L * 60 * 1000): Seq[String] = {
     val f = fs(spark, path)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    withTableLock(spark, path, leaseMs = leaseMs, waitMs = 60 * 1000L) {
+    val lock = new Path(s"${path}_lock")
+    lockedWith(new FsLeaseBackend(f, lock), leaseMs, 60 * 1000L,
+        age => actions += s"removed stale writer lease " +
+          s"${new Path(lock, "lease")} (last refreshed ${age / 1000} s " +
+          "ago — a crashed writer's)") {
       if (f.exists(new Path(path))) {
         // LIVE names still ON DISK: a manifest naming a vacuum-pending
         // dead file is just as dangling as one naming a vanished file
@@ -1979,8 +1993,8 @@ object Lakehouse {
           .filter(m => f.exists(m) &&
             parquetFiles(spark, m.toString).nonEmpty)
           .foreach { m =>
-            val named = spark.read.parquet(m.toString)
-              .select("__file").distinct().collect()
+            val named = spark.read.schema("__file STRING")
+              .parquet(m.toString).select("__file").distinct().collect()
               .map(r => fileName(r.getString(0)))
             if (named.exists(n => !live.contains(n))) {
               f.delete(m, true)
@@ -2013,12 +2027,6 @@ object Lakehouse {
             actions += s"discarded uncommitted marker ${s.getPath}"
           }
       ()
-    }
-    val lease = new Path(s"${path}_lock/lease")
-    if (f.exists(lease) && System.currentTimeMillis() -
-        f.getFileStatus(lease).getModificationTime > staleLockMs) {
-      f.delete(lease, false)
-      actions += s"removed stale writer lease $lease"
     }
     actions.toSeq
   }
@@ -2154,7 +2162,7 @@ object Lakehouse {
           // landed files' own _metadata — one pass over doom bytes,
           // exact at any shard count
           if (landedDoom.nonEmpty) {
-            val remapped = spark.read
+            val remapped = spark.read.schema(nullableCopy(rows.schema))
               .parquet(landedDoom.map(n => s"$path/$n"): _*)
               .select(element_at(split(col("_metadata.file_path"), "/"),
                   -1).as(FileCol),
@@ -2208,7 +2216,8 @@ object Lakehouse {
           .map(n => new Path(path, n).toString)
         if (baseFiles.nonEmpty) {
           val tmp = s"${path}_incoming/manifestbase"
-          Layout.statsManifest(spark.read.parquet(baseFiles: _*), cols)
+          Layout.statsManifest(
+              spark.read.schema(schema).parquet(baseFiles: _*), cols)
             .coalesce(1).write.mode("overwrite").parquet(tmp)
           renameStagedIn(spark, tmp, mDir, _ => "base.parquet")
         }

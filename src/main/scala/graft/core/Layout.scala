@@ -166,9 +166,20 @@ object Layout {
       val m = new org.apache.hadoop.fs.Path(mPath)
       m.getFileSystem(spark.sessionState.newHadoopConf()).delete(m, true)
     } else
-      statsManifest(spark.read.parquet(live: _*), cols)
+      statsManifest(
+          spark.read.schema(Lakehouse.schemaOf(spark, path, c))
+            .parquet(live: _*), cols)
         .coalesce(1).write.mode("overwrite").parquet(mPath)
     mPath
+  }
+
+  /** `<path>_manifest` read under its own schema, taken from one footer
+    * on the driver: the `__min_<c>`/`__max_<c>` columns depend on which
+    * columns it was built over. */
+  private[core] def readManifest(spark: org.apache.spark.sql.SparkSession,
+                                 path: String): DataFrame = {
+    val mPath = s"${path}_manifest"
+    spark.read.schema(ParquetFooter.schema(spark, mPath)).parquet(mPath)
   }
 
   /** Per-file Bloom MEMBERSHIP manifest over `keyCol` — the
@@ -217,13 +228,19 @@ object Layout {
     writeBloomManifestFrom(spark, path, Lakehouse.resolve(spark, path),
       keyCol, expectedKeysPerFile, fpp)
 
+  /** The schema [[bloomManifest]] writes. A manifest built before the
+    * geometry columns existed reads them as null. */
+  private[core] val BloomManifestSchema =
+    "__file STRING, __bloom BINARY, __keys BIGINT, __fpp DOUBLE"
+
   /** [[writeBloomManifest]] over commit `c`'s live files. */
   private[core] def writeBloomManifestFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       c: Lakehouse.TableCommit, keyCol: String, expectedKeysPerFile: Long,
       fpp: Double): String = {
     val bPath = s"${path}_bloom_$keyCol"
-    bloomManifest(spark.read.parquet(Lakehouse.livePaths(path, c): _*),
+    bloomManifest(spark.read.schema(Lakehouse.schemaOf(spark, path, c))
+        .parquet(Lakehouse.livePaths(path, c): _*),
         keyCol, expectedKeysPerFile, fpp)
       .coalesce(1).write.mode("overwrite").parquet(bPath)
     bPath
@@ -255,7 +272,7 @@ object Layout {
   def prunedScan(spark: org.apache.spark.sql.SparkSession, path: String,
                  box: Seq[(String, Column, Column)]): DataFrame = {
     require(box.nonEmpty, "prunedScan needs a box predicate")
-    val manifest = spark.read.parquet(s"${path}_manifest")
+    val manifest = readManifest(spark, path)
     // the manifest must name exactly the live files (a stale one would
     // silently serve dead data)
     val c = Lakehouse.resolve(spark, path)
@@ -418,12 +435,10 @@ object Layout {
     * the sizing its extension slices and rebuilds must reproduce. */
   private[core] def bloomGeometry(spark: org.apache.spark.sql.SparkSession,
                                   bDir: String): (Long, Double) = {
-    val df = spark.read.parquet(bDir)
-    val geom =
-      if (df.columns.contains("__keys"))
-        df.select("__keys", "__fpp").take(1).headOption
-      else None
-    geom.map(r => (r.getLong(0), r.getDouble(1))).getOrElse((1L << 21, 0.01))
+    spark.read.schema(BloomManifestSchema).parquet(bDir)
+      .select("__keys", "__fpp").filter(col("__keys").isNotNull)
+      .take(1).headOption
+      .map(r => (r.getLong(0), r.getDouble(1))).getOrElse((1L << 21, 0.01))
   }
 
   /** Idempotent per-generation append — the exactly-once building
@@ -561,8 +576,7 @@ object Layout {
     // the append rides the table lease (released before the rebuild —
     // Lakehouse.compact takes its own hold; the lease is not reentrant)
     Lakehouse.append(spark, path, batch, cols, bits, partitions)
-    val health = layoutHealth(
-      spark.read.parquet(s"${path}_manifest"), cols)
+    val health = layoutHealth(readManifest(spark, path), cols)
     if (health.pointCost <= maxPointCost) false
     else {
       // the rebuild IS a compaction, and runs as one: rewriting from

@@ -30,7 +30,7 @@ object Ledger {
   def read(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.parquet(path)
+      spark.read.schema(schema).parquet(path)
     else empty(spark)
   }
 

@@ -1171,6 +1171,26 @@ class LakehouseSpec extends SparkSpec {
     assert(Lakehouse.deleteWhere(spark, path, col("x") >= 90.0) == 100L)
   }
 
+  test("recover reports the stale lease it takes over") {
+    val path = tmp("lake-recoverleaselog")
+    freshTable(path)
+    val conf = spark.sessionState.newHadoopConf()
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val f = p(path).getFileSystem(conf)
+    val lease = p(s"${path}_lock/lease")
+    f.mkdirs(p(s"${path}_lock"))
+    val out = f.create(lease, false)
+    out.write("crashed-writer".getBytes); out.close()
+    // a writer that crashed two days ago
+    f.setTimes(lease, System.currentTimeMillis() - 48L * 3600 * 1000, -1L)
+    val acts = Lakehouse.recover(spark, path)
+    assert(acts.exists(a => a.contains("stale writer lease") &&
+      a.contains(lease.toString)), acts.mkString("; "))
+    assert(!f.exists(lease), "the stale lease must be cleared")
+    // a healthy table with no lease reports nothing
+    assert(Lakehouse.recover(spark, path).isEmpty)
+  }
+
   test("Lakehouse.append serializes concurrent ingest through the " +
       "lease: both batches land with their manifest slices intact") {
     val path = tmp("lake-lockedappend")
