@@ -123,8 +123,11 @@ object Lakehouse {
   def withTableLock[T](spark: SparkSession, path: String,
                        leaseMs: Long = 15L * 60 * 1000,
                        waitMs: Long = 10L * 60 * 1000)(body: => T): T =
-    withTableLock(new FsLeaseBackend(fs(spark, path),
-      new Path(s"${path}_lock")), leaseMs, waitMs)(body)
+    withTableLock(tableLease(spark, path), leaseMs, waitMs)(body)
+
+  /** The table's default lease: a file under `<path>_lock`. */
+  private def tableLease(spark: SparkSession, path: String): LeaseBackend =
+    new FsLeaseBackend(fs(spark, path), new Path(s"${path}_lock"))
 
   /** The lease PRIMITIVE [[withTableLock]] rides — a seam, because the
     * soundness of the default file-based lease is exactly as good as
@@ -1979,11 +1982,11 @@ object Lakehouse {
               leaseMs: Long = 15L * 60 * 1000): Seq[String] = {
     val f = fs(spark, path)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    val lock = new Path(s"${path}_lock")
-    lockedWith(new FsLeaseBackend(f, lock), leaseMs, 60 * 1000L,
-        age => actions += s"removed stale writer lease " +
-          s"${new Path(lock, "lease")} (last refreshed ${age / 1000} s " +
-          "ago — a crashed writer's)") {
+    val lease = tableLease(spark, path)
+    lockedWith(lease, leaseMs, 60 * 1000L,
+        age => actions += s"removed stale writer lease at " +
+          s"${lease.describe} (last refreshed ${age / 1000} s ago — a " +
+          "crashed writer's)") {
       if (f.exists(new Path(path))) {
         // LIVE names still ON DISK: a manifest naming a vacuum-pending
         // dead file is just as dangling as one naming a vanished file

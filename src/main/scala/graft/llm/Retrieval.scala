@@ -350,20 +350,21 @@ object Retrieval {
 
   /** Reload a [[compactBm25Index]]-materialized index from parquet —
     * the serve-side half of the compaction lifecycle. No read launches
-    * a schema-inference job: `docfreq` and `stats` have fixed schemas,
-    * and the postings' (whose `doc_id` type is the corpus id's) comes
-    * from one footer on the driver. */
+    * a schema-inference job: `docfreq` has a fixed schema; the
+    * postings' (whose `doc_id` type is the corpus id's) and the stats'
+    * (an index persisted before the `analyzer_fp` stamp has none, and
+    * must load without one for [[statsWithFp]] to supply it) come from
+    * one footer each on the driver. */
   def loadBm25Index(spark: org.apache.spark.sql.SparkSession,
                     path: String): Bm25Index = {
     val base = path.stripSuffix("/")
-    val postings = s"$base/postings"
-    Bm25Index(
-      spark.read.schema(graft.core.ParquetFooter.schema(spark, postings))
-        .parquet(postings),
+    def footerRead(dir: String) =
+      spark.read.schema(graft.core.ParquetFooter.schema(spark, dir))
+        .parquet(dir)
+    Bm25Index(footerRead(s"$base/postings"),
       spark.read.schema("token STRING, docfreq BIGINT")
         .parquet(s"$base/docfreq"),
-      spark.read.schema("n BIGINT, toklen BIGINT, analyzer_fp BIGINT")
-        .parquet(s"$base/stats"))
+      footerRead(s"$base/stats"))
   }
 
   /** Land an index state at `path` with docfreq and toklen DERIVED from

@@ -79,28 +79,21 @@ class LayoutSpec extends SparkSpec {
           col("mny") <= 60 && col("mxy") >= 40)
         .count()
     }
-    // each layout's 64 files are EXACT equal-count slices of its sort
-    // order (ties broken by id), one slice per file: the two counts
-    // compare the sort keys, not `repartitionByRange`'s sampled bounds,
-    // whose seed follows the RDD id and which let the counts tie
-    def sliced(order: org.apache.spark.sql.Column*)
-        : org.apache.spark.sql.DataFrame = {
-      val ranked = spark.range(40000).select(col("id"),
-          (col("id") % 200).cast("double").as("x"),
-          (col("id") / 200).cast("double").as("y"))
-        .transform(df => graft.core.Layout.zValue(df, Seq("x", "y"),
-          bits = 8))
-        .withColumn("__file", ((row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(order: _*)) - 1)
-          * 64 / 40000).cast("int"))
-      val slices = ranked.select("__file", "x", "y").rdd
-        .map(r => (r.getInt(0), r))
-        .partitionBy(new org.apache.spark.HashPartitioner(64)).values
-      spark.createDataFrame(slices, ranked.select("__file", "x", "y")
-        .schema).drop("__file")
-    }
-    val zFiles = filesIntersecting(sliced(col("__z"), col("id")))
-    val linearFiles = filesIntersecting(sliced(col("x"), col("id")))
+    // both layouts come from range exchanges, whose bounds are drawn
+    // from a sample seeded by the RDD id, so they move from run to run
+    // and the two counts could tie. A sample size per partition of the
+    // row count makes each exchange sample every row: exact equal-count
+    // bounds, the same in every run.
+    val sampleKey = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    val sampleWas = spark.conf.getOption(sampleKey)
+    spark.conf.set(sampleKey, 40000L)
+    val (zFiles, linearFiles) =
+      try (filesIntersecting(graft.core.Layout.zorder(grid, Seq("x", "y"),
+          bits = 8, partitions = 64)),
+        filesIntersecting(
+          grid.repartitionByRange(64, col("x")).sortWithinPartitions("x")))
+      finally sampleWas.fold(spark.conf.unset(sampleKey))(
+        spark.conf.set(sampleKey, _))
     assert(zFiles < linearFiles,
       s"z-order pruning no better than linear: $zFiles vs $linearFiles " +
         "files intersect the box")

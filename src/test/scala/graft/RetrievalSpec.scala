@@ -133,6 +133,17 @@ class RetrievalSpec extends SparkSpec {
     val servedLegacy = Retrieval.bm25TopKAgainst(legacy, q, k = 3)
     assert(servedLegacy.exceptAll(direct).isEmpty &&
       direct.exceptAll(servedLegacy).isEmpty)
+    // ...and so does one persisted before the stamp, loaded from disk
+    val legacyDir = java.nio.file.Files.createTempDirectory("graft-bm25l")
+      .toString
+    legacy.postings.write.parquet(s"$legacyDir/postings")
+    legacy.docFreq.write.parquet(s"$legacyDir/docfreq")
+    legacy.stats.write.parquet(s"$legacyDir/stats")
+    val loadedLegacy = Retrieval.loadBm25Index(spark, legacyDir)
+    assert(!loadedLegacy.stats.columns.contains("analyzer_fp"))
+    val servedLoaded = Retrieval.bm25TopKAgainst(loadedLegacy, q, k = 3)
+    assert(servedLoaded.exceptAll(direct).isEmpty &&
+      direct.exceptAll(servedLoaded).isEmpty)
     // a FORGED stamp (an index from a different analyzer version):
     // serving raises naming both fingerprints instead of scoring a
     // mismatched vocabulary
