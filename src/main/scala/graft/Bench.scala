@@ -135,16 +135,16 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val gates = SparkEntry.gates.sortBy(_.name)
 
     // warm-up at the smallest SF: exercises scan/codegen/shuffle machinery
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
+    gates.foreach { g =>
+      try g.plan(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }
     }
 
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
-    val noisyThreshold = math.max(3, names.size / 20)
+    val noisyThreshold = math.max(3, gates.size / 20)
 
     // one full measurement attempt: probe, timed passes, probe, verdicts.
     // Per query: (median, spread = max - min over the passes, err). The
@@ -176,11 +176,11 @@ object Bench {
     }
     def measure(): Attempt = {
       val calBefore = calibrate(spark)
-      val results = names.map { name =>
+      val results = gates.map { g =>
         var err: Option[String] = None
         val times = (1 to passes).map { _ =>
           val t0 = System.nanoTime()
-          try SparkEntry.queries(name)(spark, sfDir).count()
+          try g.plan(spark, sfDir).count()
           catch { case e: Throwable =>
             if (err.isEmpty) {
               val msg = Option(e.getMessage).getOrElse("").take(160)
@@ -189,7 +189,7 @@ object Bench {
           }
           (System.nanoTime() - t0) / 1e9
         }.sorted
-        (name, times(times.length / 2), times.last - times.head, err)
+        (g.name, times(times.length / 2), times.last - times.head, err)
       }
       Attempt(results, calBefore, calibrate(spark))
     }
@@ -262,7 +262,7 @@ object Bench {
     // driver-contract scalars (`metric`/`value`/`unit`) plus the noise
     // verdict — the human-readable TL;DR.
     println(
-      s"""{"metric":"total","value":${r3(cleanTotal(results))},"unit":"sec","sf":"$sfDir","s_per_q":${r3(secondsPerQuery(results))},"n_queries":${names.size},"n_errors":${errored.size},"noisy":$noisy,"noisy_count":$noisyCount,"contended":$contended,"attempts":$attempts,"summary":true}""")
+      s"""{"metric":"total","value":${r3(cleanTotal(results))},"unit":"sec","sf":"$sfDir","s_per_q":${r3(secondsPerQuery(results))},"n_queries":${gates.size},"n_errors":${errored.size},"noisy":$noisy,"noisy_count":$noisyCount,"contended":$contended,"attempts":$attempts,"summary":true}""")
     // The FULL per-query JSON is the FINAL stdout line: the driver reads
     // a bounded stdout tail and had parsed `null` for 18 rounds because
     // this line used to print BEFORE the summary (and unrounded) — last

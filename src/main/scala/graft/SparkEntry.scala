@@ -9,9 +9,9 @@ import graft.functions.{Exact, GraftFunctions => F}
 import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis => TA}
 import graft.pipelines.{Crawl, Entities, Ledger, Make}
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the LLM-pipeline extensions), each with a DuckDB oracle
-  * where SQL-expressible.
+/** Driver contract — one `gates` entry per implemented operator from
+  * SURVEY.md §2 (+ the LLM-pipeline extensions), each with its DuckDB
+  * oracle.
   *
   * Cross-engine determinism rules used throughout (so Spark and DuckDB
   * hash-match bit-for-bit):
@@ -114,10 +114,33 @@ object SparkEntry {
     queries("q5_region_revenue")(spark, "/root/testdata/sf0.001")
 
   // =====================================================================
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One oracle-checked gate: its name, its Spark plan over an sf dir,
+    * and the DuckDB SQL whose result it must hash-match (over the sf
+    * dir's tables; a hash-family gate's oracle reads a reviewed golden
+    * parquet through `read_parquet`). */
+  final case class Gate(name: String,
+                        plan: (SparkSession, String) => DataFrame,
+                        oracle: String)
+
+  /** The gates as given, refusing a repeated name: a `Map` literal would
+    * keep the later entry and silently drop the earlier gate. */
+  private[graft] def registry(entries: Gate*): Seq[Gate] = {
+    val dup = entries.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dup.isEmpty, s"duplicate gate name: ${dup.toSeq.sorted.mkString(", ")}")
+    entries
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.plan).toMap
+
+  lazy val oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
+
+  /** Lazy: the oracles read the shared `private val` CTEs defined below,
+    * which a strict val here would see as null. */
+  lazy val gates: Seq[Gate] = registry(
 
     // ----------------------------------------------------- TPC-H-ish core
-    "q1_pricing_summary" -> ((s, dir) => {
+    Gate("q1_pricing_summary", ((s, dir) => {
       t(s, dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -127,8 +150,14 @@ object SparkEntry {
             .as("sum_disc_price"),
           count(lit(1)).as("count_order"))
     }),
+      """SELECT l_returnflag, l_linestatus,
+        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
+        | count(*) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q3_shipping_priority" -> ((s, dir) => {
+    Gate("q3_shipping_priority", ((s, dir) => {
       val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
       val o = t(s, dir, "orders")
         .filter(col("o_orderdate") < to_timestamp(lit("1998-01-01")))
@@ -143,8 +172,17 @@ object SparkEntry {
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
     }),
+      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        | JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        | AND o_orderdate < TIMESTAMP '1998-01-01'
+        | AND l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY l_orderkey, strftime(o_orderdate, '%Y-%m-%d')
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
 
-    "q5_region_revenue" -> ((s, dir) => {
+    Gate("q5_region_revenue", ((s, dir) => {
       val r = t(s, dir, "region")
       val n = t(s, dir, "nation")
       val cu = t(s, dir, "customer")
@@ -162,8 +200,18 @@ object SparkEntry {
           .as("revenue"),
           count(lit(1)).as("n_items"))
     }),
+      """SELECT r_name, n_name,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        | count(*) AS n_items
+        |FROM lineitem
+        | JOIN orders ON l_orderkey = o_orderkey
+        | JOIN customer ON o_custkey = c_custkey
+        | JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        | JOIN nation ON s_nationkey = n_nationkey
+        | JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name""".stripMargin),
 
-    "q6_forecast_revenue" -> ((s, dir) =>
+    Gate("q6_forecast_revenue", ((s, dir) =>
       // classic filter-scan-aggregate: every predicate reaches the parquet
       // scan as a PushedFilter; single partial+final agg, no join
       t(s, dir, "lineitem")
@@ -174,8 +222,16 @@ object SparkEntry {
         .agg(Exact.dsumProduct(col("l_extendedprice"), col("l_discount"))
           .as("revenue"),
           count(lit(1)).as("n"))),
+      """SELECT
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        | count(*) AS n
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01'
+        |  AND l_discount BETWEEN 0.05 AND 0.07
+        |  AND l_quantity < 24""".stripMargin),
 
-    "q2_min_cost_supplier" -> ((s, dir) => {
+    Gate("q2_min_cost_supplier", ((s, dir) => {
       // TPC-H q2's correlated-min-subquery shape (this schema has no
       // partsupp, so lineitem is the part↔supplier price bridge): for each
       // small part, the supplier rows achieving that part's minimum price.
@@ -200,8 +256,18 @@ object SparkEntry {
           col("n_name"), col("min_price"))
         .distinct()
     }),
+      """SELECT DISTINCT p_partkey, p_brand, s_name, n_name,
+        | l_extendedprice AS min_price
+        |FROM part
+        | JOIN lineitem ON l_partkey = p_partkey
+        | JOIN supplier ON l_suppkey = s_suppkey
+        | JOIN nation ON s_nationkey = n_nationkey
+        |WHERE p_size <= 10
+        | AND l_extendedprice = (
+        |   SELECT min(l2.l_extendedprice) FROM lineitem l2
+        |   WHERE l2.l_partkey = p_partkey)""".stripMargin),
 
-    "q4_order_priority" -> ((s, dir) => {
+    Gate("q4_order_priority", ((s, dir) => {
       // TPC-H q4's EXISTS shape (no l_commitdate here, so "late" = shipped
       // more than 90 days after the order date): a left-semi join with the
       // correlated predicate in the join condition — exactly Catalyst's
@@ -217,8 +283,17 @@ object SparkEntry {
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("order_count"))
     }),
+      """SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1997-07-01'
+        |  AND o_orderdate < TIMESTAMP '1997-10-01'
+        |  AND EXISTS (
+        |    SELECT 1 FROM lineitem
+        |    WHERE l_orderkey = o_orderkey
+        |      AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
+        |GROUP BY o_orderpriority""".stripMargin),
 
-    "q7_volume_shipping" -> ((s, dir) => {
+    Gate("q7_volume_shipping", ((s, dir) => {
       // TPC-H q7: bilateral shipping volume between two nations by year.
       // The 2-of-25 nation filter is pushed into BOTH dimension sides
       // BEFORE the fact joins (supplier and customer shrink to ~8% each,
@@ -253,8 +328,24 @@ object SparkEntry {
         .agg(Exact.dsumProduct(col("l_extendedprice"), lit(1) - col("l_discount"))
           .as("revenue"))
     }),
+      """SELECT supp_nation, cust_nation, l_year,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM (
+        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |    strftime(l_shipdate, '%Y') AS l_year, l_extendedprice, l_discount
+        |  FROM lineitem
+        |    JOIN orders ON l_orderkey = o_orderkey
+        |    JOIN customer ON o_custkey = c_custkey
+        |    JOIN supplier ON l_suppkey = s_suppkey
+        |    JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |    JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |  WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+        |      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1998-01-01')
+        |GROUP BY supp_nation, cust_nation, l_year""".stripMargin),
 
-    "q8_market_share" -> ((s, dir) => {
+    Gate("q8_market_share", ((s, dir) => {
       // TPC-H q8: NATION_2's share of ECONOMY-part revenue in the ASIA
       // market, by order year. Shape notes for 100 TB: the region filter
       // collapses nation→customer BEFORE the fact joins (customer shrinks
@@ -292,8 +383,27 @@ object SparkEntry {
             .cast("double") /
           sum(vol).cast("double"), 6).as("mkt_share"))
     }),
+      """SELECT o_year,
+        | round(CAST(SUM(CASE WHEN supp_nation = 'NATION_2' THEN vol ELSE 0 END) AS DOUBLE)
+        |   / CAST(SUM(vol) AS DOUBLE), 6) AS mkt_share
+        |FROM (
+        |  SELECT strftime(o_orderdate, '%Y') AS o_year,
+        |    CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4)) AS vol,
+        |    n2.n_name AS supp_nation
+        |  FROM lineitem
+        |    JOIN part ON l_partkey = p_partkey
+        |    JOIN orders ON l_orderkey = o_orderkey
+        |    JOIN customer ON o_custkey = c_custkey
+        |    JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        |    JOIN region ON n1.n_regionkey = r_regionkey
+        |    JOIN supplier ON l_suppkey = s_suppkey
+        |    JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        |  WHERE r_name = 'ASIA' AND p_type = 'ECONOMY'
+        |    AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |    AND o_orderdate < TIMESTAMP '1998-01-01')
+        |GROUP BY o_year""".stripMargin),
 
-    "q9_product_profit" -> ((s, dir) => {
+    Gate("q9_product_profit", ((s, dir) => {
       // TPC-H q9's shape (no partsupp here, so cost = p_retailprice ×
       // quantity): profit on red parts by supplier nation and order year.
       // part (name-filtered) and supplier⋈nation broadcast; lineitem⋈orders
@@ -317,8 +427,20 @@ object SparkEntry {
           date_format(col("o_orderdate"), "yyyy").as("o_year"))
         .agg(sum(amount).cast("double").as("profit"))
     }),
+      """SELECT nation, o_year, CAST(SUM(amount) AS DOUBLE) AS profit
+        |FROM (
+        |  SELECT n_name AS nation, strftime(o_orderdate, '%Y') AS o_year,
+        |    CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))
+        |      - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)) AS amount
+        |  FROM lineitem
+        |    JOIN part ON l_partkey = p_partkey
+        |    JOIN orders ON l_orderkey = o_orderkey
+        |    JOIN supplier ON l_suppkey = s_suppkey
+        |    JOIN nation ON s_nationkey = n_nationkey
+        |  WHERE p_name LIKE '%red%')
+        |GROUP BY nation, o_year""".stripMargin),
 
-    "q10_returned_items" -> ((s, dir) => {
+    Gate("q10_returned_items", ((s, dir) => {
       // TPC-H q10: top-20 customers by returned-item revenue in one
       // quarter. Quarter filter reaches the orders scan; lineitem's
       // returnflag filter reaches its scan; customer joins AFTER the
@@ -342,8 +464,19 @@ object SparkEntry {
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
     }),
+      """SELECT c_custkey, c_name, n_name,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        | JOIN orders ON l_orderkey = o_orderkey
+        | JOIN customer ON o_custkey = c_custkey
+        | JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1997-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-04-01'
+        |GROUP BY c_custkey, c_name, n_name
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
 
-    "q12_late_shipments" -> ((s, dir) => {
+    Gate("q12_late_shipments", ((s, dir) => {
       // TPC-H q12's conditional-count shape (no l_shipmode/commitdate in
       // this schema: "late" = shipped >60 days after the order date,
       // grouped by linestatus): the date-window filter reaches the
@@ -363,8 +496,16 @@ object SparkEntry {
           sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
             .otherwise(1L)).as("low_line_count"))
     }),
+      """SELECT l_linestatus,
+        | CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        | CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01'
+        |  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
+        |GROUP BY l_linestatus""".stripMargin),
 
-    "q13_order_distribution" -> ((s, dir) => {
+    Gate("q13_order_distribution", ((s, dir) => {
       // TPC-H q13: customer count by order count — the double-aggregation
       // + LEFT OUTER shape (customers with zero qualifying orders must
       // surface as the c_count=0 bucket). The orders-side filter
@@ -380,8 +521,15 @@ object SparkEntry {
         .groupBy("c_count")
         .agg(count(lit(1)).as("custdist"))
     }),
+      """SELECT c_count, count(*) AS custdist
+        |FROM (
+        |  SELECT c_custkey, count(o_orderkey) AS c_count
+        |  FROM customer LEFT OUTER JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+        |  GROUP BY c_custkey)
+        |GROUP BY c_count""".stripMargin),
 
-    "q14_promo_revenue" -> ((s, dir) => {
+    Gate("q14_promo_revenue", ((s, dir) => {
       // TPC-H q14: promo revenue share in one month — broadcast part join,
       // numerator and denominator as conditional decimal sums in ONE pass
       // (same discipline as q8).
@@ -398,8 +546,17 @@ object SparkEntry {
               .cast("double") /
             sum(vol).cast("double"), 6).as("promo_revenue_pct"))
     }),
+      """SELECT round(100.0 *
+        |  CAST(SUM(CASE WHEN p_type = 'PROMO'
+        |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))
+        |    ELSE 0 END) AS DOUBLE) /
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 6)
+        |  AS promo_revenue_pct
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '1997-06-01'
+        |  AND l_shipdate < TIMESTAMP '1997-07-01'""".stripMargin),
 
-    "q18_large_orders" -> ((s, dir) => {
+    Gate("q18_large_orders", ((s, dir) => {
       // TPC-H q18: orders whose total quantity clears a threshold — the
       // group-HAVING semi shape. lineitem aggregates FIRST (one shuffle on
       // orderkey, partial combine); only the ~1% surviving keys join
@@ -420,8 +577,18 @@ object SparkEntry {
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(100)
     }),
+      """SELECT c_name, c_custkey, o_orderkey,
+        | strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
+        | o_totalprice, total_qty
+        |FROM (
+        |  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
+        |  FROM lineitem GROUP BY l_orderkey
+        |  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 250)
+        | JOIN orders ON l_orderkey = o_orderkey
+        | JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin),
 
-    "q15_top_supplier" -> ((s, dir) => {
+    Gate("q15_top_supplier", ((s, dir) => {
       // TPC-H q15: the revenue-view + global-max shape. Per-supplier
       // revenue aggregates once (one shuffle); the max is a broadcast
       // SCALAR join against the aggregate-small view — not an
@@ -447,8 +614,18 @@ object SparkEntry {
         .join(broadcast(top), col("total_revenue") === col("max_revenue"))
         .select("s_suppkey", "s_name", "total_revenue")
     }),
+      """WITH rev AS (
+        |  SELECT l_suppkey,
+        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        |    AND l_shipdate < TIMESTAMP '1997-04-01'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM supplier JOIN rev ON s_suppkey = l_suppkey
+        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)""".stripMargin),
 
-    "q17_small_quantity" -> ((s, dir) => {
+    Gate("q17_small_quantity", ((s, dir) => {
       // TPC-H q17: correlated per-part AVG subquery, decorrelated as a
       // window over l_partkey (ONE shuffle, reused by the filter). The
       // "qty < 0.2·avg(qty)" compare is rewritten in exact integer-decimal
@@ -467,8 +644,17 @@ object SparkEntry {
         .agg(Exact.dsum(col("l_extendedprice")).as("total_price"),
           count(lit(1)).as("n_lines"))
     }),
+      """WITH l AS (
+        |  SELECT l_extendedprice, CAST(l_quantity AS DECIMAL(18,2)) AS qty,
+        |    SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER (PARTITION BY l_partkey) AS sum_qty,
+        |    COUNT(*) OVER (PARTITION BY l_partkey) AS n_qty
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_brand = 'Brand#2')
+        |SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
+        |  count(*) AS n_lines
+        |FROM l WHERE qty * 5 * n_qty < sum_qty""".stripMargin),
 
-    "q19_disjunctive_join" -> ((s, dir) => {
+    Gate("q19_disjunctive_join", ((s, dir) => {
       // TPC-H q19: the disjunctive (OR-of-ANDs) join predicate. The
       // shared conjunct (the part join key) stays the equi-join; the
       // disjunction evaluates post-join on the broadcast dimension — the
@@ -487,8 +673,18 @@ object SparkEntry {
           .as("revenue"),
           count(lit(1)).as("n_lines"))
     }),
+      """SELECT
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        | count(*) AS n_lines
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
+        |    AND l_quantity BETWEEN 1 AND 20)
+        |   OR (p_brand = 'Brand#17' AND p_size BETWEEN 5 AND 20
+        |    AND l_quantity BETWEEN 10 AND 40)
+        |   OR (p_brand = 'Brand#25' AND p_size BETWEEN 10 AND 40
+        |    AND l_quantity BETWEEN 20 AND 60)""".stripMargin),
 
-    "q21_waiting_supplier" -> ((s, dir) => {
+    Gate("q21_waiting_supplier", ((s, dir) => {
       // TPC-H q21's shape on this schema: suppliers who were the ONLY
       // late shipper on a finished multi-supplier order ("late" adapted
       // to l_shipdate > o_orderdate + 60 days; the stock schema's
@@ -541,8 +737,28 @@ object SparkEntry {
         .orderBy(col("numwait").desc, col("s_name"))
         .limit(100)
     }),
+      // the LITERAL exists/not-exists form — proving the engine's
+      // one-shuffle aggregate rewrite against the textbook plan
+      """SELECT s_name, n_name, count(*) AS numwait
+        |FROM supplier
+        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+        |JOIN orders ON o_orderkey = l1.l_orderkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE o_orderstatus = 'F'
+        |  AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
+        |  AND EXISTS (
+        |    SELECT 1 FROM lineitem l2
+        |    WHERE l2.l_orderkey = l1.l_orderkey
+        |      AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (
+        |    SELECT 1 FROM lineitem l3
+        |    WHERE l3.l_orderkey = l1.l_orderkey
+        |      AND l3.l_suppkey <> l1.l_suppkey
+        |      AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
+        |GROUP BY s_name, n_name
+        |ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin),
 
-    "q22_idle_customers" -> ((s, dir) => {
+    Gate("q22_idle_customers", ((s, dir) => {
       // TPC-H q22's shape on this schema: customers with above-average
       // account balance and NO orders in a window — scalar-subquery
       // average (broadcast), anti-join against the windowed orders, per
@@ -562,21 +778,38 @@ object SparkEntry {
         .agg(count(lit(1)).as("numcust"),
           Exact.dsum(col("c_acctbal")).as("totacctbal"))
     }),
+      """SELECT c_mktsegment, count(*) AS numcust,
+        | CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+        |FROM customer
+        |WHERE c_acctbal > (
+        |    SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)
+        |    FROM customer WHERE c_acctbal > 0)
+        |  AND NOT EXISTS (
+        |    SELECT 1 FROM orders
+        |    WHERE o_custkey = c_custkey
+        |      AND o_orderdate >= TIMESTAMP '1999-01-01')
+        |GROUP BY c_mktsegment""".stripMargin),
 
     // ------------------------------------------- projections & predicates
-    "p1_project_keys" -> ((s, dir) =>
+    Gate("p1_project_keys", ((s, dir) =>
       // P1/F5: single-column-style projection of derived key + basename
       docs(s, dir).select(col("doc_id"), col("key"),
         F.basename(col("key")).as("name"))),
+      s"""SELECT doc_id, $docsKeySql AS key,
+         | CAST(doc_id AS VARCHAR) || '.txt' AS name
+         |FROM documents""".stripMargin),
 
-    "p2_glob_include_exclude" -> ((s, dir) =>
+    Gate("p2_glob_include_exclude", ((s, dir) =>
       // P2/F9: fnmatch-style include/exclude globs compiled to rlike
       docs(s, dir)
         .filter(F.globFilter(col("key"), Some("src1*"), Some("*/zh/*")))
         .select("doc_id", "key")),
+      s"""SELECT doc_id, $docsKeySql AS key FROM documents
+         |WHERE ($docsKeySql) LIKE 'src1%'
+         |  AND ($docsKeySql) NOT LIKE '%/zh/%'""".stripMargin),
 
     // ------------------------------------------------------------- joins
-    "j1_anti_deletions" -> ((s, dir) => {
+    Gate("j1_anti_deletions", ((s, dir) => {
       // J1: drop rows whose key appears in a deletions set
       val cu = t(s, dir, "customer")
       val deleted = t(s, dir, "orders").filter(col("o_orderstatus") === "P")
@@ -584,8 +817,11 @@ object SparkEntry {
       cu.join(deleted, Seq("c_custkey"), "left_anti")
         .select("c_custkey", "c_name")
     }),
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P')""".stripMargin),
 
-    "j2_semi_existing" -> ((s, dir) => {
+    Gate("j2_semi_existing", ((s, dir) => {
       // J2/P7: set-at-a-time existence check (skip_existing)
       val cu = t(s, dir, "customer")
       val open = t(s, dir, "orders").filter(col("o_orderstatus") === "O")
@@ -593,8 +829,11 @@ object SparkEntry {
       cu.join(open, Seq("c_custkey"), "left_semi")
         .select("c_custkey", "c_acctbal")
     }),
+      """SELECT c_custkey, c_acctbal FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')""".stripMargin),
 
-    "j3_make_reconcile" -> ((s, dir) => {
+    Gate("j3_make_reconcile", ((s, dir) => {
       // J3/A4 + §3.2: full-outer source-vs-metadata reconcile with
       // add/delete/verify/integrity-error dispatch, via Make.reconcile.
       val d = docs(s, dir)
@@ -611,78 +850,150 @@ object SparkEntry {
         ts.as("created_at"), ts.as("updated_at"))
       Make.status(Make.reconcile(source, meta))
     }),
+      s"""WITH src AS (
+         |  SELECT $docsKeySql AS key,
+         |    CASE WHEN doc_id % 11 = 0 THEN md5(text || 'x') ELSE md5(text) END AS h
+         |  FROM documents WHERE doc_id % 13 <> 0),
+         |meta AS (
+         |  SELECT $docsKeySql AS key, md5(text) AS h
+         |  FROM documents WHERE doc_id % 7 <> 0)
+         |SELECT CASE WHEN m.key IS NULL THEN 'added'
+         |            WHEN s.key IS NULL THEN 'deleted'
+         |            WHEN s.h <> m.h THEN 'integrity_error'
+         |            ELSE 'verify' END AS action,
+         |       count(*) AS n
+         |FROM src s FULL OUTER JOIN meta m ON s.key = m.key
+         |GROUP BY 1""".stripMargin),
 
-    "j5_point_lookup" -> ((s, dir) =>
+    Gate("j5_point_lookup", ((s, dir) =>
       // J5: point read; the filter is pushed down to the parquet scan
       t(s, dir, "lineitem").filter(col("l_orderkey") === 1)
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")),
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
+        |FROM lineitem WHERE l_orderkey = 1""".stripMargin),
 
-    "j6_path_ancestors" -> ((s, dir) =>
+    Gate("j6_path_ancestors", ((s, dir) =>
       // J6: distinct ancestor folders, shallowest first (replaces per-key
       // recursion+lock in the reference with one dataframe pass)
       Entities.ancestorFolders(docs(s, dir))
         .withColumn("depth", col("depth").cast("long"))),
+      s"""WITH k AS (SELECT $docsKeySql AS key FROM documents),
+         |a AS (SELECT unnest([string_split(key, '/')[1],
+         |                     string_split(key, '/')[1] || '/' || string_split(key, '/')[2]]) AS folder
+         |      FROM k)
+         |SELECT DISTINCT folder,
+         |       CAST(len(string_split(folder, '/')) AS BIGINT) AS depth
+         |FROM a""".stripMargin),
 
-    "j7_entity_blob_join" -> ((s, dir) => {
+    Gate("j7_entity_blob_join", ((s, dir) => {
       // J7: entity↔blob equi-join on checksum-like key
       val e = t(s, dir, "embeddings")
       val d = t(s, dir, "documents")
       e.join(d, e("vec_id") === d("doc_id"))
         .groupBy("label", "lang").agg(count(lit(1)).as("n"))
     }),
+      """SELECT label, lang, count(*) AS n
+        |FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
+        |GROUP BY label, lang""".stripMargin),
 
     // ------------------------------------------------------ aggregations
-    "a1_total_size" -> ((s, dir) =>
+    Gate("a1_total_size", ((s, dir) =>
       // A1: total byte size of a dataset
       t(s, dir, "documents")
         .agg(sum("n_chars").cast("long").as("total_file_size"))),
+      "SELECT CAST(sum(n_chars) AS BIGINT) AS total_file_size FROM documents"),
 
-    "a2_schema_counts" -> ((s, dir) =>
+    Gate("a2_schema_counts", ((s, dir) =>
       // A2/F4: per-FTM-schema counts derived from mimetype
       docs(s, dir)
         .withColumn("doc_schema", F.mimeToSchema(col("mimetype")))
         .groupBy("doc_schema").agg(count(lit(1)).as("n"))),
+      s"""SELECT CASE WHEN lang = 'en' THEN 'Pages'
+         |            WHEN lang = 'de' THEN 'HyperText'
+         |            WHEN lang = 'es' THEN 'Table'
+         |            WHEN lang = 'fr' THEN 'Image'
+         |            ELSE 'PlainText' END AS doc_schema,
+         |       count(*) AS n
+         |FROM documents GROUP BY 1""".stripMargin),
 
-    "a3_distinct_users" -> ((s, dir) =>
+    Gate("a3_distinct_users", ((s, dir) =>
       // A3: exact count-distinct per group
       t(s, dir, "events").groupBy("event_type")
         .agg(countDistinct("user_id").as("users"))),
+      "SELECT event_type, count(DISTINCT user_id) AS users FROM events GROUP BY event_type"),
 
-    "a5_latest_version" -> ((s, dir) =>
+    Gate("a5_latest_version", ((s, dir) =>
       // A5/O2: max version timestamp
       t(s, dir, "events").agg(
         date_format(max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("max_ts"))),
+      "SELECT strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS max_ts FROM events"),
 
-    "a6_keep_latest" -> ((s, dir) =>
+    Gate("a6_keep_latest", ((s, dir) =>
       // A6/W1: last-writer-wins dedup per key (the rebuild kernel's heart)
       Rebuild.keepLatest(t(s, dir, "events"), Seq("user_id"), "ts",
           tieBreak = Seq("event_id"))
         .select("user_id", "event_id", "event_type", "value")),
+      """SELECT user_id, event_id, event_type, value FROM (
+        |  SELECT e.*, row_number() OVER (PARTITION BY user_id
+        |    ORDER BY ts DESC, event_id DESC) AS rn FROM events e) s
+        |WHERE rn = 1""".stripMargin),
 
-    "a7_catalog_rollup" -> ((s, dir) =>
+    Gate("a7_catalog_rollup", ((s, dir) =>
       // A7: per-dataset index rollup
       t(s, dir, "documents").groupBy("source").agg(
         count(lit(1)).as("file_count"),
         sum("n_chars").cast("long").as("total_chars"),
         countDistinct("lang").as("n_langs"))),
+      """SELECT source, count(*) AS file_count,
+        | CAST(sum(n_chars) AS BIGINT) AS total_chars,
+        | count(DISTINCT lang) AS n_langs
+        |FROM documents GROUP BY source""".stripMargin),
 
-    "a8_table_profile" -> ((s, dir) =>
+    Gate("a8_table_profile", ((s, dir) =>
       // ANALYZE-style data card over the mixed-type orders table: one
       // scan, one aggregate row stacked to per-column rows; doubles stay
       // numeric (engines format double→string differently), timestamps
       // string-cast (identical 'yyyy-MM-dd HH:mm:ss' form both sides)
       core.Stats.tableProfile(t(s, dir, "orders"))),
+      // per-column UNION ALL twin off one aggregate CTE; string/timestamp
+      // min-max compare in binary/ISO form, double min-max stay numeric
+      """WITH s AS (SELECT count(*) AS n,
+        | count(o_orderkey) c1, count(DISTINCT o_orderkey) d1,
+        |   round(CAST(min(o_orderkey) AS DOUBLE), 6) mn1, round(CAST(max(o_orderkey) AS DOUBLE), 6) mx1,
+        | count(o_custkey) c2, count(DISTINCT o_custkey) d2,
+        |   round(CAST(min(o_custkey) AS DOUBLE), 6) mn2, round(CAST(max(o_custkey) AS DOUBLE), 6) mx2,
+        | count(o_orderstatus) c3, count(DISTINCT o_orderstatus) d3,
+        |   CAST(min(o_orderstatus) AS VARCHAR) mns3, CAST(max(o_orderstatus) AS VARCHAR) mxs3,
+        | count(o_totalprice) c4, count(DISTINCT o_totalprice) d4,
+        |   round(min(o_totalprice), 6) mn4, round(max(o_totalprice), 6) mx4,
+        | count(o_orderdate) c5, count(DISTINCT o_orderdate) d5,
+        |   CAST(min(o_orderdate) AS VARCHAR) mns5, CAST(max(o_orderdate) AS VARCHAR) mxs5,
+        | count(o_orderpriority) c6, count(DISTINCT o_orderpriority) d6,
+        |   CAST(min(o_orderpriority) AS VARCHAR) mns6, CAST(max(o_orderpriority) AS VARCHAR) mxs6
+        | FROM orders)
+        |SELECT 'o_orderkey' AS col_name, n AS n_rows, n - c1 AS n_nulls, d1 AS n_distinct,
+        |  mn1 AS min_num, mx1 AS max_num, CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str FROM s
+        |UNION ALL SELECT 'o_custkey', n, n - c2, d2, mn2, mx2, NULL, NULL FROM s
+        |UNION ALL SELECT 'o_orderstatus', n, n - c3, d3, NULL, NULL, mns3, mxs3 FROM s
+        |UNION ALL SELECT 'o_totalprice', n, n - c4, d4, mn4, mx4, NULL, NULL FROM s
+        |UNION ALL SELECT 'o_orderdate', n, n - c5, d5, NULL, NULL, mns5, mxs5 FROM s
+        |UNION ALL SELECT 'o_orderpriority', n, n - c6, d6, NULL, NULL, mns6, mxs6 FROM s""".stripMargin),
 
     // ----------------------------------------------------------- set ops
-    "u1_union_rebuild" -> ((s, dir) => {
+    Gate("u1_union_rebuild", ((s, dir) => {
       // U1: current ∪ added (documents rebuild first stage)
       val o = t(s, dir, "orders")
       val lo = o.filter(col("o_totalprice") < 100000)
       val hi = o.filter(col("o_totalprice") >= 100000)
       lo.unionByName(hi).groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
     }),
+      """SELECT o_orderstatus, count(*) AS n FROM (
+        |  SELECT * FROM orders WHERE o_totalprice < 100000
+        |  UNION ALL
+        |  SELECT * FROM orders WHERE o_totalprice >= 100000) u
+        |GROUP BY o_orderstatus""".stripMargin),
 
-    "u2_snapshot_diff" -> ((s, dir) => {
+    Gate("u2_snapshot_diff", ((s, dir) => {
       // U2/I3: relational snapshot diff (+/- rows) between two rebuilt
       // states — the reference's unified-diff change feed, set-at-a-time.
       val ev = t(s, dir, "events")
@@ -695,34 +1006,66 @@ object SparkEntry {
       val next = state(ev)
       Diff.snapshotDiff(old, next)
     }),
+      """WITH cut AS (SELECT CAST(floor(max(event_id) / 2.0) AS BIGINT) AS c FROM events),
+        |old AS (SELECT user_id, event_type, value FROM (
+        |  SELECT e.*, row_number() OVER (PARTITION BY user_id
+        |    ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events e, cut WHERE event_id <= c) s WHERE rn = 1),
+        |nxt AS (SELECT user_id, event_type, value FROM (
+        |  SELECT e.*, row_number() OVER (PARTITION BY user_id
+        |    ORDER BY ts DESC, event_id DESC) AS rn FROM events e) s WHERE rn = 1)
+        |SELECT user_id, event_type, value, '+' AS diff_op
+        |  FROM (SELECT * FROM nxt EXCEPT ALL SELECT * FROM old) a
+        |UNION ALL
+        |SELECT user_id, event_type, value, '-' AS diff_op
+        |  FROM (SELECT * FROM old EXCEPT ALL SELECT * FROM nxt) d""".stripMargin),
 
     // --------------------------------------------------- scalar functions
-    "f1_checksum_shard" -> ((s, dir) =>
+    Gate("f1_checksum_shard", ((s, dir) =>
       // F1/F2: content checksums + content-addressed shard path
       docs(s, dir).select(
         col("doc_id"),
         md5(col("text")).as("content_hash"),
         sha2(col("text"), 256).as("sha256_hash"),
         F.shardedChecksumKey(md5(col("text"))).as("shard_path"))),
+      """SELECT doc_id, md5(text) AS content_hash, sha256(text) AS sha256_hash,
+        | substr(md5(text),1,2) || '/' || substr(md5(text),3,2) || '/' ||
+        | substr(md5(text),5,2) || '/' || md5(text) AS shard_path
+        |FROM documents""".stripMargin),
 
-    "f6_entity_projection" -> ((s, dir) => {
+    Gate("f6_entity_projection", ((s, dir) => {
       // F3/F4/F5/F6: file rows → FollowTheMoney entities (flat variant)
       val d = docs(s, dir)
         .withColumn("content_hash", md5(col("text")))
         .withColumn("size", col("n_chars"))
       Entities.fromDocumentsFlat(d, "testdata", algorithm = "md5")
     }),
+      s"""SELECT 'testdata-file-' || md5('["' || ($docsKeySql) || '","' || md5(text) || '"]') AS id,
+         | CASE WHEN lang = 'en' THEN 'Pages'
+         |      WHEN lang = 'de' THEN 'HyperText'
+         |      WHEN lang = 'es' THEN 'Table'
+         |      WHEN lang = 'fr' THEN 'Image'
+         |      ELSE 'PlainText' END AS "schema",
+         | md5(text) AS contentHash,
+         | CAST(doc_id AS VARCHAR) || '.txt' AS fileName,
+         | CAST(n_chars AS VARCHAR) AS fileSize,
+         | $docsMimeSql AS mimeType
+         |FROM documents""".stripMargin),
 
-    "f7_f11_json_coalesce" -> ((s, dir) =>
+    Gate("f7_f11_json_coalesce", ((s, dir) =>
       // F7/F11: JSON field extraction + null-coalescing defaults
       t(s, dir, "events").select(
         col("event_id"),
         get_json_object(col("props"), "$.k").cast("long").as("k"),
         coalesce(nullif(get_json_object(col("props"), "$.k").cast("long"), lit(0)),
           col("user_id")).as("k_or_user"))),
+      """SELECT event_id,
+        | CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+        | coalesce(nullif(CAST(json_extract_string(props, '$.k') AS BIGINT), 0), user_id) AS k_or_user
+        |FROM events""".stripMargin),
 
     // ------------------------------------------------ incremental / ledger
-    "i1_ledger_pending" -> ((s, dir) => {
+    Gate("i1_ledger_pending", ((s, dir) => {
       // I1/I2: candidates anti-joined against the completed-task ledger
       val ev = t(s, dir, "events")
       val candidates = ev.select(col("event_id").as("key"), col("event_type"))
@@ -735,9 +1078,12 @@ object SparkEntry {
           ledger, "testdata", "ingest")
         .groupBy("event_type").agg(count(lit(1)).as("pending"))
     }),
+      """SELECT event_type, count(*) AS pending FROM events e
+        |WHERE NOT (event_id % 3 = 0)
+        |GROUP BY event_type""".stripMargin),
 
     // ------------------------------------------------- streaming analog
-    "st_hourly_window" -> ((s, dir) =>
+    Gate("st_hourly_window", ((s, dir) =>
       // Tumbling event-time window aggregation (same plan Structured
       // Streaming produces for readStream+window; see StreamingSpec)
       t(s, dir, "events")
@@ -746,15 +1092,20 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), Exact.dsum(col("value")).as("total_value"))
         .select(date_format(col("ws"), "yyyy-MM-dd HH").as("window_start"),
           col("event_type"), col("n"), col("total_value"))),
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS window_start,
+        | event_type, count(*) AS n,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1, 2""".stripMargin),
 
-    "st_sessionize" -> ((s, dir) =>
+    Gate("st_sessionize", ((s, dir) =>
       // gap-based sessionization (lag + cumulative sum over the per-user
       // window; 30-minute gap)
       graft.operators.Sessionize.sessions(
         t(s, dir, "events"), "user_id", "ts", gapSeconds = 1800, "value",
         tieBreak = Seq("event_id"))),
+      StSessionizeOracle),
 
-    "st_sessions_incremental" -> ((s, dir) => {
+    Gate("st_sessions_incremental", ((s, dir) => {
       // the ROLLUP form of the sessionize steady state: bootstrap emits
       // the history's provably-closed sessions + carries per-key open
       // partials; the batch is merged decimal-exact and emits ITS
@@ -774,8 +1125,12 @@ object SparkEntry {
         graft.operators.Sessionize.finalizeSessionState(led.state,
           "user_id"))
     }),
+      // the rollup steady state shares the one-shot twin VERBATIM: the
+      // hash match proves state-merge + closed-emit + finalize ≡ a
+      // full-history sessions() recompute, decimal partials included
+      StSessionizeOracle),
 
-    "st_sessionize_incremental" -> ((s, dir) => {
+    Gate("st_sessionize_incremental", ((s, dir) => {
       // sessionization's steady state: open-session state carried from
       // the pre-split history (one (last_ts, last_session) row per
       // user), the post-split batch tagged against it — one state join
@@ -792,8 +1147,12 @@ object SparkEntry {
           gapSeconds = 1800, tieBreak = Seq("event_id"))
         .select(col("event_id"), col("user_id"), col("session_id"))
     }),
+      // the incremental twin: full-history lag+cumsum tagging RESTRICTED
+      // to the post-split rows — shared by the batch increment and the
+      // streamed ledger (whose emitted union covers the same rows)
+      StSessionizeIncrementalOracle),
 
-    "ev_funnel" -> ((s, dir) =>
+    Gate("ev_funnel", ((s, dir) =>
       // view → click → purchase conversion within 24 h of funnel entry:
       // greedy-earliest per user, strictly-after step ordering; the
       // twin chains the same min-after aggregates
@@ -801,8 +1160,9 @@ object SparkEntry {
         "user_id", "event_type", "ts",
         steps = Seq("view", "click", "purchase"),
         withinUs = Some(86400000000L))),
+      EvFunnelOracle),
 
-    "ev_funnel_calendar" -> ((s, dir) =>
+    Gate("ev_funnel_calendar", ((s, dir) =>
       // the CALENDAR anchor: conversion must land in the entry's
       // calendar week (Monday-anchored date_trunc equality — the
       // ev_retention bucketing), not within an entry-relative duration
@@ -810,8 +1170,34 @@ object SparkEntry {
         "user_id", "event_type", "ts",
         steps = Seq("view", "click", "purchase"),
         withinPeriod = Some("week"))),
+      // ev_funnel's twin with the duration bound swapped for calendar-week
+      // equality (DuckDB date_trunc('week') is Monday-anchored like
+      // Spark's — the ev_retention precedent)
+      """WITH s1 AS (SELECT user_id AS "user", min(ts) AS t1 FROM events
+        |            WHERE event_type = 'view' AND ts IS NOT NULL
+        |            GROUP BY 1),
+        |s2 AS (SELECT e.user_id AS "user", min(e.ts) AS t2
+        |       FROM events e JOIN s1 ON e.user_id = s1."user"
+        |       WHERE e.event_type = 'click' AND e.ts > s1.t1
+        |         AND date_trunc('week', e.ts) = date_trunc('week', s1.t1)
+        |       GROUP BY 1),
+        |s3 AS (SELECT e.user_id AS "user", min(e.ts) AS t3
+        |       FROM events e JOIN s2 ON e.user_id = s2."user"
+        |       JOIN s1 ON e.user_id = s1."user"
+        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t2
+        |         AND date_trunc('week', e.ts) = date_trunc('week', s1.t1)
+        |       GROUP BY 1)
+        |SELECT s1."user",
+        |  CAST(1 + CASE WHEN s2."user" IS NOT NULL THEN 1 ELSE 0 END
+        |         + CASE WHEN s3."user" IS NOT NULL THEN 1 ELSE 0 END
+        |    AS BIGINT) AS steps_completed,
+        |  s1.t1 AS ts_first,
+        |  COALESCE(s3.t3, s2.t2, s1.t1) AS ts_last
+        |FROM s1
+        |LEFT JOIN s2 ON s1."user" = s2."user"
+        |LEFT JOIN s3 ON s1."user" = s3."user"""".stripMargin),
 
-    "ev_funnel_incremental" -> ((s, dir) => {
+    Gate("ev_funnel_incremental", ((s, dir) => {
       // the funnel's steady state: per-user (stage, entry, last-step,
       // watermark) state carried from the pre-split history, the
       // post-split batch chased against it — K user-keyed joins of
@@ -828,8 +1214,11 @@ object SparkEntry {
           ev.filter(col("ts") >= split), "user_id", "event_type", "ts",
           steps, withinUs = Some(86400000000L)))
     }),
+      // the funnel's steady state under the SAME twin: state + chase ≡
+      // full-history recompute
+      EvFunnelOracle),
 
-    "ev_funnel_steps" -> ((s, dir) =>
+    Gate("ev_funnel_steps", ((s, dir) =>
       // the uncollapsed funnel: every greedy step time per entered
       // user — the frame per-stage latency questions need; the twin is
       // the funnel CTEs projected to (user, t1, t2, t3)
@@ -837,8 +1226,14 @@ object SparkEntry {
         "user_id", "event_type", "ts",
         steps = Seq("view", "click", "purchase"),
         withinUs = Some(86400000000L))),
+      // the uncollapsed form: the same CTEs projected to raw step times
+      s"""$EvFunnelCtes
+         |SELECT s1."user", s1.t1 AS t1, s2.t2 AS t2, s3.t3 AS t3
+         |FROM s1
+         |LEFT JOIN s2 ON s1."user" = s2."user"
+         |LEFT JOIN s3 ON s1."user" = s3."user"""".stripMargin),
 
-    "ev_funnel_summary" -> ((s, dir) =>
+    Gate("ev_funnel_summary", ((s, dir) =>
       // the step-level conversion report: exact BIGINT users-at-stage-≥k
       // suffix sums (one ≤K-group aggregation), the two classic ratios
       // divided LAST from the integer counts — K-row windows only
@@ -848,8 +1243,26 @@ object SparkEntry {
           steps = Seq("view", "click", "purchase"),
           withinUs = Some(86400000000L)),
         nSteps = 3)),
+      // the step-level conversion report over the funnel twin: exact
+      // BIGINT suffix-sum user counts per stage, ratios divided LAST
+      // from the integer counts (sum() windows cast back from HUGEINT)
+      s"""WITH byst AS (SELECT steps_completed AS sc, count(*) AS n
+         |             FROM ( $EvFunnelOracle ) f GROUP BY 1),
+         |st AS (SELECT CAST(i AS BIGINT) AS step FROM range(1, 4) t(i)),
+         |c AS (SELECT step,
+         |        CAST(sum(coalesce(n, 0)) OVER (ORDER BY step DESC
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |          AS BIGINT) AS users
+         |      FROM st LEFT JOIN byst ON step = sc)
+         |SELECT step, users,
+         |  CAST(users AS DOUBLE) / first_value(users) OVER (ORDER BY step
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |    AS conv_from_entry,
+         |  CAST(users AS DOUBLE) / lag(users, 1) OVER (ORDER BY step)
+         |    AS conv_from_prev
+         |FROM c""".stripMargin),
 
-    "ev_funnel_latency" -> ((s, dir) =>
+    Gate("ev_funnel_latency", ((s, dir) =>
       // time-to-convert percentiles: exact order statistics (actual
       // second values) over fully-converted users, the lengthQuantiles
       // rational-threshold kernel on the latency domain
@@ -859,8 +1272,22 @@ object SparkEntry {
           steps = Seq("view", "click", "purchase"),
           withinUs = Some(86400000000L)),
         nSteps = 3)),
+      // time-to-convert: the doc_len_quantiles rational-threshold
+      // percentile_disc over whole-second latencies of full conversions
+      s"""WITH lat AS (SELECT CAST(floor(epoch(ts_last)) AS BIGINT) -
+         |               CAST(floor(epoch(ts_first)) AS BIGINT) AS len
+         |             FROM ( $EvFunnelOracle ) f
+         |             WHERE steps_completed = 3),
+         |c AS (SELECT len, count(*) AS cnt FROM lat GROUP BY 1),
+         |cum AS (SELECT len, CAST(sum(cnt) OVER (ORDER BY len
+         |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM c),
+         |tot AS (SELECT count(*) AS n FROM lat),
+         |qs(q, num, den) AS (VALUES ('p10', 1, 10), ('p25', 1, 4),
+         |  ('p50', 1, 2), ('p75', 3, 4), ('p90', 9, 10))
+         |SELECT q, min(len) AS value FROM qs, cum, tot
+         |WHERE cum >= (num * n + den - 1) // den GROUP BY q""".stripMargin),
 
-    "ev_funnel_conversions" -> ((s, dir) => {
+    Gate("ev_funnel_conversions", ((s, dir) => {
       // the append-only conversion FEED off the funnel ledger: greedy
       // progress is write-once, so each user surfaces in exactly one
       // per-batch delta; bootstrap ∪ the two batch deltas must equal
@@ -883,8 +1310,12 @@ object SparkEntry {
         .unionByName(F.conversions(st0, st1, 3))
         .unionByName(F.conversions(st1, st2, 3))
     }),
+      // the conversion feed: bootstrap ∪ per-batch write-once deltas ≡
+      // the one-shot funnel's fully-converted rows
+      s"""SELECT * FROM ( $EvFunnelOracle ) f
+         |WHERE steps_completed = 3""".stripMargin),
 
-    "ev_retention_stream" -> ((s, dir) => {
+    Gate("ev_retention_stream", ((s, dir) => {
       // retention's activity frame folded from a LIVE stream:
       // extendActivity is union+distinct — ORDER-FREE (min-cohort over
       // a set union needs no append contract), so the ledger fold takes
@@ -908,8 +1339,11 @@ object SparkEntry {
       graft.operators.Funnel.retentionFromActivity(led.state, "week")
         .withColumn("cohort", col("cohort").cast("string"))
     }),
+      // and the STREAMED activity fold under the same twin (order-free
+      // union+distinct — no arrival contract needed)
+      EvRetentionOracle),
 
-    "st_sessionize_stream" -> ((s, dir) => {
+    Gate("st_sessionize_stream", ((s, dir) => {
       // the id-tagging ledger on a LIVE stream: each micro-batch's rows
       // are EMITTED with their session ids (one state join + one
       // batch-sized window), the open-session state extended; the
@@ -944,8 +1378,9 @@ object SparkEntry {
       led.emitted.getOrElse(sys.error(
         "st_sessionize_stream: no tagged rows emitted"))
     }),
+      StSessionizeIncrementalOracle),
 
-    "ev_growth_accounting_stream" -> ((s, dir) => {
+    Gate("ev_growth_accounting_stream", ((s, dir) => {
       // the SAME streamed activity fold as ev_retention_stream, served
       // through the other report: one carried frame, many reports,
       // batch or streamed. Twin = ev_growth_accounting's VERBATIM.
@@ -970,8 +1405,10 @@ object SparkEntry {
               .cast("date").as("p")).distinct(), "week")
         .withColumn("p", col("p").cast("string"))
     }),
+      // and the STREAMED activity fold served through the same report
+      EvGrowthAccountingOracle),
 
-    "ev_funnel_stream" -> ((s, dir) => {
+    Gate("ev_funnel_stream", ((s, dir) => {
       // the funnel LEDGER on a live stream: foldLedgerStream folds one
       // funnelIncremental chase per micro-batch (AvailableNow,
       // maxFilesPerTrigger=1 over ts-ordered arrival files — batch
@@ -1000,8 +1437,11 @@ object SparkEntry {
             "user_id", "event_type", "ts", steps, withinUs = w)))
       graft.operators.Funnel.funnelFromState(led.state)
     }),
+      // and the STREAMED ledger under the same twin again: the
+      // foreachBatch fold of the same chase ≡ full-history recompute
+      EvFunnelOracle),
 
-    "ev_funnel_conversions_stream" -> ((s, dir) => {
+    Gate("ev_funnel_conversions_stream", ((s, dir) => {
       // the write-once conversion FEED on a live stream: each
       // micro-batch folds one funnelIncremental chase and EMITS its
       // conversion delta (users newly at the final stage — greedy
@@ -1037,8 +1477,13 @@ object SparkEntry {
         .unionByName(led.emitted.getOrElse(sys.error(
           "ev_funnel_conversions_stream: no conversion deltas emitted")))
     }),
+      // the streamed feed shares the batch feed's twin verbatim: the
+      // foldLedgerStream-driven per-batch deltas must union to exactly
+      // the one-shot funnel's fully-converted rows
+      s"""SELECT * FROM ( $EvFunnelOracle ) f
+         |WHERE steps_completed = 3""".stripMargin),
 
-    "st_sessions_stream" -> ((s, dir) => {
+    Gate("st_sessions_stream", ((s, dir) => {
       // the session-rollup LEDGER on a live stream: each micro-batch
       // EMITS its provably-closed sessions (append-only, batch-id-keyed)
       // and replaces the open-partial state; the still-open tail is
@@ -1071,8 +1516,11 @@ object SparkEntry {
         .unionByName(graft.operators.Sessionize.finalizeSessionState(
           led.state, "user_id"))
     }),
+      // and the STREAMED ledger under the same twin again: per-micro-batch
+      // closed emits ∪ finalized tail ≡ the full-history recompute
+      StSessionizeOracle),
 
-    "ev_anomaly" -> ((s, dir) =>
+    Gate("ev_anomaly", ((s, dir) =>
       // robust per-type outlier screen: discrete-median MAD flags over
       // the right-skewed value column; every statistic is an actual
       // data value, the twin shares the cum-window definition
@@ -1080,8 +1528,30 @@ object SparkEntry {
         "event_type", "value", k = 3.0)
         .select("event_id", "event_type", "value", "med", "mad",
           "is_outlier")),
+      """WITH h AS (SELECT event_type, value AS v, count(*) AS c
+        |           FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+        |n AS (SELECT event_type, sum(c) AS n FROM h GROUP BY 1),
+        |cum AS (SELECT event_type, v,
+        |        sum(c) OVER (PARTITION BY event_type ORDER BY v) AS cum
+        |        FROM h),
+        |med AS (SELECT event_type, min(v) AS med
+        |        FROM cum JOIN n USING (event_type)
+        |        WHERE cum * 2 >= n GROUP BY 1),
+        |d AS (SELECT h.event_type, abs(h.v - med.med) AS dev,
+        |        sum(h.c) AS c
+        |      FROM h JOIN med USING (event_type) GROUP BY 1, 2),
+        |cum2 AS (SELECT event_type, dev,
+        |         sum(c) OVER (PARTITION BY event_type ORDER BY dev) AS cum
+        |         FROM d),
+        |mad AS (SELECT event_type, min(dev) AS mad
+        |        FROM cum2 JOIN n USING (event_type)
+        |        WHERE cum * 2 >= n GROUP BY 1)
+        |SELECT e.event_id, e.event_type, e.value, med.med, mad.mad,
+        |  abs(e.value - med.med) > 3.0 * mad.mad AS is_outlier
+        |FROM events e JOIN med USING (event_type) JOIN mad USING (event_type)
+        |WHERE e.value IS NOT NULL""".stripMargin),
 
-    "ev_anomaly_incremental" -> ((s, dir) => {
+    Gate("ev_anomaly_incremental", ((s, dir) => {
       // the anomaly screen's train-once/serve-many split: med/MAD
       // trained on the even-id reference window, the odd-id batch
       // flagged against the persisted stats — one scan + one join per
@@ -1095,16 +1565,29 @@ object SparkEntry {
         .select("event_id", "event_type", "value", "med", "mad",
           "is_outlier")
     }),
+      EvAnomalyIncrementalOracle),
 
-    "ev_rank_normalize" -> ((s, dir) =>
+    Gate("ev_rank_normalize", ((s, dir) =>
       // per-type empirical-CDF normalization: the rank scale that lets
       // heterogeneous signals combine; exact integers, one division
       // per distinct value, inclusive tie semantics
       graft.core.Stats.rankNormalize(t(s, dir, "events"), "value",
           "event_type")
         .select("event_id", "event_type", "value", "pct")),
+      // same value-domain histogram + inclusive cum window, one exact
+      // division per distinct value
+      """WITH h AS (SELECT event_type, value AS v, count(*) AS c
+        |           FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+        |n AS (SELECT event_type, sum(c) AS n FROM h GROUP BY 1),
+        |p AS (SELECT event_type, v,
+        |        CAST(sum(c) OVER (PARTITION BY event_type ORDER BY v)
+        |          AS DOUBLE) / n AS pct
+        |      FROM h JOIN n USING (event_type))
+        |SELECT e.event_id, e.event_type, e.value, p.pct
+        |FROM events e JOIN p ON e.event_type = p.event_type
+        |  AND e.value = p.v""".stripMargin),
 
-    "ev_rank_normalize_incremental" -> ((s, dir) => {
+    Gate("ev_rank_normalize_incremental", ((s, dir) => {
       // the rank normalizer's train-once/serve-many split: the CDF
       // trained on the even-id reference window (a persistable
       // (key, value, pct) frame), the odd-id batch normalized against
@@ -1119,8 +1602,11 @@ object SparkEntry {
           "value", "event_type")
         .select("event_id", "event_type", "value", "pct")
     }),
+      // CDF trained on the even-id window, odd-id batch served — shared
+      // verbatim with the streaming serve
+      EvRankNormalizeIncrementalOracle),
 
-    "ev_rank_normalize_stream" -> ((s, dir) => {
+    Gate("ev_rank_normalize_stream", ((s, dir) => {
       // the served CDF on a LIVE stream: rankNormalizeAgainst is a
       // stateless scan + stream-static join, so the batch serving
       // operator runs unchanged on a readStream frame — AvailableNow
@@ -1139,8 +1625,9 @@ object SparkEntry {
           .select("event_id", "event_type", "value", "pct"),
         "graft_rank_stream")
     }),
+      EvRankNormalizeIncrementalOracle),
 
-    "ev_rank_normalize_sketch" -> ((s, dir) => {
+    Gate("ev_rank_normalize_sketch", ((s, dir) => {
       // CONTINUOUS-DOMAIN rank normalization from bounded KLL state:
       // per-type sketches trained on the even-id reference window
       // (k = 16384 pins the exact regime at oracle SFs — the sketch
@@ -1160,8 +1647,9 @@ object SparkEntry {
           "event_type")
         .select("event_id", "event_type", "value", "pct")
     }),
+      EvRankNormalizeSketchOracle),
 
-    "ev_rank_normalize_sketch_served" -> ((s, dir) => {
+    Gate("ev_rank_normalize_sketch_served", ((s, dir) => {
       // the same serve from PERSISTED state: the sketch frame
       // round-trips parquet (binary column and all) and the reloaded
       // frame serves the identical batch — twin shared verbatim, so
@@ -1178,8 +1666,9 @@ object SparkEntry {
           "value", "event_type")
         .select("event_id", "event_type", "value", "pct")
     }),
+      EvRankNormalizeSketchOracle),
 
-    "ev_rank_normalize_sketch_stream" -> ((s, dir) => {
+    Gate("ev_rank_normalize_sketch_stream", ((s, dir) => {
       // the sketch-served rank normalizer on a LIVE stream: the serve
       // is one stream-static join + the compiled rank kernel — no
       // state, no watermark — so the batch operator runs unchanged on
@@ -1201,8 +1690,9 @@ object SparkEntry {
           .select("event_id", "event_type", "value", "pct"),
         "graft_rank_sketch_stream")
     }),
+      EvRankNormalizeSketchOracle),
 
-    "ev_anomaly_sketch" -> ((s, dir) => {
+    Gate("ev_anomaly_sketch", ((s, dir) => {
       // the anomaly screen served from the SAME bounded sketch state as
       // the rank normalizer: med/MAD read out of the per-type KLL
       // sketches (the compiled joint-walk kernel — exact in the
@@ -1222,8 +1712,12 @@ object SparkEntry {
         .select("event_id", "event_type", "value", "med", "mad",
           "is_outlier")
     }),
+      // med/MAD read from the bounded KLL state: bit-equal to the exact
+      // inclusive medians in the no-compaction regime — the shared twin
+      // proves sketch-served ≡ exact-served
+      EvAnomalyIncrementalOracle),
 
-    "ev_rank_normalize_sketch_merged" -> ((s, dir) => {
+    Gate("ev_rank_normalize_sketch_merged", ((s, dir) => {
       // the sketch baseline's day-N increment: the even-id reference
       // window arrives as TWO disjoint slices, the second folded into
       // the first's persisted state with extendRankStats (one bounded
@@ -1242,8 +1736,9 @@ object SparkEntry {
           "event_type")
         .select("event_id", "event_type", "value", "pct")
     }),
+      EvRankNormalizeSketchOracle),
 
-    "ev_bucketize_sketch" -> ((s, dir) => {
+    Gate("ev_bucketize_sketch", ((s, dir) => {
       // equal-mass quantile buckets served from the SAME persisted KLL
       // state as the rank normalizer: bucket = clamp(ceil(pct·8), 1, 8)
       // over the inclusive sketch CDF — the lake-scale form of
@@ -1260,8 +1755,11 @@ object SparkEntry {
           "event_type", buckets = 8)
         .select("event_id", "event_type", "value", "pct", "bucket")
     }),
+      // equal-mass buckets from the sketch CDF: the rank twin's ASOF
+      // read + the identical clamp arithmetic
+      EvBucketizeSketchOracle),
 
-    "ev_bucketize_sketch_stream" -> ((s, dir) => {
+    Gate("ev_bucketize_sketch_stream", ((s, dir) => {
       // equal-mass bucketing on a LIVE stream: the serve is the
       // stateless CDF join + two compiled kernels (rank + clamp), so
       // the batch operator runs unchanged on a readStream frame —
@@ -1282,8 +1780,10 @@ object SparkEntry {
           .select("event_id", "event_type", "value", "pct", "bucket"),
         "graft_bucketize_stream")
     }),
+      // the streamed serve shares the twin verbatim: stream ≡ batch
+      EvBucketizeSketchOracle),
 
-    "layout_zvalue" -> ((s, dir) => {
+    Gate("layout_zvalue", ((s, dir) => {
       // the Morton lake-layout key itself, oracled: per-column min-max
       // quantization (8 bits over each column's own observed domain)
       // then bit interleave — IEEE double scaling + integer bit
@@ -1295,8 +1795,29 @@ object SparkEntry {
           Seq("value", "event_id"), bits = 8, zCol = "z")
         .select("event_id", "z")
     }),
+      // the Morton layout key: identical min-max quantization (floor of
+      // the same IEEE scaling, clamped) and the bit interleave unrolled
+      // as a sum over bit positions — integer-exact in both engines
+      """WITH s AS (SELECT min(value) AS mn0, max(value) AS mx0,
+        |             min(CAST(event_id AS DOUBLE)) AS mn1,
+        |             max(CAST(event_id AS DOUBLE)) AS mx1
+        |           FROM events WHERE value IS NOT NULL),
+        |q AS (SELECT event_id,
+        |        CASE WHEN mx0 <= mn0 THEN 0 ELSE CAST(least(255,
+        |          greatest(0, floor((value - mn0)/(mx0 - mn0)*256)))
+        |          AS BIGINT) END AS q0,
+        |        CASE WHEN mx1 <= mn1 THEN 0 ELSE CAST(least(255,
+        |          greatest(0, floor((CAST(event_id AS DOUBLE) - mn1)
+        |            /(mx1 - mn1)*256))) AS BIGINT) END AS q1
+        |      FROM events, s WHERE value IS NOT NULL)
+        |SELECT event_id,
+        |  CAST(sum(((q0 >> b) & 1) * (CAST(1 AS BIGINT) << (2*b + 1)) +
+        |           ((q1 >> b) & 1) * (CAST(1 AS BIGINT) << (2*b)))
+        |    AS BIGINT) AS z
+        |FROM q, range(0, 8) t(b)
+        |GROUP BY event_id""".stripMargin),
 
-    "layout_zorder_scan" -> ((s, dir) => {
+    Gate("layout_zorder_scan", ((s, dir) => {
       // layout invariance end-to-end: z-order-cluster the events, WRITE
       // the layout to parquet, scan it back through a 2-D predicate box
       // and aggregate — the twin runs the same box over the RAW table.
@@ -1320,8 +1841,12 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // layout invariance: the raw-table box aggregate — the engine side
+      // answers off its z-ordered parquet layout; matching hashes prove
+      // the layout changes placement, not content
+      LayoutBoxScanOracle),
 
-    "layout_pruned_scan" -> ((s, dir) => {
+    Gate("layout_pruned_scan", ((s, dir) => {
       // the manifest-driven scan: write the z-ordered layout + its
       // per-file min/max manifest, resolve the 2-D box against the
       // MANIFEST (a file-count-sized read), read only the kept files,
@@ -1345,8 +1870,11 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // the manifest-pruned scan shares the SAME twin verbatim: pruned ≡
+      // full ≡ raw — file skipping is a performance structure only
+      LayoutBoxScanOracle),
 
-    "layout_maintain" -> ((s, dir) => {
+    Gate("layout_maintain", ((s, dir) => {
       // the layout's certify→regenerate loop end-to-end: lay out the
       // even-id half, append the odd-id batch (second generation —
       // manifest-read point cost ~2), maintain with a 1.5 threshold so
@@ -1373,8 +1901,11 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // append → health-triggered rebuild → pruned scan, same twin: the
+      // maintenance loop changes placement generations, never content
+      LayoutBoxScanOracle),
 
-    "layout_stream" -> ((s, dir) => {
+    Gate("layout_stream", ((s, dir) => {
       // streamed lake ingestion: the even-id half laid out as the base
       // table, the odd-id half arriving through readStream and landing
       // as exactly-once z-ordered GENERATIONS (micro-batch-id-keyed
@@ -1405,8 +1936,10 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // streamed exactly-once generation ingestion, same twin again
+      LayoutBoxScanOracle),
 
-    "layout_delete_scan" -> ((s, dir) => {
+    Gate("layout_delete_scan", ((s, dir) => {
       // the takedown path, merge-on-read: write the layout, tombstone
       // the rows a predicate matched ((file, row_index) positional
       // delete vectors off Spark's hidden _metadata address — one pass
@@ -1429,8 +1962,12 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // merge-on-read deletes: live scan ≡ the complement predicate over
+      // the raw table — positional tombstones subtract exactly the
+      // matched rows, bit-for-bit
+      LayoutDeleteScanOracle),
 
-    "layout_takedown" -> ((s, dir) => {
+    Gate("layout_takedown", ((s, dir) => {
       // the bulk retraction-list path: deletes keyed by a FRAME of ids
       // (the right-to-be-forgotten / licensing-retraction shape — a
       // list too big for a predicate literal), left-semi joined to
@@ -1452,8 +1989,10 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // bulk takedown by key list: live scan ≡ raw table minus the keys
+      LayoutTakedownOracle),
 
-    "layout_compact" -> ((s, dir) => {
+    Gate("layout_compact", ((s, dir) => {
       // physical apply: the layout_delete_scan pipeline plus a
       // compaction — live rows rewritten as a fresh z-ordered layout,
       // tombstone directory cleared, manifest rebuilt. Twin shared
@@ -1477,8 +2016,12 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // compaction shares the delete twin VERBATIM: physically folding
+      // the tombstones into a rewritten layout changes placement and
+      // clears the debt, never content
+      LayoutDeleteScanOracle),
 
-    "layout_upsert" -> ((s, dir) => {
+    Gate("layout_upsert", ((s, dir) => {
       // keyed last-writer-wins merge, merge-on-read: the %5 slice of
       // orders re-arrives with a changed price, upsertByKey tombstones
       // the old versions and lands the batch as a new generation —
@@ -1499,8 +2042,10 @@ object SparkEntry {
       graft.core.Lakehouse.scan(s, root)
         .select("o_orderkey", "o_custkey", "o_totalprice")
     }),
+      // keyed last-writer-wins upsert ≡ a CASE merge over the raw table
+      LayoutUpsertOracle),
 
-    "layout_upsert_stream" -> ((s, dir) => {
+    Gate("layout_upsert_stream", ((s, dir) => {
       // the CDC-consumption form: the same %5 price-change batch
       // arriving through readStream, landed by upsertByKeyStream —
       // delete half content-idempotent and own-generation-excluded,
@@ -1526,8 +2071,11 @@ object SparkEntry {
       graft.core.Lakehouse.scan(s, root)
         .select("o_orderkey", "o_custkey", "o_totalprice")
     }),
+      // the same merge arriving as a STREAM of update batches — shared
+      // twin verbatim: streamed keyed merge ≡ one-shot keyed merge
+      LayoutUpsertOracle),
 
-    "layout_time_travel" -> ((s, dir) => {
+    Gate("layout_time_travel", ((s, dir) => {
       // generation snapshots: even-id events land as generation 0,
       // odd-id as generation 1, then a delete is issued against the
       // live (gen-1) table. scanAsOf(0) must see the first generation
@@ -1551,8 +2099,11 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // generation snapshot: asOf(0) sees the first generation only —
+      // neither the gen-1 files nor the tombstones stamped at gen 1
+      LayoutEvenHalfOracle),
 
-    "layout_rollback" -> ((s, dir) => {
+    Gate("layout_rollback", ((s, dir) => {
       // rollback = a snapshot made permanent: same two generations and
       // the same late delete as layout_time_travel, then rollback(0)
       // deletes the later files, manifest slices, and tombstones —
@@ -1577,8 +2128,10 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // rollback(0) makes that snapshot permanent — live scan, same twin
+      LayoutEvenHalfOracle),
 
-    "layout_takedown_stream" -> ((s, dir) => {
+    Gate("layout_takedown_stream", ((s, dir) => {
       // the takedown feed as a LIVE stream: retraction keys arrive
       // through readStream and land as tombstones per micro-batch —
       // at-least-once replays are safe because deletes are
@@ -1604,8 +2157,11 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // the same retraction arriving as a STREAM of key batches — shared
+      // twin verbatim: streamed takedown ≡ one-shot takedown
+      LayoutTakedownOracle),
 
-    "layout_changes" -> ((s, dir) => {
+    Gate("layout_changes", ((s, dir) => {
       // the change data feed: even-id events land as generation 0,
       // odd-id as generation 1, a delete (the value box) is issued at
       // generation 1 hitting BOTH generations. changesBetween(0, 1)
@@ -1630,8 +2186,20 @@ object SparkEntry {
         .select(col("__op").as("op"), col("event_id"),
           col("event_type"), col("value"))
     }),
+      // change data feed (0,1]: inserts = window births still alive,
+      // deletes = pre-window rows the window tombstoned, net inside the
+      // window — exactly what a downstream replica applies
+      """SELECT 'insert' AS op, event_id, event_type, value
+        |FROM events
+        |WHERE value IS NOT NULL AND event_id % 2 = 1
+        |  AND NOT (value BETWEEN 20.0 AND 60.0)
+        |UNION ALL
+        |SELECT 'delete' AS op, event_id, event_type, value
+        |FROM events
+        |WHERE value IS NOT NULL AND event_id % 2 = 0
+        |  AND value BETWEEN 20.0 AND 60.0""".stripMargin),
 
-    "doc_takedown_rollup" -> ((s, dir) => {
+    Gate("doc_takedown_rollup", ((s, dir) => {
       // the takedown story on the TRAINING CORPUS itself: documents
       // laid out as a lake table, a licensing-retraction id list
       // tombstoned (deleteMatching — one pass), and a downstream
@@ -1650,8 +2218,15 @@ object SparkEntry {
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars"))
     }),
+      // the corpus takedown composition: retraction list tombstoned on
+      // the documents lake table, downstream rollup off the live scan
+      """SELECT lang, count(*) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS chars
+        |FROM documents
+        |WHERE doc_id % 13 <> 0
+        |GROUP BY lang""".stripMargin),
 
-    "layout_point_lookup" -> ((s, dir) => {
+    Gate("layout_point_lookup", ((s, dir) => {
       // point lookup through the Bloom membership manifest: min/max
       // stats cannot prune a high-cardinality point predicate (every
       // file's id range spans the domain unless the layout is keyed on
@@ -1674,8 +2249,15 @@ object SparkEntry {
       graft.core.Lakehouse.pointLookup(s, root, "event_id",
         Seq(3L, 97L, 310L, 555L, 808L, 999L))
     }),
+      // Bloom-manifest point lookup: files resolved by membership sketch,
+      // tombstones subtracted, exact IN re-applied — ≡ the raw table under
+      // the same IN plus the complement of the delete
+      """SELECT event_id, event_type, value
+        |FROM events
+        |WHERE value IS NOT NULL AND NOT (value BETWEEN 20.0 AND 60.0)
+        |  AND event_id IN (3, 97, 310, 555, 808, 999)""".stripMargin),
 
-    "layout_point_lookup_typed" -> ((s, dir) => {
+    Gate("layout_point_lookup_typed", ((s, dir) => {
       // the SAME lookup with probes typed Int against the LONG key:
       // each literal is cast to the key column's type before hashing
       // (xxhash64 is type-sensitive — an uncast Int 3 would miss every
@@ -1696,8 +2278,14 @@ object SparkEntry {
       graft.core.Lakehouse.pointLookup(s, root, "event_id",
         Seq(3, 97, 310, 555, 808, 999))
     }),
+      // the same lookup probed with Int literals against the LONG key —
+      // shared twin verbatim: probe typing never splits the answers
+      """SELECT event_id, event_type, value
+        |FROM events
+        |WHERE value IS NOT NULL AND NOT (value BETWEEN 20.0 AND 60.0)
+        |  AND event_id IN (3, 97, 310, 555, 808, 999)""".stripMargin),
 
-    "layout_zorder_eqfreq" -> ((s, dir) => {
+    Gate("layout_zorder_eqfreq", ((s, dir) => {
       // the equal-frequency layout end-to-end: every column quantized
       // through its own KLL CDF (each cell ~equal MASS — the layout
       // for heavy-tailed domains, where equal-width cells collapse),
@@ -1720,8 +2308,12 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // the equal-frequency (KLL-CDF-quantized) layout shares the
+      // equal-width layout's twin verbatim: rank quantization changes
+      // placement, never content
+      LayoutBoxScanOracle),
 
-    "layout_compact_retain_asof" -> ((s, dir) => {
+    Gate("layout_compact_retain_asof", ((s, dir) => {
       // retention-preserving compaction, the snapshot half: gens 0/1,
       // a delete at gen 1 hitting both, then compactRetaining(0) —
       // gen-0's files fold into a fresh base, the delete's gen-0
@@ -1751,8 +2343,12 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // retention-preserving compaction: scanAsOf(0) after
+      // compactRetaining(0) shares the time-travel twin verbatim
+      // (folding below the floor preserves retained snapshots) …
+      LayoutEvenHalfOracle),
 
-    "layout_compact_retain_live" -> ((s, dir) => {
+    Gate("layout_compact_retain_live", ((s, dir) => {
       // retention-preserving compaction, the live half: the SAME
       // pipeline, answered at scanAsOf(1) ≡ the live table — the
       // later delete applies in full (remapped over the folded base,
@@ -1780,8 +2376,11 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // … and scanAsOf(1) ≡ live shares the delete twin verbatim (the
+      // later delete applies in full across remapped + carried halves)
+      LayoutDeleteScanOracle),
 
-    "layout_changes_epoch" -> ((s, dir) => {
+    Gate("layout_changes_epoch", ((s, dir) => {
       // the change feed under the epoch contract: the replica captures
       // the compact epoch alongside its window and passes it back —
       // the guarded read answers identically while no compaction
@@ -1805,8 +2404,20 @@ object SparkEntry {
         .select(col("__op").as("op"), col("event_id"),
           col("event_type"), col("value"))
     }),
+      // the epoch-guarded change feed shares layout_changes' twin
+      // verbatim: passing the captured epoch changes nothing while no
+      // compact landed (the raise on a stale epoch is spec'd)
+      """SELECT 'insert' AS op, event_id, event_type, value
+        |FROM events
+        |WHERE value IS NOT NULL AND event_id % 2 = 1
+        |  AND NOT (value BETWEEN 20.0 AND 60.0)
+        |UNION ALL
+        |SELECT 'delete' AS op, event_id, event_type, value
+        |FROM events
+        |WHERE value IS NOT NULL AND event_id % 2 = 0
+        |  AND value BETWEEN 20.0 AND 60.0""".stripMargin),
 
-    "layout_replica_apply" -> ((s, dir) => {
+    Gate("layout_replica_apply", ((s, dir) => {
       // the CDC loop CLOSED: a replica bootstrapped at generation 0
       // consumes the (0,1] feed through applyChangesByKey (deletes
       // retract keys, inserts land as a generation — never a source
@@ -1839,8 +2450,12 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // the CDC consumer: a replica bootstrapped at gen 0 + the (0,1]
+      // feed applied by key ≡ the source's live (gen-1) state — the
+      // delete twin verbatim, reproduced without ever reading the source
+      LayoutDeleteScanOracle),
 
-    "layout_feed_relay" -> ((s, dir) => {
+    Gate("layout_feed_relay", ((s, dir) => {
       // the streaming CDC relay END TO END, both halves tracked: the
       // PRODUCER (landChangesTracked) lands the (0,1] and (1,2]
       // windows under its own watermark — the first by the
@@ -1897,8 +2512,9 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      LayoutDeleteScanOracle),
 
-    "layout_replica_evolve" -> ((s, dir) => {
+    Gate("layout_replica_evolve", ((s, dir) => {
       // ADDITIVE EVOLUTION THROUGH THE CDC APPLY: the source widens
       // mid-stream (gen 1 lands an evolved shape with a `flag`
       // column) and an UNEVOLVED replica follows it in ONE
@@ -1945,8 +2561,18 @@ object SparkEntry {
           count(col("flag")).as("n_flagged"),
           sum(col("flag")).as("sum_flag"))
     }),
+      // layout_replica_apply's live-state filter verbatim, widened by
+      // the evolved column's counts (gen-1 survivors = odd event_ids)
+      """SELECT event_type, count(*) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+        |  count(CASE WHEN event_id % 2 = 1 THEN 1 END) AS n_flagged,
+        |  CAST(sum(CASE WHEN event_id % 2 = 1
+        |    THEN event_id % 7 END) AS BIGINT) AS sum_flag
+        |FROM events
+        |WHERE value IS NOT NULL AND NOT (value BETWEEN 20.0 AND 60.0)
+        |GROUP BY event_type""".stripMargin),
 
-    "layout_replica_apply_stream" -> ((s, dir) => {
+    Gate("layout_replica_apply_stream", ((s, dir) => {
       // the replica's LIVE consumption form: the same produced feed
       // arriving through readStream, applied per micro-batch with the
       // pinned-generation exactly-once discipline (insert half
@@ -1985,8 +2611,11 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // the same feed consumed as a STREAM of micro-batches — shared
+      // twin verbatim: streamed consumption ≡ one-shot consumption
+      LayoutDeleteScanOracle),
 
-    "layout_scan_under_compact" -> ((s, dir) => {
+    Gate("layout_scan_under_compact", ((s, dir) => {
       // the version-pointer guarantee as an oracle: a scan PLANNED
       // before a concurrent compact completes against the pre-compact
       // version — the commit flip replaces files, the grace vacuum
@@ -2013,8 +2642,11 @@ object SparkEntry {
         bits = 8, partitions = 4)
       inflight
     }),
+      // the in-flight pre-compact plan answers the pre-compact live
+      // content — twin shared VERBATIM with layout_delete_scan
+      LayoutDeleteScanOracle),
 
-    "layout_vacuum" -> ((s, dir) => {
+    Gate("layout_vacuum", ((s, dir) => {
       // the destructive half of the pointer protocol: a zero-grace
       // vacuum after a compact removes every replaced data file, dead
       // tombstone, and superseded commit — and the live answer is
@@ -2037,8 +2669,11 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // compact + zero-grace vacuum: live answer untouched — twin
+      // shared VERBATIM with layout_delete_scan
+      LayoutDeleteScanOracle),
 
-    "layout_takedown_bloom" -> ((s, dir) => {
+    Gate("layout_takedown_bloom", ((s, dir) => {
       // the Bloom-bounded retraction: with a membership manifest on
       // the key, a lookup-sized takedown list addresses only the files
       // that might hold its keys instead of paying a full key-column
@@ -2062,8 +2697,14 @@ object SparkEntry {
           sum(col("value").cast("decimal(18,2)")).cast("double")
             .as("sum_value"))
     }),
+      // bloom-narrowed retraction ≡ the plain complement
+      """SELECT event_type, count(*) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events
+        |WHERE value IS NOT NULL AND event_id % 211 <> 0
+        |GROUP BY event_type""".stripMargin),
 
-    "layout_catalog" -> ((s, dir) => {
+    Gate("layout_catalog", ((s, dir) => {
       // the discovery surface: two lakehouse tables under one root —
       // a merge-on-read events table carrying live delete debt and a
       // two-generation orders table — described without being named.
@@ -2095,8 +2736,19 @@ object SparkEntry {
         .select("table", "epoch", "floor", "current_gen", "data_files",
           "delete_debt")
     }),
+      // the catalog's numbers derived independently: the events table's
+      // debt is the takedown predicate's raw match count; everything
+      // else is the construction's deterministic shape
+      """SELECT 'evs' AS "table", CAST(0 AS BIGINT) AS epoch,
+        |  CAST(-1 AS BIGINT) AS floor, CAST(-1 AS BIGINT) AS current_gen,
+        |  CAST(8 AS BIGINT) AS data_files,
+        |  (SELECT CAST(count(*) AS BIGINT) FROM events
+        |   WHERE value IS NOT NULL AND value BETWEEN 20.0 AND 60.0)
+        |    AS delete_debt
+        |UNION ALL
+        |SELECT 'ords', 0, -1, 1, 6, 0""".stripMargin),
 
-    "layout_evolve_scan" -> ((s, dir) => {
+    Gate("layout_evolve_scan", ((s, dir) => {
       // additive schema evolution: the table widens by an explicit
       // opt-in (a metadata-only commit), resident files null-fill the
       // new column at scan, and the evolved-shape batch appends
@@ -2117,8 +2769,14 @@ object SparkEntry {
       graft.core.Lakehouse.scan(s, root)
         .select("event_id", "event_type", "value", "boost")
     }),
+      // evolve-then-append ≡ rewrite-with-nulls, without the rewrite
+      """SELECT event_id, event_type, value, NULL AS boost
+        |FROM events WHERE value IS NOT NULL AND event_id % 3 <> 0
+        |UNION ALL
+        |SELECT event_id, event_type, value, value * 0.5 AS boost
+        |FROM events WHERE value IS NOT NULL AND event_id % 3 = 0""".stripMargin),
 
-    "ev_anomaly_sketch_stream" -> ((s, dir) => {
+    Gate("ev_anomaly_sketch_stream", ((s, dir) => {
       // the sketch-served anomaly screen on a LIVE stream: med/MAD
       // read once from the bounded KLL state, then the same stateless
       // stream-static flag join as ev_anomaly_stream — every serve in
@@ -2143,8 +2801,11 @@ object SparkEntry {
             "is_outlier"),
         "graft_anomaly_sketch_stream")
     }),
+      // the sketch-served screen on a live stream: same twin again — the
+      // stream-static serve must reproduce the batch screen bit-for-bit
+      EvAnomalyIncrementalOracle),
 
-    "ev_anomaly_stream" -> ((s, dir) => {
+    Gate("ev_anomaly_stream", ((s, dir) => {
       // the served screen on a LIVE stream: robustOutliersAgainst is a
       // stateless scan + stream-static join, so the batch serving
       // operator runs unchanged on a readStream frame — AvailableNow
@@ -2167,8 +2828,16 @@ object SparkEntry {
             "is_outlier"),
         "graft_anomaly_stream")
     }),
+      // the MAD twin: discrete INCLUSIVE medians via cum windows over
+      // the per-type value/deviation domains (no interpolated median —
+      // engines disagree on interpolation, never on data values)
+      // the ev_anomaly twin with the stats CTEs restricted to the
+      // even-id training window and the flag join to the odd-id batch;
+      // the streaming serve shares it verbatim (stateless stream-static
+      // join — same rows either path)
+      EvAnomalyIncrementalOracle),
 
-    "ev_retention" -> ((s, dir) =>
+    Gate("ev_retention", ((s, dir) =>
       // weekly cohort-retention triangle: cohort = week of first
       // event, cells = exact distinct-active counts per offset
       graft.operators.Funnel.retention(t(s, dir, "events"),
@@ -2176,8 +2845,9 @@ object SparkEntry {
         // ISO-string the date for the compare layer (pandas reads
         // Spark DATE as object, DuckDB DATE as datetime64)
         .withColumn("cohort", col("cohort").cast("string"))),
+      EvRetentionOracle),
 
-    "ev_retention_incremental" -> ((s, dir) => {
+    Gate("ev_retention_incremental", ((s, dir) => {
       // retention's steady state: the persisted (user, period) activity
       // frame built from the even-id history, extended with the odd-id
       // batch (union + distinct — append-incremental by construction,
@@ -2192,8 +2862,12 @@ object SparkEntry {
           "week")
         .withColumn("cohort", col("cohort").cast("string"))
     }),
+      // the incremental path shares the one-shot twin VERBATIM: the hash
+      // match proves activityFrame+extendActivity+retentionFromActivity
+      // ≡ a full-history recompute
+      EvRetentionOracle),
 
-    "ev_growth_accounting" -> ((s, dir) =>
+    Gate("ev_growth_accounting", ((s, dir) =>
       // the growth ledger off the SAME persisted activity frame as
       // retention: weekly new/retained/resurrected/churned exact
       // counts, churn attributed forward and clipped at the last
@@ -2202,8 +2876,12 @@ object SparkEntry {
         graft.operators.Funnel.activityFrame(t(s, dir, "events"),
           "user_id", "ts", "week"), "week")
         .withColumn("p", col("p").cast("string"))),
+      // growth accounting: the same distinct-activity frame decomposed by
+      // lag/lead — churn attributed one period FORWARD, clipped at the
+      // last observed week
+      EvGrowthAccountingOracle),
 
-    "ev_stickiness" -> ((s, dir) =>
+    Gate("ev_stickiness", ((s, dir) =>
       // DAU/WAU engagement off the day-level activity frame: exact
       // integer ingredients per week, the one derived ratio divided
       // last — the third report from the same persisted frame
@@ -2211,8 +2889,21 @@ object SparkEntry {
         graft.operators.Funnel.activityFrame(t(s, dir, "events"),
           "user_id", "ts", "day"), "week")
         .withColumn("pp", col("pp").cast("string"))),
+      // stickiness: the day-level activity frame rolled to weeks — exact
+      // integer ingredients, the ratio divided last from the integers
+      """WITH act AS (SELECT DISTINCT user_id AS u,
+        |         CAST(date_trunc('day', ts) AS DATE) AS p
+        |       FROM events WHERE ts IS NOT NULL),
+        |b AS (SELECT CAST(date_trunc('week', p) AS DATE) AS pp, u, p FROM act)
+        |SELECT CAST(pp AS VARCHAR) AS pp,
+        |  count(*) AS sum_daily_actives,
+        |  CAST(count(DISTINCT p) AS BIGINT) AS n_days,
+        |  CAST(count(DISTINCT u) AS BIGINT) AS actives,
+        |  round(CAST(count(*) AS DOUBLE) /
+        |        (count(DISTINCT p) * count(DISTINCT u)), 6) AS stickiness
+        |FROM b GROUP BY 1""".stripMargin),
 
-    "st_session_durations" -> ((s, dir) =>
+    Gate("st_session_durations", ((s, dir) =>
       // session-length distribution: exact order-statistic percentiles
       // of last−first seconds per session (single-event sessions count
       // as duration 0), the lengthQuantiles kernel on the gap-bounded
@@ -2220,15 +2911,49 @@ object SparkEntry {
       graft.operators.Sessionize.durationQuantiles(
         t(s, dir, "events"), "user_id", "ts", gapSeconds = 1800,
         tieBreak = Seq("event_id"))),
+      // session durations: the sessionize tagging CTEs rolled to
+      // last−first seconds per session, then the rational-threshold
+      // percentile_disc (single-event sessions are duration 0)
+      """WITH tagged AS (
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR CAST(floor(epoch(ts)) AS BIGINT) -
+        |              CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
+        |         THEN 1 ELSE 0 END AS new_session
+        |  FROM events WHERE ts IS NOT NULL
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |sess AS (
+        |  SELECT user_id, ts,
+        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        |  FROM tagged),
+        |dur AS (SELECT CAST(floor(epoch(max(ts))) AS BIGINT) -
+        |               CAST(floor(epoch(min(ts))) AS BIGINT) AS len
+        |        FROM sess GROUP BY user_id, sid),
+        |c AS (SELECT len, count(*) AS cnt FROM dur GROUP BY 1),
+        |cum AS (SELECT len, CAST(sum(cnt) OVER (ORDER BY len
+        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM c),
+        |tot AS (SELECT count(*) AS n FROM dur),
+        |qs(q, num, den) AS (VALUES ('p10', 1, 10), ('p25', 1, 4),
+        |  ('p50', 1, 2), ('p75', 3, 4), ('p90', 9, 10))
+        |SELECT q, min(len) AS value FROM qs, cum, tot
+        |WHERE cum >= (num * n + den - 1) // den GROUP BY q""".stripMargin),
 
-    "ev_engagement_hist" -> ((s, dir) =>
+    Gate("ev_engagement_hist", ((s, dir) =>
       // the power-user curve: users by exact number of active weeks —
       // the fourth report off the same persisted activity frame
       graft.operators.Funnel.engagementHistogram(
         graft.operators.Funnel.activityFrame(t(s, dir, "events"),
           "user_id", "ts", "week"))),
+      // the power-user curve: users by exact active-week count
+      """WITH act AS (SELECT DISTINCT user_id AS u,
+        |         CAST(date_trunc('week', ts) AS DATE) AS p
+        |       FROM events WHERE ts IS NOT NULL),
+        |c AS (SELECT u, count(*) AS n_periods FROM act GROUP BY 1)
+        |SELECT n_periods, CAST(count(*) AS BIGINT) AS n_users
+        |FROM c GROUP BY 1""".stripMargin),
 
-    "ev_retention_quarter" -> ((s, dir) =>
+    Gate("ev_retention_quarter", ((s, dir) =>
       // the QUARTER calendar rung with real structure: the testdata
       // spans one month, so quarters are synthesized by spreading each
       // event event_id%12 months forward (a deterministic derived
@@ -2240,8 +2965,10 @@ object SparkEntry {
             expr("timestampadd(MONTH, CAST(event_id % 12 AS INT), ts)")),
           "user_id", "ts2", period = "quarter")
         .withColumn("cohort", col("cohort").cast("string"))),
+      // the quarter/year calendar rungs over the month-spread timestamps
+      retentionPeriodOracle("quarter", 12)),
 
-    "ev_retention_year" -> ((s, dir) =>
+    Gate("ev_retention_year", ((s, dir) =>
       // the YEAR rung: events spread event_id%36 months forward → 3
       // calendar years of cohorts, offsets via months_between/12 ≡
       // date_diff('year') on year-start dates
@@ -2250,8 +2977,9 @@ object SparkEntry {
             expr("timestampadd(MONTH, CAST(event_id % 36 AS INT), ts)")),
           "user_id", "ts2", period = "year")
         .withColumn("cohort", col("cohort").cast("string"))),
+      retentionPeriodOracle("year", 36)),
 
-    "ev_asof_join" -> ((s, dir) => {
+    Gate("ev_asof_join", ((s, dir) => {
       // as-of join (latest click at or before each purchase, per user):
       // one window exchange over the merged streams — no per-row probe,
       // no range explosion; DuckDB's native ASOF JOIN is the oracle
@@ -2263,8 +2991,16 @@ object SparkEntry {
         on = Seq("user_id"), leftTsCol = "ts", rightTsCol = "ts",
         carry = Map("event_id" -> "click_id", "value" -> "click_value"))
     }),
+      """WITH l AS (SELECT event_id, user_id, ts FROM events
+        |           WHERE event_type = 'purchase'),
+        |r AS (SELECT user_id, ts, event_id AS click_id, value AS click_value
+        |      FROM (SELECT *, row_number() OVER (PARTITION BY user_id, ts
+        |                      ORDER BY event_id DESC) AS rn
+        |            FROM events WHERE event_type = 'click') WHERE rn = 1)
+        |SELECT l.event_id, l.user_id, l.ts, r.click_id, r.click_value
+        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin),
 
-    "ev_range_join" -> ((s, dir) => {
+    Gate("ev_range_join", ((s, dir) => {
       // bounded range join (purchases within 1h after a view, per user):
       // bin-bucketed equi-join — each left row meets ≤2 right bins, so
       // the shuffle is bounded by temporal density, not key cardinality
@@ -2279,17 +3015,40 @@ object SparkEntry {
         loUs = 0L, hiUs = 3600000000L,
         carry = Map("event_id" -> "purchase_id"))
     }),
+      """SELECT a.event_id AS view_id, a.user_id, epoch_us(a.ts) AS view_us,
+        |       b.event_id AS purchase_id,
+        |       epoch_us(b.ts) - epoch_us(a.ts) AS dt_us
+        |FROM events a JOIN events b ON a.user_id = b.user_id
+        |WHERE a.event_type = 'view' AND b.event_type = 'purchase'
+        |  AND epoch_us(b.ts) - epoch_us(a.ts) BETWEEN 0 AND 3600000000""".stripMargin),
 
     // ------------------------------------------------------ dedup family
-    "dedup_exact" -> ((s, dir) =>
+    Gate("dedup_exact", ((s, dir) =>
       Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
         .select("doc_id", "content_hash", "dup_count")),
+      """SELECT min(doc_id) AS doc_id, md5(text) AS content_hash,
+        | count(*) AS dup_count
+        |FROM documents GROUP BY md5(text)""".stripMargin),
 
-    "dedup_jaccard_pairs" -> ((s, dir) =>
+    Gate("dedup_jaccard_pairs", ((s, dir) =>
       Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
         n = 3, threshold = 0.5)),
+      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
+        |sh AS (SELECT doc_id,
+        |  list_distinct([array_to_string(words[i:i+2], ' ')
+        |                 for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
+        |  FROM w),
+        |inv AS (SELECT doc_id, len(s) AS ssize, unnest(s) AS shingle FROM sh),
+        |p AS (SELECT a.doc_id AS i, b.doc_id AS j, a.ssize AS si, b.ssize AS sj,
+        |        count(*) AS inter
+        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2, 3, 4)
+        |SELECT i, j,
+        |  round(CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE), 6) AS jaccard
+        |FROM p
+        |WHERE CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE) >= 0.5""".stripMargin),
 
-    "dedup_components" -> ((s, dir) =>
+    Gate("dedup_components", ((s, dir) =>
       // transitive closure of the near-dup pair list (pointer-doubling
       // min-label propagation, one observe-metered job per round); the
       // oracle is a recursive-CTE reachability twin over the same pairs
@@ -2297,15 +3056,27 @@ object SparkEntry {
           Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
             n = 3, threshold = 0.5))
         .withColumnRenamed("id", "doc_id")),
+      // recursive-CTE reachability twin of the pointer-doubling engine op:
+      // same pair list (the dedup_jaccard_pairs CTEs), comp = min reachable id
+      DedupComponentsOracle),
 
-    "dedup_lsh_tuning" -> ((s, dir) =>
+    Gate("dedup_lsh_tuning", ((s, dir) =>
       // the S-curve that configures the LSH dedup family: detection
       // probability vs jaccard for the default 16×4 banding; every
       // power a left-associated multiply chain (bit-exact cross-engine
       // — libm pow is not)
       Dedup.lshTuningCurve(s)),
+      // the same left-associated multiply chains the engine folds —
+      // s^4 as ((s*s)*s)*s, (1-s^4)^16 as a 16-term chain
+      s"""WITH g AS (SELECT CAST(i AS DOUBLE) / 100 AS s
+         |           FROM (SELECT unnest(range(0, 101)) AS i) r),
+         |b AS (SELECT s, s * s * s * s AS pb FROM g),
+         |m AS (SELECT s, pb, (1 - pb) AS q FROM b)
+         |SELECT s, pb AS p_band,
+         |  1 - (${Seq.fill(16)("q").mkString(" * ")}) AS p_detect
+         |FROM m""".stripMargin),
 
-    "dedup_components_incremental" -> ((s, dir) => {
+    Gate("dedup_components_incremental", ((s, dir) => {
       // steady-state closure maintenance: yesterday's labels (the
       // closure of the old-slice pairs, star-compressed to diameter 2)
       // + only the pairs touching the new slice — the twin is
@@ -2319,8 +3090,10 @@ object SparkEntry {
           pairs.filter(col("i") >= 250 || col("j") >= 250), labels0)
         .withColumnRenamed("id", "doc_id")
     }),
+      // incremental path ≡ full recompute — the twin is shared verbatim
+      DedupComponentsOracle),
 
-    "dedup_keep_representative" -> ((s, dir) =>
+    Gate("dedup_keep_representative", ((s, dir) =>
       // canonical-doc selection: collapse each transitive near-dup
       // cluster to its longest member (ties → min id), singletons pass
       // through as their own comp; the oracle extends the
@@ -2330,8 +3103,40 @@ object SparkEntry {
           Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
             n = 3, threshold = 0.5))
         .select("doc_id", "comp", "cluster_size")),
+      """WITH RECURSIVE w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
+        |sh AS (SELECT doc_id,
+        |  list_distinct([array_to_string(words[i:i+2], ' ')
+        |                 for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
+        |  FROM w),
+        |inv AS (SELECT doc_id, len(s) AS ssize, unnest(s) AS shingle FROM sh),
+        |p AS (SELECT a.doc_id AS i, b.doc_id AS j, a.ssize AS si, b.ssize AS sj,
+        |        count(*) AS inter
+        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2, 3, 4),
+        |pr AS (SELECT i, j FROM p
+        |       WHERE CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE) >= 0.5),
+        |e AS (SELECT i, j FROM pr UNION SELECT j AS i, i AS j FROM pr),
+        |nodes AS (SELECT DISTINCT i AS id FROM e),
+        |walk(id, comp) AS (
+        |  SELECT id, id FROM nodes
+        |  UNION
+        |  SELECT e.i, walk.comp FROM e JOIN walk ON e.j = walk.id),
+        |comps AS (SELECT id AS doc_id, min(comp) AS comp FROM walk GROUP BY id),
+        |sz AS (SELECT comp, count(*) AS cluster_size FROM comps GROUP BY comp),
+        |cl AS (SELECT d.doc_id, c.comp, length(d.text) AS score
+        |       FROM documents d JOIN comps c USING (doc_id)),
+        |best AS (SELECT comp, max(score) AS best FROM cl GROUP BY comp),
+        |rep AS (SELECT cl.comp, min(cl.doc_id) AS doc_id
+        |        FROM cl JOIN best ON cl.comp = best.comp AND cl.score = best.best
+        |        GROUP BY cl.comp)
+        |SELECT r.doc_id, r.comp, sz.cluster_size
+        |FROM rep r JOIN sz USING (comp)
+        |UNION ALL
+        |SELECT d.doc_id, d.doc_id AS comp, CAST(1 AS BIGINT) AS cluster_size
+        |FROM documents d LEFT JOIN comps c USING (doc_id)
+        |WHERE c.comp IS NULL""".stripMargin),
 
-    "dedup_eval" -> ((s, dir) => {
+    Gate("dedup_eval", ((s, dir) => {
       // the dedup family's measured-recall harness: plant truth by
       // mutating every 7th doc (one appended token — long docs stay
       // above the 0.5 Jaccard threshold, short ones legitimately drop
@@ -2352,8 +3157,41 @@ object SparkEntry {
           (col("doc_id") + 1000000L).as("j"))
       Dedup.dedupEval(pred.select("i", "j"), truth)
     }),
+      // the eval harness twin: the jaccard pair CTEs over orig∪mutated,
+      // planted truth joined back, counts exact, ratios derived last
+      """WITH corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, text || ' graftmut' FROM documents
+        |  WHERE doc_id % 7 = 0),
+        |w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM corpus),
+        |sh AS (SELECT doc_id,
+        |  list_distinct([array_to_string(words[i:i+2], ' ')
+        |                 for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
+        |  FROM w),
+        |inv AS (SELECT doc_id, len(s) AS ssize, unnest(s) AS shingle FROM sh),
+        |p AS (SELECT a.doc_id AS i, b.doc_id AS j, a.ssize AS si, b.ssize AS sj,
+        |        count(*) AS inter
+        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        |      GROUP BY 1, 2, 3, 4),
+        |pc AS (SELECT DISTINCT least(i, j) AS a, greatest(i, j) AS b FROM p
+        |       WHERE CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE) >= 0.5
+        |         AND i <> j),
+        |truth AS (SELECT doc_id AS a, doc_id + 1000000 AS b FROM documents
+        |          WHERE doc_id % 7 = 0),
+        |st AS (SELECT count(*) AS n_pred,
+        |         CAST(COALESCE(sum(CASE WHEN t.a IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS tp
+        |       FROM pc LEFT JOIN truth t USING (a, b)),
+        |nt AS (SELECT count(*) AS n_truth FROM truth)
+        |SELECT n_pred, n_truth, tp,
+        |  n_pred - tp AS fp, n_truth - tp AS fn,
+        |  CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred END AS "precision",
+        |  CASE WHEN n_truth > 0 THEN CAST(tp AS DOUBLE) / n_truth END AS recall,
+        |  CASE WHEN n_pred + n_truth > 0
+        |       THEN CAST(2 * tp AS DOUBLE) / (n_pred + n_truth) END AS f1
+        |FROM st, nt""".stripMargin),
 
-    "dedup_exact_incremental" -> ((s, dir) => {
+    Gate("dedup_exact_incremental", ((s, dir) => {
       // cross-corpus exact dedup on the half-mutated re-ingest slice
       // (dedup_exact_bloom's fixture, shared so this gate is NON-vacuous:
       // unmutated re-ingested docs MUST match themselves in the corpus,
@@ -2368,8 +3206,20 @@ object SparkEntry {
           .otherwise(concat(col("text"), lit(" graftnew"))))
       Dedup.exactAgainst(newB, docs, "doc_id", "text")
     }),
+      // the half-mutated re-ingest fixture, shared VERBATIM with
+      // dedup_exact_bloom: plain exactAgainst and the Bloom-routed form
+      // must both equal this exact-hash twin (non-vacuous — the unmutated
+      // half of the slice matches itself in the corpus)
+      """WITH n AS (SELECT doc_id,
+        |  CASE WHEN doc_id % 2 = 0 THEN text
+        |       ELSE text || ' graftnew' END AS text
+        |  FROM documents WHERE doc_id % 7 = 0)
+        |SELECT n.doc_id AS i, min(c.doc_id) AS j,
+        | count(*) AS n_corpus_matches
+        |FROM n JOIN documents c ON md5(n.text) = md5(c.text)
+        |GROUP BY n.doc_id""".stripMargin),
 
-    "dedup_exact_bloom" -> ((s, dir) => {
+    Gate("dedup_exact_bloom", ((s, dir) => {
       // exact incremental dedup served through the mergeable membership
       // sketch: per-slice Bloom filters over the corpus union
       // relationally, the new batch is Bloom-routed scan-side, and the
@@ -2388,8 +3238,18 @@ object SparkEntry {
         .head().getAs[Array[Byte]]("sketch")
       Dedup.exactAgainstBloom(newB, docs, "doc_id", "text", sketch)
     }),
+      // the Bloom pre-route must not change the answer: plain exact-hash
+      // twin over the half-mutated re-ingest slice
+      """WITH n AS (SELECT doc_id,
+        |  CASE WHEN doc_id % 2 = 0 THEN text
+        |       ELSE text || ' graftnew' END AS text
+        |  FROM documents WHERE doc_id % 7 = 0)
+        |SELECT n.doc_id AS i, min(c.doc_id) AS j,
+        | count(*) AS n_corpus_matches
+        |FROM n JOIN documents c ON md5(n.text) = md5(c.text)
+        |GROUP BY n.doc_id""".stripMargin),
 
-    "dedup_jaccard_incremental" -> ((s, dir) => {
+    Gate("dedup_jaccard_incremental", ((s, dir) => {
       // cross-corpus near-dup via the bipartite inverted index (new docs
       // probe corpus shingle postings; candidate space = new×corpus only)
       val docs = t(s, dir, "documents")
@@ -2397,30 +3257,63 @@ object SparkEntry {
         docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
         n = 3, threshold = 0.5)
     }),
+      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
+        |sh AS (SELECT doc_id,
+        |  list_distinct([array_to_string(words[i:i+2], ' ')
+        |                 for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
+        |  FROM w),
+        |inv AS (SELECT doc_id, len(s) AS ssize, unnest(s) AS shingle FROM sh),
+        |p AS (SELECT a.doc_id AS i, b.doc_id AS j, a.ssize AS si, b.ssize AS sj,
+        |        count(*) AS inter
+        |      FROM inv a JOIN inv b ON a.shingle = b.shingle
+        |      WHERE a.doc_id % 7 = 0 AND b.doc_id % 7 != 0
+        |      GROUP BY 1, 2, 3, 4)
+        |SELECT i, j,
+        |  round(CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE), 6) AS jaccard
+        |FROM p
+        |WHERE CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE) >= 0.5""".stripMargin),
 
-    "dedup_embedding_incremental" -> ((s, dir) => {
+    Gate("dedup_embedding_incremental", ((s, dir) => {
       // cross-corpus embedding near-dup (auto mode: exact small-side cross
       // at this SF, bipartite hyperplane-LSH above the cutover)
       val emb = t(s, dir, "embeddings")
       Dedup.embeddingNearDupAgainst(emb.filter(col("vec_id") % 7 === 0),
         emb.filter(col("vec_id") % 7 =!= 0), threshold = 0.4)
     }),
+      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |s AS (SELECT a.vec_id AS i, b.vec_id AS j,
+        |        list_sum([a.v[k] * b.v[k] for k in range(1, 65)]) /
+        |        (sqrt(list_sum([a.v[k] * a.v[k] for k in range(1, 65)])) *
+        |         sqrt(list_sum([b.v[k] * b.v[k] for k in range(1, 65)]))) AS sim
+        |      FROM c a CROSS JOIN c b
+        |      WHERE a.vec_id % 7 = 0 AND b.vec_id % 7 != 0)
+        |SELECT i, j, round(sim, 6) AS sim FROM s WHERE sim >= 0.4""".stripMargin),
 
-    "dedup_minhash_lsh" -> ((s, dir) =>
+    Gate("dedup_minhash_lsh", ((s, dir) =>
       // oracle = reviewed golden-pair parquet (golden/README.md); recall vs
       // exact Jaccard additionally asserted in DedupSpec
       Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
           n = 3, k = 64, bands = 16, threshold = 0.5)
         .select(col("i"), col("j"), round(col("est_jaccard"), 6).as("est_jaccard"))),
+      // Hash-family ops: the oracle is a reviewed golden-pair parquet checked
+      // into the repo, generated once at sf0.01 by the spec-tested kernels
+      // (see golden/README.md — the review asserts the MinHash pair set equals
+      // the exact-Jaccard-0.5 set and every SimHash pair has exact
+      // Jaccard ≥ 0.96). Regenerate with tools/regen_golden.sh if the
+      // kernels or sf0.01 testdata change.
+      """SELECT i, j, est_jaccard
+        |FROM read_parquet('/root/repo/golden/dedup_minhash_lsh.parquet')""".stripMargin),
 
-    "dedup_simhash" -> ((s, dir) =>
+    Gate("dedup_simhash", ((s, dir) =>
       // oracle = reviewed golden-pair parquet (golden/README.md); behavior
       // additionally asserted in DedupSpec
       Dedup.simhashNearPairs(
         Dedup.simhashSignatures(t(s, dir, "documents"), "doc_id", "text"),
         maxHamming = 3)),
+      """SELECT i, j, hamming
+        |FROM read_parquet('/root/repo/golden/dedup_simhash.parquet')""".stripMargin),
 
-    "dedup_simhash_incremental" -> ((s, dir) => {
+    Gate("dedup_simhash_incremental", ((s, dir) => {
       // cross-corpus SimHash near-dup: new batch probes the corpus's
       // chunk bands bipartitely (candidate space new×corpus only).
       // Oracle = reviewed golden-pair parquet (golden/README.md);
@@ -2433,15 +3326,24 @@ object SparkEntry {
           "doc_id", "text"),
         maxHamming = 3)
     }),
+      """SELECT i, j, hamming
+        |FROM read_parquet('/root/repo/golden/dedup_simhash_incremental.parquet')""".stripMargin),
 
-    "dedup_embedding_pairs" -> ((s, dir) =>
+    Gate("dedup_embedding_pairs", ((s, dir) =>
       // embedding-cosine near-dup. Auto mode: ≤20k rows (this SF) scores
       // exactly (oracle-checkable); larger corpora auto-switch to the
       // hyperplane-LSH pre-filter (the 100 TB default, recall-tested in
       // DedupSpec)
       Dedup.embeddingNearDup(t(s, dir, "embeddings"), threshold = 0.5)),
+      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |s AS (SELECT a.vec_id AS i, b.vec_id AS j,
+        |        list_sum([a.v[k] * b.v[k] for k in range(1, 65)]) /
+        |        (sqrt(list_sum([a.v[k] * a.v[k] for k in range(1, 65)])) *
+        |         sqrt(list_sum([b.v[k] * b.v[k] for k in range(1, 65)]))) AS sim
+        |      FROM c a CROSS JOIN c b WHERE a.vec_id < b.vec_id)
+        |SELECT i, j, round(sim, 6) AS sim FROM s WHERE sim >= 0.5""".stripMargin),
 
-    "dedup_semantic_pairs" -> ((s, dir) =>
+    Gate("dedup_semantic_pairs", ((s, dir) =>
       // SemDeDup (Abbas et al. 2023): within-cluster-only near-dup
       // pairs — candidate space Σ_c C(|c|,2), never corpus². First-N
       // centroid mode keeps the whole pipeline relational for the
@@ -2449,8 +3351,22 @@ object SparkEntry {
       Similarity.semanticNearDupPairs(t(s, dir, "embeddings"),
           nClusters = 16, threshold = 0.3, trainIters = 0)
         .withColumn("sim", round(col("sim"), 6))),
+      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c ORDER BY vec_id LIMIT 16),
+         |asg AS (SELECT corpus_id, centroid_id FROM (
+         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
+         |  FROM c a CROSS JOIN cents ce) t WHERE rn = 1)
+         |SELECT a1.corpus_id AS i, a2.corpus_id AS j,
+         |  round(${cosSql("c1.v", "c2.v")}, 6) AS sim
+         |FROM asg a1 JOIN asg a2 USING (centroid_id)
+         |JOIN c c1 ON c1.vec_id = a1.corpus_id
+         |JOIN c c2 ON c2.vec_id = a2.corpus_id
+         |WHERE a1.corpus_id < a2.corpus_id
+         |  AND ${cosSql("c1.v", "c2.v")} >= 0.3""".stripMargin),
 
-    "dedup_semantic_incremental" -> ((s, dir) => {
+    Gate("dedup_semantic_incremental", ((s, dir) => {
       // cross-corpus SemDeDup: cluster structure from the REFERENCE
       // (first-N centroid mode keeps it relational for the oracle), new
       // vectors compare within their assigned cell only
@@ -2461,15 +3377,46 @@ object SparkEntry {
           nClusters = 16, threshold = 0.3, trainIters = 0)
         .withColumn("sim", round(col("sim"), 6))
     }),
+      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c
+         |          WHERE vec_id % 7 != 0 ORDER BY vec_id LIMIT 16),
+         |asgn AS (SELECT corpus_id, centroid_id FROM (
+         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
+         |  FROM c a CROSS JOIN cents ce WHERE a.vec_id % 7 = 0) t WHERE rn = 1),
+         |asgr AS (SELECT corpus_id, centroid_id FROM (
+         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
+         |  FROM c a CROSS JOIN cents ce WHERE a.vec_id % 7 != 0) t WHERE rn = 1)
+         |SELECT a1.corpus_id AS i, a2.corpus_id AS j,
+         |  round(${cosSql("c1.v", "c2.v")}, 6) AS sim
+         |FROM asgn a1 JOIN asgr a2 USING (centroid_id)
+         |JOIN c c1 ON c1.vec_id = a1.corpus_id
+         |JOIN c c2 ON c2.vec_id = a2.corpus_id
+         |WHERE ${cosSql("c1.v", "c2.v")} >= 0.3""".stripMargin),
 
     // ------------------------------------------------- similarity search
-    "ann_cosine_topk" -> ((s, dir) => {
+    Gate("ann_cosine_topk", ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), k = 10)
         .withColumnRenamed("rank", "rk")
     }),
+      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |q AS (SELECT vec_id, v FROM c WHERE vec_id < 5),
+        |s AS (SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+        |        list_sum([q.v[i] * c.v[i] for i in range(1, 65)]) /
+        |        (sqrt(list_sum([q.v[i] * q.v[i] for i in range(1, 65)])) *
+        |         sqrt(list_sum([c.v[i] * c.v[i] for i in range(1, 65)]))) AS sim
+        |      FROM c CROSS JOIN q WHERE q.vec_id <> c.vec_id),
+        |r AS (SELECT query_id, corpus_id, sim,
+        |        row_number() OVER (PARTITION BY query_id
+        |          ORDER BY sim DESC, corpus_id) AS rk FROM s)
+        |SELECT query_id, rk, corpus_id, round(sim, 6) AS sim
+        |FROM r WHERE rk <= 10""".stripMargin),
 
-    "ann_sq_topk" -> ((s, dir) => {
+    Gate("ann_sq_topk", ((s, dir) => {
       // asymmetric int8 serving: corpus quantized+dequantized on the
       // fly (the 4×-smaller-store path), queries full precision —
       // ann_cosine_topk's conventions otherwise
@@ -2477,8 +3424,30 @@ object SparkEntry {
       Similarity.sqTopK(emb, emb.filter(col("vec_id") < 5), k = 10)
         .withColumnRenamed("rank", "rk")
     }),
+      // asymmetric SQ serving: the corpus side re-derives quantize →
+      // dequantize exactly (the emb_scalar_quant pipeline inline), the
+      // query side stays float; cosine/rank as the ann_cosine twin
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |st AS (SELECT vec_id, v, list_min(v) AS lo,
+        |       (list_max(v) - list_min(v)) / 255.0 AS scale FROM e),
+        |r AS (SELECT vec_id, [lo + (CAST((CASE WHEN scale = 0 THEN -128
+        |           ELSE least(255, greatest(0,
+        |             CAST(round((v[i] - lo) / scale) AS INTEGER))) - 128
+        |         END) + 128 AS DOUBLE) * scale) for i in range(1, 65)] AS cv
+        |       FROM st),
+        |q AS (SELECT vec_id, v AS qv FROM e WHERE vec_id < 5),
+        |s AS (SELECT q.vec_id AS query_id, r.vec_id AS corpus_id,
+        |        list_sum([r.cv[i] * q.qv[i] for i in range(1, 65)]) /
+        |        (sqrt(list_sum([r.cv[i] * r.cv[i] for i in range(1, 65)])) *
+        |         sqrt(list_sum([q.qv[i] * q.qv[i] for i in range(1, 65)]))) AS sim
+        |      FROM r CROSS JOIN q WHERE q.vec_id <> r.vec_id),
+        |rnk AS (SELECT query_id, corpus_id, sim,
+        |        row_number() OVER (PARTITION BY query_id
+        |          ORDER BY sim DESC, corpus_id) AS rk FROM s)
+        |SELECT query_id, rk, corpus_id, round(sim, 6) AS sim
+        |FROM rnk WHERE rk <= 10""".stripMargin),
 
-    "ann_pq_topk" -> ((s, dir) => {
+    Gate("ann_pq_topk", ((s, dir) => {
       // product-quantized ANN with exact re-rank (deterministic end-to-end:
       // first-N seeds, fixed Lloyd iterations, decimal-exact means, id
       // tie-breaks). Oracle = reviewed golden parquet (golden/README.md);
@@ -2488,8 +3457,10 @@ object SparkEntry {
           m = 8, codebookSize = 16, rerank = 8)
         .withColumnRenamed("rank", "rk")
     }),
+      """SELECT query_id, rk, corpus_id, sim
+        |FROM read_parquet('/root/repo/golden/ann_pq_topk.parquet')""".stripMargin),
 
-    "ann_ivf_pq_topk" -> ((s, dir) => {
+    Gate("ann_ivf_pq_topk", ((s, dir) => {
       // composed IVF-PQ (coarse inverted lists × PQ codes, exact re-rank):
       // deterministic end-to-end, oracle = reviewed golden parquet
       // (golden/README.md); recall + sim-exactness + partitioning-
@@ -2499,8 +3470,10 @@ object SparkEntry {
           nlist = 16, nprobe = 8, m = 8, codebookSize = 16, rerank = 8)
         .withColumnRenamed("rank", "rk")
     }),
+      """SELECT query_id, rk, corpus_id, sim
+        |FROM read_parquet('/root/repo/golden/ann_ivf_pq_topk.parquet')""".stripMargin),
 
-    "ann_recall" -> ((s, dir) => {
+    Gate("ann_recall", ((s, dir) => {
       // the ANN family's measured-approximation gate: the IVF(nprobe=4)
       // run scored against brute-force truth with rankingMetrics, so
       // recall@10 / rr / nDCG of the approximate index are
@@ -2515,8 +3488,11 @@ object SparkEntry {
         .select(col("query_id"), col("corpus_id").as("doc_id"))
       graft.llm.Retrieval.rankingMetrics(run, truth, k = 10)
     }),
+      // brute-force truth (the ann_cosine twin) + the IVF run (the
+      // ann_ivf twin) + the retrieval_metrics scoring SQL
+      annRecallOracle("SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < 5")),
 
-    "ann_certify" -> ((s, dir) => {
+    Gate("ann_certify", ((s, dir) => {
       // the index lifecycle's certification op as a driver-visible
       // gate: recall/rr/nDCG of the SERVING path (ivfTopKAgainst, the
       // path production queries take) against brute-force truth, on
@@ -2527,8 +3503,13 @@ object SparkEntry {
       Similarity.certifyVectorIndex(Similarity.buildVectorIndex(emb),
         k = 10, nprobe = 4, sampleN = 8)
     }),
+      // the certification op: the SAME recall pipeline over the
+      // md5-ordered deterministic sample certifyVectorIndex draws — the
+      // reproducible certificate of the serving path's quality
+      annRecallOracle("SELECT vec_id AS query_id, v AS qv FROM c " +
+        "ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8")),
 
-    "ann_maintain" -> ((s, dir) => {
+    Gate("ann_maintain", ((s, dir) => {
       // the certify→regenerate loop wired shut: geometry trained on the
       // first slice, the rest arrives as a batch, and maintainVectorIndex
       // extends → certifies → (recall < floor ? rebuilds from the full
@@ -2546,8 +3527,13 @@ object SparkEntry {
         emb.filter(col("vec_id") >= 200), emb, minRecall = 0.9,
         k = 10, nprobe = 4, sampleN = 8).certificate
     }),
+      // the maintenance loop's certificate — ann_certify's twin verbatim:
+      // extended and rebuilt indexes share the first-16-id IVF centroids
+      // and the md5 sample, so the certificate is branch-independent
+      annRecallOracle("SELECT vec_id AS query_id, v AS qv FROM c " +
+        "ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8")),
 
-    "ann_ivf_topk" -> ((s, dir) => {
+    Gate("ann_ivf_topk", ((s, dir) => {
       // approximate variant (deterministic: centroids = first-16 vectors,
       // explicit tie-breaks throughout → fully oracle-checkable); recall vs
       // brute force additionally asserted in SimilaritySpec
@@ -2556,8 +3542,31 @@ object SparkEntry {
           nlist = 16, nprobe = 4)
         .withColumnRenamed("rank", "rk")
     }),
+      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c ORDER BY vec_id LIMIT 16),
+         |asg AS (SELECT corpus_id, centroid_id FROM (
+         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
+         |  FROM c a CROSS JOIN cents ce) t WHERE rn = 1),
+         |q AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < 5),
+         |probes AS (SELECT query_id, centroid_id FROM (
+         |  SELECT q.query_id, ce.centroid_id,
+         |    row_number() OVER (PARTITION BY q.query_id
+         |      ORDER BY ${cosSql("q.qv", "ce.cv")} DESC, ce.centroid_id) AS rn
+         |  FROM q CROSS JOIN cents ce) t WHERE rn <= 4),
+         |s AS (SELECT p.query_id, a.corpus_id, ${cosSql("cv2.v", "q2.qv")} AS sim
+         |      FROM asg a JOIN probes p USING (centroid_id)
+         |      JOIN q q2 ON q2.query_id = p.query_id
+         |      JOIN c cv2 ON cv2.vec_id = a.corpus_id
+         |      WHERE p.query_id <> a.corpus_id)
+         |SELECT query_id, rk, corpus_id, round(sim, 6) AS sim FROM (
+         |  SELECT query_id, corpus_id, sim,
+         |    row_number() OVER (PARTITION BY query_id
+         |      ORDER BY sim DESC, corpus_id) AS rk FROM s) t
+         |WHERE rk <= 10""".stripMargin),
 
-    "ann_ivf_incremental" -> ((s, dir) => {
+    Gate("ann_ivf_incremental", ((s, dir) => {
       // the train-once/serve-many VectorIndex path end-to-end: geometry
       // trained on the first slice, a second disjoint slice added with
       // extendVectorIndex (fixed geometry, map-only encode), then IVF
@@ -2578,8 +3587,14 @@ object SparkEntry {
           k = 10, nprobe = 4)
         .withColumnRenamed("rank", "rk")
     }),
+      // ann_ivf_topk's twin over the INDEX slice (vec_id < 400) with a
+      // disjoint query slice — the engine side goes build → extend →
+      // serve (batch) or build → stream-encode → serve (stream), so the
+      // hash match proves both incremental paths equal a one-shot
+      // rebuild of the union
+      AnnIvfIncrementalOracle),
 
-    "ann_feed_maintain" -> ((s, dir) => {
+    Gate("ann_feed_maintain", ((s, dir) => {
       // FEED-DRIVEN VectorIndex maintenance over a mutating lakehouse
       // corpus: bootstrap from the gen-0 snapshot (junk vectors
       // included), then consume the (0,1] change feed — the appended
@@ -2618,8 +3633,11 @@ object SparkEntry {
           k = 10, nprobe = 4)
         .withColumnRenamed("rank", "rk")
     }),
+      // feed-maintained VectorIndex serves identically to the one-shot
+      // index of the live corpus — twin shared VERBATIM
+      AnnIvfIncrementalOracle),
 
-    "ann_feed_tracked" -> ((s, dir) => {
+    Gate("ann_feed_tracked", ((s, dir) => {
       // the CHECKPOINTED dense consumer: a TRACKED VectorIndex
       // bootstrapped at the gen-0 watermark consumes (0,1] and (1,2]
       // through FeedConsumer (atomic marker+state flips, landed
@@ -2663,8 +3681,9 @@ object SparkEntry {
           k = 10, nprobe = 4)
         .withColumnRenamed("rank", "rk")
     }),
+      AnnIvfIncrementalOracle),
 
-    "ann_ivf_stream" -> ((s, dir) => {
+    Gate("ann_ivf_stream", ((s, dir) => {
       // the STREAMING index-ingestion path under the same gate: the
       // extend slice arrives as an AvailableNow stream, is encoded
       // stateless against the fixed geometry (the identical baked
@@ -2686,36 +3705,96 @@ object SparkEntry {
           k = 10, nprobe = 4)
         .withColumnRenamed("rank", "rk")
     }),
+      AnnIvfIncrementalOracle),
 
-    "emb_cluster_profile" -> ((s, dir) =>
+    Gate("emb_cluster_profile", ((s, dir) =>
       // semantic domain-balance report: population + integer-exact
       // cohesion stats per nearest-centroid cell (deterministic first-16
       // quantizer — the IVF oracle mode)
       Similarity.clusterProfile(t(s, dir, "embeddings"), nClusters = 16)),
+      // assignment fragment is ann_ivf_topk's twin verbatim; cohesion
+      // rides an exact BIGINT sum of 1e-6-quantized sims (float sums
+      // would be partition-order-dependent in both engines)
+      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c ORDER BY vec_id LIMIT 16),
+         |asg AS (SELECT corpus_id, centroid_id, sim FROM (
+         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
+         |    ${cosSql("a.v", "ce.cv")} AS sim,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
+         |  FROM c a CROSS JOIN cents ce) t WHERE rn = 1),
+         |agg AS (SELECT centroid_id, count(*) AS n_members,
+         |  CAST(sum(CAST(round(sim * 1e6) AS BIGINT)) AS BIGINT) AS sum_scaled_sim,
+         |  min(round(sim, 6)) AS min_sim, max(round(sim, 6)) AS max_sim
+         |  FROM asg GROUP BY centroid_id)
+         |SELECT centroid_id, n_members, sum_scaled_sim,
+         |  round(CAST(sum_scaled_sim AS DOUBLE) / 1e6 / n_members, 6) AS mean_sim,
+         |  min_sim, max_sim
+         |FROM agg""".stripMargin),
 
-    "emb_balanced_sample" -> ((s, dir) =>
+    Gate("emb_balanced_sample", ((s, dir) =>
       // semantic rebalancing: cap every nearest-centroid cell at 10
       // members picked in content-independent deterministic hash order
       Similarity.clusterBalancedSample(t(s, dir, "embeddings"),
         nClusters = 16, kPerCluster = 10)),
+      // assignment twin + the stratifiedSample hash-order row_number
+      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c ORDER BY vec_id LIMIT 16),
+         |asg AS (SELECT corpus_id, centroid_id FROM (
+         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
+         |  FROM c a CROSS JOIN cents ce) t WHERE rn = 1)
+         |SELECT centroid_id, rk, corpus_id AS vec_id FROM (
+         |  SELECT centroid_id, corpus_id, row_number() OVER (
+         |    PARTITION BY centroid_id
+         |    ORDER BY md5('cbal:' || CAST(corpus_id AS VARCHAR)), corpus_id) AS rk
+         |  FROM asg) t
+         |WHERE rk <= 10""".stripMargin),
 
     // ------------------------------------------------------ text analysis
-    "text_tokens" -> ((s, dir) =>
+    Gate("text_tokens", ((s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
         TA.tokenCount(col("text")).cast("long").as("n_tokens"),
         TA.subwordCountEstimate(col("text")).cast("long").as("n_subwords"),
         TA.fingerprint(col("text")).as("fingerprint"))),
+      """WITH w AS (SELECT doc_id, text,
+        |  string_split_regex(trim(text), '\s+') AS words FROM documents)
+        |SELECT doc_id,
+        | CAST(len(words) AS BIGINT) AS n_tokens,
+        | CAST(list_sum([CAST(ceil(length(x) / 4.0) AS BIGINT) for x in words]) AS BIGINT) AS n_subwords,
+        | md5(array_to_string(list_sort(list_distinct(
+        |   string_split_regex(trim(lower(text)), '\s+'))), ' ')) AS fingerprint
+        |FROM w""".stripMargin),
 
-    "text_quality" -> ((s, dir) =>
+    Gate("text_quality", ((s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
         round(TA.punctRatio(col("text")), 6).as("punct_ratio"),
         round(TA.stopwordRatio(col("text")), 6).as("stopword_ratio"),
         round(TA.meanWordLength(col("text")), 6).as("mean_word_len"),
         TA.qualityScore(col("text")).as("quality"))),
+      """WITH b AS (SELECT doc_id, text,
+        |  string_split_regex(trim(text), '\s+') AS words,
+        |  CAST(length(text) AS DOUBLE) AS n FROM documents),
+        |m AS (SELECT doc_id, text, words, n,
+        |  CAST(len(words) AS DOUBLE) AS nw,
+        |  CAST(length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / n AS punct_ratio,
+        |  CAST(length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE) / n AS upper_ratio,
+        |  CAST(len(list_filter(words, x -> lower(x) IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this'))) AS DOUBLE) / CAST(len(words) AS DOUBLE) AS stop_ratio,
+        |  CAST(list_sum([length(x) for x in words]) AS DOUBLE) / CAST(len(words) AS DOUBLE) AS mean_wl
+        |  FROM b)
+        |SELECT doc_id,
+        | round(punct_ratio, 6) AS punct_ratio,
+        | round(stop_ratio, 6) AS stopword_ratio,
+        | round(mean_wl, 6) AS mean_word_len,
+        | round(least(nw / 100.0, 1.0) * 0.4 + least(stop_ratio * 4.0, 1.0) * 0.3 +
+        |   (CASE WHEN punct_ratio < 0.2 THEN 1.0 ELSE 0.0 END) * 0.15 +
+        |   (CASE WHEN upper_ratio < 0.3 THEN 1.0 ELSE 0.0 END) * 0.15, 6) AS quality
+        |FROM m""".stripMargin),
 
-    "text_gopher_gate" -> ((s, dir) => {
+    Gate("text_gopher_gate", ((s, dir) => {
       // Gopher §A1.1 document gate: per-rule booleans + composite keep,
       // pure scan-stage column work, boolean-only output (no float
       // formatting can ever diverge between engines)
@@ -2730,8 +3809,44 @@ object SparkEntry {
         g.getField("stopword_ok").as("stopword_ok"),
         g.getField("keep").as("keep"))
     }),
+      """WITH b AS (SELECT doc_id, text,
+        |  string_split_regex(trim(text), '\s+') AS words,
+        |  string_split(text, chr(10)) AS lines FROM documents),
+        |m AS (SELECT doc_id, text, words, lines,
+        |  CASE WHEN trim(text) = '' THEN 0 ELSE len(words) END AS nw,
+        |  CAST(len(lines) AS DOUBLE) AS nl,
+        |  CASE WHEN trim(text) = '' THEN 0.0
+        |       ELSE CAST(list_sum([length(x) for x in words]) AS DOUBLE) / len(words) END AS mwl,
+        |  length(text) - length(replace(text, '#', '')) AS hashes,
+        |  (length(text) - length(regexp_replace(text, '\.\.\.', '', 'g'))) / 3 AS dots,
+        |  length(text) - length(replace(text, '…', '')) AS uniell,
+        |  len(list_filter(lines, x -> regexp_matches(ltrim(x), '^[•*-]'))) AS bullets,
+        |  len(list_filter(lines, x -> regexp_matches(rtrim(x), '(\.\.\.|…)$'))) AS ells,
+        |  len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]'))) AS alphaw,
+        |  (CASE WHEN len(list_filter(words, x -> lower(x) = 'the')) > 0 THEN 1 ELSE 0 END
+        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'be')) > 0 THEN 1 ELSE 0 END
+        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'to')) > 0 THEN 1 ELSE 0 END
+        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'of')) > 0 THEN 1 ELSE 0 END
+        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'and')) > 0 THEN 1 ELSE 0 END
+        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'that')) > 0 THEN 1 ELSE 0 END
+        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'have')) > 0 THEN 1 ELSE 0 END
+        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'with')) > 0 THEN 1 ELSE 0 END) AS stophits
+        | FROM b),
+        |f AS (SELECT doc_id,
+        |  (nw >= 50 AND nw <= 100000) AS wordcount_ok,
+        |  (nw > 0 AND mwl >= 3.0 AND mwl <= 10.0) AS mean_len_ok,
+        |  (nw > 0 AND CAST(hashes + dots + uniell AS DOUBLE) / nw <= 0.1) AS symbol_ok,
+        |  (CAST(bullets AS DOUBLE) / nl < 0.9) AS bullet_ok,
+        |  (CAST(ells AS DOUBLE) / nl <= 0.3) AS ellipsis_ok,
+        |  (nw > 0 AND CAST(alphaw AS DOUBLE) / nw >= 0.8) AS alpha_ok,
+        |  (stophits >= 2) AS stopword_ok FROM m)
+        |SELECT doc_id, wordcount_ok, mean_len_ok, symbol_ok, bullet_ok,
+        |  ellipsis_ok, alpha_ok, stopword_ok,
+        |  (wordcount_ok AND mean_len_ok AND symbol_ok AND bullet_ok
+        |   AND ellipsis_ok AND alpha_ok AND stopword_ok) AS keep
+        |FROM f""".stripMargin),
 
-    "text_c4_clean" -> ((s, dir) => {
+    Gate("text_c4_clean", ((s, dir) => {
       // C4 §2.2 line rules over line structure synthesized in-query (the
       // corpus is single-line word streams — same precedent as the
       // text_mask_pii synthesized contacts): terminal-punctuation +
@@ -2759,8 +3874,36 @@ object SparkEntry {
         .select(col("doc_id"), col("n_lines_kept").cast("long")
           .as("n_lines_kept"), col("keep"), col("clean_text"))
     }),
+      """WITH b AS (SELECT doc_id,
+        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
+        |s AS (SELECT doc_id, concat_ws(chr(10),
+        |  coalesce(array_to_string(list_slice(words, 1, 7), ' '), '') || ' end.',
+        |  coalesce(array_to_string(list_slice(words, 8, 10), ' '), ''),
+        |  coalesce(array_to_string(list_slice(words, 11, 15), ' '), '') || ' stop!',
+        |  'tiny line.',
+        |  coalesce(array_to_string(list_slice(words, 16, 21), ' '), '') || ' really?') AS base
+        | FROM b),
+        |s2 AS (SELECT doc_id,
+        |  CASE WHEN doc_id % 17 = 0
+        |       THEN base || chr(10) || 'lorem ipsum dolor sit amet.'
+        |       ELSE base END AS s1 FROM s),
+        |p AS (SELECT doc_id,
+        |  CASE WHEN doc_id % 23 = 0
+        |       THEN s1 || chr(10) || 'if (x) { return y; }'
+        |       ELSE s1 END AS page_text FROM s2),
+        |k AS (SELECT doc_id, page_text,
+        |  list_filter(string_split(page_text, chr(10)), x ->
+        |    regexp_matches(rtrim(x), '[.!?"]$')
+        |    AND (CASE WHEN trim(x) = '' THEN 0
+        |         ELSE len(string_split_regex(trim(x), '\s+')) END) >= 5) AS kept
+        | FROM p)
+        |SELECT doc_id, CAST(len(kept) AS BIGINT) AS n_lines_kept,
+        |  (len(kept) >= 3 AND NOT contains(page_text, '{')
+        |   AND NOT contains(lower(page_text), 'lorem ipsum')) AS keep,
+        |  array_to_string(kept, chr(10)) AS clean_text
+        |FROM k""".stripMargin),
 
-    "text_line_stats" -> ((s, dir) => {
+    Gate("text_line_stats", ((s, dir) => {
       // Gopher line-repetition signals over line structure synthesized
       // in-query (the corpus is single-line): line 3 repeats line 1, so
       // duplicate-line/char fractions are non-trivial and deterministic
@@ -2776,23 +3919,112 @@ object SparkEntry {
           ls.getField("dup_line_frac").as("dup_line_frac"),
           ls.getField("dup_char_frac").as("dup_char_frac"))
     }),
+      """WITH b AS (SELECT doc_id,
+        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
+        |p AS (SELECT doc_id, concat_ws(chr(10),
+        |  coalesce(array_to_string(list_slice(words, 1, 6), ' '), ''),
+        |  coalesce(array_to_string(list_slice(words, 7, 11), ' '), ''),
+        |  coalesce(array_to_string(list_slice(words, 1, 6), ' '), ''),
+        |  coalesce(array_to_string(list_slice(words, 12, 15), ' '), '')) AS page_text
+        | FROM b),
+        |m AS (SELECT doc_id,
+        |  string_split(page_text, chr(10)) AS lines FROM p),
+        |s AS (SELECT doc_id, len(lines) AS nl,
+        |  len(list_distinct(lines)) AS dl,
+        |  list_sum([length(x) for x in lines]) AS chars,
+        |  list_sum([length(x) for x in list_distinct(lines)]) AS dchars
+        | FROM m)
+        |SELECT doc_id, CAST(nl AS BIGINT) AS n_lines,
+        |  round(CAST(nl - dl AS DOUBLE) / nl, 6) AS dup_line_frac,
+        |  CASE WHEN chars = 0 THEN 0.0
+        |       ELSE round(CAST(chars - dchars AS DOUBLE) / chars, 6)
+        |  END AS dup_char_frac
+        |FROM s""".stripMargin),
 
-    "text_langid" -> ((s, dir) =>
+    Gate("text_langid", ((s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"), TA.langId(col("text")).as("lang_pred"))),
+      """WITH w AS (SELECT doc_id,
+        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
+        |sc AS (SELECT doc_id,
+        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
+        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
+        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
+        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
+        |  FROM w)
+        |SELECT doc_id,
+        | CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
+        |      WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
+        |      WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
+        |      WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
+        |      ELSE 'und' END AS lang_pred
+        |FROM sc""".stripMargin),
 
-    "text_token_stats_by_lang" -> ((s, dir) =>
+    Gate("text_token_stats_by_lang", ((s, dir) =>
       // tokenizer-fertility rollup: integer-exact token/subword/char
       // sums per predicted language, one bounded-domain exchange
       TA.tokenStatsByLang(t(s, dir, "documents"), "text")),
+      // the langid CASE is text_langid's twin verbatim; the measures are
+      // text_tokens' twin aggregated — integer-exact sums, fertility
+      // derived from them at the end (null when a bucket has no tokens).
+      // Blank-text guard: DuckDB's string_split_regex('', ...) yields ['']
+      // (1 element) where the engine's tokens() yields [], so the word
+      // list drops empty strings before any counting — a no-op on
+      // non-blank docs, parity-preserving if a regeneration adds blanks
+      """WITH w AS (SELECT doc_id, text,
+        |  list_filter(string_split_regex(trim(text), '\s+'),
+        |              x -> x != '') AS words FROM documents),
+        |sc AS (SELECT doc_id, text, words,
+        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
+        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
+        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
+        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
+        |  FROM w),
+        |l AS (SELECT doc_id, text, words,
+        | CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
+        |      WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
+        |      WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
+        |      WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
+        |      ELSE 'und' END AS lang_pred
+        |FROM sc)
+        |SELECT lang_pred, count(*) AS n_docs,
+        | CAST(sum(len(words)) AS BIGINT) AS n_tokens,
+        | CAST(sum(coalesce(list_sum([CAST(ceil(length(x) / 4.0) AS BIGINT) for x in words]), 0)) AS BIGINT) AS n_subwords,
+        | CAST(sum(length(text)) AS BIGINT) AS n_chars,
+        | CASE WHEN sum(len(words)) > 0 THEN
+        |   round(CAST(sum(coalesce(list_sum([CAST(ceil(length(x) / 4.0) AS BIGINT) for x in words]), 0)) AS DOUBLE)
+        |     / sum(len(words)), 6) END AS fertility
+        |FROM l GROUP BY lang_pred""".stripMargin),
 
-    "text_langid_confusion" -> ((s, dir) =>
+    Gate("text_langid_confusion", ((s, dir) =>
       // the heuristic's own eval harness: predictions vs the labeled
       // lang column, exact counts + per-label shares over the bounded
       // label×prediction domain
       TA.langIdConfusion(t(s, dir, "documents"), "text", "lang")),
+      // langid CASE verbatim again; exact counts, share derived from them
+      // over the bounded label domain
+      """WITH w AS (SELECT doc_id, lang,
+        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
+        |sc AS (SELECT doc_id, lang,
+        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
+        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
+        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
+        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
+        |  FROM w),
+        |l AS (SELECT lang AS label,
+        | CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
+        |      WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
+        |      WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
+        |      WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
+        |      ELSE 'und' END AS pred
+        |FROM sc),
+        |c AS (SELECT label, pred, count(*) AS n FROM l GROUP BY 1, 2)
+        |SELECT label, pred, n,
+        |  round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY label), 6)
+        |    AS label_share
+        |FROM c""".stripMargin),
 
-    "text_langid_lines" -> ((s, dir) => {
+    Gate("text_langid_lines", ((s, dir) => {
       // Dolma-style per-line language mixture: dominant language +
       // share of disagreeing lines per doc. The corpus is single-line,
       // so multi-line documents are synthesized IN-QUERY (the
@@ -2809,8 +4041,43 @@ object SparkEntry {
           concat_ws("\n", col("t0"), col("t1"), col("t2")).as("text"))
       graft.llm.TextAnalysis.langIdLines(multi, "doc_id", "text")
     }),
+      // the per-line twin: same langid CASE applied per non-blank line,
+      // bounded per-doc argmax + total
+      """WITH multi AS (SELECT a.doc_id,
+        |    a.text || chr(10) || b.text || chr(10) || c.text AS text
+        |    FROM documents a
+        |    JOIN documents b ON b.doc_id = a.doc_id + 1
+        |    JOIN documents c ON c.doc_id = a.doc_id + 2),
+        |ln AS (SELECT doc_id, line FROM (
+        |    SELECT doc_id, unnest(string_split(text, chr(10))) AS line
+        |    FROM multi) t WHERE length(trim(line)) > 0),
+        |w AS (SELECT doc_id, line,
+        |  string_split_regex(trim(line), '\s+') AS words FROM ln),
+        |sc AS (SELECT doc_id,
+        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
+        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
+        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
+        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
+        |  FROM w),
+        |pred AS (SELECT doc_id,
+        | CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
+        |      WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
+        |      WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
+        |      WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
+        |      ELSE 'und' END AS lang_pred
+        | FROM sc),
+        |pl AS (SELECT doc_id, lang_pred, count(*) AS cnt FROM pred GROUP BY 1, 2),
+        |r AS (SELECT doc_id, lang_pred, cnt,
+        |        row_number() OVER (PARTITION BY doc_id
+        |          ORDER BY cnt DESC, lang_pred) AS rn,
+        |        sum(cnt) OVER (PARTITION BY doc_id) AS n_lines
+        |      FROM pl)
+        |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
+        |  lang_pred AS dominant_lang, cnt AS n_dominant,
+        |  round(CAST(n_lines - cnt AS DOUBLE) / n_lines, 6) AS mixed_frac
+        |FROM r WHERE rn = 1""".stripMargin),
 
-    "text_hybrid_rrf" -> ((s, dir) => {
+    Gate("text_hybrid_rrf", ((s, dir) => {
       // hybrid retrieval: the BM25 sparse list fused with a dense
       // cosine list over the SAME 20 query ids (documents and
       // embeddings share the id space) via reciprocal-rank fusion —
@@ -2830,8 +4097,13 @@ object SparkEntry {
           col("rank"))
       graft.llm.Retrieval.rrfFuse(Seq(sparse, dense), k = 5)
     }),
+      // RRF hybrid: the full BM25 twin + the ann_cosine twin, fused on
+      // ranks only — each contribution is one exact division (the 1.0
+      // needs CAST AS DOUBLE: a decimal 1.0/(60+rank) would divide in
+      // DECIMAL), summed in source order, no quantization needed
+      TextHybridRrfOracle),
 
-    "text_hybrid_against" -> ((s, dir) => {
+    Gate("text_hybrid_against", ((s, dir) => {
       // the hybrid steady state: BOTH lists served from persisted
       // indexes — the BM25 inverted index and the VectorIndex, probed
       // EXHAUSTIVELY (nprobe = nlist ⇒ the IVF serve IS brute force:
@@ -2854,8 +4126,11 @@ object SparkEntry {
           col("rank"))
       graft.llm.Retrieval.rrfFuse(Seq(sparse, dense), k = 5)
     }),
+      // the hybrid steady state under the SAME twin: both lists served
+      // from persisted indexes (nprobe = nlist makes the IVF serve exact)
+      TextHybridRrfOracle),
 
-    "text_bm25_index_merge" -> ((s, dir) => {
+    Gate("text_bm25_index_merge", ((s, dir) => {
       // incremental index maintenance: the corpus indexed as two
       // disjoint halves, merged relationally (integer-exact), then
       // served — the oracle is the FULL-REBUILD twin (identical SQL to
@@ -2870,8 +4145,9 @@ object SparkEntry {
             1, 6), " ").as("query_text"))
       graft.llm.Retrieval.bm25TopKAgainst(idx, q, k = 5)
     }),
+      Bm25TopkOracle),
 
-    "text_bm25_certify" -> ((s, dir) => {
+    Gate("text_bm25_certify", ((s, dir) => {
       // certification with teeth behind the merge contract: the
       // two-half merged index certified against a from-scratch rebuild
       // on the standard query set — every query must agree EXACTLY
@@ -2888,8 +4164,15 @@ object SparkEntry {
             1, 6), " ").as("query_text"))
       graft.llm.Retrieval.certifyBm25Index(idx, docs, q, k = 5)
     }),
+      // certification twin: the rebuild top-k's per-query counts with
+      // certified = true — merge ≡ rebuild is bit-exact, so the Spark
+      // side's exact-agreement audit must land on full agreement; any
+      // divergence (overlapping parts, lost batch) hash-mismatches here
+      s"""SELECT query_id, count(*) AS n_served, count(*) AS n_rebuilt,
+         |  count(*) AS n_agree, true AS certified
+         |FROM ($Bm25TopkOracle) t GROUP BY query_id""".stripMargin),
 
-    "text_bm25_maintain" -> ((s, dir) => {
+    Gate("text_bm25_maintain", ((s, dir) => {
       // the BM25 certify→regenerate loop end-to-end: serving index =
       // even half, the odd half arrives as the batch, maintainBm25Index
       // merges → certifies against the full-corpus rebuild → keeps the
@@ -2905,8 +4188,14 @@ object SparkEntry {
         graft.llm.Retrieval.bm25Index(docs.filter(col("doc_id") % 2 === 0)),
         docs.filter(col("doc_id") % 2 === 1), docs, q, k = 5).certificate
     }),
+      // the maintenance loop's certificate: merge ≡ rebuild is bit-exact
+      // under the disjointness contract, so maintainBm25Index must keep
+      // the merge and certify all-green — text_bm25_certify's twin
+      s"""SELECT query_id, count(*) AS n_served, count(*) AS n_rebuilt,
+         |  count(*) AS n_agree, true AS certified
+         |FROM ($Bm25TopkOracle) t GROUP BY query_id""".stripMargin),
 
-    "retrieval_metrics" -> ((s, dir) => {
+    Gate("retrieval_metrics", ((s, dir) => {
       // the evaluation side: recall@5 / RR / nDCG@5 of the BM25 run
       // against a same-source relevance set (20 sources × 25 docs →
       // n_rel = 25 per query) — everything after the run is
@@ -2924,8 +4213,62 @@ object SparkEntry {
         .select("query_id", "doc_id")
       graft.llm.Retrieval.rankingMetrics(run, truth, k = 5)
     }),
+      // retrieval evaluation: the BM25 twin as the run, same-source truth,
+      // integer hits/n_rel + exact 1/first_rel + quantized nDCG (the ln
+      // ulp spread cancels only approximately in the DCG/IDCG ratio)
+      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm),
+        |tk AS (SELECT doc_id, token FROM tok WHERE length(token) > 0),
+        |tf AS (SELECT doc_id, token, count(*) AS tf FROM tk GROUP BY 1, 2),
+        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
+        |dfq AS (SELECT token, count(*) AS docfreq FROM tf GROUP BY 1),
+        |st AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
+        |tot AS (SELECT coalesce(sum(dl), 0) AS toklen FROM dl),
+        |qs AS (SELECT doc_id AS query_id,
+        |       array_to_string(list_slice(string_split(t, ' '), 1, 6), ' ') AS qt
+        |       FROM norm WHERE doc_id % 25 = 0 AND doc_id < 500),
+        |qtm AS (SELECT DISTINCT query_id, token FROM
+        |       (SELECT query_id, unnest(string_split(qt, ' ')) AS token FROM qs)
+        |       WHERE length(token) > 0),
+        |w AS (SELECT q.query_id, f.doc_id, f.token,
+        |      ln((st.n - d.docfreq + 0.5) / (d.docfreq + 0.5) + 1.0) *
+        |      ((f.tf * (CAST(1.2 AS DOUBLE) + 1.0)) /
+        |       (f.tf + 1.2 * (1.0 - 0.75 + 0.75 * l.dl /
+        |          (CAST(tot.toklen AS DOUBLE) / st.n)))) AS w
+        |      FROM qtm q JOIN dfq d USING (token) JOIN tf f USING (token)
+        |      JOIN dl l ON f.doc_id = l.doc_id, st, tot),
+        |sc AS (SELECT query_id, doc_id,
+        |       round(list_sum(list(w ORDER BY token)), 10) AS score
+        |       FROM w GROUP BY 1, 2),
+        |rkk AS (SELECT query_id, doc_id,
+        |       row_number() OVER (PARTITION BY query_id
+        |                          ORDER BY score DESC, doc_id) AS rank FROM sc),
+        |run AS (SELECT query_id, doc_id, rank FROM rkk WHERE rank <= 5),
+        |truth AS (SELECT a.doc_id AS query_id, b.doc_id AS doc_id
+        |          FROM documents a JOIN documents b USING (source)
+        |          WHERE a.doc_id % 25 = 0 AND a.doc_id < 500),
+        |nrel AS (SELECT query_id, count(*) AS n_rel FROM truth GROUP BY 1),
+        |j AS (SELECT r.query_id, r.rank,
+        |      CASE WHEN t.doc_id IS NOT NULL THEN 1 ELSE 0 END AS rel
+        |      FROM run r LEFT JOIN truth t
+        |      ON r.query_id = t.query_id AND r.doc_id = t.doc_id),
+        |per AS (SELECT query_id, CAST(sum(rel) AS BIGINT) AS hits,
+        |        min(CASE WHEN rel = 1 THEN rank END) AS first_rel,
+        |        list(rank ORDER BY rank) FILTER (WHERE rel = 1) AS rel_ranks
+        |        FROM j GROUP BY 1)
+        |SELECT p.query_id, n.n_rel, p.hits,
+        |  round(CAST(p.hits AS DOUBLE) / n.n_rel, 6) AS recall,
+        |  coalesce(CAST(1.0 AS DOUBLE) / p.first_rel, 0.0) AS rr,
+        |  round(
+        |    coalesce(list_sum([ln(2.0) / ln(x + 1.0)
+        |        for x in coalesce(p.rel_ranks, [])]), 0.0) /
+        |    list_sum([ln(2.0) / ln(i + 1.0)
+        |        for i in range(1, least(n.n_rel, 5) + 1)]),
+        |    10) AS ndcg
+        |FROM per p JOIN nrel n USING (query_id)""".stripMargin),
 
-    "text_bm25_topk" -> ((s, dir) => {
+    Gate("text_bm25_topk", ((s, dir) => {
       // sparse lexical retrieval: a FIXED 20-query set (every 25th doc
       // under id 500 — the whole sf0.001 id range, the vec_id<100
       // convention) against the growing corpus; the first 6 normalized
@@ -2940,8 +4283,18 @@ object SparkEntry {
             1, 6), " ").as("query_text"))
       graft.llm.Retrieval.bm25TopK(docs, q, k = 5)
     }),
+      // BM25 (Lucene variant): every product/quotient is parenthesized as
+      // the engine groups it, the per-pair sum is a token-ordered list_sum
+      // matching the engine's sorted left fold, and the score is rounded
+      // to 10 dp BEFORE ranking on both sides (ln is an ulp apart between
+      // libm and either JVM log — see Retrieval scaladoc). The k1+1 term
+      // needs CAST(1.2 AS DOUBLE): DuckDB literals are DECIMAL, so
+      // (1.2 + 1.0) would be the EXACT decimal 2.2 while the JVM adds
+      // doubles (2.1999999999999997) — an ulp apart after the multiply.
+      // The other literals (0.5, 0.75, 1.0) are dyadic-exact in both.
+      Bm25TopkOracle),
 
-    "text_bm25_incremental" -> ((s, dir) => {
+    Gate("text_bm25_incremental", ((s, dir) => {
       // the Against/serving form: the index is built from the BASE
       // corpus only (doc_id % 500 < 400 — 4/5 of every id block, so the
       // indexed corpus grows with the data), and TODAY'S batch (fixed
@@ -2957,8 +4310,12 @@ object SparkEntry {
             1, 6), " ").as("query_text"))
       graft.llm.Retrieval.bm25TopKAgainst(idx, q, k = 5)
     }),
+      // the Against form: tf/dfq/dl/N/toklen all come from the BASE slice
+      // (doc_id % 500 < 400) while the query batch is the copy-0 tail —
+      // the engine's index-once-query-many contract, same float discipline
+      Bm25IncrementalOracle),
 
-    "text_bm25_feed_maintain" -> ((s, dir) => {
+    Gate("text_bm25_feed_maintain", ((s, dir) => {
       // FEED-DRIVEN BM25 maintenance over a mutating lakehouse corpus:
       // bootstrap the index from the gen-0 snapshot (which includes
       // junk docs a takedown later removes), then consume the (0,1]
@@ -2998,8 +4355,10 @@ object SparkEntry {
             1, 6), " ").as("query_text"))
       graft.llm.Retrieval.bm25TopKAgainst(maintained, q, k = 5)
     }),
+      // feed-maintained BM25 serves bit-identically to the rebuild
+      Bm25IncrementalOracle),
 
-    "text_bm25_feed_tracked" -> ((s, dir) => {
+    Gate("text_bm25_feed_tracked", ((s, dir) => {
       // the CHECKPOINTED consumer over the same mutating corpus:
       // bootstrap a TRACKED index at the gen-0 watermark, then let
       // FeedConsumer pull TWO successive windows itself — (0,1] and
@@ -3051,8 +4410,9 @@ object SparkEntry {
             1, 6), " ").as("query_text"))
       graft.llm.Retrieval.bm25TopKAgainst(maintained, q, k = 5)
     }),
+      Bm25IncrementalOracle),
 
-    "text_script_profile" -> ((s, dir) =>
+    Gate("text_script_profile", ((s, dir) =>
       // character-class / writing-system profile: codegen'd counting
       // classes inside the scan, zero shuffle
       t(s, dir, "documents").select(col("doc_id"),
@@ -3060,14 +4420,38 @@ object SparkEntry {
         .select(col("doc_id"), col("p.n_latin"), col("p.n_digit"),
           col("p.n_space"), col("p.n_han"), col("p.n_other_nonascii"),
           col("p.script"))),
+      // RE2's \p{Han} ≡ Java's \p{IsHan}; counts by remove-and-diff in
+      // code points (both engines' length/regexp_replace are
+      // code-point-aware)
+      """WITH c AS (SELECT doc_id,
+        |  length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')) AS n_latin,
+        |  length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
+        |  length(text) - length(regexp_replace(text, '[ \t\n\x0b\f\r]', '', 'g')) AS n_space,
+        |  length(text) - length(regexp_replace(text, '\p{Han}', '', 'g')) AS n_han,
+        |  length(regexp_replace(text, '[\x00-\x7f]', '', 'g')) AS n_nonascii
+        |  FROM documents)
+        |SELECT doc_id, CAST(n_latin AS INTEGER) AS n_latin,
+        |  CAST(n_digit AS INTEGER) AS n_digit,
+        |  CAST(n_space AS INTEGER) AS n_space,
+        |  CAST(n_han AS INTEGER) AS n_han,
+        |  CAST(n_nonascii - n_han AS INTEGER) AS n_other_nonascii,
+        |  CASE WHEN n_han > n_latin THEN 'han'
+        |       WHEN n_latin > 0 THEN 'latin'
+        |       WHEN n_nonascii - n_han > 0 THEN 'other'
+        |       ELSE 'none' END AS script
+        |FROM c""".stripMargin),
 
-    "text_normalize" -> ((s, dir) =>
+    Gate("text_normalize", ((s, dir) =>
       // canonical dedup-front-end normalization (lowercase → ascii class →
       // whitespace collapse) — engine-portable regexes, full oracle
       t(s, dir, "documents").select(
         col("doc_id"), TA.normalizeText(col("text")).as("norm"))),
+      """SELECT doc_id,
+        | trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
+        |   '\s+', ' ', 'g')) AS norm
+        |FROM documents""".stripMargin),
 
-    "text_mask_pii" -> ((s, dir) =>
+    Gate("text_mask_pii", ((s, dir) =>
       // PII masking over synthesized-in-query contact strings (the corpus
       // itself carries no emails/IPs): email → IP → long-number order
       t(s, dir, "documents").select(
@@ -3075,8 +4459,20 @@ object SparkEntry {
         TA.maskPii(concat(lit("contact u"), col("doc_id"),
           lit("@ex.org ip 10.0.0.1 acct 12345678 t: "), col("text")))
           .as("masked"))),
+      """WITH t AS (SELECT doc_id,
+        |  'contact u' || CAST(doc_id AS VARCHAR) ||
+        |  '@ex.org ip 10.0.0.1 acct 12345678 t: ' || text AS raw
+        |  FROM documents)
+        |SELECT doc_id,
+        | regexp_replace(
+        |   regexp_replace(
+        |     regexp_replace(raw,
+        |       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |     '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
+        |   '\b\d{7,}\b', '<NUM>', 'g') AS masked
+        |FROM t""".stripMargin),
 
-    "text_strip_html" -> ((s, dir) =>
+    Gate("text_strip_html", ((s, dir) =>
       // C4-style HTML→text over markup synthesized around the corpus
       // text (script/style subtrees, comments, tags, entities)
       t(s, dir, "documents").select(
@@ -3087,8 +4483,26 @@ object SparkEntry {
           col("text"),
           lit(" &amp; <b>bold</b> &lt;tag&gt; &#39;q&#39;</p></body></html>")))
           .as("clean"))),
+      // same regex chain as the engine; DuckDB needs the explicit 'g' flag
+      // (Spark's regexp_replace is always global) and literal replace()
+      // for the entities
+      """WITH t AS (SELECT doc_id,
+        |  '<html><head><style>body{color:red}</style><script>var x=1;</script></head><body><!-- id --><p class="a">'
+        |  || text || ' &amp; <b>bold</b> &lt;tag&gt; &#39;q&#39;</p></body></html>' AS h
+        |  FROM documents),
+        |s1 AS (SELECT doc_id, regexp_replace(h,
+        |  '(?is)<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g') AS h FROM t),
+        |s2 AS (SELECT doc_id, regexp_replace(h, '(?s)<!--.*?-->', ' ', 'g') AS h FROM s1),
+        |s3 AS (SELECT doc_id, regexp_replace(h, '<[^>]+>', ' ', 'g') AS h FROM s2),
+        |s4 AS (SELECT doc_id,
+        |  replace(replace(replace(replace(replace(replace(h,
+        |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
+        |    '&apos;', ''''), '&nbsp;', ' ') AS h FROM s3),
+        |s5 AS (SELECT doc_id, replace(h, '&amp;', '&') AS h FROM s4)
+        |SELECT doc_id, trim(regexp_replace(h, '\s+', ' ', 'g')) AS clean
+        |FROM s5""".stripMargin),
 
-    "text_url_canonical" -> ((s, dir) =>
+    Gate("text_url_canonical", ((s, dir) =>
       // URL canonicalization over per-doc synthesized messy URLs: mixed
       // case, www, default port, tracking params, fragment, the lot —
       // path/query case must survive while the authority lowers
@@ -3099,22 +4513,52 @@ object SparkEntry {
           lit(".COM:443/Path/"), col("doc_id"),
           lit("/?utm_source=feed&ref="), col("doc_id"),
           lit("&utm_campaign=x#sec"))).as("url"))),
+      // group references: $n on the Spark side, \n here — the two engines'
+      // replacement syntaxes for the same RE2/Java-common patterns
+      """WITH t AS (SELECT doc_id,
+        |  'HTTPS://WWW.ExAmple' || CAST(doc_id % 7 AS VARCHAR) ||
+        |  '.COM:443/Path/' || CAST(doc_id AS VARCHAR) ||
+        |  '/?utm_source=feed&ref=' || CAST(doc_id AS VARCHAR) ||
+        |  '&utm_campaign=x#sec' AS u FROM documents),
+        |c1 AS (SELECT doc_id,
+        |  lower(regexp_extract(u, '(?i)^(https?://[^/?#]*)', 1)) ||
+        |  regexp_replace(u, '(?i)^https?://[^/?#]*', '') AS u FROM t),
+        |c2 AS (SELECT doc_id, regexp_replace(u, '#.*$', '') AS u FROM c1),
+        |c3 AS (SELECT doc_id,
+        |  regexp_replace(u, '^(https?://)www\.', '\1') AS u FROM c2),
+        |c4 AS (SELECT doc_id, regexp_replace(regexp_replace(u,
+        |  '^(https://(?:[^/@?#]*@)?[^/:?#]*):443([/?#]|$)', '\1\2'),
+        |  '^(http://(?:[^/@?#]*@)?[^/:?#]*):80([/?#]|$)', '\1\2') AS u FROM c3),
+        |c5 AS (SELECT doc_id, regexp_replace(u,
+        |  '([?&])(utm_[a-z]+|fbclid)=[^&#]*', '\1', 'g') AS u FROM c4),
+        |c6 AS (SELECT doc_id, regexp_replace(u, '\?&', '?', 'g') AS u FROM c5),
+        |c7 AS (SELECT doc_id, regexp_replace(u, '&&+', '&', 'g') AS u FROM c6),
+        |c8 AS (SELECT doc_id, regexp_replace(u, '[?&]+$', '') AS u FROM c7)
+        |SELECT doc_id, regexp_replace(u, '/+$', '') AS url FROM c8""".stripMargin),
 
-    "corpus_sample_hash" -> ((s, dir) =>
+    Gate("corpus_sample_hash", ((s, dir) =>
       // deterministic content-hash sample (corpus mixing): md5-threshold
       // predicate, reproducible across engines/partitionings/runs
       t(s, dir, "documents")
         .filter(TA.sampleByHash(col("text"), 0.25))
         .select("doc_id")),
+      """SELECT doc_id FROM documents
+        |WHERE substring(md5(text), 1, 8) < '40000000'""".stripMargin),
 
-    "corpus_stratified_sample" -> ((s, dir) =>
+    Gate("corpus_stratified_sample", ((s, dir) =>
       // exact-k per-stratum sample on the bounded TopKByKey aggregate
       // (map-side combining, O(k·strata) exchange); the oracle is the
       // window row_number twin that sorts every stratum in full
       graft.llm.Corpus.stratifiedSample(t(s, dir, "documents"),
         "lang", "doc_id", k = 20)),
+      """SELECT lang, rk, doc_id FROM (
+        |  SELECT lang, doc_id, row_number() OVER (
+        |    PARTITION BY lang
+        |    ORDER BY md5('strat:' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
+        |  FROM documents)
+        |WHERE rk <= 20""".stripMargin),
 
-    "corpus_stratified_weighted" -> ((s, dir) =>
+    Gate("corpus_stratified_weighted", ((s, dir) =>
       // per-stratum k from a weights map on the per-group-k TopKByKey
       // (exchange O(Σk), not O(k_max·strata)); the oracle is the window
       // row_number twin with a CASE'd rank cutoff
@@ -3122,15 +4566,33 @@ object SparkEntry {
         "lang", "doc_id",
         ks = Map("en" -> 25, "de" -> 10, "fr" -> 5),
         defaultK = 3, seed = "wstrat")),
+      """SELECT lang, rk, doc_id FROM (
+        |  SELECT lang, doc_id, row_number() OVER (
+        |    PARTITION BY lang
+        |    ORDER BY md5('wstrat:' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
+        |  FROM documents)
+        |WHERE rk <= CASE lang WHEN 'en' THEN 25 WHEN 'de' THEN 10
+        |                      WHEN 'fr' THEN 5 ELSE 3 END""".stripMargin),
 
-    "corpus_weighted_sample" -> ((s, dir) =>
+    Gate("corpus_weighted_sample", ((s, dir) =>
       // Efraimidis–Spirakis weighted sampling without replacement:
       // inclusion odds scale with n_chars; priorities are scan-side,
       // top-k is a TakeOrderedAndProject, the rank window orders ≤k rows
       graft.llm.Corpus.weightedSample(t(s, dir, "documents"), "doc_id",
         col("n_chars"), k = 50)),
+      // E–S priority twin: u exact in a double ((h13+1)/(2^52+1)), ln
+      // quantized to 10 dp before ranking (the BM25 ln discipline), id
+      // tie-break
+      """WITH p AS (SELECT doc_id, CAST(n_chars AS DOUBLE) AS weight,
+        |  round(ln((('0x' || substr(md5('wsamp:' || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT + 1)
+        |          / 4503599627370497.0) / n_chars, 10) AS pri
+        |  FROM documents)
+        |SELECT rank, doc_id, weight FROM (
+        |  SELECT doc_id, weight, row_number() OVER (
+        |    ORDER BY pri DESC, doc_id) AS rank FROM p) t
+        |WHERE rank <= 50""".stripMargin),
 
-    "corpus_report" -> ((s, dir) =>
+    Gate("corpus_report", ((s, dir) =>
       // data-card rollup per (source, lang): doc/token/char totals and
       // the langid-agreement count — one partial-agg exchange over a
       // bounded group domain, every measure integer-exact (a double
@@ -3143,8 +4605,35 @@ object SparkEntry {
           max(length(col("text")).cast("long")).as("max_chars"),
           sum(when(TA.langId(col("text")) === col("lang"), 1L)
             .otherwise(0L)).as("n_langid_agree"))),
+      // the langid CASE is text_langid's oracle verbatim; every rolled-up
+      // measure is integer-exact
+      """WITH w AS (SELECT source, lang, text,
+        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
+        |sc AS (SELECT source, lang, text, words,
+        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
+        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
+        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
+        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
+        |  FROM w),
+        |p AS (SELECT source, lang,
+        |  CASE WHEN trim(text) = '' THEN 0 ELSE len(words) END AS ntok,
+        |  length(text) AS nchars,
+        |  CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
+        |       WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
+        |       WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
+        |       WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
+        |       ELSE 'und' END AS lang_pred
+        |  FROM sc)
+        |SELECT source, lang,
+        |  CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(ntok) AS BIGINT) AS n_tokens,
+        |  CAST(sum(nchars) AS BIGINT) AS n_chars,
+        |  CAST(max(nchars) AS BIGINT) AS max_chars,
+        |  CAST(sum(CASE WHEN lang_pred = lang THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_langid_agree
+        |FROM p GROUP BY 1, 2""".stripMargin),
 
-    "corpus_temperature_mix" -> ((s, dir) =>
+    Gate("corpus_temperature_mix", ((s, dir) =>
       // T=0.5 temperature rebalancing with DATA-DERIVED rates (mT5-style
       // sqrt flattening): one bounded stratum-count aggregate, then the
       // zero-shuffle content-hash predicate. Stratified by lang — the
@@ -3153,8 +4642,21 @@ object SparkEntry {
       graft.llm.Corpus.temperatureMix(t(s, dir, "documents"),
           "lang", "text")
         .select("doc_id", "lang")),
+      // rates derive from the data in IEEE-exact steps (count → divide →
+      // sqrt), then floor-quantize to a 32-bit hex cutoff — both engines
+      // compute the identical double and the identical threshold string
+      """WITH n AS (SELECT lang, count(*) AS ns FROM documents
+        |           WHERE lang IS NOT NULL GROUP BY 1),
+        |m AS (SELECT min(ns) AS nmin FROM n),
+        |r AS (SELECT lang,
+        |        sqrt(CAST(nmin AS DOUBLE) / CAST(ns AS DOUBLE)) AS rate
+        |      FROM n, m)
+        |SELECT d.doc_id, d.lang
+        |FROM documents d JOIN r USING (lang)
+        |WHERE substring(md5(d.text), 1, 8) <
+        |  lower(lpad(to_hex(CAST(floor(rate * 4294967295.0) AS BIGINT)), 8, '0'))""".stripMargin),
 
-    "corpus_temperature_mix_stream" -> ((s, dir) => {
+    Gate("corpus_temperature_mix_stream", ((s, dir) => {
       // the ACTUAL streaming path under the oracle gate (not a batch
       // twin): AvailableNow over the same parquet, rates derived once
       // from the static reference, memory sink drained to a DataFrame.
@@ -3167,21 +4669,70 @@ object SparkEntry {
         .select("doc_id", "lang")
       drainStream(mixed, "graft_tmix_stream")
     }),
+      // the streaming path must land on the identical cut: same twin
+      """WITH n AS (SELECT lang, count(*) AS ns FROM documents
+        |           WHERE lang IS NOT NULL GROUP BY 1),
+        |m AS (SELECT min(ns) AS nmin FROM n),
+        |r AS (SELECT lang,
+        |        sqrt(CAST(nmin AS DOUBLE) / CAST(ns AS DOUBLE)) AS rate
+        |      FROM n, m)
+        |SELECT d.doc_id, d.lang
+        |FROM documents d JOIN r USING (lang)
+        |WHERE substring(md5(d.text), 1, 8) <
+        |  lower(lpad(to_hex(CAST(floor(rate * 4294967295.0) AS BIGINT)), 8, '0'))""".stripMargin),
 
-    "text_collocations" -> ((s, dir) =>
+    Gate("text_collocations", ((s, dir) =>
       // PMI-lift top bigram collocations; marginals and the total derive
       // from the one bigram-count table (single corpus scan)
       graft.llm.Corpus.collocations(t(s, dir, "documents"),
         "doc_id", "text", minCount = 20, k = 25)),
+      // marginals and the total are position sums over the bigram counts —
+      // the engine's derived-marginal identity, restated relationally
+      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |bg AS (SELECT unnest([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]) AS bigram
+        |       FROM (SELECT string_split(t, ' ') AS ws FROM norm WHERE t <> '')),
+        |bf AS (SELECT bigram, count(*) AS c_xy FROM bg GROUP BY 1),
+        |xf AS (SELECT split_part(bigram, ' ', 1) AS x, sum(c_xy) AS c_x
+        |       FROM bf GROUP BY 1),
+        |yf AS (SELECT split_part(bigram, ' ', 2) AS y, sum(c_xy) AS c_y
+        |       FROM bf GROUP BY 1),
+        |tot AS (SELECT sum(c_xy) AS n FROM bf),
+        |sc AS (SELECT bigram, c_xy,
+        |         CAST(round(1000000.0 * c_xy * n /
+        |           CAST(CAST(c_x AS HUGEINT) * c_y AS DOUBLE)) AS BIGINT) AS lift_ppm
+        |       FROM bf JOIN xf ON split_part(bigram, ' ', 1) = x
+        |                JOIN yf ON split_part(bigram, ' ', 2) = y, tot
+        |       WHERE c_xy >= 20)
+        |SELECT rk, bigram, c_xy, lift_ppm FROM (
+        |  SELECT bigram, c_xy, lift_ppm,
+        |    row_number() OVER (ORDER BY lift_ppm DESC, bigram) AS rk FROM sc)
+        |WHERE rk <= 25""".stripMargin),
 
-    "emb_label_margin" -> ((s, dir) => {
+    Gate("emb_label_margin", ((s, dir) => {
       // embedding-space label coherence: best same-label vs other-label
       // cosine per query vector (broadcast queries, corpus unshuffled)
       val emb = t(s, dir, "embeddings")
       Similarity.labelMargin(emb, emb.filter(col("vec_id") < 200))
     }),
+      // the maxes and the winner verdict are decided on UNROUNDED doubles
+      // computed in the ann_cosine_topk dot-product convention
+      """WITH c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |q AS (SELECT vec_id, label, v FROM c WHERE vec_id < 200),
+        |s AS (SELECT q.vec_id AS query_id, q.label AS label,
+        |        (c.label = q.label) AS same,
+        |        list_sum([q.v[i] * c.v[i] for i in range(1, 65)]) /
+        |        (sqrt(list_sum([q.v[i] * q.v[i] for i in range(1, 65)])) *
+        |         sqrt(list_sum([c.v[i] * c.v[i] for i in range(1, 65)]))) AS sim
+        |      FROM c CROSS JOIN q WHERE q.vec_id <> c.vec_id)
+        |SELECT query_id, label,
+        |  round(max(CASE WHEN same THEN sim END), 6) AS best_same,
+        |  round(max(CASE WHEN NOT same THEN sim END), 6) AS best_other,
+        |  max(CASE WHEN same THEN sim END) >
+        |    max(CASE WHEN NOT same THEN sim END) AS same_wins
+        |FROM s GROUP BY 1, 2""".stripMargin),
 
-    "emb_label_prototypes" -> ((s, dir) =>
+    Gate("emb_label_prototypes", ((s, dir) =>
       // per-label mean embedding (class prototypes / nearest-class-mean
       // baseline): exact 1e-9-quantized integer sums, ONE
       // correctly-rounded division; flattened to (label, d, m) rows for
@@ -3189,16 +4740,51 @@ object SparkEntry {
       Similarity.meanPoolVectors(t(s, dir, "embeddings"), "label")
         .select(col("label"), col("n_vectors"),
           posexplode(col("centroid")).as(Seq("d", "m")))),
+      // the twin rebuilds the identical 1e-9-quantized integer sums and
+      // performs the same single division — bit-exact doubles
+      """WITH c AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings WHERE embedding IS NOT NULL),
+        |ex AS (SELECT label, i - 1 AS d,
+        |         CAST(round(v[i] * 1000000000) AS BIGINT) AS x
+        |       FROM c, (SELECT unnest(range(1, 65)) AS i) r),
+        |sm AS (SELECT label, d, sum(x) AS s, count(*) AS n
+        |       FROM ex GROUP BY 1, 2)
+        |SELECT label, CAST(n AS BIGINT) AS n_vectors, CAST(d AS INTEGER) AS d,
+        |       CAST(s AS DOUBLE) / (1000000000.0 * n) AS m
+        |FROM sm""".stripMargin),
 
-    "emb_prototype_classify" -> ((s, dir) => {
+    Gate("emb_prototype_classify", ((s, dir) => {
       // nearest-class-mean baseline: every query takes its most-similar
       // prototype's label; prototypes exact (emb_label_prototypes),
       // ranking on bit-exact cosines with a label tie-break
       val emb = t(s, dir, "embeddings")
       Similarity.prototypeClassify(emb, emb.filter(col("vec_id") < 200))
     }),
+      // prototypes via the emb_label_prototypes integer sums, assembled
+      // in dimension order; argmax on the same cosSql doubles
+      s"""WITH c AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v
+         |           FROM embeddings
+         |           WHERE embedding IS NOT NULL AND label IS NOT NULL),
+         |ex AS (SELECT label, i - 1 AS d,
+         |         CAST(round(v[i] * 1000000000) AS BIGINT) AS x
+         |       FROM c, (SELECT unnest(range(1, 65)) AS i) r),
+         |pr AS (SELECT label AS pl,
+         |         list(CAST(s AS DOUBLE) / (1000000000.0 * n) ORDER BY d) AS pv
+         |       FROM (SELECT label, d, sum(x) AS s, count(*) AS n
+         |             FROM ex GROUP BY 1, 2)
+         |       GROUP BY label),
+         |q AS (SELECT vec_id AS query_id, label,
+         |        CAST(embedding AS DOUBLE[]) AS qv
+         |      FROM embeddings WHERE vec_id < 200),
+         |sc AS (SELECT q.query_id, q.label, pr.pl,
+         |         ${cosSql("q.qv", "pr.pv")} AS sim
+         |       FROM q CROSS JOIN pr)
+         |SELECT query_id, label, pl AS predicted, pl = label AS correct
+         |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+         |        ORDER BY sim DESC, pl) AS rr FROM sc) t
+         |WHERE rr = 1""".stripMargin),
 
-    "emb_bitext_margin" -> ((s, dir) => {
+    Gate("emb_bitext_margin", ((s, dir) => {
       // margin-based parallel-pair mining between two DISJOINT embedding
       // slices (the CCMatrix/LASER recipe): best target per source by
       // the ratio margin — raw cosine normalized by both sides' top-k
@@ -3207,8 +4793,37 @@ object SparkEntry {
       Similarity.marginBitext(emb.filter(col("vec_id") < 60),
         emb.filter(col("vec_id") >= 200), k = 4)
     }),
+      // both neighborhood means ride exact integer sums of 1e-6-quantized
+      // cosines; the margin expression's association order matches the
+      // engine token-for-token, ranking on the 10 dp quantization
+      s"""WITH s AS (SELECT vec_id AS sid, CAST(embedding AS DOUBLE[]) AS v
+         |           FROM embeddings WHERE vec_id < 60),
+         |t AS (SELECT vec_id AS tid, CAST(embedding AS DOUBLE[]) AS v
+         |      FROM embeddings WHERE vec_id >= 200),
+         |fa AS (SELECT sid, tid, sim, row_number() OVER (PARTITION BY sid
+         |         ORDER BY sim DESC, tid) AS rk
+         |       FROM (SELECT s.sid, t.tid, ${cosSql("t.v", "s.v")} AS sim
+         |             FROM s CROSS JOIN t)),
+         |fwd AS (SELECT sid, tid, sim FROM fa WHERE rk <= 4),
+         |sf AS (SELECT sid, sum(CAST(round(sim * 1e6) AS BIGINT)) AS sf,
+         |              count(*) AS cf FROM fwd GROUP BY 1),
+         |ba AS (SELECT tid, sid, sim, row_number() OVER (PARTITION BY tid
+         |         ORDER BY sim DESC, sid) AS rk
+         |       FROM (SELECT t.tid, s.sid, ${cosSql("s.v", "t.v")} AS sim
+         |             FROM t CROSS JOIN s)),
+         |sb AS (SELECT tid, sum(CAST(round(sim * 1e6) AS BIGINT)) AS sb,
+         |              count(*) AS cb FROM ba WHERE rk <= 4 GROUP BY 1),
+         |m AS (SELECT f.sid, f.tid, f.sim,
+         |        f.sim / ((CAST(sf AS DOUBLE) / (1000000.0 * cf) +
+         |          CAST(sb AS DOUBLE) / (1000000.0 * cb)) * 0.5) AS margin
+         |      FROM fwd f JOIN sf USING (sid) JOIN sb USING (tid))
+         |SELECT sid AS src_id, tid AS tgt_id, round(sim, 6) AS sim,
+         |       round(margin, 6) AS margin
+         |FROM (SELECT *, row_number() OVER (PARTITION BY sid
+         |        ORDER BY round(margin, 10) DESC, tid) AS best FROM m)
+         |WHERE best = 1""".stripMargin),
 
-    "emb_bitext_mutual" -> ((s, dir) => {
+    Gate("emb_bitext_mutual", ((s, dir) => {
       // the intersection strategy: reciprocal margin-best only — y must
       // be x's best target AND x must be y's best source (the margin
       // value is symmetric; only the candidate sets differ)
@@ -3216,22 +4831,87 @@ object SparkEntry {
       Similarity.marginBitext(emb.filter(col("vec_id") < 60),
         emb.filter(col("vec_id") >= 200), k = 4, mutual = true)
     }),
+      // the forward twin + the backward argmax over the bwd candidate
+      // set, semi-joined — reciprocal best only
+      s"""WITH s AS (SELECT vec_id AS sid, CAST(embedding AS DOUBLE[]) AS v
+         |           FROM embeddings WHERE vec_id < 60),
+         |t AS (SELECT vec_id AS tid, CAST(embedding AS DOUBLE[]) AS v
+         |      FROM embeddings WHERE vec_id >= 200),
+         |fa AS (SELECT sid, tid, sim, row_number() OVER (PARTITION BY sid
+         |         ORDER BY sim DESC, tid) AS rk
+         |       FROM (SELECT s.sid, t.tid, ${cosSql("t.v", "s.v")} AS sim
+         |             FROM s CROSS JOIN t)),
+         |fwd AS (SELECT sid, tid, sim FROM fa WHERE rk <= 4),
+         |sf AS (SELECT sid, sum(CAST(round(sim * 1e6) AS BIGINT)) AS sf,
+         |              count(*) AS cf FROM fwd GROUP BY 1),
+         |ba AS (SELECT tid, sid, sim, row_number() OVER (PARTITION BY tid
+         |         ORDER BY sim DESC, sid) AS rk
+         |       FROM (SELECT t.tid, s.sid, ${cosSql("s.v", "t.v")} AS sim
+         |             FROM t CROSS JOIN s)),
+         |bwd AS (SELECT tid, sid, sim FROM ba WHERE rk <= 4),
+         |sb AS (SELECT tid, sum(CAST(round(sim * 1e6) AS BIGINT)) AS sb,
+         |              count(*) AS cb FROM bwd GROUP BY 1),
+         |m AS (SELECT f.sid, f.tid, f.sim,
+         |        f.sim / ((CAST(sf AS DOUBLE) / (1000000.0 * cf) +
+         |          CAST(sb AS DOUBLE) / (1000000.0 * cb)) * 0.5) AS margin
+         |      FROM fwd f JOIN sf USING (sid) JOIN sb USING (tid)),
+         |fbest AS (SELECT sid, tid, sim, margin FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY sid
+         |    ORDER BY round(margin, 10) DESC, tid) AS b FROM m) WHERE b = 1),
+         |m2 AS (SELECT w.tid, w.sid,
+         |        w.sim / ((CAST(sf AS DOUBLE) / (1000000.0 * cf) +
+         |          CAST(sb AS DOUBLE) / (1000000.0 * cb)) * 0.5) AS margin
+         |      FROM bwd w JOIN sf USING (sid) JOIN sb USING (tid)),
+         |bbest AS (SELECT tid, sid FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY tid
+         |    ORDER BY round(margin, 10) DESC, sid) AS b FROM m2) WHERE b = 1)
+         |SELECT f.sid AS src_id, f.tid AS tgt_id, round(f.sim, 6) AS sim,
+         |       round(f.margin, 6) AS margin
+         |FROM fbest f JOIN bbest b ON f.sid = b.sid AND f.tid = b.tid""".stripMargin),
 
-    "vocab_growth_curve" -> ((s, dir) =>
+    Gate("vocab_growth_curve", ((s, dir) =>
       // Heaps-law curve: cumulative docs/tokens/types at ingest-order
       // checkpoints; types bucket to checkpoint INDEX scan-side so the
       // rollup never materializes vocab × checkpoints
       graft.llm.Corpus.vocabGrowthCurve(t(s, dir, "documents"),
         "doc_id", "text",
         checkpoints = Seq(50L, 150L, 300L, 1000000000L))),
+      // the engine buckets types to checkpoint indexes scan-side; the
+      // twin states the same curve as direct conditional counts — exact
+      // integers agree regardless of method
+      """WITH ck(c) AS (VALUES (CAST(50 AS BIGINT)), (150), (300), (1000000000)),
+        |norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t
+        |  FROM documents WHERE doc_id IS NOT NULL),
+        |tk AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token
+        |       FROM norm WHERE t <> ''),
+        |firsts AS (SELECT token, min(doc_id) AS f FROM tk
+        |           WHERE token <> '' GROUP BY 1)
+        |SELECT c AS checkpoint,
+        |  (SELECT count(*) FROM norm d WHERE d.doc_id <= c) AS n_docs,
+        |  (SELECT count(*) FROM tk t2 WHERE t2.token <> '' AND t2.doc_id <= c) AS n_tokens,
+        |  (SELECT count(*) FROM firsts f2 WHERE f2.f <= c) AS vocab
+        |FROM ck ORDER BY c""".stripMargin),
 
-    "emb_random_projection" -> ((s, dir) =>
+    Gate("emb_random_projection", ((s, dir) =>
       // JL ±1-sign compression 64→16: md5-derived sign matrix baked as
       // plan literals (zero per-row hashing), pure scan-side projection
       Similarity.randomProjection(t(s, dir, "embeddings"),
         inDim = 64, outDim = 16)),
+      // the ±1 sign matrix re-derived in pure SQL from the same md5
+      // convention; left-fold list_sum matches the engine's aggregate
+      // accumulation order bit-for-bit (the cosSql discipline)
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |ks(k) AS (VALUES (0),(1),(2),(3),(4),(5),(6),(7),
+        |                 (8),(9),(10),(11),(12),(13),(14),(15))
+        |SELECT vec_id, CAST(k AS INTEGER) AS k,
+        |  list_sum([CASE WHEN substring(md5('rp:' || CAST(k AS VARCHAR)
+        |      || ':' || CAST(j - 1 AS VARCHAR)), 1, 1) < '8'
+        |    THEN v[j] ELSE -v[j] END
+        |    for j in range(1, 65)]) / sqrt(16.0) AS value
+        |FROM e, ks""".stripMargin),
 
-    "emb_scalar_quant" -> ((s, dir) => {
+    Gate("emb_scalar_quant", ((s, dir) => {
       // int8 affine quantization (4× embedding compression): codes AND
       // reconstructions under the gate, per-dim rows — zero shuffle.
       // code+recon are zipped INSIDE the generator: CollapseProject
@@ -3248,22 +4928,74 @@ object SparkEntry {
         .select(col("vec_id"), col("dim"),
           col("cr.code").cast("int").as("code"), col("cr.recon"))
     }),
+      // affine int8 quantization: pure IEEE subtract/divide/round — codes
+      // and reconstructions are bit-exact cross-engine (n.5 round
+      // boundaries are dyadic-exact doubles, so HALF_UP == half-away)
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |st AS (SELECT vec_id, v, list_min(v) AS lo,
+        |       (list_max(v) - list_min(v)) / 255.0 AS scale FROM e),
+        |c AS (SELECT vec_id, CAST(i - 1 AS INTEGER) AS dim, lo, scale,
+        |      CASE WHEN scale = 0 THEN -128
+        |           ELSE least(255, greatest(0,
+        |             CAST(round((v[i] - lo) / scale) AS INTEGER))) - 128
+        |      END AS code
+        |      FROM st, (SELECT unnest(range(1, 65)) AS i))
+        |SELECT vec_id, dim, CAST(code AS INTEGER) AS code,
+        |       lo + (CAST(code + 128 AS DOUBLE) * scale) AS recon
+        |FROM c""".stripMargin),
 
-    "emb_hard_negatives" -> ((s, dir) => {
+    Gate("emb_hard_negatives", ((s, dir) => {
       // contrastive-training negative mining: top-5 nearest OTHER-label
       // corpus vectors per query (broadcast queries, map-side rank prune)
       val emb = t(s, dir, "embeddings")
       Similarity.hardNegatives(emb, emb.filter(col("vec_id") < 100), k = 5)
     }),
+      // ranking on unrounded sims in the ann_cosine_topk convention;
+      // (sim DESC, corpus_id) total order matches the engine's window
+      """WITH c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |q AS (SELECT vec_id, label, v FROM c WHERE vec_id < 100),
+        |s AS (SELECT q.vec_id AS query_id, q.label AS label,
+        |        c.vec_id AS corpus_id, c.label AS neg_label,
+        |        list_sum([q.v[i] * c.v[i] for i in range(1, 65)]) /
+        |        (sqrt(list_sum([q.v[i] * q.v[i] for i in range(1, 65)])) *
+        |         sqrt(list_sum([c.v[i] * c.v[i] for i in range(1, 65)]))) AS sim
+        |      FROM c CROSS JOIN q
+        |      WHERE q.vec_id <> c.vec_id AND c.label <> q.label),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+        |          ORDER BY sim DESC, corpus_id) AS rank FROM s)
+        |SELECT query_id, label, CAST(rank AS INTEGER) AS rank, corpus_id,
+        |  neg_label, round(sim, 6) AS sim
+        |FROM r WHERE rank <= 5""".stripMargin),
 
-    "emb_knn_vote" -> ((s, dir) => {
+    Gate("emb_knn_vote", ((s, dir) => {
       // kNN-probe evaluation: 5-NN majority label vote with the
       // deterministic (votes desc, label asc) tie-break
       val emb = t(s, dir, "embeddings")
       Similarity.knnLabelVote(emb, emb.filter(col("vec_id") < 200), k = 5)
     }),
+      // neighbor ranking in the ann_cosine_topk convention; the vote winner
+      // is elected by the same (votes DESC, label ASC) total order
+      """WITH c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |q AS (SELECT vec_id, label, v FROM c WHERE vec_id < 200),
+        |s AS (SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+        |        c.label AS nl,
+        |        list_sum([q.v[i] * c.v[i] for i in range(1, 65)]) /
+        |        (sqrt(list_sum([q.v[i] * q.v[i] for i in range(1, 65)])) *
+        |         sqrt(list_sum([c.v[i] * c.v[i] for i in range(1, 65)]))) AS sim
+        |      FROM c CROSS JOIN q WHERE q.vec_id <> c.vec_id),
+        |r AS (SELECT query_id, nl,
+        |        row_number() OVER (PARTITION BY query_id
+        |          ORDER BY sim DESC, corpus_id) AS rk FROM s),
+        |v AS (SELECT query_id, nl, count(*) AS votes
+        |      FROM r WHERE rk <= 5 GROUP BY 1, 2),
+        |p AS (SELECT query_id, nl AS predicted,
+        |        row_number() OVER (PARTITION BY query_id
+        |          ORDER BY votes DESC, nl) AS vr FROM v)
+        |SELECT q.vec_id AS query_id, q.label AS label, p.predicted,
+        |  p.predicted = q.label AS correct
+        |FROM q JOIN p ON p.query_id = q.vec_id AND p.vr = 1""".stripMargin),
 
-    "corpus_mix" -> ((s, dir) =>
+    Gate("corpus_mix", ((s, dir) =>
       // weighted corpus mixing: per-source down-sampling rates applied as
       // content-hash predicates inside the scan — zero shuffle, exact
       // SQL-oracle equivalence
@@ -3272,8 +5004,14 @@ object SparkEntry {
           Map("src0" -> 0.0, "src1" -> 0.25, "src2" -> 0.5),
           defaultRate = 0.75))
         .select("doc_id", "source")),
+      """SELECT doc_id, source FROM documents
+        |WHERE CASE
+        |  WHEN source = 'src0' THEN substring(md5(text), 1, 8) < '00000000'
+        |  WHEN source = 'src1' THEN substring(md5(text), 1, 8) < '40000000'
+        |  WHEN source = 'src2' THEN substring(md5(text), 1, 8) < '80000000'
+        |  ELSE substring(md5(text), 1, 8) < 'bfffffff' END""".stripMargin),
 
-    "corpus_split" -> ((s, dir) =>
+    Gate("corpus_split", ((s, dir) =>
       // deterministic train/val/test assignment: the split label is a
       // pure md5-threshold column evaluated inside the scan (zero
       // shuffle); the per-(lang, split) rollup is the checkable surface
@@ -3281,15 +5019,37 @@ object SparkEntry {
         .select(col("lang"), graft.llm.Corpus.splitAssign(col("doc_id"),
           Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)).as("split"))
         .groupBy("lang", "split").agg(count(lit(1)).as("n_docs"))),
+      """SELECT lang, CASE
+        |  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'train'
+        |  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'f3333332' THEN 'val'
+        |  ELSE 'test' END AS split,
+        | count(*) AS n_docs
+        |FROM documents GROUP BY 1, 2""".stripMargin),
 
-    "pack_sequences" -> ((s, dir) =>
+    Gate("pack_sequences", ((s, dir) =>
       // concat-split sequence packing: 16 md5-nibble shards packed
       // independently (the per-shard running sum is the only wide op),
       // each document mapped to its training-window span
       graft.llm.Corpus.packSequences(
         t(s, dir, "documents"), "doc_id", "n_chars", budget = 4096L)),
+      """WITH base AS (
+        |  SELECT doc_id AS id, CAST(n_chars AS BIGINT) AS len,
+        |         substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS shard,
+        |         md5(CAST(doc_id AS VARCHAR)) AS h
+        |  FROM documents),
+        |pos AS (
+        |  SELECT id, shard, len,
+        |         CAST(sum(len) OVER (PARTITION BY shard ORDER BY h, id
+        |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS endpos
+        |  FROM base)
+        |SELECT id, shard, endpos - len AS start,
+        |       (endpos - len) // 4096 AS seq_first,
+        |       CASE WHEN len = 0 THEN (endpos - len) // 4096
+        |            ELSE (endpos - 1) // 4096 END AS seq_last,
+        |       (endpos - len) % 4096 AS offset
+        |FROM pos""".stripMargin),
 
-    "corpus_upsample" -> ((s, dir) =>
+    Gate("corpus_upsample", ((s, dir) =>
       // weighted replication (the up-sampling half of mixture weights):
       // per-stratum copy counts decided by content hash, copies emitted
       // by a generator inside the scan — zero shuffle
@@ -3299,45 +5059,117 @@ object SparkEntry {
           Map("src0" -> 2.5, "src1" -> 0.25, "src2" -> 1.0),
           defaultWeight = 1.5)
         .select("doc_id", "source", "copy")),
+      """WITH w AS (SELECT doc_id, source,
+        |  CASE source
+        |    WHEN 'src0' THEN 2 + CASE WHEN substring(md5(text), 1, 8) < '80000000'
+        |                             THEN 1 ELSE 0 END
+        |    WHEN 'src1' THEN CASE WHEN substring(md5(text), 1, 8) < '40000000'
+        |                          THEN 1 ELSE 0 END
+        |    WHEN 'src2' THEN 1
+        |    ELSE 1 + CASE WHEN substring(md5(text), 1, 8) < '80000000'
+        |                  THEN 1 ELSE 0 END
+        |  END AS n FROM documents)
+        |SELECT doc_id, source,
+        |       unnest(range(1, CAST(n AS BIGINT) + 1)) AS copy FROM w""".stripMargin),
 
-    "doc_len_quantiles" -> ((s, dir) =>
+    Gate("doc_len_quantiles", ((s, dir) =>
       // percentile_disc with rational thresholds: integer math end to
       // end (a float q·n ceil sits on an engine-dependent ulp edge);
       // cumulative window runs over DISTINCT lengths, not documents
       graft.llm.Corpus.lengthQuantiles(t(s, dir, "documents"), "n_chars")),
+      """WITH c AS (SELECT CAST(n_chars AS BIGINT) AS len, count(*) AS cnt
+        |           FROM documents GROUP BY 1),
+        |cum AS (SELECT len, CAST(sum(cnt) OVER (ORDER BY len
+        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM c),
+        |tot AS (SELECT count(*) AS n FROM documents),
+        |qs(q, num, den) AS (VALUES ('p10', 1, 10), ('p25', 1, 4),
+        |  ('p50', 1, 2), ('p75', 3, 4), ('p90', 9, 10))
+        |SELECT q, min(len) AS value FROM qs, cum, tot
+        |WHERE cum >= (num * n + den - 1) // den GROUP BY q""".stripMargin),
 
-    "doc_length_hist" -> ((s, dir) =>
+    Gate("doc_length_hist", ((s, dir) =>
       // power-of-two length profile: integer bucket math (binary digit
       // count), one ≤64-group partial-agg shuffle
       graft.llm.Corpus.lengthHistogram(t(s, dir, "documents"), "n_chars")),
+      """SELECT CAST(length(bin(CAST(n_chars AS BIGINT))) AS INTEGER) AS bucket,
+        |       count(*) AS n_docs, min(n_chars) AS min_len, max(n_chars) AS max_len
+        |FROM documents GROUP BY 1""".stripMargin),
 
-    "vocab_top" -> ((s, dir) =>
+    Gate("vocab_top", ((s, dir) =>
       // global token vocabulary: one partial-agg shuffle, TakeOrdered
       // over the aggregated vocabulary with a unique (freq, token) order
       graft.llm.Corpus.vocabulary(t(s, dir, "documents"), "text", topN = 20)),
+      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm)
+        |SELECT token, count(*) AS freq FROM tok WHERE length(token) > 0
+        |GROUP BY token ORDER BY freq DESC, token LIMIT 20""".stripMargin),
 
-    "vocab_coverage" -> ((s, dir) =>
+    Gate("vocab_coverage", ((s, dir) =>
       // tokenizer-budget planning: corpus token-mass coverage at four
       // vocab budgets; total rides the token exchange (ReusedExchange),
       // ranking touches only the bounded TakeOrdered top-max(ks) set
       graft.llm.Corpus.vocabCoverage(t(s, dir, "documents"), "text",
         ks = Seq(5, 10, 20, 1000))),
+      // coverage curve: same tokenization, rank + running sum over the
+      // (freq DESC, token) total order, budgets via LEFT theta-join so an
+      // empty corpus still yields its zero-coverage rows
+      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm),
+        |freq AS (SELECT token, count(*) AS freq FROM tok
+        |         WHERE length(token) > 0 GROUP BY token),
+        |tot AS (SELECT coalesce(sum(freq), 0) AS total FROM freq),
+        |rk AS (SELECT freq, row_number() OVER (ORDER BY freq DESC, token) AS rank,
+        |       sum(freq) OVER (ORDER BY freq DESC, token
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |       FROM freq),
+        |cov AS (SELECT ks.k AS k, tot.total AS total,
+        |        coalesce(max(rk.cum), 0) AS covered
+        |        FROM (SELECT unnest([5, 10, 20, 1000]) AS k) ks
+        |        CROSS JOIN tot LEFT JOIN rk ON rk.rank <= ks.k
+        |        GROUP BY 1, 2)
+        |SELECT CAST(k AS INTEGER) AS k,
+        |       CAST(covered AS BIGINT) AS covered_tokens,
+        |       CAST(total AS BIGINT) AS total_tokens,
+        |       CASE WHEN total = 0 THEN 0.0
+        |            ELSE round(CAST(covered AS DOUBLE) / total, 6)
+        |       END AS coverage
+        |FROM cov""".stripMargin),
 
-    "vocab_heavy_hitters" -> ((s, dir) =>
+    Gate("vocab_heavy_hitters", ((s, dir) =>
       // exact top-N via the 2-pass Misra–Gries plan: pass 1 never
       // shuffles the token domain (bounded-sketch exchange), pass 2
       // counts only the ≤ capacity candidates; exact-or-raise_error
       graft.llm.Corpus.heavyHitters(t(s, dir, "documents"), "text",
         topN = 15, capacity = 2048)),
+      // the sketch path is exact-or-throw, so its oracle is the plain
+      // exact top-N — identical formulation to vocab_top at N=15
+      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm)
+        |SELECT token, count(*) AS freq FROM tok WHERE length(token) > 0
+        |GROUP BY token ORDER BY freq DESC, token LIMIT 15""".stripMargin),
 
-    "vocab_heavy_bigrams" -> ((s, dir) =>
+    Gate("vocab_heavy_bigrams", ((s, dir) =>
       // phrase mining: the same exact-or-loud 2-pass sketch over the
       // (much larger) bigram domain — where bounded pass-1 state
       // matters most vs a full-domain groupBy
       graft.llm.Corpus.heavyHitters(t(s, dir, "documents"), "text",
         topN = 10, capacity = 4096, ngram = 2)),
+      // phrase form: exact bigram top-N (the bigram comprehension of the
+      // text_bigram_surprisal oracle)
+      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tk AS (SELECT CASE WHEN t = '' THEN CAST([] AS VARCHAR[])
+        |              ELSE string_split(t, ' ') END AS toks FROM norm),
+        |bg AS (SELECT unnest(
+        |    [array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))])
+        |    AS token FROM tk)
+        |SELECT token, count(*) AS freq FROM bg
+        |GROUP BY token ORDER BY freq DESC, token LIMIT 10""".stripMargin),
 
-    "vocab_sketch_stream" -> ((s, dir) => {
+    Gate("vocab_sketch_stream", ((s, dir) => {
       // the STREAMING sketch producer under the oracle gate: the same
       // bounded MG aggregate runs as a complete-mode streaming
       // aggregation (sketch state lives in the state store, updated per
@@ -3348,8 +5180,17 @@ object SparkEntry {
         streamDocs(s, dir, schema), "text", capacity = 2048)
       drainStream(sk, "graft_sketch_stream", complete = true)
     }),
+      // streaming sketch, exact regime: the complete-mode aggregate over
+      // the full backlog equals the batch sketch equals the exact counts
+      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm),
+        |tk AS (SELECT token FROM tok WHERE length(token) > 0),
+        |tot AS (SELECT count(*) AS n FROM tk)
+        |SELECT token, count(*) AS count_lb, tot.n AS n_part
+        |FROM tk, tot GROUP BY token, tot.n""".stripMargin),
 
-    "vocab_freq_stream" -> ((s, dir) => {
+    Gate("vocab_freq_stream", ((s, dir) => {
       // the streaming Count–Min producer under the oracle gate:
       // per-slice matrices build as a complete-mode streaming
       // aggregation (cell state in the state store, AvailableNow
@@ -3365,8 +5206,9 @@ object SparkEntry {
         drainStream(sk, "graft_freq_stream", complete = true))
       graft.llm.Corpus.estimateFrequencies(merged, freqProbes(docs))
     }),
+      CountMinOracle),
 
-    "vocab_distinct_stream" -> ((s, dir) => {
+    Gate("vocab_distinct_stream", ((s, dir) => {
       // streaming vocabulary-growth tracking: the per-slice HLL
       // aggregate as a complete-mode streaming aggregation (sketch
       // state in the state store), estimates read post-drain — the
@@ -3379,8 +5221,18 @@ object SparkEntry {
           hll_sketch_estimate(col("sketch")).as("distinct_tokens"),
           col("n_tokens"))
     }),
+      // the streaming HLL build in the same exact regime: per-slice rows
+      // only (no merged -1 row — the stream emits slice state)
+      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT doc_id % 3 AS slice,
+        |        unnest(string_split(t, ' ')) AS token FROM norm),
+        |tk AS (SELECT slice, token FROM tok WHERE length(token) > 0)
+        |SELECT slice, count(DISTINCT token) AS distinct_tokens,
+        |       count(*) AS n_tokens
+        |FROM tk GROUP BY slice""".stripMargin),
 
-    "dedup_bloom_stream" -> ((s, dir) => {
+    Gate("dedup_bloom_stream", ((s, dir) => {
       // the STREAMING membership-sketch producer under the oracle gate:
       // per-slice Bloom filters build as a complete-mode streaming
       // aggregation (filter state in the state store, AvailableNow
@@ -3404,8 +5256,14 @@ object SparkEntry {
             xxhash64(concat(col("text"), lit(" graftnew"))))
           .as("mutated_member"))
     }),
+      // Bloom membership truth: every corpus text is a member of the
+      // streamed-then-merged filter (false negatives are impossible), no
+      // mutated text is (false positives are ~1e-17-probable at this
+      // provisioning and deterministic given the data)
+      """SELECT doc_id, TRUE AS is_member, FALSE AS mutated_member
+        |FROM documents""".stripMargin),
 
-    "vocab_sketch_merge" -> ((s, dir) => {
+    Gate("vocab_sketch_merge", ((s, dir) => {
       // incremental corpus stats: per-split sketches merged with the
       // relational Agarwal rule; capacity ≥ vocabulary here, so the
       // merge runs in its exact regime and the hash gate checks it
@@ -3417,8 +5275,17 @@ object SparkEntry {
       graft.llm.Corpus.mergeHeavyHitterSketches(
         tagged.reduce(_ unionByName _), capacity = 2048)
     }),
+      // the merge's exact regime (capacity ≥ vocabulary): merged counters
+      // ARE the exact corpus counts and n_part is the exact token total
+      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm),
+        |tk AS (SELECT token FROM tok WHERE length(token) > 0),
+        |tot AS (SELECT count(*) AS n FROM tk)
+        |SELECT token, count(*) AS count_lb, tot.n AS n_part
+        |FROM tk, tot GROUP BY token, tot.n""".stripMargin),
 
-    "vocab_freq_sketch" -> ((s, dir) => {
+    Gate("vocab_freq_sketch", ((s, dir) => {
       // Count–Min point frequencies: per-slice sketches (doc_id % 3)
       // merged cellwise, estimates served for the top-20 true tokens
       // alongside their exact counts. The twin recomputes every md5
@@ -3430,8 +5297,14 @@ object SparkEntry {
       val merged = graft.llm.Corpus.mergeFrequencySketches(sk)
       graft.llm.Corpus.estimateFrequencies(merged, freqProbes(docs))
     }),
+      // the Count–Min twin re-derives every md5-lane cell in SQL —
+      // cell_i = ('0x'||substr(md5(token), i*8+1, 8))::BIGINT % width —
+      // then the min-over-lanes estimate, so the whole sketch (collisions
+      // included) is verified, not an exact regime; cellwise addition is
+      // order-independent, so the streaming build shares the twin
+      CountMinOracle),
 
-    "doc_len_quantile_sketch" -> ((s, dir) => {
+    Gate("doc_len_quantile_sketch", ((s, dir) => {
       // incremental distribution tracking: per-slice KLL sketches over
       // doc length, merged relationally, quantiles read INCLUSIVE; at
       // this scale no compaction fires (n ≤ k) so the quantiles are
@@ -3442,8 +5315,13 @@ object SparkEntry {
       graft.llm.Corpus.mergeQuantileSketches(sk,
         qs = Seq(0.25, 0.5, 0.75, 0.9), k = 1024)
     }),
+      // the KLL exact regime (n ≤ k, no compaction): the INCLUSIVE
+      // quantile — smallest value with cumulative weight ≥ q·N, the q·N
+      // product computed in double on both sides; the streaming build
+      // shares the twin (exact-regime quantiles are order-independent)
+      KllQuantileOracle),
 
-    "doc_len_quantile_stream" -> ((s, dir) => {
+    Gate("doc_len_quantile_stream", ((s, dir) => {
       // the streaming KLL build: per-slice sketch state in the state
       // store (complete mode, AvailableNow), merged + read post-drain —
       // same exact regime, same oracle as the batch build
@@ -3455,8 +5333,9 @@ object SparkEntry {
         drainStream(sk, "graft_kll_stream", complete = true),
         qs = Seq(0.25, 0.5, 0.75, 0.9), k = 1024)
     }),
+      KllQuantileOracle),
 
-    "vocab_distinct_sketch" -> ((s, dir) => {
+    Gate("vocab_distinct_sketch", ((s, dir) => {
       // incremental distinct counting: per-slice HLL sketches (bounded
       // binaries), relational hll_union merge; the vocabulary here is
       // far below the lgK-14 set-mode promotion point, so every
@@ -3472,8 +5351,21 @@ object SparkEntry {
           col("n_tokens"))
       perSlice.unionByName(merged)
     }),
+      // the HLL sketches' exact regime (vocabulary ≪ 2^14 set-mode
+      // promotion): per-slice and merged estimates ARE the exact distinct
+      // counts; slice -1 is the merged total
+      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT doc_id % 3 AS slice,
+        |        unnest(string_split(t, ' ')) AS token FROM norm),
+        |tk AS (SELECT slice, token FROM tok WHERE length(token) > 0)
+        |SELECT slice, count(DISTINCT token) AS distinct_tokens,
+        |       count(*) AS n_tokens
+        |FROM tk GROUP BY slice
+        |UNION ALL
+        |SELECT -1 AS slice, count(DISTINCT token), count(*) FROM tk""".stripMargin),
 
-    "corpus_drift_sketch" -> ((s, dir) => {
+    Gate("corpus_drift_sketch", ((s, dir) => {
       // incremental drift: the en and de slices summarized as MG
       // sketches (capacity >= vocabulary — exact regime), compared
       // with NO corpus rescan; must equal the scan-based corpus_drift,
@@ -3485,41 +5377,112 @@ object SparkEntry {
         docs.filter(col("lang") === "de"), "text", capacity = 4096)
       graft.llm.Corpus.driftFromSketches(skA, skB, topN = 20)
     }),
+      // exact-integer cross-product ranking |freq_a*n_b - freq_b*n_a| in
+      // HUGEINT (the decimal's value-equal twin; the rank key is not
+      // output so only the order must agree)
+      // exact-regime sketch drift ≡ the scan-based drift — same twin
+      CorpusDriftOracle),
 
-    "corpus_drift" -> ((s, dir) =>
+    Gate("corpus_drift", ((s, dir) =>
       // top drifted tokens between the en and de slices: one scan, one
       // token-domain exchange with both group counts as conditional
       // sums; DECIMAL(38,0) cross-product ranking (exact at any scale)
       graft.llm.Corpus.corpusDrift(t(s, dir, "documents"), "text",
         "lang", "en", "de", topN = 20)),
+      CorpusDriftOracle),
 
-    "text_ngram_diversity" -> ((s, dir) =>
+    Gate("text_ngram_diversity", ((s, dir) =>
       // distinct-n corpus diversity: all n orders explode from one scan
       // as tagged (n, gram) pairs; one exact two-level count-distinct
       graft.llm.Corpus.ngramDiversity(t(s, dir, "documents"), "text",
         maxN = 3)),
+      // n-grams per order n via the same slice comprehension as the
+      // bigram oracle, generalized with a small n-table cross join
+      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tk AS (SELECT CASE WHEN t = '' THEN CAST([] AS VARCHAR[])
+        |              ELSE string_split(t, ' ') END AS toks FROM norm),
+        |ns(n) AS (VALUES (1), (2), (3)),
+        |ng AS (SELECT n, unnest(
+        |    [array_to_string(toks[i:i+n-1], ' ')
+        |     for i in range(1, len(toks) - n + 2)]) AS gram
+        |  FROM tk, ns)
+        |SELECT CAST(n AS INTEGER) AS n, count(*) AS total_ngrams,
+        |       count(DISTINCT gram) AS distinct_ngrams
+        |FROM ng GROUP BY n ORDER BY n""".stripMargin),
 
-    "tfidf_keywords" -> ((s, dir) =>
+    Gate("tfidf_keywords", ((s, dir) =>
       // per-doc keywords by tf·rarity (integer-exact idf surrogate);
       // tf/df partial-agg shuffles + one token-keyed join + top-3 window
       graft.llm.Corpus.tfidfKeywords(
         t(s, dir, "documents").filter(col("doc_id") < 50),
         "doc_id", "text", perDoc = 3)),
+      """WITH sub AS (SELECT doc_id, text FROM documents WHERE doc_id < 50),
+        |norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM sub),
+        |tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm),
+        |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok
+        |       WHERE length(token) > 0 GROUP BY 1, 2),
+        |dfq AS (SELECT token, count(*) AS docfreq FROM tf GROUP BY 1),
+        |nd AS (SELECT count(DISTINCT doc_id) AS n FROM sub)
+        |SELECT id, token, score FROM (
+        |  SELECT tf.doc_id AS id, tf.token,
+        |         tf.tf * (nd.n + 1 - dfq.docfreq) AS score,
+        |         row_number() OVER (PARTITION BY tf.doc_id
+        |           ORDER BY tf.tf * (nd.n + 1 - dfq.docfreq) DESC, tf.token) AS rn
+        |  FROM tf JOIN dfq ON tf.token = dfq.token CROSS JOIN nd)
+        |WHERE rn <= 3""".stripMargin),
 
-    "text_bigram_surprisal" -> ((s, dir) =>
+    Gate("text_bigram_surprisal", ((s, dir) =>
       // conditional 2-gram LM rarity (CCNet surface, integer-rational
       // math): compiled window kernel in the scan, two count exchanges
       graft.llm.Corpus.bigramSurprisal(t(s, dir, "documents"),
         "doc_id", "text")),
+      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tk AS (SELECT doc_id,
+        |  CASE WHEN t = '' THEN CAST([] AS VARCHAR[])
+        |       ELSE string_split(t, ' ') END AS toks FROM norm),
+        |bg AS (SELECT doc_id, unnest(
+        |    [array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))])
+        |    AS bigram FROM tk),
+        |b2 AS (SELECT doc_id, bigram, string_split(bigram, ' ')[1] AS prev FROM bg),
+        |bf AS (SELECT bigram, count(*) AS bfreq FROM b2 GROUP BY bigram),
+        |pf AS (SELECT prev, count(*) AS pfreq FROM b2 GROUP BY prev),
+        |agg AS (SELECT b2.doc_id, count(*) AS n_bigrams,
+        |    CAST(sum(pfreq // bfreq) AS BIGINT) AS sum_info
+        |  FROM b2 JOIN bf USING (bigram) JOIN pf USING (prev)
+        |  GROUP BY b2.doc_id)
+        |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams, sum_info,
+        |  CAST(sum_info AS DOUBLE) / n_bigrams AS mean_info FROM agg""".stripMargin),
 
-    "text_chunks" -> ((s, dir) =>
+    Gate("text_chunks", ((s, dir) =>
       // overlap chunker (size 32, overlap 8 — small enough that the ~54-
       // token synthetic docs actually split): chunk rows are generated
       // inside the scan stage, no shuffle
       TA.chunkDocuments(t(s, dir, "documents"), "doc_id", "text",
         size = 32, overlap = 8)),
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents),
+        |n AS (
+        |  SELECT doc_id, toks,
+        |    CASE WHEN len(toks) = 0 THEN 0
+        |         WHEN len(toks) <= 32 THEN 1
+        |         ELSE 1 + CAST(ceil((len(toks) - 32) / 24.0) AS INT) END AS nchunks
+        |  FROM t),
+        |c AS (
+        |  SELECT doc_id, toks,
+        |    CAST(unnest(range(0, nchunks)) AS INT) AS chunk_index
+        |  FROM n)
+        |SELECT doc_id, chunk_index,
+        |  array_to_string(toks[chunk_index*24+1 : chunk_index*24+32], ' ') AS chunk,
+        |  CAST(least(chunk_index*24+32, len(toks)) - chunk_index*24 AS BIGINT) AS n_tokens
+        |FROM c""".stripMargin),
 
-    "corpus_budget_select" -> ((s, dir) =>
+    Gate("corpus_budget_select", ((s, dir) =>
       // greedy token-budget selection ordered by (quality desc, id):
       // per-score aggregation + DISTINCT-score cumulative window + one
       // join back — the corpus is never globally sorted; the oracle is
@@ -3529,8 +5492,31 @@ object SparkEntry {
           TA.qualityScore(col("text")).as("quality"),
           TA.tokenCount(col("text")).as("n_toks")),
         "doc_id", "quality", "n_toks", budget = 12000L)),
+      // greedy token-budget selection: the oracle is the naive global
+      // running-sum formulation (SUM OVER (ORDER BY quality DESC, id));
+      // the Spark plan computes the identical cum via per-score offsets
+      """WITH b AS (SELECT doc_id, text,
+        |  string_split_regex(trim(text), '\s+') AS words,
+        |  CAST(length(text) AS DOUBLE) AS n FROM documents),
+        |m AS (SELECT doc_id,
+        |  CASE WHEN trim(text) = '' THEN 0 ELSE len(words) END AS ntok,
+        |  CAST(len(words) AS DOUBLE) AS nw,
+        |  CAST(length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / n AS punct_ratio,
+        |  CAST(length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE) / n AS upper_ratio,
+        |  CAST(len(list_filter(words, x -> lower(x) IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this'))) AS DOUBLE) / CAST(len(words) AS DOUBLE) AS stop_ratio
+        |  FROM b),
+        |s AS (SELECT doc_id,
+        |  round(least(nw / 100.0, 1.0) * 0.4 + least(stop_ratio * 4.0, 1.0) * 0.3 +
+        |    (CASE WHEN punct_ratio < 0.2 THEN 1.0 ELSE 0.0 END) * 0.15 +
+        |    (CASE WHEN upper_ratio < 0.3 THEN 1.0 ELSE 0.0 END) * 0.15, 6) AS quality,
+        |  ntok FROM m),
+        |c AS (SELECT doc_id, quality, ntok,
+        |  SUM(ntok) OVER (ORDER BY quality DESC, doc_id) AS cum FROM s)
+        |SELECT doc_id, quality, CAST(ntok AS BIGINT) AS n_tokens,
+        |  CAST(cum AS BIGINT) AS cum_tokens
+        |FROM c WHERE cum <= 12000""".stripMargin),
 
-    "text_importance" -> ((s, dir) => {
+    Gate("text_importance", ((s, dir) => {
       // DSIR-style importance weighting of the whole corpus against the
       // zh-language slice as the target domain: integer-exact
       // sign-of-likelihood-ratio lean counts, token-keyed joins
@@ -3538,8 +5524,32 @@ object SparkEntry {
       graft.llm.Corpus.importanceWeights(
         docs, docs.filter(col("lang") === "zh"), "doc_id", "text")
     }),
+      // DSIR-lite importance lean counts vs the zh-slice target corpus
+      """WITH norm AS (SELECT doc_id, lang, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tkraw AS (SELECT doc_id, token FROM (
+        |    SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm)
+        |  WHERE length(token) > 0),
+        |tktgt AS (SELECT token FROM (
+        |    SELECT unnest(string_split(t, ' ')) AS token FROM norm WHERE lang = 'zh')
+        |  WHERE length(token) > 0),
+        |rf AS (SELECT token, count(*) AS rf FROM tkraw GROUP BY token),
+        |tfq AS (SELECT token, count(*) AS tf_t FROM tktgt GROUP BY token),
+        |nr AS (SELECT coalesce(sum(rf), 0) AS n_raw FROM rf),
+        |nt AS (SELECT coalesce(sum(tf_t), 0) AS n_tgt FROM tfq),
+        |j AS (SELECT k.doc_id,
+        |    CASE WHEN (coalesce(tf_t, 0) + 1) * (n_raw + 1) > (rf + 1) * (n_tgt + 1) THEN 1
+        |         WHEN (coalesce(tf_t, 0) + 1) * (n_raw + 1) < (rf + 1) * (n_tgt + 1) THEN -1
+        |         ELSE 0 END AS lean
+        |  FROM tkraw k JOIN rf USING (token) LEFT JOIN tfq USING (token)
+        |  CROSS JOIN nr CROSS JOIN nt)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |  CAST(sum(CASE WHEN lean = 1 THEN 1 ELSE 0 END) AS BIGINT) AS target_leaning,
+        |  CAST(sum(CASE WHEN lean = -1 THEN 1 ELSE 0 END) AS BIGINT) AS raw_leaning,
+        |  CAST(sum(lean) AS BIGINT) AS score
+        |FROM j GROUP BY doc_id""".stripMargin),
 
-    "text_repetition" -> ((s, dir) => {
+    Gate("text_repetition", ((s, dir) => {
       // Gopher-style repetition signals: ONE compiled pass per document
       // (zero shuffle); the oracle is the relational unnest/groupBy
       // formulation of the same six fractions
@@ -3552,14 +5562,58 @@ object SparkEntry {
         r.getField("dup_trigram_frac").as("dup_trigram_frac"),
         r.getField("top_trigram_frac").as("top_trigram_frac"))
     }),
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents),
+        |t2 AS (
+        |  SELECT doc_id, toks,
+        |    [toks[i] || ' ' || toks[i+1] for i in range(1, len(toks))] AS bi,
+        |    [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+        |     for i in range(1, len(toks)-1)] AS tri
+        |  FROM t),
+        |g1 AS (SELECT doc_id, tok, count(*) AS c FROM
+        |  (SELECT doc_id, unnest(toks) AS tok FROM t2) GROUP BY doc_id, tok),
+        |a1 AS (SELECT doc_id, sum(c) AS total, max(c) AS top, count(*) AS uniq
+        |  FROM g1 GROUP BY doc_id),
+        |g2 AS (SELECT doc_id, tok, count(*) AS c FROM
+        |  (SELECT doc_id, unnest(bi) AS tok FROM t2) GROUP BY doc_id, tok),
+        |a2 AS (SELECT doc_id, sum(c) AS total, max(c) AS top, count(*) AS uniq
+        |  FROM g2 GROUP BY doc_id),
+        |g3 AS (SELECT doc_id, tok, count(*) AS c FROM
+        |  (SELECT doc_id, unnest(tri) AS tok FROM t2) GROUP BY doc_id, tok),
+        |a3 AS (SELECT doc_id, sum(c) AS total, max(c) AS top, count(*) AS uniq
+        |  FROM g3 GROUP BY doc_id)
+        |SELECT t2.doc_id,
+        |  coalesce((a1.total - a1.uniq) / CAST(a1.total AS DOUBLE), 0.0) AS dup_unigram_frac,
+        |  coalesce(a1.top / CAST(a1.total AS DOUBLE), 0.0) AS top_unigram_frac,
+        |  coalesce((a2.total - a2.uniq) / CAST(a2.total AS DOUBLE), 0.0) AS dup_bigram_frac,
+        |  coalesce(a2.top / CAST(a2.total AS DOUBLE), 0.0) AS top_bigram_frac,
+        |  coalesce((a3.total - a3.uniq) / CAST(a3.total AS DOUBLE), 0.0) AS dup_trigram_frac,
+        |  coalesce(a3.top / CAST(a3.total AS DOUBLE), 0.0) AS top_trigram_frac
+        |FROM t2 LEFT JOIN a1 USING(doc_id) LEFT JOIN a2 USING(doc_id)
+        |  LEFT JOIN a3 USING(doc_id)""".stripMargin),
 
-    "dedup_spans" -> ((s, dir) =>
+    Gate("dedup_spans", ((s, dir) =>
       // repeated-span (boilerplate) detection: compiled window generation,
       // one exchange on the span, aggregate-small output
       Dedup.boilerplateSpans(t(s, dir, "documents"), "doc_id", "text",
         w = 8, minDocs = 3)),
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents),
+        |s AS (
+        |  SELECT doc_id, unnest(
+        |    [array_to_string(toks[i:i+7], ' ') for i in range(1, len(toks) - 6)])
+        |    AS span
+        |  FROM t)
+        |SELECT span, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences
+        |FROM s GROUP BY span HAVING count(DISTINCT doc_id) >= 3""".stripMargin),
 
-    "dedup_strip_spans" -> ((s, dir) =>
+    Gate("dedup_strip_spans", ((s, dir) =>
       // C4-style surgical boilerplate REMOVAL: hash-only counting
       // exchange, flagged set rides inside the compiled rewrite
       // expression, rewrite pass is map-only (no reassembly shuffle).
@@ -3567,8 +5621,36 @@ object SparkEntry {
       Dedup.stripBoilerplate(t(s, dir, "documents"), "doc_id", "text",
           w = 8, minDocs = 3)
         .select("doc_id", "clean_text")),
+      // relational twin of the map-only compiled rewrite: flag spans in ≥3
+      // docs, union covered positions, reassemble surviving tokens in order
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents),
+        |s AS (
+        |  SELECT doc_id, unnest(
+        |    [{'start': i, 'span': array_to_string(toks[i:i+7], ' ')}
+        |     for i in range(1, len(toks) - 6)], recursive := true)
+        |  FROM t),
+        |f AS (
+        |  SELECT span FROM s GROUP BY span HAVING count(DISTINCT doc_id) >= 3),
+        |c AS (
+        |  SELECT DISTINCT doc_id, pos FROM (
+        |    SELECT s.doc_id, unnest(range(s.start, s.start + 8)) AS pos
+        |    FROM s JOIN f USING (span))),
+        |k AS (
+        |  SELECT doc_id, unnest(toks) AS word,
+        |         unnest(range(1, len(toks) + 1)) AS pos
+        |  FROM t),
+        |r AS (
+        |  SELECT k.doc_id, string_agg(k.word, ' ' ORDER BY k.pos) AS ct
+        |  FROM k ANTI JOIN c USING (doc_id, pos)
+        |  GROUP BY k.doc_id)
+        |SELECT d.doc_id, coalesce(r.ct, '') AS clean_text
+        |FROM documents d LEFT JOIN r USING (doc_id)""".stripMargin),
 
-    "dedup_strip_spans_incremental" -> ((s, dir) => {
+    Gate("dedup_strip_spans_incremental", ((s, dir) => {
       // rewrite a crawl batch with the LAKE's flagged spans (reference =
       // the other 6/7 of the corpus); auto mode bakes the set into the
       // map-only kernel at this scale, staying distributed past the cap
@@ -3578,8 +5660,47 @@ object SparkEntry {
           w = 8, minDocs = 3)
         .select("doc_id", "clean_text")
     }),
+      // the against twin of dedup_strip_spans: the flagged set comes from
+      // the REFERENCE partition only; the rewrite applies to the batch
+      """WITH tb AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents WHERE doc_id % 7 = 0),
+        |tr AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents WHERE doc_id % 7 <> 0),
+        |sr AS (
+        |  SELECT doc_id, unnest(
+        |    [array_to_string(toks[i:i+7], ' ') for i in range(1, len(toks) - 6)])
+        |    AS span
+        |  FROM tr),
+        |f AS (
+        |  SELECT span FROM sr GROUP BY span HAVING count(DISTINCT doc_id) >= 3),
+        |sb AS (
+        |  SELECT doc_id, unnest(
+        |    [{'start': i, 'span': array_to_string(toks[i:i+7], ' ')}
+        |     for i in range(1, len(toks) - 6)], recursive := true)
+        |  FROM tb),
+        |c AS (
+        |  SELECT DISTINCT doc_id, pos FROM (
+        |    SELECT sb.doc_id, unnest(range(sb.start, sb.start + 8)) AS pos
+        |    FROM sb JOIN f USING (span))),
+        |k AS (
+        |  SELECT doc_id, unnest(toks) AS word,
+        |         unnest(range(1, len(toks) + 1)) AS pos
+        |  FROM tb),
+        |r AS (
+        |  SELECT k.doc_id, string_agg(k.word, ' ' ORDER BY k.pos) AS ct
+        |  FROM k ANTI JOIN c USING (doc_id, pos)
+        |  GROUP BY k.doc_id)
+        |SELECT d.doc_id, coalesce(r.ct, '') AS clean_text
+        |FROM documents d LEFT JOIN r USING (doc_id)
+        |WHERE d.doc_id % 7 = 0""".stripMargin),
 
-    "dedup_substring" -> ((s, dir) =>
+    Gate("dedup_substring", ((s, dir) =>
       // Lee-et-al exact-substring dup coverage at window granularity:
       // 50-char windows at 25-char stride, (64-bit hash, doc) exchange
       // reused by the frequency aggregate and the join probe. The oracle
@@ -3587,8 +5708,24 @@ object SparkEntry {
       // absent at this scale.
       Dedup.substringDupStats(t(s, dir, "documents"), "doc_id", "text",
         w = 50, stride = 25, minDocs = 2)),
+      """WITH wins AS (
+        |  SELECT doc_id, substr(text, CAST(i AS INTEGER), 50) AS win
+        |  FROM (SELECT doc_id, text,
+        |          unnest(generate_series(1, len(text) - 49, 25)) AS i
+        |        FROM documents WHERE len(text) >= 50)),
+        |per AS (SELECT win, doc_id, count(*) AS c FROM wins GROUP BY 1, 2),
+        |f AS (SELECT win, count(*) AS nd FROM per GROUP BY 1
+        |      HAVING count(*) >= 2)
+        |SELECT p.doc_id,
+        |  CAST(sum(p.c) AS BIGINT) AS n_windows,
+        |  CAST(sum(CASE WHEN f.nd IS NOT NULL THEN p.c ELSE 0 END) AS BIGINT)
+        |    AS n_dup_windows,
+        |  round(CAST(sum(CASE WHEN f.nd IS NOT NULL THEN p.c ELSE 0 END)
+        |          AS DOUBLE) / CAST(sum(p.c) AS DOUBLE), 6) AS dup_frac
+        |FROM per p LEFT JOIN f USING (win)
+        |GROUP BY 1""".stripMargin),
 
-    "dedup_substring_incremental" -> ((s, dir) => {
+    Gate("dedup_substring_incremental", ((s, dir) => {
       // crawl-batch substring scoring against the existing lake: new docs
       // (doc_id % 7 == 0) probe the corpus's distinct window-hash index;
       // the new side keeps the single-exchange (hash, doc) discipline
@@ -3597,21 +5734,80 @@ object SparkEntry {
         docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
         w = 50, stride = 25)
     }),
+      // the engine groups by 64-bit window hash, the oracle by the window
+      // TEXT — equal because collisions are absent at this scale (same
+      // rationale as dedup_substring)
+      """WITH nw AS (
+        |  SELECT doc_id, substr(text, CAST(i AS INTEGER), 50) AS win
+        |  FROM (SELECT doc_id, text,
+        |          unnest(generate_series(1, len(text) - 49, 25)) AS i
+        |        FROM documents WHERE doc_id % 7 = 0 AND len(text) >= 50)),
+        |cw AS (
+        |  SELECT DISTINCT substr(text, CAST(i AS INTEGER), 50) AS win
+        |  FROM (SELECT doc_id, text,
+        |          unnest(generate_series(1, len(text) - 49, 25)) AS i
+        |        FROM documents WHERE doc_id % 7 <> 0 AND len(text) >= 50)),
+        |per AS (SELECT win, doc_id, count(*) AS c FROM nw GROUP BY 1, 2)
+        |SELECT p.doc_id,
+        |  CAST(sum(p.c) AS BIGINT) AS n_windows,
+        |  CAST(sum(CASE WHEN cw.win IS NOT NULL THEN p.c ELSE 0 END)
+        |    AS BIGINT) AS n_dup_windows,
+        |  round(CAST(sum(CASE WHEN cw.win IS NOT NULL THEN p.c ELSE 0 END)
+        |          AS DOUBLE) / CAST(sum(p.c) AS DOUBLE), 6) AS dup_frac
+        |FROM per p LEFT JOIN cw USING (win)
+        |GROUP BY 1""".stripMargin),
 
-    "text_surprisal" -> ((s, dir) =>
+    Gate("text_surprisal", ((s, dir) =>
       // CCNet-style unigram-LM rarity: integer inverse-probability
       // surrogate (n_total DIV freq) keeps the score hash-exact across
       // engines
       graft.llm.Corpus.unigramSurprisal(
         t(s, dir, "documents"), "doc_id", "text")),
+      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm),
+        |tk AS (SELECT doc_id, token FROM tok WHERE length(token) > 0),
+        |freq AS (SELECT token, count(*) AS freq FROM tk GROUP BY token),
+        |tot AS (SELECT CAST(sum(freq) AS BIGINT) AS n_total FROM freq),
+        |agg AS (
+        |  SELECT tk.doc_id, count(*) AS n_tokens,
+        |    CAST(sum(n_total // freq) AS BIGINT) AS sum_info
+        |  FROM tk JOIN freq USING (token) CROSS JOIN tot
+        |  GROUP BY tk.doc_id)
+        |SELECT doc_id, n_tokens, sum_info,
+        |  CAST(sum_info AS DOUBLE) / n_tokens AS mean_info FROM agg""".stripMargin),
 
-    "text_perplexity_buckets" -> ((s, dir) =>
+    Gate("text_perplexity_buckets", ((s, dir) =>
       // CCNet head/middle/tail: exact value-thresholds over the
       // aggregated score domain, scan-side broadcast assignment
       graft.llm.Corpus.perplexityBuckets(t(s, dir, "documents"),
         "doc_id", "text", nBuckets = 3)),
+      // CCNet bucket twin: same surprisal CTE, INCLUSIVE value thresholds
+      // in integer tie math (cum*nb >= i*N), ties share buckets
+      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
+        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
+        |tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm),
+        |tk AS (SELECT doc_id, token FROM tok WHERE length(token) > 0),
+        |freq AS (SELECT token, count(*) AS freq FROM tk GROUP BY token),
+        |tot AS (SELECT CAST(sum(freq) AS BIGINT) AS n_total FROM freq),
+        |s2 AS (
+        |  SELECT tk.doc_id,
+        |    CAST(CAST(sum(n_total // freq) AS BIGINT) AS DOUBLE) / count(*)
+        |      AS mean_info
+        |  FROM tk JOIN freq USING (token) CROSS JOIN tot
+        |  GROUP BY tk.doc_id),
+        |n AS (SELECT count(*) AS n FROM s2),
+        |hist AS (SELECT mean_info, count(*) AS c FROM s2 GROUP BY 1),
+        |cum AS (SELECT mean_info,
+        |        sum(c) OVER (ORDER BY mean_info) AS cum FROM hist),
+        |th AS (SELECT i, min(mean_info) AS t
+        |       FROM cum CROSS JOIN n CROSS JOIN (VALUES (1),(2)) v(i)
+        |       WHERE cum * 3 >= i * n GROUP BY i)
+        |SELECT s2.doc_id, s2.mean_info, count(th.t) AS bucket
+        |FROM s2 LEFT JOIN th ON s2.mean_info > th.t
+        |GROUP BY 1, 2""".stripMargin),
 
-    "graph_label_prop" -> ((s, dir) => {
+    Gate("graph_label_prop", ((s, dir) => {
       // weak supervision through the purchase graph: every third
       // supplier seeds its nation; 3 deterministic majority rounds
       // (ties → smallest label) spread it to customers and the
@@ -3625,8 +5821,9 @@ object SparkEntry {
           col("n_name").as("label"))
       graft.llm.Graph.labelPropagation(edges, seeds, iters = 3)
     }),
+      LabelPropOracle),
 
-    "graph_pagerank" -> ((s, dir) => {
+    Gate("graph_pagerank", ((s, dir) => {
       // link-graph centrality over the customer↔supplier purchase
       // graph (reciprocal edges — no dangling mass): 5 scaled-integer
       // iterations, every value engine-exact; the twin unrolls the
@@ -3634,8 +5831,9 @@ object SparkEntry {
       graft.llm.Graph.pageRank(purchaseGraphEdges(s, dir),
         "src", "dst", iters = 5)
     }),
+      PageRankOracle),
 
-    "bpe_tokens" -> ((s, dir) => {
+    Gate("bpe_tokens", ((s, dir) => {
       // BPE tokenizer trained to CONVERGENCE on this corpus's (small)
       // vocabulary: at the fixed point every word is one piece, so the
       // oracle is the whitespace word count — a real end-to-end pin on
@@ -3648,8 +5846,14 @@ object SparkEntry {
       graft.llm.Bpe.tokenCount(docs, "text", model)
         .select("doc_id", "n_bpe_tokens")
     }),
+      // converged-BPE fixed point: one piece per whitespace word
+      """SELECT doc_id,
+        |  CASE WHEN trim(text) = '' THEN CAST(0 AS BIGINT)
+        |       ELSE CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
+        |  END AS n_bpe_tokens
+        |FROM documents""".stripMargin),
 
-    "bpe_roundtrip" -> ((s, dir) => {
+    Gate("bpe_roundtrip", ((s, dir) => {
       // tokenizer-integrity gate: decode(encode(text)) must equal the
       // whitespace-normalized text under a PARTIAL model (200 merges —
       // mid-training, where boundary bugs would hide); the oracle is
@@ -3660,8 +5864,16 @@ object SparkEntry {
           graft.llm.Bpe.encode(docs, "text", model), "pieces")
         .select("doc_id", "decoded")
     }),
+      // the round-trip identity: decode(encode(text)) ≡ the whitespace-
+      // normalized text, independent of merge count (blank-guarded like
+      // text_token_stats_by_lang)
+      """SELECT doc_id,
+        |  array_to_string(list_filter(
+        |    string_split_regex(trim(text), '\s+'), x -> x != ''), ' ')
+        |  AS decoded
+        |FROM documents""".stripMargin),
 
-    "decontam_hits" -> ((s, dir) => {
+    Gate("decontam_hits", ((s, dir) => {
       // benchmark decontamination (13-gram collision, GPT-3/Llama
       // discipline): benchmark = every 5th doc, training = the rest; the
       // exchange carries (hash, id) pairs, never text. The oracle counts
@@ -3673,8 +5885,23 @@ object SparkEntry {
         docs.filter(col("doc_id") % 5 === 0),
         "doc_id", "text", n = 13)
     }),
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents),
+        |w AS (
+        |  SELECT doc_id, unnest(
+        |    [array_to_string(toks[i:i+12], ' ') for i in range(1, len(toks) - 11)])
+        |    AS w
+        |  FROM t),
+        |d AS (SELECT * FROM w WHERE doc_id % 5 <> 0),
+        |b AS (SELECT DISTINCT doc_id AS bench_id, w FROM w WHERE doc_id % 5 = 0)
+        |SELECT d.doc_id, count(*) AS n_collisions,
+        |  count(DISTINCT b.bench_id) AS n_benchmark_docs
+        |FROM d JOIN b USING (w) GROUP BY d.doc_id""".stripMargin),
 
-    "decontam_overlap" -> ((s, dir) => {
+    Gate("decontam_overlap", ((s, dir) => {
       // graded contamination coverage: every training doc with its
       // window total, collision count, and exact int64-quotient fraction
       // (zero-hit docs included — a decontam report says "clean", not
@@ -3685,8 +5912,32 @@ object SparkEntry {
         docs.filter(col("doc_id") % 5 === 0),
         "doc_id", "text", n = 13)
     }),
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents),
+        |tw AS (
+        |  SELECT doc_id, greatest(len(toks) - 12, 0) AS n_windows
+        |  FROM t WHERE doc_id % 5 <> 0),
+        |w AS (
+        |  SELECT doc_id, unnest(
+        |    [array_to_string(toks[i:i+12], ' ') for i in range(1, len(toks) - 11)])
+        |    AS w
+        |  FROM t),
+        |b AS (SELECT DISTINCT w FROM w WHERE doc_id % 5 = 0),
+        |h AS (
+        |  SELECT w.doc_id, count(*) AS n_hits
+        |  FROM w JOIN b USING (w) WHERE w.doc_id % 5 <> 0
+        |  GROUP BY w.doc_id)
+        |SELECT tw.doc_id, CAST(tw.n_windows AS BIGINT) AS n_windows,
+        |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
+        |  CASE WHEN tw.n_windows = 0 THEN 0.0
+        |       ELSE CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / tw.n_windows
+        |  END AS overlap_frac
+        |FROM tw LEFT JOIN h USING (doc_id)""".stripMargin),
 
-    "decontam_by_source" -> ((s, dir) => {
+    Gate("decontam_by_source", ((s, dir) => {
       // per-benchmark attribution: which benchmark doc leaked into
       // which training doc, window-position hit counts — the audit
       // pair report behind "this eval is burned"
@@ -3697,8 +5948,25 @@ object SparkEntry {
           .withColumn("bench_id", col("doc_id")),
         "doc_id", "text", "bench_id", n = 13)
     }),
+      // decontam_overlap's window CTEs with the benchmark id kept on its
+      // (distinct-per-benchmark) side — counts by n-gram TEXT, equal to
+      // the engine's 64-bit hash counts absent collisions
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents),
+        |w AS (
+        |  SELECT doc_id, unnest(
+        |    [array_to_string(toks[i:i+12], ' ') for i in range(1, len(toks) - 11)])
+        |    AS w
+        |  FROM t),
+        |b AS (SELECT DISTINCT doc_id AS bench_id, w FROM w WHERE doc_id % 5 = 0)
+        |SELECT w.doc_id, b.bench_id, count(*) AS n_hits
+        |FROM w JOIN b USING (w) WHERE w.doc_id % 5 <> 0
+        |GROUP BY 1, 2""".stripMargin),
 
-    "decontam_stream" -> ((s, dir) => {
+    Gate("decontam_stream", ((s, dir) => {
       // the ACTUAL streaming decontamination path under the oracle gate:
       // AvailableNow over the documents parquet, benchmark baked once
       // into the WindowSetContains kernel, memory sink drained. Stateless
@@ -3712,8 +5980,25 @@ object SparkEntry {
         .select("doc_id")
       drainStream(survivors, "graft_decontam_stream")
     }),
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
+        |  FROM documents),
+        |w AS (
+        |  SELECT doc_id, unnest(
+        |    [array_to_string(toks[i:i+12], ' ') for i in range(1, len(toks) - 11)])
+        |    AS w
+        |  FROM t),
+        |b AS (SELECT DISTINCT w FROM w WHERE doc_id % 5 = 0),
+        |bad AS (
+        |  SELECT DISTINCT doc_id FROM w
+        |  WHERE doc_id % 5 <> 0 AND w IN (SELECT w FROM b))
+        |SELECT doc_id FROM documents
+        |WHERE doc_id % 5 <> 0
+        |  AND doc_id NOT IN (SELECT doc_id FROM bad)""".stripMargin),
 
-    "text_nb_classify" -> ((s, dir) => {
+    Gate("text_nb_classify", ((s, dir) => {
       // fasttext-analog corpus classifier: multinomial NB trained
       // relationally on the 80% labeled split (labels via the embeddings
       // table), argmax-scored over the held-out 20%. Integer micro-log
@@ -3728,17 +6013,67 @@ object SparkEntry {
       graft.llm.Classify.nbClassify(
         docs.filter(col("doc_id") % 5 === 0), "doc_id", "text", model)
     }),
+      """WITH lab AS (
+        |  SELECT doc_id, label, text FROM documents
+        |  JOIN embeddings ON doc_id = vec_id WHERE doc_id % 5 <> 0),
+        |ttok AS (
+        |  SELECT label, unnest(list_filter(
+        |    regexp_split_to_array(lower(text), '[^a-z0-9]+'),
+        |    x -> x <> '')) AS tok
+        |  FROM lab),
+        |w AS (
+        |  SELECT label, tok, CAST(round(ln(count(*) + 1) * 10000) AS BIGINT) AS w
+        |  FROM ttok GROUP BY label, tok),
+        |stats AS (
+        |  SELECT p.label,
+        |    CAST(round(ln(CAST(p.n_docs AS DOUBLE)
+        |      / (SELECT count(*) FROM lab)) * 10000) AS BIGINT) AS prior_q,
+        |    -CAST(round(ln(c.tot + (SELECT count(DISTINCT tok) FROM ttok))
+        |      * 10000) AS BIGINT) AS oov_q
+        |  FROM (SELECT label, count(*) AS n_docs FROM lab GROUP BY label) p
+        |  JOIN (SELECT label, count(*) AS tot FROM ttok GROUP BY label) c
+        |    USING (label)),
+        |test AS (
+        |  SELECT doc_id, list_filter(
+        |    regexp_split_to_array(lower(text), '[^a-z0-9]+'),
+        |    x -> x <> '') AS toks
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |base AS (
+        |  SELECT t.doc_id, s.label, s.prior_q + len(t.toks) * s.oov_q AS base_q
+        |  FROM test t CROSS JOIN stats s),
+        |dtok AS (SELECT doc_id, unnest(toks) AS tok FROM test),
+        |delta AS (
+        |  SELECT d.doc_id, w.label, SUM(w.w) AS delta_q
+        |  FROM dtok d JOIN w ON d.tok = w.tok GROUP BY d.doc_id, w.label),
+        |score AS (
+        |  SELECT b.doc_id, b.label, b.base_q + COALESCE(dl.delta_q, 0) AS score_q
+        |  FROM base b LEFT JOIN delta dl
+        |    ON b.doc_id = dl.doc_id AND b.label = dl.label),
+        |ranked AS (
+        |  SELECT doc_id, label, score_q, row_number() OVER (
+        |    PARTITION BY doc_id ORDER BY score_q DESC, label ASC) AS rn
+        |  FROM score)
+        |SELECT doc_id, CAST(label AS BIGINT) AS pred_label,
+        |  CAST(score_q AS BIGINT) AS score
+        |FROM ranked WHERE rn = 1""".stripMargin),
 
     // ------------------------------------------------------ record linkage
-    "link_fuzzy_pairs" -> ((s, dir) =>
+    Gate("link_fuzzy_pairs", ((s, dir) =>
       // entity-resolution self-match (xref discipline): ALL name pairs
       // within Levenshtein 1, candidates via FastSS deletion-neighborhood
       // blocking (complete — so the brute-force oracle is a genuinely
       // independent formulation, and it also checks the completeness claim)
       graft.llm.Linkage.fuzzyPairs(
         t(s, dir, "customer"), "c_custkey", "c_name")),
+      """WITH n AS (SELECT c_custkey AS id,
+        |  trim(regexp_replace(lower(c_name), '\s+', ' ', 'g')) AS nm
+        |  FROM customer)
+        |SELECT a.id AS id_a, b.id AS id_b,
+        |  CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS dist
+        |FROM n a JOIN n b ON a.id < b.id
+        |WHERE levenshtein(a.nm, b.nm) <= 1""".stripMargin),
 
-    "link_fuzzy_against" -> ((s, dir) => {
+    Gate("link_fuzzy_against", ((s, dir) => {
       // cross-corpus form: new batch (every 10th customer) against the
       // reference dictionary (the rest) through the variant-hash index
       val cust = t(s, dir, "customer")
@@ -3747,15 +6082,26 @@ object SparkEntry {
         cust.filter(col("c_custkey") % 10 =!= 0),
         "c_custkey", "c_name")
     }),
+      """WITH n AS (SELECT c_custkey AS id,
+        |  trim(regexp_replace(lower(c_name), '\s+', ' ', 'g')) AS nm
+        |  FROM customer),
+        |nw AS (SELECT * FROM n WHERE id % 10 = 0),
+        |rf AS (SELECT * FROM n WHERE id % 10 <> 0)
+        |SELECT nw.id AS new_id, rf.id AS ref_id,
+        |  CAST(levenshtein(nw.nm, rf.nm) AS BIGINT) AS dist
+        |FROM nw JOIN rf ON levenshtein(nw.nm, rf.nm) <= 1""".stripMargin),
 
     // --------------------------------------------------------- multimodal
-    "multimodal_meta" -> ((s, dir) =>
+    Gate("multimodal_meta", ((s, dir) =>
       Multimodal.asMedia(
           t(s, dir, "documents").withColumn("bin", col("text").cast("binary")),
           "doc_id", "bin", "image", "image/png")
         .select("media_id", "modality", "mime_type", "byte_size")),
+      """SELECT doc_id AS media_id, 'image' AS modality, 'image/png' AS mime_type,
+        | CAST(octet_length(encode(text)) AS BIGINT) AS byte_size
+        |FROM documents""".stripMargin),
 
-    "multimodal_frames" -> ((s, dir) =>
+    Gate("multimodal_frames", ((s, dir) =>
       // frame-sampling explode over binary media (generator-shaped op;
       // stub frame count derives from byte size → fully oracle-checkable)
       Multimodal.sampleFramesStub(
@@ -3763,7 +6109,13 @@ object SparkEntry {
           t(s, dir, "documents").withColumn("bin", col("text").cast("binary")),
           "doc_id", "bin", "video", "video/mp4"), n = 4)
         .withColumn("frame_count", col("frame_count").cast("long"))
-        .withColumn("frame_index", col("frame_index").cast("long")))
+        .withColumn("frame_index", col("frame_index").cast("long"))),
+      """WITH m AS (SELECT doc_id AS media_id,
+        |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_size FROM documents),
+        |f AS (SELECT media_id, byte_size % 500 + 10 AS frame_count FROM m)
+        |SELECT media_id, frame_count,
+        |  CAST(floor(i * frame_count / 4.0) AS BIGINT) AS frame_index
+        |FROM f CROSS JOIN (SELECT unnest(range(0, 4)) AS i) idx""".stripMargin)
   )
 
   /** DuckDB cosine formula matching the CosineSimilarity expression's
@@ -4449,2680 +6801,4 @@ object SparkEntry {
       |       (SELECT min(x) FROM cum WHERE cw >= qs.q * n.n) AS value,
       |       n.n AS n_rows
       |FROM qs, n""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "text_bm25_index_merge" -> Bm25TopkOracle,
-
-    // certification twin: the rebuild top-k's per-query counts with
-    // certified = true — merge ≡ rebuild is bit-exact, so the Spark
-    // side's exact-agreement audit must land on full agreement; any
-    // divergence (overlapping parts, lost batch) hash-mismatches here
-    "text_bm25_certify" ->
-      s"""SELECT query_id, count(*) AS n_served, count(*) AS n_rebuilt,
-         |  count(*) AS n_agree, true AS certified
-         |FROM ($Bm25TopkOracle) t GROUP BY query_id""".stripMargin,
-
-    // the maintenance loop's certificate: merge ≡ rebuild is bit-exact
-    // under the disjointness contract, so maintainBm25Index must keep
-    // the merge and certify all-green — text_bm25_certify's twin
-    "text_bm25_maintain" ->
-      s"""SELECT query_id, count(*) AS n_served, count(*) AS n_rebuilt,
-         |  count(*) AS n_agree, true AS certified
-         |FROM ($Bm25TopkOracle) t GROUP BY query_id""".stripMargin,
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        | count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        | AND o_orderdate < TIMESTAMP '1998-01-01'
-        | AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, strftime(o_orderdate, '%Y-%m-%d')
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT r_name, n_name,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        | count(*) AS n_items
-        |FROM lineitem
-        | JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        | JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        | JOIN nation ON s_nationkey = n_nationkey
-        | JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        | count(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q2_min_cost_supplier" ->
-      """SELECT DISTINCT p_partkey, p_brand, s_name, n_name,
-        | l_extendedprice AS min_price
-        |FROM part
-        | JOIN lineitem ON l_partkey = p_partkey
-        | JOIN supplier ON l_suppkey = s_suppkey
-        | JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_size <= 10
-        | AND l_extendedprice = (
-        |   SELECT min(l2.l_extendedprice) FROM lineitem l2
-        |   WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-07-01'
-        |  AND o_orderdate < TIMESTAMP '1997-10-01'
-        |  AND EXISTS (
-        |    SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q7_volume_shipping" ->
-      """SELECT supp_nation, cust_nation, l_year,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM (
-        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |    strftime(l_shipdate, '%Y') AS l_year, l_extendedprice, l_discount
-        |  FROM lineitem
-        |    JOIN orders ON l_orderkey = o_orderkey
-        |    JOIN customer ON o_custkey = c_custkey
-        |    JOIN supplier ON l_suppkey = s_suppkey
-        |    JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |    JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |  WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1998-01-01')
-        |GROUP BY supp_nation, cust_nation, l_year""".stripMargin,
-
-    "q8_market_share" ->
-      """SELECT o_year,
-        | round(CAST(SUM(CASE WHEN supp_nation = 'NATION_2' THEN vol ELSE 0 END) AS DOUBLE)
-        |   / CAST(SUM(vol) AS DOUBLE), 6) AS mkt_share
-        |FROM (
-        |  SELECT strftime(o_orderdate, '%Y') AS o_year,
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4)) AS vol,
-        |    n2.n_name AS supp_nation
-        |  FROM lineitem
-        |    JOIN part ON l_partkey = p_partkey
-        |    JOIN orders ON l_orderkey = o_orderkey
-        |    JOIN customer ON o_custkey = c_custkey
-        |    JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |    JOIN region ON n1.n_regionkey = r_regionkey
-        |    JOIN supplier ON l_suppkey = s_suppkey
-        |    JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  WHERE r_name = 'ASIA' AND p_type = 'ECONOMY'
-        |    AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |    AND o_orderdate < TIMESTAMP '1998-01-01')
-        |GROUP BY o_year""".stripMargin,
-
-    "q9_product_profit" ->
-      """SELECT nation, o_year, CAST(SUM(amount) AS DOUBLE) AS profit
-        |FROM (
-        |  SELECT n_name AS nation, strftime(o_orderdate, '%Y') AS o_year,
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))
-        |      - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)) AS amount
-        |  FROM lineitem
-        |    JOIN part ON l_partkey = p_partkey
-        |    JOIN orders ON l_orderkey = o_orderkey
-        |    JOIN supplier ON l_suppkey = s_suppkey
-        |    JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE p_name LIKE '%red%')
-        |GROUP BY nation, o_year""".stripMargin,
-
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, n_name,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        | JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-04-01'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q12_late_shipments" ->
-      """SELECT l_linestatus,
-        | CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        | CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |GROUP BY l_linestatus""".stripMargin,
-
-    "q13_order_distribution" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count""".stripMargin,
-
-    "q14_promo_revenue" ->
-      """SELECT round(100.0 *
-        |  CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))
-        |    ELSE 0 END) AS DOUBLE) /
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 6)
-        |  AS promo_revenue_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-06-01'
-        |  AND l_shipdate < TIMESTAMP '1997-07-01'""".stripMargin,
-
-    "q18_large_orders" ->
-      """SELECT c_name, c_custkey, o_orderkey,
-        | strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-        | o_totalprice, total_qty
-        |FROM (
-        |  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 250)
-        | JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM supplier JOIN rev ON s_suppkey = l_suppkey
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)""".stripMargin,
-
-    "q17_small_quantity" ->
-      """WITH l AS (
-        |  SELECT l_extendedprice, CAST(l_quantity AS DECIMAL(18,2)) AS qty,
-        |    SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER (PARTITION BY l_partkey) AS sum_qty,
-        |    COUNT(*) OVER (PARTITION BY l_partkey) AS n_qty
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_brand = 'Brand#2')
-        |SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-        |  count(*) AS n_lines
-        |FROM l WHERE qty * 5 * n_qty < sum_qty""".stripMargin,
-
-    "q19_disjunctive_join" ->
-      """SELECT
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        | count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
-        |    AND l_quantity BETWEEN 1 AND 20)
-        |   OR (p_brand = 'Brand#17' AND p_size BETWEEN 5 AND 20
-        |    AND l_quantity BETWEEN 10 AND 40)
-        |   OR (p_brand = 'Brand#25' AND p_size BETWEEN 10 AND 40
-        |    AND l_quantity BETWEEN 20 AND 60)""".stripMargin,
-
-    "q21_waiting_supplier" ->
-      // the LITERAL exists/not-exists form — proving the engine's
-      // one-shuffle aggregate rewrite against the textbook plan
-      """SELECT s_name, n_name, count(*) AS numwait
-        |FROM supplier
-        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |  AND EXISTS (
-        |    SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey
-        |      AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (
-        |    SELECT 1 FROM lineitem l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey
-        |      AND l3.l_suppkey <> l1.l_suppkey
-        |      AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY s_name, n_name
-        |ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin,
-
-    "q22_idle_customers" ->
-      """SELECT c_mktsegment, count(*) AS numcust,
-        | CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM customer
-        |WHERE c_acctbal > (
-        |    SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-        |    FROM customer WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (
-        |    SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey
-        |      AND o_orderdate >= TIMESTAMP '1999-01-01')
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "p1_project_keys" ->
-      s"""SELECT doc_id, $docsKeySql AS key,
-         | CAST(doc_id AS VARCHAR) || '.txt' AS name
-         |FROM documents""".stripMargin,
-
-    "p2_glob_include_exclude" ->
-      s"""SELECT doc_id, $docsKeySql AS key FROM documents
-         |WHERE ($docsKeySql) LIKE 'src1%'
-         |  AND ($docsKeySql) NOT LIKE '%/zh/%'""".stripMargin,
-
-    "j1_anti_deletions" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P')""".stripMargin,
-
-    "j2_semi_existing" ->
-      """SELECT c_custkey, c_acctbal FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')""".stripMargin,
-
-    "j3_make_reconcile" ->
-      s"""WITH src AS (
-         |  SELECT $docsKeySql AS key,
-         |    CASE WHEN doc_id % 11 = 0 THEN md5(text || 'x') ELSE md5(text) END AS h
-         |  FROM documents WHERE doc_id % 13 <> 0),
-         |meta AS (
-         |  SELECT $docsKeySql AS key, md5(text) AS h
-         |  FROM documents WHERE doc_id % 7 <> 0)
-         |SELECT CASE WHEN m.key IS NULL THEN 'added'
-         |            WHEN s.key IS NULL THEN 'deleted'
-         |            WHEN s.h <> m.h THEN 'integrity_error'
-         |            ELSE 'verify' END AS action,
-         |       count(*) AS n
-         |FROM src s FULL OUTER JOIN meta m ON s.key = m.key
-         |GROUP BY 1""".stripMargin,
-
-    "j5_point_lookup" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
-        |FROM lineitem WHERE l_orderkey = 1""".stripMargin,
-
-    "j6_path_ancestors" ->
-      s"""WITH k AS (SELECT $docsKeySql AS key FROM documents),
-         |a AS (SELECT unnest([string_split(key, '/')[1],
-         |                     string_split(key, '/')[1] || '/' || string_split(key, '/')[2]]) AS folder
-         |      FROM k)
-         |SELECT DISTINCT folder,
-         |       CAST(len(string_split(folder, '/')) AS BIGINT) AS depth
-         |FROM a""".stripMargin,
-
-    "j7_entity_blob_join" ->
-      """SELECT label, lang, count(*) AS n
-        |FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
-        |GROUP BY label, lang""".stripMargin,
-
-    "a1_total_size" ->
-      "SELECT CAST(sum(n_chars) AS BIGINT) AS total_file_size FROM documents",
-
-    "a2_schema_counts" ->
-      s"""SELECT CASE WHEN lang = 'en' THEN 'Pages'
-         |            WHEN lang = 'de' THEN 'HyperText'
-         |            WHEN lang = 'es' THEN 'Table'
-         |            WHEN lang = 'fr' THEN 'Image'
-         |            ELSE 'PlainText' END AS doc_schema,
-         |       count(*) AS n
-         |FROM documents GROUP BY 1""".stripMargin,
-
-    "a3_distinct_users" ->
-      "SELECT event_type, count(DISTINCT user_id) AS users FROM events GROUP BY event_type",
-
-    "a5_latest_version" ->
-      "SELECT strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS max_ts FROM events",
-
-    "a6_keep_latest" ->
-      """SELECT user_id, event_id, event_type, value FROM (
-        |  SELECT e.*, row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn FROM events e) s
-        |WHERE rn = 1""".stripMargin,
-
-    "a7_catalog_rollup" ->
-      """SELECT source, count(*) AS file_count,
-        | CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        | count(DISTINCT lang) AS n_langs
-        |FROM documents GROUP BY source""".stripMargin,
-
-    // per-column UNION ALL twin off one aggregate CTE; string/timestamp
-    // min-max compare in binary/ISO form, double min-max stay numeric
-    "a8_table_profile" ->
-      """WITH s AS (SELECT count(*) AS n,
-        | count(o_orderkey) c1, count(DISTINCT o_orderkey) d1,
-        |   round(CAST(min(o_orderkey) AS DOUBLE), 6) mn1, round(CAST(max(o_orderkey) AS DOUBLE), 6) mx1,
-        | count(o_custkey) c2, count(DISTINCT o_custkey) d2,
-        |   round(CAST(min(o_custkey) AS DOUBLE), 6) mn2, round(CAST(max(o_custkey) AS DOUBLE), 6) mx2,
-        | count(o_orderstatus) c3, count(DISTINCT o_orderstatus) d3,
-        |   CAST(min(o_orderstatus) AS VARCHAR) mns3, CAST(max(o_orderstatus) AS VARCHAR) mxs3,
-        | count(o_totalprice) c4, count(DISTINCT o_totalprice) d4,
-        |   round(min(o_totalprice), 6) mn4, round(max(o_totalprice), 6) mx4,
-        | count(o_orderdate) c5, count(DISTINCT o_orderdate) d5,
-        |   CAST(min(o_orderdate) AS VARCHAR) mns5, CAST(max(o_orderdate) AS VARCHAR) mxs5,
-        | count(o_orderpriority) c6, count(DISTINCT o_orderpriority) d6,
-        |   CAST(min(o_orderpriority) AS VARCHAR) mns6, CAST(max(o_orderpriority) AS VARCHAR) mxs6
-        | FROM orders)
-        |SELECT 'o_orderkey' AS col_name, n AS n_rows, n - c1 AS n_nulls, d1 AS n_distinct,
-        |  mn1 AS min_num, mx1 AS max_num, CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str FROM s
-        |UNION ALL SELECT 'o_custkey', n, n - c2, d2, mn2, mx2, NULL, NULL FROM s
-        |UNION ALL SELECT 'o_orderstatus', n, n - c3, d3, NULL, NULL, mns3, mxs3 FROM s
-        |UNION ALL SELECT 'o_totalprice', n, n - c4, d4, mn4, mx4, NULL, NULL FROM s
-        |UNION ALL SELECT 'o_orderdate', n, n - c5, d5, NULL, NULL, mns5, mxs5 FROM s
-        |UNION ALL SELECT 'o_orderpriority', n, n - c6, d6, NULL, NULL, mns6, mxs6 FROM s""".stripMargin,
-
-    "u1_union_rebuild" ->
-      """SELECT o_orderstatus, count(*) AS n FROM (
-        |  SELECT * FROM orders WHERE o_totalprice < 100000
-        |  UNION ALL
-        |  SELECT * FROM orders WHERE o_totalprice >= 100000) u
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    "u2_snapshot_diff" ->
-      """WITH cut AS (SELECT CAST(floor(max(event_id) / 2.0) AS BIGINT) AS c FROM events),
-        |old AS (SELECT user_id, event_type, value FROM (
-        |  SELECT e.*, row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events e, cut WHERE event_id <= c) s WHERE rn = 1),
-        |nxt AS (SELECT user_id, event_type, value FROM (
-        |  SELECT e.*, row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn FROM events e) s WHERE rn = 1)
-        |SELECT user_id, event_type, value, '+' AS diff_op
-        |  FROM (SELECT * FROM nxt EXCEPT ALL SELECT * FROM old) a
-        |UNION ALL
-        |SELECT user_id, event_type, value, '-' AS diff_op
-        |  FROM (SELECT * FROM old EXCEPT ALL SELECT * FROM nxt) d""".stripMargin,
-
-    "f1_checksum_shard" ->
-      """SELECT doc_id, md5(text) AS content_hash, sha256(text) AS sha256_hash,
-        | substr(md5(text),1,2) || '/' || substr(md5(text),3,2) || '/' ||
-        | substr(md5(text),5,2) || '/' || md5(text) AS shard_path
-        |FROM documents""".stripMargin,
-
-    "f6_entity_projection" ->
-      s"""SELECT 'testdata-file-' || md5('["' || ($docsKeySql) || '","' || md5(text) || '"]') AS id,
-         | CASE WHEN lang = 'en' THEN 'Pages'
-         |      WHEN lang = 'de' THEN 'HyperText'
-         |      WHEN lang = 'es' THEN 'Table'
-         |      WHEN lang = 'fr' THEN 'Image'
-         |      ELSE 'PlainText' END AS "schema",
-         | md5(text) AS contentHash,
-         | CAST(doc_id AS VARCHAR) || '.txt' AS fileName,
-         | CAST(n_chars AS VARCHAR) AS fileSize,
-         | $docsMimeSql AS mimeType
-         |FROM documents""".stripMargin,
-
-    "f7_f11_json_coalesce" ->
-      """SELECT event_id,
-        | CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-        | coalesce(nullif(CAST(json_extract_string(props, '$.k') AS BIGINT), 0), user_id) AS k_or_user
-        |FROM events""".stripMargin,
-
-    "i1_ledger_pending" ->
-      """SELECT event_type, count(*) AS pending FROM events e
-        |WHERE NOT (event_id % 3 = 0)
-        |GROUP BY event_type""".stripMargin,
-
-    "st_hourly_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS window_start,
-        | event_type, count(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "st_sessionize" -> StSessionizeOracle,
-    // the rollup steady state shares the one-shot twin VERBATIM: the
-    // hash match proves state-merge + closed-emit + finalize ≡ a
-    // full-history sessions() recompute, decimal partials included
-    "st_sessions_incremental" -> StSessionizeOracle,
-    // and the STREAMED ledger under the same twin again: per-micro-batch
-    // closed emits ∪ finalized tail ≡ the full-history recompute
-    "st_sessions_stream" -> StSessionizeOracle,
-
-    // the incremental twin: full-history lag+cumsum tagging RESTRICTED
-    // to the post-split rows — shared by the batch increment and the
-    // streamed ledger (whose emitted union covers the same rows)
-    "st_sessionize_incremental" -> StSessionizeIncrementalOracle,
-    "st_sessionize_stream" -> StSessionizeIncrementalOracle,
-
-    "dedup_exact" ->
-      """SELECT min(doc_id) AS doc_id, md5(text) AS content_hash,
-        | count(*) AS dup_count
-        |FROM documents GROUP BY md5(text)""".stripMargin,
-
-    "dedup_jaccard_pairs" ->
-      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct([array_to_string(words[i:i+2], ' ')
-        |                 for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
-        |  FROM w),
-        |inv AS (SELECT doc_id, len(s) AS ssize, unnest(s) AS shingle FROM sh),
-        |p AS (SELECT a.doc_id AS i, b.doc_id AS j, a.ssize AS si, b.ssize AS sj,
-        |        count(*) AS inter
-        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2, 3, 4)
-        |SELECT i, j,
-        |  round(CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE), 6) AS jaccard
-        |FROM p
-        |WHERE CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE) >= 0.5""".stripMargin,
-
-    // the eval harness twin: the jaccard pair CTEs over orig∪mutated,
-    // planted truth joined back, counts exact, ratios derived last
-    "dedup_eval" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' graftmut' FROM documents
-        |  WHERE doc_id % 7 = 0),
-        |w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM corpus),
-        |sh AS (SELECT doc_id,
-        |  list_distinct([array_to_string(words[i:i+2], ' ')
-        |                 for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
-        |  FROM w),
-        |inv AS (SELECT doc_id, len(s) AS ssize, unnest(s) AS shingle FROM sh),
-        |p AS (SELECT a.doc_id AS i, b.doc_id AS j, a.ssize AS si, b.ssize AS sj,
-        |        count(*) AS inter
-        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2, 3, 4),
-        |pc AS (SELECT DISTINCT least(i, j) AS a, greatest(i, j) AS b FROM p
-        |       WHERE CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE) >= 0.5
-        |         AND i <> j),
-        |truth AS (SELECT doc_id AS a, doc_id + 1000000 AS b FROM documents
-        |          WHERE doc_id % 7 = 0),
-        |st AS (SELECT count(*) AS n_pred,
-        |         CAST(COALESCE(sum(CASE WHEN t.a IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS tp
-        |       FROM pc LEFT JOIN truth t USING (a, b)),
-        |nt AS (SELECT count(*) AS n_truth FROM truth)
-        |SELECT n_pred, n_truth, tp,
-        |  n_pred - tp AS fp, n_truth - tp AS fn,
-        |  CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred END AS "precision",
-        |  CASE WHEN n_truth > 0 THEN CAST(tp AS DOUBLE) / n_truth END AS recall,
-        |  CASE WHEN n_pred + n_truth > 0
-        |       THEN CAST(2 * tp AS DOUBLE) / (n_pred + n_truth) END AS f1
-        |FROM st, nt""".stripMargin,
-
-    // recursive-CTE reachability twin of the pointer-doubling engine op:
-    // same pair list (the dedup_jaccard_pairs CTEs), comp = min reachable id
-    "dedup_components" -> DedupComponentsOracle,
-    // incremental path ≡ full recompute — the twin is shared verbatim
-    "dedup_components_incremental" -> DedupComponentsOracle,
-
-    // the same left-associated multiply chains the engine folds —
-    // s^4 as ((s*s)*s)*s, (1-s^4)^16 as a 16-term chain
-    "dedup_lsh_tuning" ->
-      s"""WITH g AS (SELECT CAST(i AS DOUBLE) / 100 AS s
-         |           FROM (SELECT unnest(range(0, 101)) AS i) r),
-         |b AS (SELECT s, s * s * s * s AS pb FROM g),
-         |m AS (SELECT s, pb, (1 - pb) AS q FROM b)
-         |SELECT s, pb AS p_band,
-         |  1 - (${Seq.fill(16)("q").mkString(" * ")}) AS p_detect
-         |FROM m""".stripMargin,
-
-    "dedup_keep_representative" ->
-      """WITH RECURSIVE w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct([array_to_string(words[i:i+2], ' ')
-        |                 for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
-        |  FROM w),
-        |inv AS (SELECT doc_id, len(s) AS ssize, unnest(s) AS shingle FROM sh),
-        |p AS (SELECT a.doc_id AS i, b.doc_id AS j, a.ssize AS si, b.ssize AS sj,
-        |        count(*) AS inter
-        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2, 3, 4),
-        |pr AS (SELECT i, j FROM p
-        |       WHERE CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE) >= 0.5),
-        |e AS (SELECT i, j FROM pr UNION SELECT j AS i, i AS j FROM pr),
-        |nodes AS (SELECT DISTINCT i AS id FROM e),
-        |walk(id, comp) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT e.i, walk.comp FROM e JOIN walk ON e.j = walk.id),
-        |comps AS (SELECT id AS doc_id, min(comp) AS comp FROM walk GROUP BY id),
-        |sz AS (SELECT comp, count(*) AS cluster_size FROM comps GROUP BY comp),
-        |cl AS (SELECT d.doc_id, c.comp, length(d.text) AS score
-        |       FROM documents d JOIN comps c USING (doc_id)),
-        |best AS (SELECT comp, max(score) AS best FROM cl GROUP BY comp),
-        |rep AS (SELECT cl.comp, min(cl.doc_id) AS doc_id
-        |        FROM cl JOIN best ON cl.comp = best.comp AND cl.score = best.best
-        |        GROUP BY cl.comp)
-        |SELECT r.doc_id, r.comp, sz.cluster_size
-        |FROM rep r JOIN sz USING (comp)
-        |UNION ALL
-        |SELECT d.doc_id, d.doc_id AS comp, CAST(1 AS BIGINT) AS cluster_size
-        |FROM documents d LEFT JOIN comps c USING (doc_id)
-        |WHERE c.comp IS NULL""".stripMargin,
-
-    // the half-mutated re-ingest fixture, shared VERBATIM with
-    // dedup_exact_bloom: plain exactAgainst and the Bloom-routed form
-    // must both equal this exact-hash twin (non-vacuous — the unmutated
-    // half of the slice matches itself in the corpus)
-    "dedup_exact_incremental" ->
-      """WITH n AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN text
-        |       ELSE text || ' graftnew' END AS text
-        |  FROM documents WHERE doc_id % 7 = 0)
-        |SELECT n.doc_id AS i, min(c.doc_id) AS j,
-        | count(*) AS n_corpus_matches
-        |FROM n JOIN documents c ON md5(n.text) = md5(c.text)
-        |GROUP BY n.doc_id""".stripMargin,
-
-    // the Bloom pre-route must not change the answer: plain exact-hash
-    // twin over the half-mutated re-ingest slice
-    "dedup_exact_bloom" ->
-      """WITH n AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN text
-        |       ELSE text || ' graftnew' END AS text
-        |  FROM documents WHERE doc_id % 7 = 0)
-        |SELECT n.doc_id AS i, min(c.doc_id) AS j,
-        | count(*) AS n_corpus_matches
-        |FROM n JOIN documents c ON md5(n.text) = md5(c.text)
-        |GROUP BY n.doc_id""".stripMargin,
-
-    "dedup_jaccard_incremental" ->
-      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct([array_to_string(words[i:i+2], ' ')
-        |                 for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
-        |  FROM w),
-        |inv AS (SELECT doc_id, len(s) AS ssize, unnest(s) AS shingle FROM sh),
-        |p AS (SELECT a.doc_id AS i, b.doc_id AS j, a.ssize AS si, b.ssize AS sj,
-        |        count(*) AS inter
-        |      FROM inv a JOIN inv b ON a.shingle = b.shingle
-        |      WHERE a.doc_id % 7 = 0 AND b.doc_id % 7 != 0
-        |      GROUP BY 1, 2, 3, 4)
-        |SELECT i, j,
-        |  round(CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE), 6) AS jaccard
-        |FROM p
-        |WHERE CAST(inter AS DOUBLE) / CAST(si + sj - inter AS DOUBLE) >= 0.5""".stripMargin,
-
-    // Hash-family ops: the oracle is a reviewed golden-pair parquet checked
-    // into the repo, generated once at sf0.01 by the spec-tested kernels
-    // (see golden/README.md — the review asserts the MinHash pair set equals
-    // the exact-Jaccard-0.5 set and every SimHash pair has exact
-    // Jaccard ≥ 0.96). Regenerate with tools/regen_golden.sh if the
-    // kernels or sf0.01 testdata change.
-    "dedup_minhash_lsh" ->
-      """SELECT i, j, est_jaccard
-        |FROM read_parquet('/root/repo/golden/dedup_minhash_lsh.parquet')""".stripMargin,
-
-    "dedup_simhash" ->
-      """SELECT i, j, hamming
-        |FROM read_parquet('/root/repo/golden/dedup_simhash.parquet')""".stripMargin,
-
-    "dedup_simhash_incremental" ->
-      """SELECT i, j, hamming
-        |FROM read_parquet('/root/repo/golden/dedup_simhash_incremental.parquet')""".stripMargin,
-
-    "ann_pq_topk" ->
-      """SELECT query_id, rk, corpus_id, sim
-        |FROM read_parquet('/root/repo/golden/ann_pq_topk.parquet')""".stripMargin,
-
-    "ann_ivf_pq_topk" ->
-      """SELECT query_id, rk, corpus_id, sim
-        |FROM read_parquet('/root/repo/golden/ann_ivf_pq_topk.parquet')""".stripMargin,
-
-    "dedup_embedding_pairs" ->
-      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |s AS (SELECT a.vec_id AS i, b.vec_id AS j,
-        |        list_sum([a.v[k] * b.v[k] for k in range(1, 65)]) /
-        |        (sqrt(list_sum([a.v[k] * a.v[k] for k in range(1, 65)])) *
-        |         sqrt(list_sum([b.v[k] * b.v[k] for k in range(1, 65)]))) AS sim
-        |      FROM c a CROSS JOIN c b WHERE a.vec_id < b.vec_id)
-        |SELECT i, j, round(sim, 6) AS sim FROM s WHERE sim >= 0.5""".stripMargin,
-
-    "dedup_embedding_incremental" ->
-      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |s AS (SELECT a.vec_id AS i, b.vec_id AS j,
-        |        list_sum([a.v[k] * b.v[k] for k in range(1, 65)]) /
-        |        (sqrt(list_sum([a.v[k] * a.v[k] for k in range(1, 65)])) *
-        |         sqrt(list_sum([b.v[k] * b.v[k] for k in range(1, 65)]))) AS sim
-        |      FROM c a CROSS JOIN c b
-        |      WHERE a.vec_id % 7 = 0 AND b.vec_id % 7 != 0)
-        |SELECT i, j, round(sim, 6) AS sim FROM s WHERE sim >= 0.4""".stripMargin,
-
-    // asymmetric SQ serving: the corpus side re-derives quantize →
-    // dequantize exactly (the emb_scalar_quant pipeline inline), the
-    // query side stays float; cosine/rank as the ann_cosine twin
-    "ann_sq_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |st AS (SELECT vec_id, v, list_min(v) AS lo,
-        |       (list_max(v) - list_min(v)) / 255.0 AS scale FROM e),
-        |r AS (SELECT vec_id, [lo + (CAST((CASE WHEN scale = 0 THEN -128
-        |           ELSE least(255, greatest(0,
-        |             CAST(round((v[i] - lo) / scale) AS INTEGER))) - 128
-        |         END) + 128 AS DOUBLE) * scale) for i in range(1, 65)] AS cv
-        |       FROM st),
-        |q AS (SELECT vec_id, v AS qv FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id AS query_id, r.vec_id AS corpus_id,
-        |        list_sum([r.cv[i] * q.qv[i] for i in range(1, 65)]) /
-        |        (sqrt(list_sum([r.cv[i] * r.cv[i] for i in range(1, 65)])) *
-        |         sqrt(list_sum([q.qv[i] * q.qv[i] for i in range(1, 65)]))) AS sim
-        |      FROM r CROSS JOIN q WHERE q.vec_id <> r.vec_id),
-        |rnk AS (SELECT query_id, corpus_id, sim,
-        |        row_number() OVER (PARTITION BY query_id
-        |          ORDER BY sim DESC, corpus_id) AS rk FROM s)
-        |SELECT query_id, rk, corpus_id, round(sim, 6) AS sim
-        |FROM rnk WHERE rk <= 10""".stripMargin,
-
-    "ann_cosine_topk" ->
-      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id, v FROM c WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-        |        list_sum([q.v[i] * c.v[i] for i in range(1, 65)]) /
-        |        (sqrt(list_sum([q.v[i] * q.v[i] for i in range(1, 65)])) *
-        |         sqrt(list_sum([c.v[i] * c.v[i] for i in range(1, 65)]))) AS sim
-        |      FROM c CROSS JOIN q WHERE q.vec_id <> c.vec_id),
-        |r AS (SELECT query_id, corpus_id, sim,
-        |        row_number() OVER (PARTITION BY query_id
-        |          ORDER BY sim DESC, corpus_id) AS rk FROM s)
-        |SELECT query_id, rk, corpus_id, round(sim, 6) AS sim
-        |FROM r WHERE rk <= 10""".stripMargin,
-
-    "dedup_semantic_pairs" ->
-      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c ORDER BY vec_id LIMIT 16),
-         |asg AS (SELECT corpus_id, centroid_id FROM (
-         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
-         |  FROM c a CROSS JOIN cents ce) t WHERE rn = 1)
-         |SELECT a1.corpus_id AS i, a2.corpus_id AS j,
-         |  round(${cosSql("c1.v", "c2.v")}, 6) AS sim
-         |FROM asg a1 JOIN asg a2 USING (centroid_id)
-         |JOIN c c1 ON c1.vec_id = a1.corpus_id
-         |JOIN c c2 ON c2.vec_id = a2.corpus_id
-         |WHERE a1.corpus_id < a2.corpus_id
-         |  AND ${cosSql("c1.v", "c2.v")} >= 0.3""".stripMargin,
-
-    "dedup_semantic_incremental" ->
-      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c
-         |          WHERE vec_id % 7 != 0 ORDER BY vec_id LIMIT 16),
-         |asgn AS (SELECT corpus_id, centroid_id FROM (
-         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
-         |  FROM c a CROSS JOIN cents ce WHERE a.vec_id % 7 = 0) t WHERE rn = 1),
-         |asgr AS (SELECT corpus_id, centroid_id FROM (
-         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
-         |  FROM c a CROSS JOIN cents ce WHERE a.vec_id % 7 != 0) t WHERE rn = 1)
-         |SELECT a1.corpus_id AS i, a2.corpus_id AS j,
-         |  round(${cosSql("c1.v", "c2.v")}, 6) AS sim
-         |FROM asgn a1 JOIN asgr a2 USING (centroid_id)
-         |JOIN c c1 ON c1.vec_id = a1.corpus_id
-         |JOIN c c2 ON c2.vec_id = a2.corpus_id
-         |WHERE ${cosSql("c1.v", "c2.v")} >= 0.3""".stripMargin,
-
-    // brute-force truth (the ann_cosine twin) + the IVF run (the
-    // ann_ivf twin) + the retrieval_metrics scoring SQL
-    "ann_recall" ->
-      annRecallOracle("SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < 5"),
-
-    // the certification op: the SAME recall pipeline over the
-    // md5-ordered deterministic sample certifyVectorIndex draws — the
-    // reproducible certificate of the serving path's quality
-    "ann_certify" ->
-      annRecallOracle("SELECT vec_id AS query_id, v AS qv FROM c " +
-        "ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8"),
-
-    // the maintenance loop's certificate — ann_certify's twin verbatim:
-    // extended and rebuilt indexes share the first-16-id IVF centroids
-    // and the md5 sample, so the certificate is branch-independent
-    "ann_maintain" ->
-      annRecallOracle("SELECT vec_id AS query_id, v AS qv FROM c " +
-        "ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8"),
-
-    "ann_ivf_topk" ->
-      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c ORDER BY vec_id LIMIT 16),
-         |asg AS (SELECT corpus_id, centroid_id FROM (
-         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
-         |  FROM c a CROSS JOIN cents ce) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < 5),
-         |probes AS (SELECT query_id, centroid_id FROM (
-         |  SELECT q.query_id, ce.centroid_id,
-         |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${cosSql("q.qv", "ce.cv")} DESC, ce.centroid_id) AS rn
-         |  FROM q CROSS JOIN cents ce) t WHERE rn <= 4),
-         |s AS (SELECT p.query_id, a.corpus_id, ${cosSql("cv2.v", "q2.qv")} AS sim
-         |      FROM asg a JOIN probes p USING (centroid_id)
-         |      JOIN q q2 ON q2.query_id = p.query_id
-         |      JOIN c cv2 ON cv2.vec_id = a.corpus_id
-         |      WHERE p.query_id <> a.corpus_id)
-         |SELECT query_id, rk, corpus_id, round(sim, 6) AS sim FROM (
-         |  SELECT query_id, corpus_id, sim,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, corpus_id) AS rk FROM s) t
-         |WHERE rk <= 10""".stripMargin,
-
-    // ann_ivf_topk's twin over the INDEX slice (vec_id < 400) with a
-    // disjoint query slice — the engine side goes build → extend →
-    // serve (batch) or build → stream-encode → serve (stream), so the
-    // hash match proves both incremental paths equal a one-shot
-    // rebuild of the union
-    "ann_ivf_incremental" -> AnnIvfIncrementalOracle,
-    "ann_ivf_stream" -> AnnIvfIncrementalOracle,
-
-    // feed-maintained VectorIndex serves identically to the one-shot
-    // index of the live corpus — twin shared VERBATIM
-    "ann_feed_maintain" -> AnnIvfIncrementalOracle,
-    "ann_feed_tracked" -> AnnIvfIncrementalOracle,
-
-    // assignment fragment is ann_ivf_topk's twin verbatim; cohesion
-    // rides an exact BIGINT sum of 1e-6-quantized sims (float sums
-    // would be partition-order-dependent in both engines)
-    "emb_cluster_profile" ->
-      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c ORDER BY vec_id LIMIT 16),
-         |asg AS (SELECT corpus_id, centroid_id, sim FROM (
-         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
-         |    ${cosSql("a.v", "ce.cv")} AS sim,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
-         |  FROM c a CROSS JOIN cents ce) t WHERE rn = 1),
-         |agg AS (SELECT centroid_id, count(*) AS n_members,
-         |  CAST(sum(CAST(round(sim * 1e6) AS BIGINT)) AS BIGINT) AS sum_scaled_sim,
-         |  min(round(sim, 6)) AS min_sim, max(round(sim, 6)) AS max_sim
-         |  FROM asg GROUP BY centroid_id)
-         |SELECT centroid_id, n_members, sum_scaled_sim,
-         |  round(CAST(sum_scaled_sim AS DOUBLE) / 1e6 / n_members, 6) AS mean_sim,
-         |  min_sim, max_sim
-         |FROM agg""".stripMargin,
-
-    // assignment twin + the stratifiedSample hash-order row_number
-    "emb_balanced_sample" ->
-      s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |cents AS (SELECT vec_id AS centroid_id, v AS cv FROM c ORDER BY vec_id LIMIT 16),
-         |asg AS (SELECT corpus_id, centroid_id FROM (
-         |  SELECT a.vec_id AS corpus_id, ce.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY ${cosSql("a.v", "ce.cv")} DESC, ce.centroid_id) AS rn
-         |  FROM c a CROSS JOIN cents ce) t WHERE rn = 1)
-         |SELECT centroid_id, rk, corpus_id AS vec_id FROM (
-         |  SELECT centroid_id, corpus_id, row_number() OVER (
-         |    PARTITION BY centroid_id
-         |    ORDER BY md5('cbal:' || CAST(corpus_id AS VARCHAR)), corpus_id) AS rk
-         |  FROM asg) t
-         |WHERE rk <= 10""".stripMargin,
-
-    "text_tokens" ->
-      """WITH w AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\s+') AS words FROM documents)
-        |SELECT doc_id,
-        | CAST(len(words) AS BIGINT) AS n_tokens,
-        | CAST(list_sum([CAST(ceil(length(x) / 4.0) AS BIGINT) for x in words]) AS BIGINT) AS n_subwords,
-        | md5(array_to_string(list_sort(list_distinct(
-        |   string_split_regex(trim(lower(text)), '\s+'))), ' ')) AS fingerprint
-        |FROM w""".stripMargin,
-
-    "text_normalize" ->
-      """SELECT doc_id,
-        | trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
-        |   '\s+', ' ', 'g')) AS norm
-        |FROM documents""".stripMargin,
-
-    // same regex chain as the engine; DuckDB needs the explicit 'g' flag
-    // (Spark's regexp_replace is always global) and literal replace()
-    // for the entities
-    "text_strip_html" ->
-      """WITH t AS (SELECT doc_id,
-        |  '<html><head><style>body{color:red}</style><script>var x=1;</script></head><body><!-- id --><p class="a">'
-        |  || text || ' &amp; <b>bold</b> &lt;tag&gt; &#39;q&#39;</p></body></html>' AS h
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(h,
-        |  '(?is)<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g') AS h FROM t),
-        |s2 AS (SELECT doc_id, regexp_replace(h, '(?s)<!--.*?-->', ' ', 'g') AS h FROM s1),
-        |s3 AS (SELECT doc_id, regexp_replace(h, '<[^>]+>', ' ', 'g') AS h FROM s2),
-        |s4 AS (SELECT doc_id,
-        |  replace(replace(replace(replace(replace(replace(h,
-        |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |    '&apos;', ''''), '&nbsp;', ' ') AS h FROM s3),
-        |s5 AS (SELECT doc_id, replace(h, '&amp;', '&') AS h FROM s4)
-        |SELECT doc_id, trim(regexp_replace(h, '\s+', ' ', 'g')) AS clean
-        |FROM s5""".stripMargin,
-
-    // group references: $n on the Spark side, \n here — the two engines'
-    // replacement syntaxes for the same RE2/Java-common patterns
-    "text_url_canonical" ->
-      """WITH t AS (SELECT doc_id,
-        |  'HTTPS://WWW.ExAmple' || CAST(doc_id % 7 AS VARCHAR) ||
-        |  '.COM:443/Path/' || CAST(doc_id AS VARCHAR) ||
-        |  '/?utm_source=feed&ref=' || CAST(doc_id AS VARCHAR) ||
-        |  '&utm_campaign=x#sec' AS u FROM documents),
-        |c1 AS (SELECT doc_id,
-        |  lower(regexp_extract(u, '(?i)^(https?://[^/?#]*)', 1)) ||
-        |  regexp_replace(u, '(?i)^https?://[^/?#]*', '') AS u FROM t),
-        |c2 AS (SELECT doc_id, regexp_replace(u, '#.*$', '') AS u FROM c1),
-        |c3 AS (SELECT doc_id,
-        |  regexp_replace(u, '^(https?://)www\.', '\1') AS u FROM c2),
-        |c4 AS (SELECT doc_id, regexp_replace(regexp_replace(u,
-        |  '^(https://(?:[^/@?#]*@)?[^/:?#]*):443([/?#]|$)', '\1\2'),
-        |  '^(http://(?:[^/@?#]*@)?[^/:?#]*):80([/?#]|$)', '\1\2') AS u FROM c3),
-        |c5 AS (SELECT doc_id, regexp_replace(u,
-        |  '([?&])(utm_[a-z]+|fbclid)=[^&#]*', '\1', 'g') AS u FROM c4),
-        |c6 AS (SELECT doc_id, regexp_replace(u, '\?&', '?', 'g') AS u FROM c5),
-        |c7 AS (SELECT doc_id, regexp_replace(u, '&&+', '&', 'g') AS u FROM c6),
-        |c8 AS (SELECT doc_id, regexp_replace(u, '[?&]+$', '') AS u FROM c7)
-        |SELECT doc_id, regexp_replace(u, '/+$', '') AS url FROM c8""".stripMargin,
-
-    "text_mask_pii" ->
-      """WITH t AS (SELECT doc_id,
-        |  'contact u' || CAST(doc_id AS VARCHAR) ||
-        |  '@ex.org ip 10.0.0.1 acct 12345678 t: ' || text AS raw
-        |  FROM documents)
-        |SELECT doc_id,
-        | regexp_replace(
-        |   regexp_replace(
-        |     regexp_replace(raw,
-        |       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |     '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |   '\b\d{7,}\b', '<NUM>', 'g') AS masked
-        |FROM t""".stripMargin,
-
-    "corpus_sample_hash" ->
-      """SELECT doc_id FROM documents
-        |WHERE substring(md5(text), 1, 8) < '40000000'""".stripMargin,
-
-    "corpus_stratified_sample" ->
-      """SELECT lang, rk, doc_id FROM (
-        |  SELECT lang, doc_id, row_number() OVER (
-        |    PARTITION BY lang
-        |    ORDER BY md5('strat:' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= 20""".stripMargin,
-
-    "corpus_stratified_weighted" ->
-      """SELECT lang, rk, doc_id FROM (
-        |  SELECT lang, doc_id, row_number() OVER (
-        |    PARTITION BY lang
-        |    ORDER BY md5('wstrat:' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= CASE lang WHEN 'en' THEN 25 WHEN 'de' THEN 10
-        |                      WHEN 'fr' THEN 5 ELSE 3 END""".stripMargin,
-
-    // E–S priority twin: u exact in a double ((h13+1)/(2^52+1)), ln
-    // quantized to 10 dp before ranking (the BM25 ln discipline), id
-    // tie-break
-    "corpus_weighted_sample" ->
-      """WITH p AS (SELECT doc_id, CAST(n_chars AS DOUBLE) AS weight,
-        |  round(ln((('0x' || substr(md5('wsamp:' || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT + 1)
-        |          / 4503599627370497.0) / n_chars, 10) AS pri
-        |  FROM documents)
-        |SELECT rank, doc_id, weight FROM (
-        |  SELECT doc_id, weight, row_number() OVER (
-        |    ORDER BY pri DESC, doc_id) AS rank FROM p) t
-        |WHERE rank <= 50""".stripMargin,
-
-    // the langid CASE is text_langid's oracle verbatim; every rolled-up
-    // measure is integer-exact
-    "corpus_report" ->
-      """WITH w AS (SELECT source, lang, text,
-        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
-        |sc AS (SELECT source, lang, text, words,
-        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
-        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
-        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
-        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
-        |  FROM w),
-        |p AS (SELECT source, lang,
-        |  CASE WHEN trim(text) = '' THEN 0 ELSE len(words) END AS ntok,
-        |  length(text) AS nchars,
-        |  CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
-        |       WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
-        |       WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
-        |       WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
-        |       ELSE 'und' END AS lang_pred
-        |  FROM sc)
-        |SELECT source, lang,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(ntok) AS BIGINT) AS n_tokens,
-        |  CAST(sum(nchars) AS BIGINT) AS n_chars,
-        |  CAST(max(nchars) AS BIGINT) AS max_chars,
-        |  CAST(sum(CASE WHEN lang_pred = lang THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_langid_agree
-        |FROM p GROUP BY 1, 2""".stripMargin,
-
-    // rates derive from the data in IEEE-exact steps (count → divide →
-    // sqrt), then floor-quantize to a 32-bit hex cutoff — both engines
-    // compute the identical double and the identical threshold string
-    "corpus_temperature_mix" ->
-      """WITH n AS (SELECT lang, count(*) AS ns FROM documents
-        |           WHERE lang IS NOT NULL GROUP BY 1),
-        |m AS (SELECT min(ns) AS nmin FROM n),
-        |r AS (SELECT lang,
-        |        sqrt(CAST(nmin AS DOUBLE) / CAST(ns AS DOUBLE)) AS rate
-        |      FROM n, m)
-        |SELECT d.doc_id, d.lang
-        |FROM documents d JOIN r USING (lang)
-        |WHERE substring(md5(d.text), 1, 8) <
-        |  lower(lpad(to_hex(CAST(floor(rate * 4294967295.0) AS BIGINT)), 8, '0'))""".stripMargin,
-
-    // the streaming path must land on the identical cut: same twin
-    "corpus_temperature_mix_stream" ->
-      """WITH n AS (SELECT lang, count(*) AS ns FROM documents
-        |           WHERE lang IS NOT NULL GROUP BY 1),
-        |m AS (SELECT min(ns) AS nmin FROM n),
-        |r AS (SELECT lang,
-        |        sqrt(CAST(nmin AS DOUBLE) / CAST(ns AS DOUBLE)) AS rate
-        |      FROM n, m)
-        |SELECT d.doc_id, d.lang
-        |FROM documents d JOIN r USING (lang)
-        |WHERE substring(md5(d.text), 1, 8) <
-        |  lower(lpad(to_hex(CAST(floor(rate * 4294967295.0) AS BIGINT)), 8, '0'))""".stripMargin,
-
-    // marginals and the total are position sums over the bigram counts —
-    // the engine's derived-marginal identity, restated relationally
-    "text_collocations" ->
-      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |bg AS (SELECT unnest([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]) AS bigram
-        |       FROM (SELECT string_split(t, ' ') AS ws FROM norm WHERE t <> '')),
-        |bf AS (SELECT bigram, count(*) AS c_xy FROM bg GROUP BY 1),
-        |xf AS (SELECT split_part(bigram, ' ', 1) AS x, sum(c_xy) AS c_x
-        |       FROM bf GROUP BY 1),
-        |yf AS (SELECT split_part(bigram, ' ', 2) AS y, sum(c_xy) AS c_y
-        |       FROM bf GROUP BY 1),
-        |tot AS (SELECT sum(c_xy) AS n FROM bf),
-        |sc AS (SELECT bigram, c_xy,
-        |         CAST(round(1000000.0 * c_xy * n /
-        |           CAST(CAST(c_x AS HUGEINT) * c_y AS DOUBLE)) AS BIGINT) AS lift_ppm
-        |       FROM bf JOIN xf ON split_part(bigram, ' ', 1) = x
-        |                JOIN yf ON split_part(bigram, ' ', 2) = y, tot
-        |       WHERE c_xy >= 20)
-        |SELECT rk, bigram, c_xy, lift_ppm FROM (
-        |  SELECT bigram, c_xy, lift_ppm,
-        |    row_number() OVER (ORDER BY lift_ppm DESC, bigram) AS rk FROM sc)
-        |WHERE rk <= 25""".stripMargin,
-
-    // the twin rebuilds the identical 1e-9-quantized integer sums and
-    // performs the same single division — bit-exact doubles
-    "emb_label_prototypes" ->
-      """WITH c AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings WHERE embedding IS NOT NULL),
-        |ex AS (SELECT label, i - 1 AS d,
-        |         CAST(round(v[i] * 1000000000) AS BIGINT) AS x
-        |       FROM c, (SELECT unnest(range(1, 65)) AS i) r),
-        |sm AS (SELECT label, d, sum(x) AS s, count(*) AS n
-        |       FROM ex GROUP BY 1, 2)
-        |SELECT label, CAST(n AS BIGINT) AS n_vectors, CAST(d AS INTEGER) AS d,
-        |       CAST(s AS DOUBLE) / (1000000000.0 * n) AS m
-        |FROM sm""".stripMargin,
-
-    // prototypes via the emb_label_prototypes integer sums, assembled
-    // in dimension order; argmax on the same cosSql doubles
-    "emb_prototype_classify" ->
-      s"""WITH c AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings
-         |           WHERE embedding IS NOT NULL AND label IS NOT NULL),
-         |ex AS (SELECT label, i - 1 AS d,
-         |         CAST(round(v[i] * 1000000000) AS BIGINT) AS x
-         |       FROM c, (SELECT unnest(range(1, 65)) AS i) r),
-         |pr AS (SELECT label AS pl,
-         |         list(CAST(s AS DOUBLE) / (1000000000.0 * n) ORDER BY d) AS pv
-         |       FROM (SELECT label, d, sum(x) AS s, count(*) AS n
-         |             FROM ex GROUP BY 1, 2)
-         |       GROUP BY label),
-         |q AS (SELECT vec_id AS query_id, label,
-         |        CAST(embedding AS DOUBLE[]) AS qv
-         |      FROM embeddings WHERE vec_id < 200),
-         |sc AS (SELECT q.query_id, q.label, pr.pl,
-         |         ${cosSql("q.qv", "pr.pv")} AS sim
-         |       FROM q CROSS JOIN pr)
-         |SELECT query_id, label, pl AS predicted, pl = label AS correct
-         |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-         |        ORDER BY sim DESC, pl) AS rr FROM sc) t
-         |WHERE rr = 1""".stripMargin,
-
-    // both neighborhood means ride exact integer sums of 1e-6-quantized
-    // cosines; the margin expression's association order matches the
-    // engine token-for-token, ranking on the 10 dp quantization
-    "emb_bitext_margin" ->
-      s"""WITH s AS (SELECT vec_id AS sid, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings WHERE vec_id < 60),
-         |t AS (SELECT vec_id AS tid, CAST(embedding AS DOUBLE[]) AS v
-         |      FROM embeddings WHERE vec_id >= 200),
-         |fa AS (SELECT sid, tid, sim, row_number() OVER (PARTITION BY sid
-         |         ORDER BY sim DESC, tid) AS rk
-         |       FROM (SELECT s.sid, t.tid, ${cosSql("t.v", "s.v")} AS sim
-         |             FROM s CROSS JOIN t)),
-         |fwd AS (SELECT sid, tid, sim FROM fa WHERE rk <= 4),
-         |sf AS (SELECT sid, sum(CAST(round(sim * 1e6) AS BIGINT)) AS sf,
-         |              count(*) AS cf FROM fwd GROUP BY 1),
-         |ba AS (SELECT tid, sid, sim, row_number() OVER (PARTITION BY tid
-         |         ORDER BY sim DESC, sid) AS rk
-         |       FROM (SELECT t.tid, s.sid, ${cosSql("s.v", "t.v")} AS sim
-         |             FROM t CROSS JOIN s)),
-         |sb AS (SELECT tid, sum(CAST(round(sim * 1e6) AS BIGINT)) AS sb,
-         |              count(*) AS cb FROM ba WHERE rk <= 4 GROUP BY 1),
-         |m AS (SELECT f.sid, f.tid, f.sim,
-         |        f.sim / ((CAST(sf AS DOUBLE) / (1000000.0 * cf) +
-         |          CAST(sb AS DOUBLE) / (1000000.0 * cb)) * 0.5) AS margin
-         |      FROM fwd f JOIN sf USING (sid) JOIN sb USING (tid))
-         |SELECT sid AS src_id, tid AS tgt_id, round(sim, 6) AS sim,
-         |       round(margin, 6) AS margin
-         |FROM (SELECT *, row_number() OVER (PARTITION BY sid
-         |        ORDER BY round(margin, 10) DESC, tid) AS best FROM m)
-         |WHERE best = 1""".stripMargin,
-
-    // the forward twin + the backward argmax over the bwd candidate
-    // set, semi-joined — reciprocal best only
-    "emb_bitext_mutual" ->
-      s"""WITH s AS (SELECT vec_id AS sid, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings WHERE vec_id < 60),
-         |t AS (SELECT vec_id AS tid, CAST(embedding AS DOUBLE[]) AS v
-         |      FROM embeddings WHERE vec_id >= 200),
-         |fa AS (SELECT sid, tid, sim, row_number() OVER (PARTITION BY sid
-         |         ORDER BY sim DESC, tid) AS rk
-         |       FROM (SELECT s.sid, t.tid, ${cosSql("t.v", "s.v")} AS sim
-         |             FROM s CROSS JOIN t)),
-         |fwd AS (SELECT sid, tid, sim FROM fa WHERE rk <= 4),
-         |sf AS (SELECT sid, sum(CAST(round(sim * 1e6) AS BIGINT)) AS sf,
-         |              count(*) AS cf FROM fwd GROUP BY 1),
-         |ba AS (SELECT tid, sid, sim, row_number() OVER (PARTITION BY tid
-         |         ORDER BY sim DESC, sid) AS rk
-         |       FROM (SELECT t.tid, s.sid, ${cosSql("s.v", "t.v")} AS sim
-         |             FROM t CROSS JOIN s)),
-         |bwd AS (SELECT tid, sid, sim FROM ba WHERE rk <= 4),
-         |sb AS (SELECT tid, sum(CAST(round(sim * 1e6) AS BIGINT)) AS sb,
-         |              count(*) AS cb FROM bwd GROUP BY 1),
-         |m AS (SELECT f.sid, f.tid, f.sim,
-         |        f.sim / ((CAST(sf AS DOUBLE) / (1000000.0 * cf) +
-         |          CAST(sb AS DOUBLE) / (1000000.0 * cb)) * 0.5) AS margin
-         |      FROM fwd f JOIN sf USING (sid) JOIN sb USING (tid)),
-         |fbest AS (SELECT sid, tid, sim, margin FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY sid
-         |    ORDER BY round(margin, 10) DESC, tid) AS b FROM m) WHERE b = 1),
-         |m2 AS (SELECT w.tid, w.sid,
-         |        w.sim / ((CAST(sf AS DOUBLE) / (1000000.0 * cf) +
-         |          CAST(sb AS DOUBLE) / (1000000.0 * cb)) * 0.5) AS margin
-         |      FROM bwd w JOIN sf USING (sid) JOIN sb USING (tid)),
-         |bbest AS (SELECT tid, sid FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY tid
-         |    ORDER BY round(margin, 10) DESC, sid) AS b FROM m2) WHERE b = 1)
-         |SELECT f.sid AS src_id, f.tid AS tgt_id, round(f.sim, 6) AS sim,
-         |       round(f.margin, 6) AS margin
-         |FROM fbest f JOIN bbest b ON f.sid = b.sid AND f.tid = b.tid""".stripMargin,
-
-    // the engine buckets types to checkpoint indexes scan-side; the
-    // twin states the same curve as direct conditional counts — exact
-    // integers agree regardless of method
-    "vocab_growth_curve" ->
-      """WITH ck(c) AS (VALUES (CAST(50 AS BIGINT)), (150), (300), (1000000000)),
-        |norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |tk AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token
-        |       FROM norm WHERE t <> ''),
-        |firsts AS (SELECT token, min(doc_id) AS f FROM tk
-        |           WHERE token <> '' GROUP BY 1)
-        |SELECT c AS checkpoint,
-        |  (SELECT count(*) FROM norm d WHERE d.doc_id <= c) AS n_docs,
-        |  (SELECT count(*) FROM tk t2 WHERE t2.token <> '' AND t2.doc_id <= c) AS n_tokens,
-        |  (SELECT count(*) FROM firsts f2 WHERE f2.f <= c) AS vocab
-        |FROM ck ORDER BY c""".stripMargin,
-
-    // the maxes and the winner verdict are decided on UNROUNDED doubles
-    // computed in the ann_cosine_topk dot-product convention
-    "emb_label_margin" ->
-      """WITH c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id, label, v FROM c WHERE vec_id < 200),
-        |s AS (SELECT q.vec_id AS query_id, q.label AS label,
-        |        (c.label = q.label) AS same,
-        |        list_sum([q.v[i] * c.v[i] for i in range(1, 65)]) /
-        |        (sqrt(list_sum([q.v[i] * q.v[i] for i in range(1, 65)])) *
-        |         sqrt(list_sum([c.v[i] * c.v[i] for i in range(1, 65)]))) AS sim
-        |      FROM c CROSS JOIN q WHERE q.vec_id <> c.vec_id)
-        |SELECT query_id, label,
-        |  round(max(CASE WHEN same THEN sim END), 6) AS best_same,
-        |  round(max(CASE WHEN NOT same THEN sim END), 6) AS best_other,
-        |  max(CASE WHEN same THEN sim END) >
-        |    max(CASE WHEN NOT same THEN sim END) AS same_wins
-        |FROM s GROUP BY 1, 2""".stripMargin,
-
-    // the ±1 sign matrix re-derived in pure SQL from the same md5
-    // convention; left-fold list_sum matches the engine's aggregate
-    // accumulation order bit-for-bit (the cosSql discipline)
-    "emb_random_projection" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |ks(k) AS (VALUES (0),(1),(2),(3),(4),(5),(6),(7),
-        |                 (8),(9),(10),(11),(12),(13),(14),(15))
-        |SELECT vec_id, CAST(k AS INTEGER) AS k,
-        |  list_sum([CASE WHEN substring(md5('rp:' || CAST(k AS VARCHAR)
-        |      || ':' || CAST(j - 1 AS VARCHAR)), 1, 1) < '8'
-        |    THEN v[j] ELSE -v[j] END
-        |    for j in range(1, 65)]) / sqrt(16.0) AS value
-        |FROM e, ks""".stripMargin,
-
-    // affine int8 quantization: pure IEEE subtract/divide/round — codes
-    // and reconstructions are bit-exact cross-engine (n.5 round
-    // boundaries are dyadic-exact doubles, so HALF_UP == half-away)
-    "emb_scalar_quant" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |st AS (SELECT vec_id, v, list_min(v) AS lo,
-        |       (list_max(v) - list_min(v)) / 255.0 AS scale FROM e),
-        |c AS (SELECT vec_id, CAST(i - 1 AS INTEGER) AS dim, lo, scale,
-        |      CASE WHEN scale = 0 THEN -128
-        |           ELSE least(255, greatest(0,
-        |             CAST(round((v[i] - lo) / scale) AS INTEGER))) - 128
-        |      END AS code
-        |      FROM st, (SELECT unnest(range(1, 65)) AS i))
-        |SELECT vec_id, dim, CAST(code AS INTEGER) AS code,
-        |       lo + (CAST(code + 128 AS DOUBLE) * scale) AS recon
-        |FROM c""".stripMargin,
-
-    // neighbor ranking in the ann_cosine_topk convention; the vote winner
-    // is elected by the same (votes DESC, label ASC) total order
-    "emb_knn_vote" ->
-      """WITH c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id, label, v FROM c WHERE vec_id < 200),
-        |s AS (SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-        |        c.label AS nl,
-        |        list_sum([q.v[i] * c.v[i] for i in range(1, 65)]) /
-        |        (sqrt(list_sum([q.v[i] * q.v[i] for i in range(1, 65)])) *
-        |         sqrt(list_sum([c.v[i] * c.v[i] for i in range(1, 65)]))) AS sim
-        |      FROM c CROSS JOIN q WHERE q.vec_id <> c.vec_id),
-        |r AS (SELECT query_id, nl,
-        |        row_number() OVER (PARTITION BY query_id
-        |          ORDER BY sim DESC, corpus_id) AS rk FROM s),
-        |v AS (SELECT query_id, nl, count(*) AS votes
-        |      FROM r WHERE rk <= 5 GROUP BY 1, 2),
-        |p AS (SELECT query_id, nl AS predicted,
-        |        row_number() OVER (PARTITION BY query_id
-        |          ORDER BY votes DESC, nl) AS vr FROM v)
-        |SELECT q.vec_id AS query_id, q.label AS label, p.predicted,
-        |  p.predicted = q.label AS correct
-        |FROM q JOIN p ON p.query_id = q.vec_id AND p.vr = 1""".stripMargin,
-
-    // ranking on unrounded sims in the ann_cosine_topk convention;
-    // (sim DESC, corpus_id) total order matches the engine's window
-    "emb_hard_negatives" ->
-      """WITH c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id, label, v FROM c WHERE vec_id < 100),
-        |s AS (SELECT q.vec_id AS query_id, q.label AS label,
-        |        c.vec_id AS corpus_id, c.label AS neg_label,
-        |        list_sum([q.v[i] * c.v[i] for i in range(1, 65)]) /
-        |        (sqrt(list_sum([q.v[i] * q.v[i] for i in range(1, 65)])) *
-        |         sqrt(list_sum([c.v[i] * c.v[i] for i in range(1, 65)]))) AS sim
-        |      FROM c CROSS JOIN q
-        |      WHERE q.vec_id <> c.vec_id AND c.label <> q.label),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |          ORDER BY sim DESC, corpus_id) AS rank FROM s)
-        |SELECT query_id, label, CAST(rank AS INTEGER) AS rank, corpus_id,
-        |  neg_label, round(sim, 6) AS sim
-        |FROM r WHERE rank <= 5""".stripMargin,
-
-    "corpus_mix" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE CASE
-        |  WHEN source = 'src0' THEN substring(md5(text), 1, 8) < '00000000'
-        |  WHEN source = 'src1' THEN substring(md5(text), 1, 8) < '40000000'
-        |  WHEN source = 'src2' THEN substring(md5(text), 1, 8) < '80000000'
-        |  ELSE substring(md5(text), 1, 8) < 'bfffffff' END""".stripMargin,
-
-    // the MAD twin: discrete INCLUSIVE medians via cum windows over
-    // the per-type value/deviation domains (no interpolated median —
-    // engines disagree on interpolation, never on data values)
-    // the ev_anomaly twin with the stats CTEs restricted to the
-    // even-id training window and the flag join to the odd-id batch;
-    // the streaming serve shares it verbatim (stateless stream-static
-    // join — same rows either path)
-    "ev_anomaly_stream" -> EvAnomalyIncrementalOracle,
-    "ev_anomaly_incremental" -> EvAnomalyIncrementalOracle,
-    // med/MAD read from the bounded KLL state: bit-equal to the exact
-    // inclusive medians in the no-compaction regime — the shared twin
-    // proves sketch-served ≡ exact-served
-    "ev_anomaly_sketch" -> EvAnomalyIncrementalOracle,
-    // the sketch-served screen on a live stream: same twin again — the
-    // stream-static serve must reproduce the batch screen bit-for-bit
-    "ev_anomaly_sketch_stream" -> EvAnomalyIncrementalOracle,
-    // equal-mass buckets from the sketch CDF: the rank twin's ASOF
-    // read + the identical clamp arithmetic
-    "ev_bucketize_sketch" -> EvBucketizeSketchOracle,
-    // the streamed serve shares the twin verbatim: stream ≡ batch
-    "ev_bucketize_sketch_stream" -> EvBucketizeSketchOracle,
-
-    // the Morton layout key: identical min-max quantization (floor of
-    // the same IEEE scaling, clamped) and the bit interleave unrolled
-    // as a sum over bit positions — integer-exact in both engines
-    "layout_zvalue" ->
-      """WITH s AS (SELECT min(value) AS mn0, max(value) AS mx0,
-        |             min(CAST(event_id AS DOUBLE)) AS mn1,
-        |             max(CAST(event_id AS DOUBLE)) AS mx1
-        |           FROM events WHERE value IS NOT NULL),
-        |q AS (SELECT event_id,
-        |        CASE WHEN mx0 <= mn0 THEN 0 ELSE CAST(least(255,
-        |          greatest(0, floor((value - mn0)/(mx0 - mn0)*256)))
-        |          AS BIGINT) END AS q0,
-        |        CASE WHEN mx1 <= mn1 THEN 0 ELSE CAST(least(255,
-        |          greatest(0, floor((CAST(event_id AS DOUBLE) - mn1)
-        |            /(mx1 - mn1)*256))) AS BIGINT) END AS q1
-        |      FROM events, s WHERE value IS NOT NULL)
-        |SELECT event_id,
-        |  CAST(sum(((q0 >> b) & 1) * (CAST(1 AS BIGINT) << (2*b + 1)) +
-        |           ((q1 >> b) & 1) * (CAST(1 AS BIGINT) << (2*b)))
-        |    AS BIGINT) AS z
-        |FROM q, range(0, 8) t(b)
-        |GROUP BY event_id""".stripMargin,
-
-    // layout invariance: the raw-table box aggregate — the engine side
-    // answers off its z-ordered parquet layout; matching hashes prove
-    // the layout changes placement, not content
-    "layout_zorder_scan" -> LayoutBoxScanOracle,
-    // the manifest-pruned scan shares the SAME twin verbatim: pruned ≡
-    // full ≡ raw — file skipping is a performance structure only
-    "layout_pruned_scan" -> LayoutBoxScanOracle,
-    // append → health-triggered rebuild → pruned scan, same twin: the
-    // maintenance loop changes placement generations, never content
-    "layout_maintain" -> LayoutBoxScanOracle,
-    // streamed exactly-once generation ingestion, same twin again
-    "layout_stream" -> LayoutBoxScanOracle,
-
-    // merge-on-read deletes: live scan ≡ the complement predicate over
-    // the raw table — positional tombstones subtract exactly the
-    // matched rows, bit-for-bit
-    "layout_delete_scan" -> LayoutDeleteScanOracle,
-    // bulk takedown by key list: live scan ≡ raw table minus the keys
-    "layout_takedown" -> LayoutTakedownOracle,
-    // the same retraction arriving as a STREAM of key batches — shared
-    // twin verbatim: streamed takedown ≡ one-shot takedown
-    "layout_takedown_stream" -> LayoutTakedownOracle,
-    // compaction shares the delete twin VERBATIM: physically folding
-    // the tombstones into a rewritten layout changes placement and
-    // clears the debt, never content
-    "layout_compact" -> LayoutDeleteScanOracle,
-    // keyed last-writer-wins upsert ≡ a CASE merge over the raw table
-    "layout_upsert" -> LayoutUpsertOracle,
-    // the same merge arriving as a STREAM of update batches — shared
-    // twin verbatim: streamed keyed merge ≡ one-shot keyed merge
-    "layout_upsert_stream" -> LayoutUpsertOracle,
-    // the corpus takedown composition: retraction list tombstoned on
-    // the documents lake table, downstream rollup off the live scan
-    "doc_takedown_rollup" ->
-      """SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars
-        |FROM documents
-        |WHERE doc_id % 13 <> 0
-        |GROUP BY lang""".stripMargin,
-    // change data feed (0,1]: inserts = window births still alive,
-    // deletes = pre-window rows the window tombstoned, net inside the
-    // window — exactly what a downstream replica applies
-    "layout_changes" ->
-      """SELECT 'insert' AS op, event_id, event_type, value
-        |FROM events
-        |WHERE value IS NOT NULL AND event_id % 2 = 1
-        |  AND NOT (value BETWEEN 20.0 AND 60.0)
-        |UNION ALL
-        |SELECT 'delete' AS op, event_id, event_type, value
-        |FROM events
-        |WHERE value IS NOT NULL AND event_id % 2 = 0
-        |  AND value BETWEEN 20.0 AND 60.0""".stripMargin,
-    // Bloom-manifest point lookup: files resolved by membership sketch,
-    // tombstones subtracted, exact IN re-applied — ≡ the raw table under
-    // the same IN plus the complement of the delete
-    "layout_point_lookup" ->
-      """SELECT event_id, event_type, value
-        |FROM events
-        |WHERE value IS NOT NULL AND NOT (value BETWEEN 20.0 AND 60.0)
-        |  AND event_id IN (3, 97, 310, 555, 808, 999)""".stripMargin,
-    // the same lookup probed with Int literals against the LONG key —
-    // shared twin verbatim: probe typing never splits the answers
-    "layout_point_lookup_typed" ->
-      """SELECT event_id, event_type, value
-        |FROM events
-        |WHERE value IS NOT NULL AND NOT (value BETWEEN 20.0 AND 60.0)
-        |  AND event_id IN (3, 97, 310, 555, 808, 999)""".stripMargin,
-    // the equal-frequency (KLL-CDF-quantized) layout shares the
-    // equal-width layout's twin verbatim: rank quantization changes
-    // placement, never content
-    "layout_zorder_eqfreq" -> LayoutBoxScanOracle,
-    // generation snapshot: asOf(0) sees the first generation only —
-    // neither the gen-1 files nor the tombstones stamped at gen 1
-    "layout_time_travel" -> LayoutEvenHalfOracle,
-    // rollback(0) makes that snapshot permanent — live scan, same twin
-    "layout_rollback" -> LayoutEvenHalfOracle,
-    // retention-preserving compaction: scanAsOf(0) after
-    // compactRetaining(0) shares the time-travel twin verbatim
-    // (folding below the floor preserves retained snapshots) …
-    "layout_compact_retain_asof" -> LayoutEvenHalfOracle,
-    // … and scanAsOf(1) ≡ live shares the delete twin verbatim (the
-    // later delete applies in full across remapped + carried halves)
-    "layout_compact_retain_live" -> LayoutDeleteScanOracle,
-    // the CDC consumer: a replica bootstrapped at gen 0 + the (0,1]
-    // feed applied by key ≡ the source's live (gen-1) state — the
-    // delete twin verbatim, reproduced without ever reading the source
-    "layout_replica_apply" -> LayoutDeleteScanOracle,
-    "layout_feed_relay" -> LayoutDeleteScanOracle,
-    // layout_replica_apply's live-state filter verbatim, widened by
-    // the evolved column's counts (gen-1 survivors = odd event_ids)
-    "layout_replica_evolve" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |  count(CASE WHEN event_id % 2 = 1 THEN 1 END) AS n_flagged,
-        |  CAST(sum(CASE WHEN event_id % 2 = 1
-        |    THEN event_id % 7 END) AS BIGINT) AS sum_flag
-        |FROM events
-        |WHERE value IS NOT NULL AND NOT (value BETWEEN 20.0 AND 60.0)
-        |GROUP BY event_type""".stripMargin,
-    // the same feed consumed as a STREAM of micro-batches — shared
-    // twin verbatim: streamed consumption ≡ one-shot consumption
-    "layout_replica_apply_stream" -> LayoutDeleteScanOracle,
-
-    // the in-flight pre-compact plan answers the pre-compact live
-    // content — twin shared VERBATIM with layout_delete_scan
-    "layout_scan_under_compact" -> LayoutDeleteScanOracle,
-
-    // compact + zero-grace vacuum: live answer untouched — twin
-    // shared VERBATIM with layout_delete_scan
-    "layout_vacuum" -> LayoutDeleteScanOracle,
-
-    // bloom-narrowed retraction ≡ the plain complement
-    "layout_takedown_bloom" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events
-        |WHERE value IS NOT NULL AND event_id % 211 <> 0
-        |GROUP BY event_type""".stripMargin,
-
-    // the catalog's numbers derived independently: the events table's
-    // debt is the takedown predicate's raw match count; everything
-    // else is the construction's deterministic shape
-    "layout_catalog" ->
-      """SELECT 'evs' AS "table", CAST(0 AS BIGINT) AS epoch,
-        |  CAST(-1 AS BIGINT) AS floor, CAST(-1 AS BIGINT) AS current_gen,
-        |  CAST(8 AS BIGINT) AS data_files,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM events
-        |   WHERE value IS NOT NULL AND value BETWEEN 20.0 AND 60.0)
-        |    AS delete_debt
-        |UNION ALL
-        |SELECT 'ords', 0, -1, 1, 6, 0""".stripMargin,
-
-    // evolve-then-append ≡ rewrite-with-nulls, without the rewrite
-    "layout_evolve_scan" ->
-      """SELECT event_id, event_type, value, NULL AS boost
-        |FROM events WHERE value IS NOT NULL AND event_id % 3 <> 0
-        |UNION ALL
-        |SELECT event_id, event_type, value, value * 0.5 AS boost
-        |FROM events WHERE value IS NOT NULL AND event_id % 3 = 0""".stripMargin,
-    // the epoch-guarded change feed shares layout_changes' twin
-    // verbatim: passing the captured epoch changes nothing while no
-    // compact landed (the raise on a stale epoch is spec'd)
-    "layout_changes_epoch" ->
-      """SELECT 'insert' AS op, event_id, event_type, value
-        |FROM events
-        |WHERE value IS NOT NULL AND event_id % 2 = 1
-        |  AND NOT (value BETWEEN 20.0 AND 60.0)
-        |UNION ALL
-        |SELECT 'delete' AS op, event_id, event_type, value
-        |FROM events
-        |WHERE value IS NOT NULL AND event_id % 2 = 0
-        |  AND value BETWEEN 20.0 AND 60.0""".stripMargin,
-
-    // same value-domain histogram + inclusive cum window, one exact
-    // division per distinct value
-    "ev_rank_normalize" ->
-      """WITH h AS (SELECT event_type, value AS v, count(*) AS c
-        |           FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |n AS (SELECT event_type, sum(c) AS n FROM h GROUP BY 1),
-        |p AS (SELECT event_type, v,
-        |        CAST(sum(c) OVER (PARTITION BY event_type ORDER BY v)
-        |          AS DOUBLE) / n AS pct
-        |      FROM h JOIN n USING (event_type))
-        |SELECT e.event_id, e.event_type, e.value, p.pct
-        |FROM events e JOIN p ON e.event_type = p.event_type
-        |  AND e.value = p.v""".stripMargin,
-
-    "ev_anomaly" ->
-      """WITH h AS (SELECT event_type, value AS v, count(*) AS c
-        |           FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |n AS (SELECT event_type, sum(c) AS n FROM h GROUP BY 1),
-        |cum AS (SELECT event_type, v,
-        |        sum(c) OVER (PARTITION BY event_type ORDER BY v) AS cum
-        |        FROM h),
-        |med AS (SELECT event_type, min(v) AS med
-        |        FROM cum JOIN n USING (event_type)
-        |        WHERE cum * 2 >= n GROUP BY 1),
-        |d AS (SELECT h.event_type, abs(h.v - med.med) AS dev,
-        |        sum(h.c) AS c
-        |      FROM h JOIN med USING (event_type) GROUP BY 1, 2),
-        |cum2 AS (SELECT event_type, dev,
-        |         sum(c) OVER (PARTITION BY event_type ORDER BY dev) AS cum
-        |         FROM d),
-        |mad AS (SELECT event_type, min(dev) AS mad
-        |        FROM cum2 JOIN n USING (event_type)
-        |        WHERE cum * 2 >= n GROUP BY 1)
-        |SELECT e.event_id, e.event_type, e.value, med.med, mad.mad,
-        |  abs(e.value - med.med) > 3.0 * mad.mad AS is_outlier
-        |FROM events e JOIN med USING (event_type) JOIN mad USING (event_type)
-        |WHERE e.value IS NOT NULL""".stripMargin,
-
-    "ev_retention" -> EvRetentionOracle,
-    // the incremental path shares the one-shot twin VERBATIM: the hash
-    // match proves activityFrame+extendActivity+retentionFromActivity
-    // ≡ a full-history recompute
-    "ev_retention_incremental" -> EvRetentionOracle,
-    // and the STREAMED activity fold under the same twin (order-free
-    // union+distinct — no arrival contract needed)
-    "ev_retention_stream" -> EvRetentionOracle,
-
-    // the power-user curve: users by exact active-week count
-    "ev_engagement_hist" ->
-      """WITH act AS (SELECT DISTINCT user_id AS u,
-        |         CAST(date_trunc('week', ts) AS DATE) AS p
-        |       FROM events WHERE ts IS NOT NULL),
-        |c AS (SELECT u, count(*) AS n_periods FROM act GROUP BY 1)
-        |SELECT n_periods, CAST(count(*) AS BIGINT) AS n_users
-        |FROM c GROUP BY 1""".stripMargin,
-
-    // stickiness: the day-level activity frame rolled to weeks — exact
-    // integer ingredients, the ratio divided last from the integers
-    "ev_stickiness" ->
-      """WITH act AS (SELECT DISTINCT user_id AS u,
-        |         CAST(date_trunc('day', ts) AS DATE) AS p
-        |       FROM events WHERE ts IS NOT NULL),
-        |b AS (SELECT CAST(date_trunc('week', p) AS DATE) AS pp, u, p FROM act)
-        |SELECT CAST(pp AS VARCHAR) AS pp,
-        |  count(*) AS sum_daily_actives,
-        |  CAST(count(DISTINCT p) AS BIGINT) AS n_days,
-        |  CAST(count(DISTINCT u) AS BIGINT) AS actives,
-        |  round(CAST(count(*) AS DOUBLE) /
-        |        (count(DISTINCT p) * count(DISTINCT u)), 6) AS stickiness
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // session durations: the sessionize tagging CTEs rolled to
-    // last−first seconds per session, then the rational-threshold
-    // percentile_disc (single-event sessions are duration 0)
-    "st_session_durations" ->
-      """WITH tagged AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR CAST(floor(epoch(ts)) AS BIGINT) -
-        |              CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events WHERE ts IS NOT NULL
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM tagged),
-        |dur AS (SELECT CAST(floor(epoch(max(ts))) AS BIGINT) -
-        |               CAST(floor(epoch(min(ts))) AS BIGINT) AS len
-        |        FROM sess GROUP BY user_id, sid),
-        |c AS (SELECT len, count(*) AS cnt FROM dur GROUP BY 1),
-        |cum AS (SELECT len, CAST(sum(cnt) OVER (ORDER BY len
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM c),
-        |tot AS (SELECT count(*) AS n FROM dur),
-        |qs(q, num, den) AS (VALUES ('p10', 1, 10), ('p25', 1, 4),
-        |  ('p50', 1, 2), ('p75', 3, 4), ('p90', 9, 10))
-        |SELECT q, min(len) AS value FROM qs, cum, tot
-        |WHERE cum >= (num * n + den - 1) // den GROUP BY q""".stripMargin,
-
-    // growth accounting: the same distinct-activity frame decomposed by
-    // lag/lead — churn attributed one period FORWARD, clipped at the
-    // last observed week
-    "ev_growth_accounting" -> EvGrowthAccountingOracle,
-    // and the STREAMED activity fold served through the same report
-    "ev_growth_accounting_stream" -> EvGrowthAccountingOracle,
-    // the quarter/year calendar rungs over the month-spread timestamps
-    "ev_retention_quarter" -> retentionPeriodOracle("quarter", 12),
-    "ev_retention_year" -> retentionPeriodOracle("year", 36),
-
-    // CDF trained on the even-id window, odd-id batch served — shared
-    // verbatim with the streaming serve
-    "ev_rank_normalize_incremental" -> EvRankNormalizeIncrementalOracle,
-    "ev_rank_normalize_stream" -> EvRankNormalizeIncrementalOracle,
-    "ev_rank_normalize_sketch" -> EvRankNormalizeSketchOracle,
-    "ev_rank_normalize_sketch_served" -> EvRankNormalizeSketchOracle,
-    "ev_rank_normalize_sketch_merged" -> EvRankNormalizeSketchOracle,
-    "ev_rank_normalize_sketch_stream" -> EvRankNormalizeSketchOracle,
-
-    "ev_funnel" -> EvFunnelOracle,
-    // the funnel's steady state under the SAME twin: state + chase ≡
-    // full-history recompute
-    "ev_funnel_incremental" -> EvFunnelOracle,
-    // and the STREAMED ledger under the same twin again: the
-    // foreachBatch fold of the same chase ≡ full-history recompute
-    "ev_funnel_stream" -> EvFunnelOracle,
-
-    // the uncollapsed form: the same CTEs projected to raw step times
-    "ev_funnel_steps" ->
-      s"""$EvFunnelCtes
-         |SELECT s1."user", s1.t1 AS t1, s2.t2 AS t2, s3.t3 AS t3
-         |FROM s1
-         |LEFT JOIN s2 ON s1."user" = s2."user"
-         |LEFT JOIN s3 ON s1."user" = s3."user"""".stripMargin,
-
-    // the step-level conversion report over the funnel twin: exact
-    // BIGINT suffix-sum user counts per stage, ratios divided LAST
-    // from the integer counts (sum() windows cast back from HUGEINT)
-    "ev_funnel_summary" ->
-      s"""WITH byst AS (SELECT steps_completed AS sc, count(*) AS n
-         |             FROM ( $EvFunnelOracle ) f GROUP BY 1),
-         |st AS (SELECT CAST(i AS BIGINT) AS step FROM range(1, 4) t(i)),
-         |c AS (SELECT step,
-         |        CAST(sum(coalesce(n, 0)) OVER (ORDER BY step DESC
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |          AS BIGINT) AS users
-         |      FROM st LEFT JOIN byst ON step = sc)
-         |SELECT step, users,
-         |  CAST(users AS DOUBLE) / first_value(users) OVER (ORDER BY step
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    AS conv_from_entry,
-         |  CAST(users AS DOUBLE) / lag(users, 1) OVER (ORDER BY step)
-         |    AS conv_from_prev
-         |FROM c""".stripMargin,
-
-    // the conversion feed: bootstrap ∪ per-batch write-once deltas ≡
-    // the one-shot funnel's fully-converted rows
-    "ev_funnel_conversions" ->
-      s"""SELECT * FROM ( $EvFunnelOracle ) f
-         |WHERE steps_completed = 3""".stripMargin,
-
-    // the streamed feed shares the batch feed's twin verbatim: the
-    // foldLedgerStream-driven per-batch deltas must union to exactly
-    // the one-shot funnel's fully-converted rows
-    "ev_funnel_conversions_stream" ->
-      s"""SELECT * FROM ( $EvFunnelOracle ) f
-         |WHERE steps_completed = 3""".stripMargin,
-
-    // time-to-convert: the doc_len_quantiles rational-threshold
-    // percentile_disc over whole-second latencies of full conversions
-    "ev_funnel_latency" ->
-      s"""WITH lat AS (SELECT CAST(floor(epoch(ts_last)) AS BIGINT) -
-         |               CAST(floor(epoch(ts_first)) AS BIGINT) AS len
-         |             FROM ( $EvFunnelOracle ) f
-         |             WHERE steps_completed = 3),
-         |c AS (SELECT len, count(*) AS cnt FROM lat GROUP BY 1),
-         |cum AS (SELECT len, CAST(sum(cnt) OVER (ORDER BY len
-         |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM c),
-         |tot AS (SELECT count(*) AS n FROM lat),
-         |qs(q, num, den) AS (VALUES ('p10', 1, 10), ('p25', 1, 4),
-         |  ('p50', 1, 2), ('p75', 3, 4), ('p90', 9, 10))
-         |SELECT q, min(len) AS value FROM qs, cum, tot
-         |WHERE cum >= (num * n + den - 1) // den GROUP BY q""".stripMargin,
-
-    // ev_funnel's twin with the duration bound swapped for calendar-week
-    // equality (DuckDB date_trunc('week') is Monday-anchored like
-    // Spark's — the ev_retention precedent)
-    "ev_funnel_calendar" ->
-      """WITH s1 AS (SELECT user_id AS "user", min(ts) AS t1 FROM events
-        |            WHERE event_type = 'view' AND ts IS NOT NULL
-        |            GROUP BY 1),
-        |s2 AS (SELECT e.user_id AS "user", min(e.ts) AS t2
-        |       FROM events e JOIN s1 ON e.user_id = s1."user"
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |         AND date_trunc('week', e.ts) = date_trunc('week', s1.t1)
-        |       GROUP BY 1),
-        |s3 AS (SELECT e.user_id AS "user", min(e.ts) AS t3
-        |       FROM events e JOIN s2 ON e.user_id = s2."user"
-        |       JOIN s1 ON e.user_id = s1."user"
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |         AND date_trunc('week', e.ts) = date_trunc('week', s1.t1)
-        |       GROUP BY 1)
-        |SELECT s1."user",
-        |  CAST(1 + CASE WHEN s2."user" IS NOT NULL THEN 1 ELSE 0 END
-        |         + CASE WHEN s3."user" IS NOT NULL THEN 1 ELSE 0 END
-        |    AS BIGINT) AS steps_completed,
-        |  s1.t1 AS ts_first,
-        |  COALESCE(s3.t3, s2.t2, s1.t1) AS ts_last
-        |FROM s1
-        |LEFT JOIN s2 ON s1."user" = s2."user"
-        |LEFT JOIN s3 ON s1."user" = s3."user"""".stripMargin,
-
-    "ev_asof_join" ->
-      """WITH l AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'purchase'),
-        |r AS (SELECT user_id, ts, event_id AS click_id, value AS click_value
-        |      FROM (SELECT *, row_number() OVER (PARTITION BY user_id, ts
-        |                      ORDER BY event_id DESC) AS rn
-        |            FROM events WHERE event_type = 'click') WHERE rn = 1)
-        |SELECT l.event_id, l.user_id, l.ts, r.click_id, r.click_value
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    "ev_range_join" ->
-      """SELECT a.event_id AS view_id, a.user_id, epoch_us(a.ts) AS view_us,
-        |       b.event_id AS purchase_id,
-        |       epoch_us(b.ts) - epoch_us(a.ts) AS dt_us
-        |FROM events a JOIN events b ON a.user_id = b.user_id
-        |WHERE a.event_type = 'view' AND b.event_type = 'purchase'
-        |  AND epoch_us(b.ts) - epoch_us(a.ts) BETWEEN 0 AND 3600000000""".stripMargin,
-
-    "corpus_split" ->
-      """SELECT lang, CASE
-        |  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'train'
-        |  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'f3333332' THEN 'val'
-        |  ELSE 'test' END AS split,
-        | count(*) AS n_docs
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-
-    "pack_sequences" ->
-      """WITH base AS (
-        |  SELECT doc_id AS id, CAST(n_chars AS BIGINT) AS len,
-        |         substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS shard,
-        |         md5(CAST(doc_id AS VARCHAR)) AS h
-        |  FROM documents),
-        |pos AS (
-        |  SELECT id, shard, len,
-        |         CAST(sum(len) OVER (PARTITION BY shard ORDER BY h, id
-        |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS endpos
-        |  FROM base)
-        |SELECT id, shard, endpos - len AS start,
-        |       (endpos - len) // 4096 AS seq_first,
-        |       CASE WHEN len = 0 THEN (endpos - len) // 4096
-        |            ELSE (endpos - 1) // 4096 END AS seq_last,
-        |       (endpos - len) % 4096 AS offset
-        |FROM pos""".stripMargin,
-
-    "corpus_upsample" ->
-      """WITH w AS (SELECT doc_id, source,
-        |  CASE source
-        |    WHEN 'src0' THEN 2 + CASE WHEN substring(md5(text), 1, 8) < '80000000'
-        |                             THEN 1 ELSE 0 END
-        |    WHEN 'src1' THEN CASE WHEN substring(md5(text), 1, 8) < '40000000'
-        |                          THEN 1 ELSE 0 END
-        |    WHEN 'src2' THEN 1
-        |    ELSE 1 + CASE WHEN substring(md5(text), 1, 8) < '80000000'
-        |                  THEN 1 ELSE 0 END
-        |  END AS n FROM documents)
-        |SELECT doc_id, source,
-        |       unnest(range(1, CAST(n AS BIGINT) + 1)) AS copy FROM w""".stripMargin,
-
-    "doc_len_quantiles" ->
-      """WITH c AS (SELECT CAST(n_chars AS BIGINT) AS len, count(*) AS cnt
-        |           FROM documents GROUP BY 1),
-        |cum AS (SELECT len, CAST(sum(cnt) OVER (ORDER BY len
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM c),
-        |tot AS (SELECT count(*) AS n FROM documents),
-        |qs(q, num, den) AS (VALUES ('p10', 1, 10), ('p25', 1, 4),
-        |  ('p50', 1, 2), ('p75', 3, 4), ('p90', 9, 10))
-        |SELECT q, min(len) AS value FROM qs, cum, tot
-        |WHERE cum >= (num * n + den - 1) // den GROUP BY q""".stripMargin,
-
-    "doc_length_hist" ->
-      """SELECT CAST(length(bin(CAST(n_chars AS BIGINT))) AS INTEGER) AS bucket,
-        |       count(*) AS n_docs, min(n_chars) AS min_len, max(n_chars) AS max_len
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "vocab_top" ->
-      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm)
-        |SELECT token, count(*) AS freq FROM tok WHERE length(token) > 0
-        |GROUP BY token ORDER BY freq DESC, token LIMIT 20""".stripMargin,
-
-    // coverage curve: same tokenization, rank + running sum over the
-    // (freq DESC, token) total order, budgets via LEFT theta-join so an
-    // empty corpus still yields its zero-coverage rows
-    "vocab_coverage" ->
-      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm),
-        |freq AS (SELECT token, count(*) AS freq FROM tok
-        |         WHERE length(token) > 0 GROUP BY token),
-        |tot AS (SELECT coalesce(sum(freq), 0) AS total FROM freq),
-        |rk AS (SELECT freq, row_number() OVER (ORDER BY freq DESC, token) AS rank,
-        |       sum(freq) OVER (ORDER BY freq DESC, token
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |       FROM freq),
-        |cov AS (SELECT ks.k AS k, tot.total AS total,
-        |        coalesce(max(rk.cum), 0) AS covered
-        |        FROM (SELECT unnest([5, 10, 20, 1000]) AS k) ks
-        |        CROSS JOIN tot LEFT JOIN rk ON rk.rank <= ks.k
-        |        GROUP BY 1, 2)
-        |SELECT CAST(k AS INTEGER) AS k,
-        |       CAST(covered AS BIGINT) AS covered_tokens,
-        |       CAST(total AS BIGINT) AS total_tokens,
-        |       CASE WHEN total = 0 THEN 0.0
-        |            ELSE round(CAST(covered AS DOUBLE) / total, 6)
-        |       END AS coverage
-        |FROM cov""".stripMargin,
-
-    // the sketch path is exact-or-throw, so its oracle is the plain
-    // exact top-N — identical formulation to vocab_top at N=15
-    "vocab_heavy_hitters" ->
-      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm)
-        |SELECT token, count(*) AS freq FROM tok WHERE length(token) > 0
-        |GROUP BY token ORDER BY freq DESC, token LIMIT 15""".stripMargin,
-
-    // phrase form: exact bigram top-N (the bigram comprehension of the
-    // text_bigram_surprisal oracle)
-    "vocab_heavy_bigrams" ->
-      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tk AS (SELECT CASE WHEN t = '' THEN CAST([] AS VARCHAR[])
-        |              ELSE string_split(t, ' ') END AS toks FROM norm),
-        |bg AS (SELECT unnest(
-        |    [array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))])
-        |    AS token FROM tk)
-        |SELECT token, count(*) AS freq FROM bg
-        |GROUP BY token ORDER BY freq DESC, token LIMIT 10""".stripMargin,
-
-    // streaming sketch, exact regime: the complete-mode aggregate over
-    // the full backlog equals the batch sketch equals the exact counts
-    "vocab_sketch_stream" ->
-      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm),
-        |tk AS (SELECT token FROM tok WHERE length(token) > 0),
-        |tot AS (SELECT count(*) AS n FROM tk)
-        |SELECT token, count(*) AS count_lb, tot.n AS n_part
-        |FROM tk, tot GROUP BY token, tot.n""".stripMargin,
-
-    // the merge's exact regime (capacity ≥ vocabulary): merged counters
-    // ARE the exact corpus counts and n_part is the exact token total
-    "vocab_sketch_merge" ->
-      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT unnest(string_split(t, ' ')) AS token FROM norm),
-        |tk AS (SELECT token FROM tok WHERE length(token) > 0),
-        |tot AS (SELECT count(*) AS n FROM tk)
-        |SELECT token, count(*) AS count_lb, tot.n AS n_part
-        |FROM tk, tot GROUP BY token, tot.n""".stripMargin,
-
-    // the Count–Min twin re-derives every md5-lane cell in SQL —
-    // cell_i = ('0x'||substr(md5(token), i*8+1, 8))::BIGINT % width —
-    // then the min-over-lanes estimate, so the whole sketch (collisions
-    // included) is verified, not an exact regime; cellwise addition is
-    // order-independent, so the streaming build shares the twin
-    "vocab_freq_sketch" -> CountMinOracle,
-    "vocab_freq_stream" -> CountMinOracle,
-
-    // the KLL exact regime (n ≤ k, no compaction): the INCLUSIVE
-    // quantile — smallest value with cumulative weight ≥ q·N, the q·N
-    // product computed in double on both sides; the streaming build
-    // shares the twin (exact-regime quantiles are order-independent)
-    "doc_len_quantile_sketch" -> KllQuantileOracle,
-    "doc_len_quantile_stream" -> KllQuantileOracle,
-
-    // the streaming HLL build in the same exact regime: per-slice rows
-    // only (no merged -1 row — the stream emits slice state)
-    "vocab_distinct_stream" ->
-      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT doc_id % 3 AS slice,
-        |        unnest(string_split(t, ' ')) AS token FROM norm),
-        |tk AS (SELECT slice, token FROM tok WHERE length(token) > 0)
-        |SELECT slice, count(DISTINCT token) AS distinct_tokens,
-        |       count(*) AS n_tokens
-        |FROM tk GROUP BY slice""".stripMargin,
-
-    // Bloom membership truth: every corpus text is a member of the
-    // streamed-then-merged filter (false negatives are impossible), no
-    // mutated text is (false positives are ~1e-17-probable at this
-    // provisioning and deterministic given the data)
-    "dedup_bloom_stream" ->
-      """SELECT doc_id, TRUE AS is_member, FALSE AS mutated_member
-        |FROM documents""".stripMargin,
-
-    // the HLL sketches' exact regime (vocabulary ≪ 2^14 set-mode
-    // promotion): per-slice and merged estimates ARE the exact distinct
-    // counts; slice -1 is the merged total
-    "vocab_distinct_sketch" ->
-      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT doc_id % 3 AS slice,
-        |        unnest(string_split(t, ' ')) AS token FROM norm),
-        |tk AS (SELECT slice, token FROM tok WHERE length(token) > 0)
-        |SELECT slice, count(DISTINCT token) AS distinct_tokens,
-        |       count(*) AS n_tokens
-        |FROM tk GROUP BY slice
-        |UNION ALL
-        |SELECT -1 AS slice, count(DISTINCT token), count(*) FROM tk""".stripMargin,
-
-    // exact-integer cross-product ranking |freq_a*n_b - freq_b*n_a| in
-    // HUGEINT (the decimal's value-equal twin; the rank key is not
-    // output so only the order must agree)
-    // exact-regime sketch drift ≡ the scan-based drift — same twin
-    "corpus_drift_sketch" -> CorpusDriftOracle,
-    "corpus_drift" -> CorpusDriftOracle,
-
-    // n-grams per order n via the same slice comprehension as the
-    // bigram oracle, generalized with a small n-table cross join
-    "text_ngram_diversity" ->
-      """WITH norm AS (SELECT trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tk AS (SELECT CASE WHEN t = '' THEN CAST([] AS VARCHAR[])
-        |              ELSE string_split(t, ' ') END AS toks FROM norm),
-        |ns(n) AS (VALUES (1), (2), (3)),
-        |ng AS (SELECT n, unnest(
-        |    [array_to_string(toks[i:i+n-1], ' ')
-        |     for i in range(1, len(toks) - n + 2)]) AS gram
-        |  FROM tk, ns)
-        |SELECT CAST(n AS INTEGER) AS n, count(*) AS total_ngrams,
-        |       count(DISTINCT gram) AS distinct_ngrams
-        |FROM ng GROUP BY n ORDER BY n""".stripMargin,
-
-    "tfidf_keywords" ->
-      """WITH sub AS (SELECT doc_id, text FROM documents WHERE doc_id < 50),
-        |norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM sub),
-        |tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok
-        |       WHERE length(token) > 0 GROUP BY 1, 2),
-        |dfq AS (SELECT token, count(*) AS docfreq FROM tf GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n FROM sub)
-        |SELECT id, token, score FROM (
-        |  SELECT tf.doc_id AS id, tf.token,
-        |         tf.tf * (nd.n + 1 - dfq.docfreq) AS score,
-        |         row_number() OVER (PARTITION BY tf.doc_id
-        |           ORDER BY tf.tf * (nd.n + 1 - dfq.docfreq) DESC, tf.token) AS rn
-        |  FROM tf JOIN dfq ON tf.token = dfq.token CROSS JOIN nd)
-        |WHERE rn <= 3""".stripMargin,
-
-    "text_chunks" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |n AS (
-        |  SELECT doc_id, toks,
-        |    CASE WHEN len(toks) = 0 THEN 0
-        |         WHEN len(toks) <= 32 THEN 1
-        |         ELSE 1 + CAST(ceil((len(toks) - 32) / 24.0) AS INT) END AS nchunks
-        |  FROM t),
-        |c AS (
-        |  SELECT doc_id, toks,
-        |    CAST(unnest(range(0, nchunks)) AS INT) AS chunk_index
-        |  FROM n)
-        |SELECT doc_id, chunk_index,
-        |  array_to_string(toks[chunk_index*24+1 : chunk_index*24+32], ' ') AS chunk,
-        |  CAST(least(chunk_index*24+32, len(toks)) - chunk_index*24 AS BIGINT) AS n_tokens
-        |FROM c""".stripMargin,
-
-    "text_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |t2 AS (
-        |  SELECT doc_id, toks,
-        |    [toks[i] || ' ' || toks[i+1] for i in range(1, len(toks))] AS bi,
-        |    [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-        |     for i in range(1, len(toks)-1)] AS tri
-        |  FROM t),
-        |g1 AS (SELECT doc_id, tok, count(*) AS c FROM
-        |  (SELECT doc_id, unnest(toks) AS tok FROM t2) GROUP BY doc_id, tok),
-        |a1 AS (SELECT doc_id, sum(c) AS total, max(c) AS top, count(*) AS uniq
-        |  FROM g1 GROUP BY doc_id),
-        |g2 AS (SELECT doc_id, tok, count(*) AS c FROM
-        |  (SELECT doc_id, unnest(bi) AS tok FROM t2) GROUP BY doc_id, tok),
-        |a2 AS (SELECT doc_id, sum(c) AS total, max(c) AS top, count(*) AS uniq
-        |  FROM g2 GROUP BY doc_id),
-        |g3 AS (SELECT doc_id, tok, count(*) AS c FROM
-        |  (SELECT doc_id, unnest(tri) AS tok FROM t2) GROUP BY doc_id, tok),
-        |a3 AS (SELECT doc_id, sum(c) AS total, max(c) AS top, count(*) AS uniq
-        |  FROM g3 GROUP BY doc_id)
-        |SELECT t2.doc_id,
-        |  coalesce((a1.total - a1.uniq) / CAST(a1.total AS DOUBLE), 0.0) AS dup_unigram_frac,
-        |  coalesce(a1.top / CAST(a1.total AS DOUBLE), 0.0) AS top_unigram_frac,
-        |  coalesce((a2.total - a2.uniq) / CAST(a2.total AS DOUBLE), 0.0) AS dup_bigram_frac,
-        |  coalesce(a2.top / CAST(a2.total AS DOUBLE), 0.0) AS top_bigram_frac,
-        |  coalesce((a3.total - a3.uniq) / CAST(a3.total AS DOUBLE), 0.0) AS dup_trigram_frac,
-        |  coalesce(a3.top / CAST(a3.total AS DOUBLE), 0.0) AS top_trigram_frac
-        |FROM t2 LEFT JOIN a1 USING(doc_id) LEFT JOIN a2 USING(doc_id)
-        |  LEFT JOIN a3 USING(doc_id)""".stripMargin,
-
-    "decontam_hits" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, unnest(
-        |    [array_to_string(toks[i:i+12], ' ') for i in range(1, len(toks) - 11)])
-        |    AS w
-        |  FROM t),
-        |d AS (SELECT * FROM w WHERE doc_id % 5 <> 0),
-        |b AS (SELECT DISTINCT doc_id AS bench_id, w FROM w WHERE doc_id % 5 = 0)
-        |SELECT d.doc_id, count(*) AS n_collisions,
-        |  count(DISTINCT b.bench_id) AS n_benchmark_docs
-        |FROM d JOIN b USING (w) GROUP BY d.doc_id""".stripMargin,
-
-    // decontam_overlap's window CTEs with the benchmark id kept on its
-    // (distinct-per-benchmark) side — counts by n-gram TEXT, equal to
-    // the engine's 64-bit hash counts absent collisions
-    "decontam_by_source" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, unnest(
-        |    [array_to_string(toks[i:i+12], ' ') for i in range(1, len(toks) - 11)])
-        |    AS w
-        |  FROM t),
-        |b AS (SELECT DISTINCT doc_id AS bench_id, w FROM w WHERE doc_id % 5 = 0)
-        |SELECT w.doc_id, b.bench_id, count(*) AS n_hits
-        |FROM w JOIN b USING (w) WHERE w.doc_id % 5 <> 0
-        |GROUP BY 1, 2""".stripMargin,
-
-    "decontam_overlap" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |tw AS (
-        |  SELECT doc_id, greatest(len(toks) - 12, 0) AS n_windows
-        |  FROM t WHERE doc_id % 5 <> 0),
-        |w AS (
-        |  SELECT doc_id, unnest(
-        |    [array_to_string(toks[i:i+12], ' ') for i in range(1, len(toks) - 11)])
-        |    AS w
-        |  FROM t),
-        |b AS (SELECT DISTINCT w FROM w WHERE doc_id % 5 = 0),
-        |h AS (
-        |  SELECT w.doc_id, count(*) AS n_hits
-        |  FROM w JOIN b USING (w) WHERE w.doc_id % 5 <> 0
-        |  GROUP BY w.doc_id)
-        |SELECT tw.doc_id, CAST(tw.n_windows AS BIGINT) AS n_windows,
-        |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  CASE WHEN tw.n_windows = 0 THEN 0.0
-        |       ELSE CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / tw.n_windows
-        |  END AS overlap_frac
-        |FROM tw LEFT JOIN h USING (doc_id)""".stripMargin,
-
-    "decontam_stream" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, unnest(
-        |    [array_to_string(toks[i:i+12], ' ') for i in range(1, len(toks) - 11)])
-        |    AS w
-        |  FROM t),
-        |b AS (SELECT DISTINCT w FROM w WHERE doc_id % 5 = 0),
-        |bad AS (
-        |  SELECT DISTINCT doc_id FROM w
-        |  WHERE doc_id % 5 <> 0 AND w IN (SELECT w FROM b))
-        |SELECT doc_id FROM documents
-        |WHERE doc_id % 5 <> 0
-        |  AND doc_id NOT IN (SELECT doc_id FROM bad)""".stripMargin,
-
-    "text_nb_classify" ->
-      """WITH lab AS (
-        |  SELECT doc_id, label, text FROM documents
-        |  JOIN embeddings ON doc_id = vec_id WHERE doc_id % 5 <> 0),
-        |ttok AS (
-        |  SELECT label, unnest(list_filter(
-        |    regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-        |    x -> x <> '')) AS tok
-        |  FROM lab),
-        |w AS (
-        |  SELECT label, tok, CAST(round(ln(count(*) + 1) * 10000) AS BIGINT) AS w
-        |  FROM ttok GROUP BY label, tok),
-        |stats AS (
-        |  SELECT p.label,
-        |    CAST(round(ln(CAST(p.n_docs AS DOUBLE)
-        |      / (SELECT count(*) FROM lab)) * 10000) AS BIGINT) AS prior_q,
-        |    -CAST(round(ln(c.tot + (SELECT count(DISTINCT tok) FROM ttok))
-        |      * 10000) AS BIGINT) AS oov_q
-        |  FROM (SELECT label, count(*) AS n_docs FROM lab GROUP BY label) p
-        |  JOIN (SELECT label, count(*) AS tot FROM ttok GROUP BY label) c
-        |    USING (label)),
-        |test AS (
-        |  SELECT doc_id, list_filter(
-        |    regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-        |    x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |base AS (
-        |  SELECT t.doc_id, s.label, s.prior_q + len(t.toks) * s.oov_q AS base_q
-        |  FROM test t CROSS JOIN stats s),
-        |dtok AS (SELECT doc_id, unnest(toks) AS tok FROM test),
-        |delta AS (
-        |  SELECT d.doc_id, w.label, SUM(w.w) AS delta_q
-        |  FROM dtok d JOIN w ON d.tok = w.tok GROUP BY d.doc_id, w.label),
-        |score AS (
-        |  SELECT b.doc_id, b.label, b.base_q + COALESCE(dl.delta_q, 0) AS score_q
-        |  FROM base b LEFT JOIN delta dl
-        |    ON b.doc_id = dl.doc_id AND b.label = dl.label),
-        |ranked AS (
-        |  SELECT doc_id, label, score_q, row_number() OVER (
-        |    PARTITION BY doc_id ORDER BY score_q DESC, label ASC) AS rn
-        |  FROM score)
-        |SELECT doc_id, CAST(label AS BIGINT) AS pred_label,
-        |  CAST(score_q AS BIGINT) AS score
-        |FROM ranked WHERE rn = 1""".stripMargin,
-
-    "link_fuzzy_pairs" ->
-      """WITH n AS (SELECT c_custkey AS id,
-        |  trim(regexp_replace(lower(c_name), '\s+', ' ', 'g')) AS nm
-        |  FROM customer)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS dist
-        |FROM n a JOIN n b ON a.id < b.id
-        |WHERE levenshtein(a.nm, b.nm) <= 1""".stripMargin,
-
-    "link_fuzzy_against" ->
-      """WITH n AS (SELECT c_custkey AS id,
-        |  trim(regexp_replace(lower(c_name), '\s+', ' ', 'g')) AS nm
-        |  FROM customer),
-        |nw AS (SELECT * FROM n WHERE id % 10 = 0),
-        |rf AS (SELECT * FROM n WHERE id % 10 <> 0)
-        |SELECT nw.id AS new_id, rf.id AS ref_id,
-        |  CAST(levenshtein(nw.nm, rf.nm) AS BIGINT) AS dist
-        |FROM nw JOIN rf ON levenshtein(nw.nm, rf.nm) <= 1""".stripMargin,
-
-    "dedup_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, unnest(
-        |    [array_to_string(toks[i:i+7], ' ') for i in range(1, len(toks) - 6)])
-        |    AS span
-        |  FROM t)
-        |SELECT span, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences
-        |FROM s GROUP BY span HAVING count(DISTINCT doc_id) >= 3""".stripMargin,
-
-    "dedup_substring" ->
-      """WITH wins AS (
-        |  SELECT doc_id, substr(text, CAST(i AS INTEGER), 50) AS win
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, len(text) - 49, 25)) AS i
-        |        FROM documents WHERE len(text) >= 50)),
-        |per AS (SELECT win, doc_id, count(*) AS c FROM wins GROUP BY 1, 2),
-        |f AS (SELECT win, count(*) AS nd FROM per GROUP BY 1
-        |      HAVING count(*) >= 2)
-        |SELECT p.doc_id,
-        |  CAST(sum(p.c) AS BIGINT) AS n_windows,
-        |  CAST(sum(CASE WHEN f.nd IS NOT NULL THEN p.c ELSE 0 END) AS BIGINT)
-        |    AS n_dup_windows,
-        |  round(CAST(sum(CASE WHEN f.nd IS NOT NULL THEN p.c ELSE 0 END)
-        |          AS DOUBLE) / CAST(sum(p.c) AS DOUBLE), 6) AS dup_frac
-        |FROM per p LEFT JOIN f USING (win)
-        |GROUP BY 1""".stripMargin,
-
-    // the against twin of dedup_strip_spans: the flagged set comes from
-    // the REFERENCE partition only; the rewrite applies to the batch
-    "dedup_strip_spans_incremental" ->
-      """WITH tb AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |tr AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents WHERE doc_id % 7 <> 0),
-        |sr AS (
-        |  SELECT doc_id, unnest(
-        |    [array_to_string(toks[i:i+7], ' ') for i in range(1, len(toks) - 6)])
-        |    AS span
-        |  FROM tr),
-        |f AS (
-        |  SELECT span FROM sr GROUP BY span HAVING count(DISTINCT doc_id) >= 3),
-        |sb AS (
-        |  SELECT doc_id, unnest(
-        |    [{'start': i, 'span': array_to_string(toks[i:i+7], ' ')}
-        |     for i in range(1, len(toks) - 6)], recursive := true)
-        |  FROM tb),
-        |c AS (
-        |  SELECT DISTINCT doc_id, pos FROM (
-        |    SELECT sb.doc_id, unnest(range(sb.start, sb.start + 8)) AS pos
-        |    FROM sb JOIN f USING (span))),
-        |k AS (
-        |  SELECT doc_id, unnest(toks) AS word,
-        |         unnest(range(1, len(toks) + 1)) AS pos
-        |  FROM tb),
-        |r AS (
-        |  SELECT k.doc_id, string_agg(k.word, ' ' ORDER BY k.pos) AS ct
-        |  FROM k ANTI JOIN c USING (doc_id, pos)
-        |  GROUP BY k.doc_id)
-        |SELECT d.doc_id, coalesce(r.ct, '') AS clean_text
-        |FROM documents d LEFT JOIN r USING (doc_id)
-        |WHERE d.doc_id % 7 = 0""".stripMargin,
-
-    // the engine groups by 64-bit window hash, the oracle by the window
-    // TEXT — equal because collisions are absent at this scale (same
-    // rationale as dedup_substring)
-    "dedup_substring_incremental" ->
-      """WITH nw AS (
-        |  SELECT doc_id, substr(text, CAST(i AS INTEGER), 50) AS win
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, len(text) - 49, 25)) AS i
-        |        FROM documents WHERE doc_id % 7 = 0 AND len(text) >= 50)),
-        |cw AS (
-        |  SELECT DISTINCT substr(text, CAST(i AS INTEGER), 50) AS win
-        |  FROM (SELECT doc_id, text,
-        |          unnest(generate_series(1, len(text) - 49, 25)) AS i
-        |        FROM documents WHERE doc_id % 7 <> 0 AND len(text) >= 50)),
-        |per AS (SELECT win, doc_id, count(*) AS c FROM nw GROUP BY 1, 2)
-        |SELECT p.doc_id,
-        |  CAST(sum(p.c) AS BIGINT) AS n_windows,
-        |  CAST(sum(CASE WHEN cw.win IS NOT NULL THEN p.c ELSE 0 END)
-        |    AS BIGINT) AS n_dup_windows,
-        |  round(CAST(sum(CASE WHEN cw.win IS NOT NULL THEN p.c ELSE 0 END)
-        |          AS DOUBLE) / CAST(sum(p.c) AS DOUBLE), 6) AS dup_frac
-        |FROM per p LEFT JOIN cw USING (win)
-        |GROUP BY 1""".stripMargin,
-
-    // relational twin of the map-only compiled rewrite: flag spans in ≥3
-    // docs, union covered positions, reassemble surviving tokens in order
-    "dedup_strip_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, unnest(
-        |    [{'start': i, 'span': array_to_string(toks[i:i+7], ' ')}
-        |     for i in range(1, len(toks) - 6)], recursive := true)
-        |  FROM t),
-        |f AS (
-        |  SELECT span FROM s GROUP BY span HAVING count(DISTINCT doc_id) >= 3),
-        |c AS (
-        |  SELECT DISTINCT doc_id, pos FROM (
-        |    SELECT s.doc_id, unnest(range(s.start, s.start + 8)) AS pos
-        |    FROM s JOIN f USING (span))),
-        |k AS (
-        |  SELECT doc_id, unnest(toks) AS word,
-        |         unnest(range(1, len(toks) + 1)) AS pos
-        |  FROM t),
-        |r AS (
-        |  SELECT k.doc_id, string_agg(k.word, ' ' ORDER BY k.pos) AS ct
-        |  FROM k ANTI JOIN c USING (doc_id, pos)
-        |  GROUP BY k.doc_id)
-        |SELECT d.doc_id, coalesce(r.ct, '') AS clean_text
-        |FROM documents d LEFT JOIN r USING (doc_id)""".stripMargin,
-
-    "text_surprisal" ->
-      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm),
-        |tk AS (SELECT doc_id, token FROM tok WHERE length(token) > 0),
-        |freq AS (SELECT token, count(*) AS freq FROM tk GROUP BY token),
-        |tot AS (SELECT CAST(sum(freq) AS BIGINT) AS n_total FROM freq),
-        |agg AS (
-        |  SELECT tk.doc_id, count(*) AS n_tokens,
-        |    CAST(sum(n_total // freq) AS BIGINT) AS sum_info
-        |  FROM tk JOIN freq USING (token) CROSS JOIN tot
-        |  GROUP BY tk.doc_id)
-        |SELECT doc_id, n_tokens, sum_info,
-        |  CAST(sum_info AS DOUBLE) / n_tokens AS mean_info FROM agg""".stripMargin,
-
-    "graph_pagerank" -> PageRankOracle,
-    "graph_label_prop" -> LabelPropOracle,
-
-    // CCNet bucket twin: same surprisal CTE, INCLUSIVE value thresholds
-    // in integer tie math (cum*nb >= i*N), ties share buckets
-    "text_perplexity_buckets" ->
-      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm),
-        |tk AS (SELECT doc_id, token FROM tok WHERE length(token) > 0),
-        |freq AS (SELECT token, count(*) AS freq FROM tk GROUP BY token),
-        |tot AS (SELECT CAST(sum(freq) AS BIGINT) AS n_total FROM freq),
-        |s2 AS (
-        |  SELECT tk.doc_id,
-        |    CAST(CAST(sum(n_total // freq) AS BIGINT) AS DOUBLE) / count(*)
-        |      AS mean_info
-        |  FROM tk JOIN freq USING (token) CROSS JOIN tot
-        |  GROUP BY tk.doc_id),
-        |n AS (SELECT count(*) AS n FROM s2),
-        |hist AS (SELECT mean_info, count(*) AS c FROM s2 GROUP BY 1),
-        |cum AS (SELECT mean_info,
-        |        sum(c) OVER (ORDER BY mean_info) AS cum FROM hist),
-        |th AS (SELECT i, min(mean_info) AS t
-        |       FROM cum CROSS JOIN n CROSS JOIN (VALUES (1),(2)) v(i)
-        |       WHERE cum * 3 >= i * n GROUP BY i)
-        |SELECT s2.doc_id, s2.mean_info, count(th.t) AS bucket
-        |FROM s2 LEFT JOIN th ON s2.mean_info > th.t
-        |GROUP BY 1, 2""".stripMargin,
-
-    "text_bigram_surprisal" ->
-      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tk AS (SELECT doc_id,
-        |  CASE WHEN t = '' THEN CAST([] AS VARCHAR[])
-        |       ELSE string_split(t, ' ') END AS toks FROM norm),
-        |bg AS (SELECT doc_id, unnest(
-        |    [array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))])
-        |    AS bigram FROM tk),
-        |b2 AS (SELECT doc_id, bigram, string_split(bigram, ' ')[1] AS prev FROM bg),
-        |bf AS (SELECT bigram, count(*) AS bfreq FROM b2 GROUP BY bigram),
-        |pf AS (SELECT prev, count(*) AS pfreq FROM b2 GROUP BY prev),
-        |agg AS (SELECT b2.doc_id, count(*) AS n_bigrams,
-        |    CAST(sum(pfreq // bfreq) AS BIGINT) AS sum_info
-        |  FROM b2 JOIN bf USING (bigram) JOIN pf USING (prev)
-        |  GROUP BY b2.doc_id)
-        |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams, sum_info,
-        |  CAST(sum_info AS DOUBLE) / n_bigrams AS mean_info FROM agg""".stripMargin,
-
-    // greedy token-budget selection: the oracle is the naive global
-    // running-sum formulation (SUM OVER (ORDER BY quality DESC, id));
-    // the Spark plan computes the identical cum via per-score offsets
-    "corpus_budget_select" ->
-      """WITH b AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\s+') AS words,
-        |  CAST(length(text) AS DOUBLE) AS n FROM documents),
-        |m AS (SELECT doc_id,
-        |  CASE WHEN trim(text) = '' THEN 0 ELSE len(words) END AS ntok,
-        |  CAST(len(words) AS DOUBLE) AS nw,
-        |  CAST(length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / n AS punct_ratio,
-        |  CAST(length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE) / n AS upper_ratio,
-        |  CAST(len(list_filter(words, x -> lower(x) IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this'))) AS DOUBLE) / CAST(len(words) AS DOUBLE) AS stop_ratio
-        |  FROM b),
-        |s AS (SELECT doc_id,
-        |  round(least(nw / 100.0, 1.0) * 0.4 + least(stop_ratio * 4.0, 1.0) * 0.3 +
-        |    (CASE WHEN punct_ratio < 0.2 THEN 1.0 ELSE 0.0 END) * 0.15 +
-        |    (CASE WHEN upper_ratio < 0.3 THEN 1.0 ELSE 0.0 END) * 0.15, 6) AS quality,
-        |  ntok FROM m),
-        |c AS (SELECT doc_id, quality, ntok,
-        |  SUM(ntok) OVER (ORDER BY quality DESC, doc_id) AS cum FROM s)
-        |SELECT doc_id, quality, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(cum AS BIGINT) AS cum_tokens
-        |FROM c WHERE cum <= 12000""".stripMargin,
-
-    // DSIR-lite importance lean counts vs the zh-slice target corpus
-    "text_importance" ->
-      """WITH norm AS (SELECT doc_id, lang, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tkraw AS (SELECT doc_id, token FROM (
-        |    SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm)
-        |  WHERE length(token) > 0),
-        |tktgt AS (SELECT token FROM (
-        |    SELECT unnest(string_split(t, ' ')) AS token FROM norm WHERE lang = 'zh')
-        |  WHERE length(token) > 0),
-        |rf AS (SELECT token, count(*) AS rf FROM tkraw GROUP BY token),
-        |tfq AS (SELECT token, count(*) AS tf_t FROM tktgt GROUP BY token),
-        |nr AS (SELECT coalesce(sum(rf), 0) AS n_raw FROM rf),
-        |nt AS (SELECT coalesce(sum(tf_t), 0) AS n_tgt FROM tfq),
-        |j AS (SELECT k.doc_id,
-        |    CASE WHEN (coalesce(tf_t, 0) + 1) * (n_raw + 1) > (rf + 1) * (n_tgt + 1) THEN 1
-        |         WHEN (coalesce(tf_t, 0) + 1) * (n_raw + 1) < (rf + 1) * (n_tgt + 1) THEN -1
-        |         ELSE 0 END AS lean
-        |  FROM tkraw k JOIN rf USING (token) LEFT JOIN tfq USING (token)
-        |  CROSS JOIN nr CROSS JOIN nt)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(CASE WHEN lean = 1 THEN 1 ELSE 0 END) AS BIGINT) AS target_leaning,
-        |  CAST(sum(CASE WHEN lean = -1 THEN 1 ELSE 0 END) AS BIGINT) AS raw_leaning,
-        |  CAST(sum(lean) AS BIGINT) AS score
-        |FROM j GROUP BY doc_id""".stripMargin,
-
-    // converged-BPE fixed point: one piece per whitespace word
-    "bpe_tokens" ->
-      """SELECT doc_id,
-        |  CASE WHEN trim(text) = '' THEN CAST(0 AS BIGINT)
-        |       ELSE CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-        |  END AS n_bpe_tokens
-        |FROM documents""".stripMargin,
-
-    // the round-trip identity: decode(encode(text)) ≡ the whitespace-
-    // normalized text, independent of merge count (blank-guarded like
-    // text_token_stats_by_lang)
-    "bpe_roundtrip" ->
-      """SELECT doc_id,
-        |  array_to_string(list_filter(
-        |    string_split_regex(trim(text), '\s+'), x -> x != ''), ' ')
-        |  AS decoded
-        |FROM documents""".stripMargin,
-
-    "text_quality" ->
-      """WITH b AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\s+') AS words,
-        |  CAST(length(text) AS DOUBLE) AS n FROM documents),
-        |m AS (SELECT doc_id, text, words, n,
-        |  CAST(len(words) AS DOUBLE) AS nw,
-        |  CAST(length(text) - length(regexp_replace(text, '[!-/:-@\[-`{-~]', '', 'g')) AS DOUBLE) / n AS punct_ratio,
-        |  CAST(length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE) / n AS upper_ratio,
-        |  CAST(len(list_filter(words, x -> lower(x) IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this'))) AS DOUBLE) / CAST(len(words) AS DOUBLE) AS stop_ratio,
-        |  CAST(list_sum([length(x) for x in words]) AS DOUBLE) / CAST(len(words) AS DOUBLE) AS mean_wl
-        |  FROM b)
-        |SELECT doc_id,
-        | round(punct_ratio, 6) AS punct_ratio,
-        | round(stop_ratio, 6) AS stopword_ratio,
-        | round(mean_wl, 6) AS mean_word_len,
-        | round(least(nw / 100.0, 1.0) * 0.4 + least(stop_ratio * 4.0, 1.0) * 0.3 +
-        |   (CASE WHEN punct_ratio < 0.2 THEN 1.0 ELSE 0.0 END) * 0.15 +
-        |   (CASE WHEN upper_ratio < 0.3 THEN 1.0 ELSE 0.0 END) * 0.15, 6) AS quality
-        |FROM m""".stripMargin,
-
-    "text_gopher_gate" ->
-      """WITH b AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\s+') AS words,
-        |  string_split(text, chr(10)) AS lines FROM documents),
-        |m AS (SELECT doc_id, text, words, lines,
-        |  CASE WHEN trim(text) = '' THEN 0 ELSE len(words) END AS nw,
-        |  CAST(len(lines) AS DOUBLE) AS nl,
-        |  CASE WHEN trim(text) = '' THEN 0.0
-        |       ELSE CAST(list_sum([length(x) for x in words]) AS DOUBLE) / len(words) END AS mwl,
-        |  length(text) - length(replace(text, '#', '')) AS hashes,
-        |  (length(text) - length(regexp_replace(text, '\.\.\.', '', 'g'))) / 3 AS dots,
-        |  length(text) - length(replace(text, '…', '')) AS uniell,
-        |  len(list_filter(lines, x -> regexp_matches(ltrim(x), '^[•*-]'))) AS bullets,
-        |  len(list_filter(lines, x -> regexp_matches(rtrim(x), '(\.\.\.|…)$'))) AS ells,
-        |  len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]'))) AS alphaw,
-        |  (CASE WHEN len(list_filter(words, x -> lower(x) = 'the')) > 0 THEN 1 ELSE 0 END
-        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'be')) > 0 THEN 1 ELSE 0 END
-        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'to')) > 0 THEN 1 ELSE 0 END
-        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'of')) > 0 THEN 1 ELSE 0 END
-        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'and')) > 0 THEN 1 ELSE 0 END
-        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'that')) > 0 THEN 1 ELSE 0 END
-        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'have')) > 0 THEN 1 ELSE 0 END
-        |   + CASE WHEN len(list_filter(words, x -> lower(x) = 'with')) > 0 THEN 1 ELSE 0 END) AS stophits
-        | FROM b),
-        |f AS (SELECT doc_id,
-        |  (nw >= 50 AND nw <= 100000) AS wordcount_ok,
-        |  (nw > 0 AND mwl >= 3.0 AND mwl <= 10.0) AS mean_len_ok,
-        |  (nw > 0 AND CAST(hashes + dots + uniell AS DOUBLE) / nw <= 0.1) AS symbol_ok,
-        |  (CAST(bullets AS DOUBLE) / nl < 0.9) AS bullet_ok,
-        |  (CAST(ells AS DOUBLE) / nl <= 0.3) AS ellipsis_ok,
-        |  (nw > 0 AND CAST(alphaw AS DOUBLE) / nw >= 0.8) AS alpha_ok,
-        |  (stophits >= 2) AS stopword_ok FROM m)
-        |SELECT doc_id, wordcount_ok, mean_len_ok, symbol_ok, bullet_ok,
-        |  ellipsis_ok, alpha_ok, stopword_ok,
-        |  (wordcount_ok AND mean_len_ok AND symbol_ok AND bullet_ok
-        |   AND ellipsis_ok AND alpha_ok AND stopword_ok) AS keep
-        |FROM f""".stripMargin,
-
-    "text_c4_clean" ->
-      """WITH b AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
-        |s AS (SELECT doc_id, concat_ws(chr(10),
-        |  coalesce(array_to_string(list_slice(words, 1, 7), ' '), '') || ' end.',
-        |  coalesce(array_to_string(list_slice(words, 8, 10), ' '), ''),
-        |  coalesce(array_to_string(list_slice(words, 11, 15), ' '), '') || ' stop!',
-        |  'tiny line.',
-        |  coalesce(array_to_string(list_slice(words, 16, 21), ' '), '') || ' really?') AS base
-        | FROM b),
-        |s2 AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 17 = 0
-        |       THEN base || chr(10) || 'lorem ipsum dolor sit amet.'
-        |       ELSE base END AS s1 FROM s),
-        |p AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 23 = 0
-        |       THEN s1 || chr(10) || 'if (x) { return y; }'
-        |       ELSE s1 END AS page_text FROM s2),
-        |k AS (SELECT doc_id, page_text,
-        |  list_filter(string_split(page_text, chr(10)), x ->
-        |    regexp_matches(rtrim(x), '[.!?"]$')
-        |    AND (CASE WHEN trim(x) = '' THEN 0
-        |         ELSE len(string_split_regex(trim(x), '\s+')) END) >= 5) AS kept
-        | FROM p)
-        |SELECT doc_id, CAST(len(kept) AS BIGINT) AS n_lines_kept,
-        |  (len(kept) >= 3 AND NOT contains(page_text, '{')
-        |   AND NOT contains(lower(page_text), 'lorem ipsum')) AS keep,
-        |  array_to_string(kept, chr(10)) AS clean_text
-        |FROM k""".stripMargin,
-
-    "text_line_stats" ->
-      """WITH b AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
-        |p AS (SELECT doc_id, concat_ws(chr(10),
-        |  coalesce(array_to_string(list_slice(words, 1, 6), ' '), ''),
-        |  coalesce(array_to_string(list_slice(words, 7, 11), ' '), ''),
-        |  coalesce(array_to_string(list_slice(words, 1, 6), ' '), ''),
-        |  coalesce(array_to_string(list_slice(words, 12, 15), ' '), '')) AS page_text
-        | FROM b),
-        |m AS (SELECT doc_id,
-        |  string_split(page_text, chr(10)) AS lines FROM p),
-        |s AS (SELECT doc_id, len(lines) AS nl,
-        |  len(list_distinct(lines)) AS dl,
-        |  list_sum([length(x) for x in lines]) AS chars,
-        |  list_sum([length(x) for x in list_distinct(lines)]) AS dchars
-        | FROM m)
-        |SELECT doc_id, CAST(nl AS BIGINT) AS n_lines,
-        |  round(CAST(nl - dl AS DOUBLE) / nl, 6) AS dup_line_frac,
-        |  CASE WHEN chars = 0 THEN 0.0
-        |       ELSE round(CAST(chars - dchars AS DOUBLE) / chars, 6)
-        |  END AS dup_char_frac
-        |FROM s""".stripMargin,
-
-    // BM25 (Lucene variant): every product/quotient is parenthesized as
-    // the engine groups it, the per-pair sum is a token-ordered list_sum
-    // matching the engine's sorted left fold, and the score is rounded
-    // to 10 dp BEFORE ranking on both sides (ln is an ulp apart between
-    // libm and either JVM log — see Retrieval scaladoc). The k1+1 term
-    // needs CAST(1.2 AS DOUBLE): DuckDB literals are DECIMAL, so
-    // (1.2 + 1.0) would be the EXACT decimal 2.2 while the JVM adds
-    // doubles (2.1999999999999997) — an ulp apart after the multiply.
-    // The other literals (0.5, 0.75, 1.0) are dyadic-exact in both.
-    "text_bm25_topk" -> Bm25TopkOracle,
-
-    // RRF hybrid: the full BM25 twin + the ann_cosine twin, fused on
-    // ranks only — each contribution is one exact division (the 1.0
-    // needs CAST AS DOUBLE: a decimal 1.0/(60+rank) would divide in
-    // DECIMAL), summed in source order, no quantization needed
-    "text_hybrid_rrf" -> TextHybridRrfOracle,
-    // the hybrid steady state under the SAME twin: both lists served
-    // from persisted indexes (nprobe = nlist makes the IVF serve exact)
-    "text_hybrid_against" -> TextHybridRrfOracle,
-
-    // retrieval evaluation: the BM25 twin as the run, same-source truth,
-    // integer hits/n_rel + exact 1/first_rel + quantized nDCG (the ln
-    // ulp spread cancels only approximately in the DCG/IDCG ratio)
-    "retrieval_metrics" ->
-      """WITH norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS t FROM documents),
-        |tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm),
-        |tk AS (SELECT doc_id, token FROM tok WHERE length(token) > 0),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM tk GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-        |dfq AS (SELECT token, count(*) AS docfreq FROM tf GROUP BY 1),
-        |st AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-        |tot AS (SELECT coalesce(sum(dl), 0) AS toklen FROM dl),
-        |qs AS (SELECT doc_id AS query_id,
-        |       array_to_string(list_slice(string_split(t, ' '), 1, 6), ' ') AS qt
-        |       FROM norm WHERE doc_id % 25 = 0 AND doc_id < 500),
-        |qtm AS (SELECT DISTINCT query_id, token FROM
-        |       (SELECT query_id, unnest(string_split(qt, ' ')) AS token FROM qs)
-        |       WHERE length(token) > 0),
-        |w AS (SELECT q.query_id, f.doc_id, f.token,
-        |      ln((st.n - d.docfreq + 0.5) / (d.docfreq + 0.5) + 1.0) *
-        |      ((f.tf * (CAST(1.2 AS DOUBLE) + 1.0)) /
-        |       (f.tf + 1.2 * (1.0 - 0.75 + 0.75 * l.dl /
-        |          (CAST(tot.toklen AS DOUBLE) / st.n)))) AS w
-        |      FROM qtm q JOIN dfq d USING (token) JOIN tf f USING (token)
-        |      JOIN dl l ON f.doc_id = l.doc_id, st, tot),
-        |sc AS (SELECT query_id, doc_id,
-        |       round(list_sum(list(w ORDER BY token)), 10) AS score
-        |       FROM w GROUP BY 1, 2),
-        |rkk AS (SELECT query_id, doc_id,
-        |       row_number() OVER (PARTITION BY query_id
-        |                          ORDER BY score DESC, doc_id) AS rank FROM sc),
-        |run AS (SELECT query_id, doc_id, rank FROM rkk WHERE rank <= 5),
-        |truth AS (SELECT a.doc_id AS query_id, b.doc_id AS doc_id
-        |          FROM documents a JOIN documents b USING (source)
-        |          WHERE a.doc_id % 25 = 0 AND a.doc_id < 500),
-        |nrel AS (SELECT query_id, count(*) AS n_rel FROM truth GROUP BY 1),
-        |j AS (SELECT r.query_id, r.rank,
-        |      CASE WHEN t.doc_id IS NOT NULL THEN 1 ELSE 0 END AS rel
-        |      FROM run r LEFT JOIN truth t
-        |      ON r.query_id = t.query_id AND r.doc_id = t.doc_id),
-        |per AS (SELECT query_id, CAST(sum(rel) AS BIGINT) AS hits,
-        |        min(CASE WHEN rel = 1 THEN rank END) AS first_rel,
-        |        list(rank ORDER BY rank) FILTER (WHERE rel = 1) AS rel_ranks
-        |        FROM j GROUP BY 1)
-        |SELECT p.query_id, n.n_rel, p.hits,
-        |  round(CAST(p.hits AS DOUBLE) / n.n_rel, 6) AS recall,
-        |  coalesce(CAST(1.0 AS DOUBLE) / p.first_rel, 0.0) AS rr,
-        |  round(
-        |    coalesce(list_sum([ln(2.0) / ln(x + 1.0)
-        |        for x in coalesce(p.rel_ranks, [])]), 0.0) /
-        |    list_sum([ln(2.0) / ln(i + 1.0)
-        |        for i in range(1, least(n.n_rel, 5) + 1)]),
-        |    10) AS ndcg
-        |FROM per p JOIN nrel n USING (query_id)""".stripMargin,
-
-    // the Against form: tf/dfq/dl/N/toklen all come from the BASE slice
-    // (doc_id % 500 < 400) while the query batch is the copy-0 tail —
-    // the engine's index-once-query-many contract, same float discipline
-    "text_bm25_incremental" -> Bm25IncrementalOracle,
-
-    // feed-maintained BM25 serves bit-identically to the rebuild
-    "text_bm25_feed_maintain" -> Bm25IncrementalOracle,
-    "text_bm25_feed_tracked" -> Bm25IncrementalOracle,
-
-    // the per-line twin: same langid CASE applied per non-blank line,
-    // bounded per-doc argmax + total
-    "text_langid_lines" ->
-      """WITH multi AS (SELECT a.doc_id,
-        |    a.text || chr(10) || b.text || chr(10) || c.text AS text
-        |    FROM documents a
-        |    JOIN documents b ON b.doc_id = a.doc_id + 1
-        |    JOIN documents c ON c.doc_id = a.doc_id + 2),
-        |ln AS (SELECT doc_id, line FROM (
-        |    SELECT doc_id, unnest(string_split(text, chr(10))) AS line
-        |    FROM multi) t WHERE length(trim(line)) > 0),
-        |w AS (SELECT doc_id, line,
-        |  string_split_regex(trim(line), '\s+') AS words FROM ln),
-        |sc AS (SELECT doc_id,
-        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
-        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
-        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
-        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
-        |  FROM w),
-        |pred AS (SELECT doc_id,
-        | CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
-        |      WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
-        |      WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
-        |      WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
-        |      ELSE 'und' END AS lang_pred
-        | FROM sc),
-        |pl AS (SELECT doc_id, lang_pred, count(*) AS cnt FROM pred GROUP BY 1, 2),
-        |r AS (SELECT doc_id, lang_pred, cnt,
-        |        row_number() OVER (PARTITION BY doc_id
-        |          ORDER BY cnt DESC, lang_pred) AS rn,
-        |        sum(cnt) OVER (PARTITION BY doc_id) AS n_lines
-        |      FROM pl)
-        |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
-        |  lang_pred AS dominant_lang, cnt AS n_dominant,
-        |  round(CAST(n_lines - cnt AS DOUBLE) / n_lines, 6) AS mixed_frac
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    "text_langid" ->
-      """WITH w AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
-        |sc AS (SELECT doc_id,
-        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
-        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
-        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
-        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
-        |  FROM w)
-        |SELECT doc_id,
-        | CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
-        |      WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
-        |      WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
-        |      WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
-        |      ELSE 'und' END AS lang_pred
-        |FROM sc""".stripMargin,
-
-    // langid CASE verbatim again; exact counts, share derived from them
-    // over the bounded label domain
-    "text_langid_confusion" ->
-      """WITH w AS (SELECT doc_id, lang,
-        |  string_split_regex(trim(text), '\s+') AS words FROM documents),
-        |sc AS (SELECT doc_id, lang,
-        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
-        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
-        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
-        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
-        |  FROM w),
-        |l AS (SELECT lang AS label,
-        | CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
-        |      WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
-        |      WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
-        |      WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
-        |      ELSE 'und' END AS pred
-        |FROM sc),
-        |c AS (SELECT label, pred, count(*) AS n FROM l GROUP BY 1, 2)
-        |SELECT label, pred, n,
-        |  round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY label), 6)
-        |    AS label_share
-        |FROM c""".stripMargin,
-
-    // the langid CASE is text_langid's twin verbatim; the measures are
-    // text_tokens' twin aggregated — integer-exact sums, fertility
-    // derived from them at the end (null when a bucket has no tokens).
-    // Blank-text guard: DuckDB's string_split_regex('', ...) yields ['']
-    // (1 element) where the engine's tokens() yields [], so the word
-    // list drops empty strings before any counting — a no-op on
-    // non-blank docs, parity-preserving if a regeneration adds blanks
-    "text_token_stats_by_lang" ->
-      """WITH w AS (SELECT doc_id, text,
-        |  list_filter(string_split_regex(trim(text), '\s+'),
-        |              x -> x != '') AS words FROM documents),
-        |sc AS (SELECT doc_id, text, words,
-        |  len(list_filter(words, x -> lower(x) IN ('der','die','das','und','ist','nicht','ein','mit'))) AS sde,
-        |  len(list_filter(words, x -> lower(x) IN ('the','and','is','of','to','in','that','it'))) AS sen,
-        |  len(list_filter(words, x -> lower(x) IN ('el','la','los','que','y','es','en','un'))) AS ses,
-        |  len(list_filter(words, x -> lower(x) IN ('le','la','les','et','est','que','des','une'))) AS sfr
-        |  FROM w),
-        |l AS (SELECT doc_id, text, words,
-        | CASE WHEN sde > 0 AND sde >= sen AND sde >= ses AND sde >= sfr THEN 'de'
-        |      WHEN sen > 0 AND sen >= sde AND sen >= ses AND sen >= sfr THEN 'en'
-        |      WHEN ses > 0 AND ses >= sde AND ses >= sen AND ses >= sfr THEN 'es'
-        |      WHEN sfr > 0 AND sfr >= sde AND sfr >= sen AND sfr >= ses THEN 'fr'
-        |      ELSE 'und' END AS lang_pred
-        |FROM sc)
-        |SELECT lang_pred, count(*) AS n_docs,
-        | CAST(sum(len(words)) AS BIGINT) AS n_tokens,
-        | CAST(sum(coalesce(list_sum([CAST(ceil(length(x) / 4.0) AS BIGINT) for x in words]), 0)) AS BIGINT) AS n_subwords,
-        | CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        | CASE WHEN sum(len(words)) > 0 THEN
-        |   round(CAST(sum(coalesce(list_sum([CAST(ceil(length(x) / 4.0) AS BIGINT) for x in words]), 0)) AS DOUBLE)
-        |     / sum(len(words)), 6) END AS fertility
-        |FROM l GROUP BY lang_pred""".stripMargin,
-
-    // RE2's \p{Han} ≡ Java's \p{IsHan}; counts by remove-and-diff in
-    // code points (both engines' length/regexp_replace are
-    // code-point-aware)
-    "text_script_profile" ->
-      """WITH c AS (SELECT doc_id,
-        |  length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')) AS n_latin,
-        |  length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
-        |  length(text) - length(regexp_replace(text, '[ \t\n\x0b\f\r]', '', 'g')) AS n_space,
-        |  length(text) - length(regexp_replace(text, '\p{Han}', '', 'g')) AS n_han,
-        |  length(regexp_replace(text, '[\x00-\x7f]', '', 'g')) AS n_nonascii
-        |  FROM documents)
-        |SELECT doc_id, CAST(n_latin AS INTEGER) AS n_latin,
-        |  CAST(n_digit AS INTEGER) AS n_digit,
-        |  CAST(n_space AS INTEGER) AS n_space,
-        |  CAST(n_han AS INTEGER) AS n_han,
-        |  CAST(n_nonascii - n_han AS INTEGER) AS n_other_nonascii,
-        |  CASE WHEN n_han > n_latin THEN 'han'
-        |       WHEN n_latin > 0 THEN 'latin'
-        |       WHEN n_nonascii - n_han > 0 THEN 'other'
-        |       ELSE 'none' END AS script
-        |FROM c""".stripMargin,
-
-    "multimodal_meta" ->
-      """SELECT doc_id AS media_id, 'image' AS modality, 'image/png' AS mime_type,
-        | CAST(octet_length(encode(text)) AS BIGINT) AS byte_size
-        |FROM documents""".stripMargin,
-
-    "multimodal_frames" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_size FROM documents),
-        |f AS (SELECT media_id, byte_size % 500 + 10 AS frame_count FROM m)
-        |SELECT media_id, frame_count,
-        |  CAST(floor(i * frame_count / 4.0) AS BIGINT) AS frame_index
-        |FROM f CROSS JOIN (SELECT unnest(range(0, 4)) AS i) idx""".stripMargin
-  )
 }

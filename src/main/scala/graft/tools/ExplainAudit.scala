@@ -2,14 +2,32 @@ package graft.tools
 import graft._
 
 /** Print query plans for audit. First arg: comma-separated query names
-  * (default: a representative set). Second arg `exec` additionally RUNS
-  * each query and prints the final adaptive plan — the only way to see
-  * whether AQE's stage reuse (ReusedExchange / table-cache hits) fired,
-  * which the static `explain` cannot show. */
+  * (default: a representative set). Then, in any order: `exec`
+  * additionally RUNS each query and prints the final adaptive plan — the
+  * only way to see whether AQE's stage reuse (ReusedExchange / table-cache
+  * hits) fired, which the static `explain` cannot show — and an sf dir
+  * (default: the sf0.01 testdata). Building a composite gate's frame
+  * runs its by-construction machinery, so the printed plan is the SERVED
+  * query's plan; [[QueryProfile]] decomposes the machinery into jobs.
+  *
+  * One plan per file (the `plans/<round>/<q>_<tag>.txt` before/after
+  * artifacts): run one gate per call and redirect its output, keeping
+  * the lines from the gate's `===` header on, without sbt's `[info] `
+  * prefix:
+  * {{{
+  * for q in graph_pagerank ann_feed_tracked; do
+  *   sbt -batch "runMain graft.tools.ExplainAudit $q $SF_DIR" 2>/dev/null \
+  *     | sed -n '/^\[info\] === /,$ s/^\[info\] //p' > plans/r18/${q}_after.txt
+  * done
+  * }}}
+  */
 object ExplainAudit extends App {
   val spark = GraftSession.builder(master = "local[8]", shufflePartitions = 8).getOrCreate()
   spark.sparkContext.setLogLevel("ERROR")
   val dir = "/root/testdata/sf0.01"
+  val opts = args.drop(1)
+  val exec = opts.contains("exec")
+  val sfDir = opts.find(_ != "exec").getOrElse(dir)
   val targets = args.headOption.map(_.split(",").toSeq)
     .getOrElse(Seq("q5_region_revenue", "q3_shipping_priority", "j5_point_lookup",
       "p1_project_keys", "a6_keep_latest", "dedup_jaccard_pairs", "ann_cosine_topk",
@@ -164,10 +182,9 @@ object ExplainAudit extends App {
       // sketch drift: two bounded sketch subtrees + one capacity-bounded
       // token join + a TakeOrdered
       "corpus_drift_sketch"))
-  val exec = args.lift(1).contains("exec")
   targets.foreach { n =>
     println(s"=== $n ===")
-    val df = SparkEntry.queries(n)(spark, dir)
+    val df = SparkEntry.queries(n)(spark, sfDir)
     if (exec) {
       // execute THIS dataframe's own physical plan so its
       // AdaptiveSparkPlan finalizes (df.count() or a noop write would

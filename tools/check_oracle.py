@@ -3,9 +3,11 @@
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
-For each query dir under verifyOutDir: load the Spark parquet result, run the
-matching oracle SQL from oracle_sql.json in DuckDB over the same testdata
-tables, sort columns by name and rows by all columns, and compare values.
+For each gate named in oracle_sql.json or holding a result dir under
+verifyOutDir: load the Spark parquet result, run the matching oracle SQL in
+DuckDB over the same testdata tables, sort columns by name and rows by all
+columns, and compare values. A gate with an oracle but no result dir (Verify
+skips a gate that throws) and a result with no oracle both count as failures.
 """
 import json
 import math
@@ -44,11 +46,18 @@ def main():
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     failures = 0
     import glob as g
-    qdirs = sorted(d.split("/")[-1] for d in g.glob(f"{out_dir}/*") if not d.endswith(".json"))
-    for name in qdirs:
+    qdirs = {d.split("/")[-1] for d in g.glob(f"{out_dir}/*") if not d.endswith(".json")}
+    names = sorted(qdirs | set(oracle))
+    for name in names:
+        if name not in qdirs:
+            # Verify skips a gate that throws: no result is a failure
+            print(f"  [FAIL-missing] {name}: no result dir")
+            failures += 1
+            continue
         spark_df = pd.read_parquet(f"{out_dir}/{name}")
         if name not in oracle:
-            print(f"  [rows-only] {name}: {len(spark_df)} rows")
+            print(f"  [FAIL-no-oracle] {name}: {len(spark_df)} rows, nothing to compare")
+            failures += 1
             continue
         try:
             duck_df = con.execute(oracle[name]).fetchdf()
@@ -96,7 +105,7 @@ def main():
             failures += 1
         else:
             print(f"  [OK       ] {name}: {len(s)} rows")
-    print(f"\n{failures} failures / {len(qdirs)} queries")
+    print(f"\n{failures} failures / {len(names)} gates")
     sys.exit(1 if failures else 0)
 
 
