@@ -109,6 +109,12 @@ object SparkEntry {
       |     WHEN lang = 'fr' THEN 'image/png'
       |     ELSE 'text/plain' END""".stripMargin
 
+  /** The reviewed golden parquets the hash-family oracles read,
+    * resolved against the checkout the JVM runs in (sbt forks its JVMs
+    * in the project base dir), so a checkout's oracles read its own
+    * `golden/`. */
+  private val GoldenDir = new java.io.File("golden").getAbsolutePath
+
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q5_region_revenue")(spark, "/root/testdata/sf0.001")
@@ -3301,8 +3307,8 @@ object SparkEntry {
       // the exact-Jaccard-0.5 set and every SimHash pair has exact
       // Jaccard ≥ 0.96). Regenerate with tools/regen_golden.sh if the
       // kernels or sf0.01 testdata change.
-      """SELECT i, j, est_jaccard
-        |FROM read_parquet('/root/repo/golden/dedup_minhash_lsh.parquet')""".stripMargin),
+      s"""SELECT i, j, est_jaccard
+        |FROM read_parquet('$GoldenDir/dedup_minhash_lsh.parquet')""".stripMargin),
 
     Gate("dedup_simhash", ((s, dir) =>
       // oracle = reviewed golden-pair parquet (golden/README.md); behavior
@@ -3310,8 +3316,8 @@ object SparkEntry {
       Dedup.simhashNearPairs(
         Dedup.simhashSignatures(t(s, dir, "documents"), "doc_id", "text"),
         maxHamming = 3)),
-      """SELECT i, j, hamming
-        |FROM read_parquet('/root/repo/golden/dedup_simhash.parquet')""".stripMargin),
+      s"""SELECT i, j, hamming
+        |FROM read_parquet('$GoldenDir/dedup_simhash.parquet')""".stripMargin),
 
     Gate("dedup_simhash_incremental", ((s, dir) => {
       // cross-corpus SimHash near-dup: new batch probes the corpus's
@@ -3326,8 +3332,8 @@ object SparkEntry {
           "doc_id", "text"),
         maxHamming = 3)
     }),
-      """SELECT i, j, hamming
-        |FROM read_parquet('/root/repo/golden/dedup_simhash_incremental.parquet')""".stripMargin),
+      s"""SELECT i, j, hamming
+        |FROM read_parquet('$GoldenDir/dedup_simhash_incremental.parquet')""".stripMargin),
 
     Gate("dedup_embedding_pairs", ((s, dir) =>
       // embedding-cosine near-dup. Auto mode: ≤20k rows (this SF) scores
@@ -3457,8 +3463,8 @@ object SparkEntry {
           m = 8, codebookSize = 16, rerank = 8)
         .withColumnRenamed("rank", "rk")
     }),
-      """SELECT query_id, rk, corpus_id, sim
-        |FROM read_parquet('/root/repo/golden/ann_pq_topk.parquet')""".stripMargin),
+      s"""SELECT query_id, rk, corpus_id, sim
+        |FROM read_parquet('$GoldenDir/ann_pq_topk.parquet')""".stripMargin),
 
     Gate("ann_ivf_pq_topk", ((s, dir) => {
       // composed IVF-PQ (coarse inverted lists × PQ codes, exact re-rank):
@@ -3470,8 +3476,8 @@ object SparkEntry {
           nlist = 16, nprobe = 8, m = 8, codebookSize = 16, rerank = 8)
         .withColumnRenamed("rank", "rk")
     }),
-      """SELECT query_id, rk, corpus_id, sim
-        |FROM read_parquet('/root/repo/golden/ann_ivf_pq_topk.parquet')""".stripMargin),
+      s"""SELECT query_id, rk, corpus_id, sim
+        |FROM read_parquet('$GoldenDir/ann_ivf_pq_topk.parquet')""".stripMargin),
 
     Gate("ann_recall", ((s, dir) => {
       // the ANN family's measured-approximation gate: the IVF(nprobe=4)

@@ -1,8 +1,15 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{
+  BasicWriteJobStatsTracker, FileFormatWriter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** The MUTATION half of the [[Layout]] lake table: row-level deletes,
   * keyed upserts, generation time travel, rollback, and the compaction
@@ -593,7 +600,9 @@ object Lakehouse {
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val dst = new Path(dir, f"v$version%020d$suffix")
-    require(f.rename(tmp, dst),
+    val landed = f.rename(tmp, dst)
+    if (!landed) f.delete(tmp, false)
+    require(landed,
       s"commit: rename $tmp -> $dst failed — version $version " +
         "already exists? Commits are single-writer under the table lock")
   }
@@ -1028,10 +1037,10 @@ object Lakehouse {
   }
 
   /** Land `hits` minus the tombstones commit `c` already records,
-    * stamped with its max generation, through [[stageSharded]] as
-    * `del<g>-<seq+k>.parquet`: takedown-sized deletes land as one
-    * file; a ~10⁹-row retraction shards instead of funneling. Returns
-    * the newly tombstoned row count and the landed names.
+    * stamped with its max generation, through [[landSharded]] as
+    * `del<g>-…parquet`: takedown-sized deletes land as one file; a
+    * ~10⁹-row retraction shards instead of funneling. Returns the newly
+    * tombstoned row count and the landed names.
     *
     * `commit = false` DEFERS the pointer advance: the landed names are
     * returned for the caller to fold into ITS commit (the upsert/CDC
@@ -1052,7 +1061,7 @@ object Lakehouse {
       case Some(ts) => hits.join(ts, Seq(FileCol, PosCol), "left_anti")
       case None => hits
     }
-    val (n, landed) = stageSharded(spark, path,
+    val (n, landed) = landSharded(spark,
       fresh.withColumn(GenCol, lit(gen)), deletesDir(path), s"del$gen-",
       rowsPerFile)
     // the live tombstone set advances by commit — an O(landed-files)
@@ -1063,71 +1072,100 @@ object Lakehouse {
     (n, landed)
   }
 
-  /** Stage `df` (natural partitioning — a table pass never funnels one
-    * task), count the staged rows (a staged-size read, never a second
-    * job over the source), normalize into `ceil(n / rowsPerFile)`
-    * shards, and land them in `destDir` under DETERMINISTIC names
-    * `<prefix><k>.parquet`, k past any on-disk sibling (live and
-    * vacuum-pending files both occupy their names). The staged write
-    * usually already holds the right shard count (AQE coalesces a
-    * takedown-sized frame to one file) — then its parts rename in
-    * directly, and only a mismatched layout pays the normalizing
-    * reshard. Returns the staged row count and the landed names. */
-  private def stageSharded(spark: SparkSession, path: String,
-                           df: DataFrame, destDir: String, prefix: String,
-                           rowsPerFile: Long): (Long, Seq[String]) = {
-    val f = fs(spark, path)
-    val raw = s"${path}_incoming/$prefix-raw"
-    df.write.mode("overwrite").parquet(raw)
-    // the schema is in hand — re-reads of the staged frame skip footer
-    // inference
-    val rawDf = spark.read.schema(nullableCopy(df.schema)).parquet(raw)
-    val n = rawDf.count()
-    if (n == 0) { f.delete(new Path(raw), true); (0L, Seq.empty) }
-    else {
-      val shards = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
-      val parts =
-        if (stagedParts(f, raw).length == shards) raw
-        else {
-          val norm = s"${path}_incoming/$prefix-norm"
-          rawDf.repartition(shards).write.mode("overwrite").parquet(norm)
-          norm
-        }
-      val firstIdx = nextIndexFor(spark, destDir, prefix)
-      val names = renameStagedIn(spark, parts, destDir,
-        k => s"$prefix${firstIdx + k}.parquet")
-      f.delete(new Path(raw), true)
-      (n, names)
+  /** Land `df` straight into `dir` in ONE write job: each task attempt
+    * writes `<prefix><tag>p<split>a<attempt>.parquet` in place — no
+    * staging dir, no rename, no `_SUCCESS` — and the job returns the
+    * rows written and the landed names. `tag` is fresh per call and
+    * holds no `-`, so [[genOf]] and [[delGenOf]] parse the prefix. A
+    * file is invisible until a commit names it: a failed task deletes
+    * its own, and any other failed or speculative attempt's file is an
+    * orphan [[vacuum]] sweeps. Lock-holding callers only. */
+  private[core] def land(spark: SparkSession, df: DataFrame, dir: String,
+                         prefix: String): (Long, Seq[String]) = {
+    val qe = df.queryExecution
+    val plan = qe.executedPlan
+    val conf = spark.sessionState.newHadoopConf()
+    val landing = new Landing(dir,
+      prefix + java.util.UUID.randomUUID().toString.replace("-", ""))
+    val stats = new BasicWriteJobStatsTracker(
+      new SerializableConfiguration(conf), BasicWriteJobStatsTracker.metrics)
+    SQLExecution.withNewExecutionId(qe, Some(s"land $dir")) {
+      // one file per task, so its split and attempt name it
+      FileFormatWriter.write(qe.sparkSession, plan, new ParquetFileFormat,
+        landing, FileFormatWriter.OutputSpec(dir, Map.empty, plan.output),
+        conf, Seq.empty, None, Seq(stats), Map("maxRecordsPerFile" -> "0"))
     }
+    (stats.driverSideMetrics("numOutputRows").value, landing.landed.sorted)
   }
 
-  private def stagedParts(f: FileSystem, staged: String): Seq[Path] =
-    f.listStatus(new Path(staged)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
+  /** [[land]] `df` (natural partitioning — a table pass never funnels
+    * one task) as `ceil(n / rowsPerFile)` files. The write usually
+    * holds that many already (AQE coalesces a takedown-sized frame to
+    * one); only a mismatched count re-lands as `repartition(shards)`,
+    * deleting the first landing. An empty frame lands nothing. */
+  private def landSharded(spark: SparkSession, df: DataFrame, dir: String,
+                          prefix: String,
+                          rowsPerFile: Long): (Long, Seq[String]) = {
+    val (n, first) = land(spark, df, dir, prefix)
+    val shards = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
+    if (n > 0L && first.length == shards) return (n, first)
+    val names =
+      if (n == 0L) Seq.empty
+      else land(spark, spark.read.schema(nullableCopy(df.schema))
+        .parquet(first.map(nm => new Path(dir, nm).toString): _*)
+        .repartition(shards), dir, prefix)._2
+    val f = fs(spark, dir)
+    first.foreach(nm => f.delete(new Path(dir, nm), false))
+    // an empty frame's write made the dir: leave no empty sidecar
+    if (n == 0L && f.listStatus(new Path(dir)).isEmpty)
+      f.delete(new Path(dir), false)
+    (n, names)
+  }
 
-  /** Move the `part-*.parquet` files a Spark write left under `staged`
-    * into `destDir` as `name(k)` (k in part-name order) and drop the
-    * staging dir — the one landing step of every staged write. A
-    * destination that already exists is a crashed attempt's orphan
-    * (names are claimed by the next commit version or past every
-    * on-disk sibling, so no live set names it) and is replaced.
-    * Returns the landed names. */
-  private[core] def renameStagedIn(spark: SparkSession, staged: String,
-                                   destDir: String,
-                                   name: Int => String): Seq[String] = {
-    val f = fs(spark, destDir)
-    val parts = stagedParts(f, staged)
-    f.mkdirs(new Path(destDir))
-    val names = parts.zipWithIndex.map { case (p, k) =>
-      val dst = new Path(destDir, name(k))
-      if (f.exists(dst)) f.delete(dst, false)
-      require(f.rename(p, dst), s"rename $p -> $dst failed")
-      dst.getName
+  /** [[land]]'s commit protocol: a task attempt writes its one file in
+    * place and reports the name; job commit collects the names. */
+  private final class Landing(dir: String, stem: String)
+      extends FileCommitProtocol with Serializable {
+    private var mine: Option[Path] = None
+    var landed: Seq[String] = Seq.empty
+    override def newTaskTempFile(task: TaskAttemptContext,
+                                 subdir: Option[String],
+                                 spec: FileNameSpec): String = {
+      val id = task.getTaskAttemptID
+      mine = Some(new Path(dir,
+        f"${stem}p${id.getTaskID.getId}%05da${id.getId}%d.parquet"))
+      mine.get.toString
     }
-    f.delete(new Path(staged), true)
-    names
+    def setupJob(job: JobContext): Unit = ()
+    def setupTask(task: TaskAttemptContext): Unit = mine = None
+    def commitTask(task: TaskAttemptContext) =
+      new FileCommitProtocol.TaskCommitMessage(mine.map(_.getName))
+    def commitJob(job: JobContext,
+                  tasks: Seq[FileCommitProtocol.TaskCommitMessage]): Unit =
+      landed = tasks.flatMap(_.obj.asInstanceOf[Option[String]])
+    def abortTask(task: TaskAttemptContext): Unit =
+      mine.foreach(p => p.getFileSystem(task.getConfiguration).delete(p,
+        false))
+    def abortJob(job: JobContext): Unit = ()
+  }
+
+  /** Land `slice` as the one file `destDir/name`, replacing that
+    * slice's previous version. Manifest slices are found by listing,
+    * not through a commit, so each is written under `<path>_incoming`
+    * and lands by one rename. Lock-holding callers only. */
+  private[core] def landSlice(spark: SparkSession, path: String,
+                              slice: DataFrame, destDir: String,
+                              name: String): Unit = {
+    val staged = new Path(s"${path}_incoming")
+    slice.coalesce(1).write.mode("overwrite").parquet(staged.toString)
+    val f = fs(spark, destDir)
+    val part = f.listStatus(staged).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).head
+    val dst = new Path(destDir, name)
+    f.mkdirs(dst.getParent)
+    if (f.exists(dst)) f.delete(dst, false)
+    require(f.rename(part, dst), s"rename $part -> $dst failed")
+    f.delete(staged, true)
   }
 
   /** Point lookup through the Bloom membership manifest
@@ -1244,8 +1282,8 @@ object Lakehouse {
   /** Sidecar suffixes a lakehouse table hangs off its path — used to
     * tell tables from their own metadata dirs during discovery. */
   private val sidecarSuffixes = Seq("_deletes", "_manifest", "_commit",
-    "_lock", "_incoming", "_rebuild", "_retain_rebuild", "_del_ckpt",
-    "_upsert_ckpt", "_apply_ckpt", "_ckpt")
+    "_lock", "_incoming", "_del_ckpt", "_upsert_ckpt", "_apply_ckpt",
+    "_ckpt")
 
   /** The CATALOG surface: one row per lakehouse table found directly
     * under `root` — path, commit version (0 for a folder with no log),
@@ -1886,15 +1924,12 @@ object Lakehouse {
       } else 0
     val schemaJson = cur.schemaJson
       .getOrElse(schemaOf(spark, path, cur).json)
-    // the fresh base lands ALONGSIDE the old files under names no
-    // other commit can claim (the next version is ours — the lock
-    // serializes writers), so nothing is destroyed before the commit
-    val staged = s"${path}_rebuild"
-    Layout.zorder(scanOf(spark, path, cur), cols, bits, parts)
-      .write.mode("overwrite").parquet(staged)
+    // the fresh base lands ALONGSIDE the old files under names unique
+    // to this write, so nothing is destroyed before the commit
     val next = cur.version + 1
-    val newNames = renameStagedIn(spark, staged, path,
-      k => f"base$next-part$k%05d.parquet")
+    val (_, newNames) = land(spark,
+      Layout.zorder(scanOf(spark, path, cur), cols, bits, parts), path,
+      s"base$next-")
     // THE commit: new data set, zero tombstones, epoch+1, floor reset —
     // one atomic marker rename. A crash before this line leaves only
     // orphaned base files (vacuum's job); after it, only stale
@@ -1910,7 +1945,7 @@ object Lakehouse {
     * commit never destroys what a concurrent reader may still be
     * reading; vacuum does, after every reasonable query has finished.
     * Sweeps dead data files, dead tombstone files, and superseded
-    * commit markers; crash orphans (staged files never committed) age
+    * commit markers; crash orphans (landed files no commit names) age
     * into the same sweep. File-count-bounded driver work; takes the
     * table lock so a mid-land writer's uncommitted files are never
     * candidates. A no-op on a folder with no log (its listing snapshot
@@ -1967,9 +2002,9 @@ object Lakehouse {
     *    on disk — a rewrite that crashed after its commit, before its
     *    manifest rebuild: dropped (pruned/point scans would raise on it
     *    forever), with a note to rebuild it.
-    *  - orphaned staging (`_incoming`, `_rebuild`, `_retain_rebuild`):
-    *    discarded — every writer stages fresh under
-    *    `mode("overwrite")`, so leftovers are dead bytes.
+    *  - orphaned manifest-slice staging (`_incoming`): discarded — a
+    *    landed slice removes its staging dir, so leftovers are dead
+    *    bytes (a crashed writer's data files are [[vacuum]]'s).
     *  - a commit marker's `tmp-` file: a commit that crashed mid-stage
     *    (the rename IS the commit), discarded.
     *  - a lease under `<path>_lock` older than `leaseMs`: taken over
@@ -2007,17 +2042,9 @@ object Lakehouse {
             }
           }
       }
-      Seq("_incoming", "_rebuild", "_retain_rebuild")
-        .map(s => new Path(s"$path$s"))
-        .filter(f.exists)
-        .foreach { p =>
-          // an EMPTY staging parent is normal residue of a completed
-          // write (stagers delete their subdir, not the parent) —
-          // clean it silently; only content is a crash orphan
-          val orphaned = f.listStatus(p).nonEmpty
-          f.delete(p, true)
-          if (orphaned) actions += s"discarded orphaned staging $p"
-        }
+      val incoming = new Path(s"${path}_incoming")
+      if (f.delete(incoming, true))
+        actions += s"discarded orphaned staging $incoming"
       // a commit marker's tmp file is a crashed commitWrite mid-stage:
       // the version never became visible (the rename is the commit),
       // so it is a plain orphan
@@ -2093,17 +2120,6 @@ object Lakehouse {
       // else: nothing at or below the floor to fold — a no-op
     }
 
-  /** First free numeric suffix for `prefix<k>.parquet` names in `dir`,
-    * scanned ON-DISK (live and vacuum-pending files both occupy their
-    * names until removed). */
-  private def nextIndexFor(spark: SparkSession, dir: String,
-                           prefix: String): Int =
-    parquetFiles(spark, dir).map(_.getName)
-      .filter(_.startsWith(prefix))
-      .map(_.stripPrefix(prefix).stripSuffix(".parquet"))
-      .filter(b => b.nonEmpty && b.forall(_.isDigit)).map(_.toInt)
-      .foldLeft(-1)(math.max) + 1
-
   private def compactRetainingBody(spark: SparkSession, path: String,
                                    cur: TableCommit,
                                    cols: Seq[String], retainAfter: Long,
@@ -2126,16 +2142,13 @@ object Lakehouse {
           .filter(col(GenCol) > retainAfter)
           .select(FileCol, PosCol, GenCol).cache())
       // rows of folded files that survive EVERY tombstone, any stamp:
-      // the new base — staged, then renamed in ALONGSIDE the old files
-      // (nothing is destroyed before the commit; vacuum cleans later)
-      val staging = s"${path}_retain_rebuild"
-      f.delete(new Path(staging), true)
-      Layout.zorder(readMinus(spark, path, cur, foldPaths, schema), cols,
-        bits, partitions).write.mode("overwrite").parquet(staging)
-      val baseNames = renameStagedIn(spark, staging, path,
-        k => f"base$next-part$k%05d.parquet")
-      def stage(df: DataFrame, destDir: String, prefix: String) =
-        stageSharded(spark, path, df, destDir, prefix, rowsPerFile)._2
+      // the new base — landed ALONGSIDE the old files (nothing is
+      // destroyed before the commit; vacuum cleans later)
+      val (_, baseNames) = land(spark,
+        Layout.zorder(readMinus(spark, path, cur, foldPaths, schema), cols,
+          bits, partitions), path, s"base$next-")
+      def landIn(df: DataFrame, destDir: String, prefix: String) =
+        landSharded(spark, df, destDir, prefix, rowsPerFile)._2
       val doomNames = scala.collection.mutable.ArrayBuffer.empty[String]
       val delNames = scala.collection.mutable.ArrayBuffer.empty[String]
       laterTs.foreach { ts =>
@@ -2158,7 +2171,7 @@ object Lakehouse {
           .collect().map(_.getLong(0)).sorted
         stamps.foreach { st =>
           val rows = doomed.filter(col(GenCol) === st).drop(GenCol)
-          val landedDoom = stage(rows, path, s"doom$st-")
+          val landedDoom = landIn(rows, path, s"doom$st-")
           doomNames ++= landedDoom
           // the remapped tombstones: every doom file dies WHOLE at
           // stamp st, so its positions are read straight off the
@@ -2171,7 +2184,7 @@ object Lakehouse {
                   -1).as(FileCol),
                 col("_metadata.row_index").as(PosCol),
                 lit(st).as(GenCol))
-            delNames ++= stage(remapped, dDir, s"del$st-")
+            delNames ++= landIn(remapped, dDir, s"del$st-")
           }
         }
         // later tombstones addressing KEPT files carry over verbatim
@@ -2187,7 +2200,7 @@ object Lakehouse {
         val keptStamps = onKept.select(GenCol).distinct()
           .collect().map(_.getLong(0)).sorted
         keptStamps.foreach { st =>
-          delNames ++= stage(onKept.filter(col(GenCol) === st), dDir,
+          delNames ++= landIn(onKept.filter(col(GenCol) === st), dDir,
             s"del$st-")
         }
         doomed.unpersist()
@@ -2217,13 +2230,10 @@ object Lakehouse {
         }
         val baseFiles = (baseNames ++ doomNames)
           .map(n => new Path(path, n).toString)
-        if (baseFiles.nonEmpty) {
-          val tmp = s"${path}_incoming/manifestbase"
-          Layout.statsManifest(
-              spark.read.schema(schema).parquet(baseFiles: _*), cols)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          renameStagedIn(spark, tmp, mDir, _ => "base.parquet")
-        }
+        if (baseFiles.nonEmpty)
+          landSlice(spark, path, Layout.statsManifest(
+              spark.read.schema(schema).parquet(baseFiles: _*), cols),
+            mDir, "base.parquet")
       }
       rebuildBloomManifests(spark, path, now)
   }

@@ -365,8 +365,8 @@ object Layout {
     * resident data: the batch is z-ordered over its own observed
     * domain (each new file still covers a tight box — cross-batch key
     * compatibility is irrelevant, per-file min/max is what prunes),
-    * staged under `<path>_incoming/`, renamed in alongside under
-    * commit-version-salted names (`part-v<version>-<k>.parquet`), and
+    * landed in place alongside under names unique to the write
+    * (`part-v<version>-…parquet`, [[graft.core.Lakehouse.land]]), and
     * the manifest extended with JUST the new files' stats (manifest
     * dirs are append-friendly parquet). The incremental cost is one
     * pass over the BATCH — the 100 TB history is never rescanned.
@@ -399,12 +399,8 @@ object Layout {
     // is the contract the first batch must honor too
     Lakehouse.schemaContract(spark, path, c)
       .foreach(requireSameSchema(_, batch.schema, "appendZordered"))
-    val version = c.version + 1
-    val staging = s"${path}_incoming/part-v$version"
-    zorder(batch, cols, bits, partitions)
-      .write.mode("overwrite").parquet(staging)
-    val fresh = Lakehouse.renameStagedIn(spark, staging, path,
-      k => f"part-v$version-$k%05d.parquet")
+    val (_, fresh) = Lakehouse.land(spark,
+      zorder(batch, cols, bits, partitions), path, s"part-v${c.version + 1}-")
     // the live set advances by commit — files in the directory are
     // invisible to readers until this lands
     Lakehouse.commitAdvance(spark, path, c, addData = fresh,
@@ -446,9 +442,9 @@ object Layout {
     * at-least-once delivery (a replayed call with the same `gen`
     * replaces EXACTLY its own files and manifest slice, nothing else —
     * the [[graft.streaming.Streaming.foldLedgerStream]] discipline
-    * applied to table files): the batch is z-ordered into a staging
-    * dir, the staged parts move in under commit-version-SALTED names
-    * (`gen<id>-v<version>-part<k>`), and ONE commit adds them while
+    * applied to table files): the batch is z-ordered and landed in
+    * place under names unique to the write (`gen<id>-v<version>-…`),
+    * and ONE commit adds them while
     * dropping any prior attempt's `gen<id>-*` entries (the replay
     * case) from the live set — the dead files ride
     * [[graft.core.Lakehouse.vacuum]]'s grace window, so a reader that
@@ -481,11 +477,9 @@ object Layout {
       extraAddDeletes: Seq[String]): Unit = {
     Lakehouse.schemaContract(spark, path, c)
       .foreach(requireSameSchema(_, batch.schema, "appendGeneration"))
-    val staging = s"${path}_incoming/gen$gen"
-    zorder(batch, cols, bits, partitions)
-      .write.mode("overwrite").parquet(staging)
-    val mine = Lakehouse.renameStagedIn(spark, staging, path,
-      k => f"gen$gen-v${c.version + 1}-part$k%05d.parquet")
+    val (_, mine) = Lakehouse.land(spark,
+      zorder(batch, cols, bits, partitions), path,
+      s"gen$gen-v${c.version + 1}-")
     // the generation replaces exactly its own names in the live set —
     // an O(generation) delta marker, not a full-state rewrite.
     // `extraAddDeletes`: a lock-holding upsert/CDC-apply's DEFERRED
@@ -499,13 +493,10 @@ object Layout {
     mDir.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(new org.apache.hadoop.fs.Path(mDir, s"gen$gen.parquet"), false)
     if (mine.nonEmpty) {
-      val tmp = s"${path}_incoming/manifest$gen"
       val genDf = spark.read.schema(Lakehouse.nullableCopy(batch.schema))
         .parquet(mine.map(n => s"$path/$n"): _*)
-      statsManifest(genDf, cols)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      Lakehouse.renameStagedIn(spark, tmp, mDir.toString,
-        _ => s"gen$gen.parquet")
+      Lakehouse.landSlice(spark, path, statsManifest(genDf, cols),
+        mDir.toString, s"gen$gen.parquet")
       // Bloom manifests get the generation's slice under the SAME
       // replace-your-own-slice discipline (a replay rewrites exactly
       // its own gen<id>.parquet), so point lookups keep pruning
@@ -514,11 +505,9 @@ object Layout {
         val key = bDir.getName.stripPrefix(
           s"${new org.apache.hadoop.fs.Path(path).getName}_bloom_")
         val (keys, fpp) = bloomGeometry(spark, bDir.toString)
-        val bTmp = s"${path}_incoming/bloom$gen-$key"
-        bloomManifest(genDf, key, keys, fpp)
-          .coalesce(1).write.mode("overwrite").parquet(bTmp)
-        Lakehouse.renameStagedIn(spark, bTmp, bDir.toString,
-          _ => s"gen$gen.parquet")
+        Lakehouse.landSlice(spark, path,
+          bloomManifest(genDf, key, keys, fpp), bDir.toString,
+          s"gen$gen.parquet")
       }
     }
   }

@@ -35,6 +35,16 @@ class EntrySpec extends SparkSpec {
     assert(!e.getMessage.contains("once"))
   }
 
+  test("every golden-parquet oracle reads a file under this checkout's golden/") {
+    val golden = s"${sys.props("user.dir")}/golden/"
+    val read = "read_parquet\\('([^']*golden/[^']*)'\\)".r
+    val paths = SparkEntry.gates.flatMap(g => read.findAllMatchIn(g.oracle).map(_.group(1)))
+    assert(paths.size == 5, paths.mkString(", "))
+    paths.foreach { p =>
+      assert(p.startsWith(golden) && new java.io.File(p).isFile, s"$p is not a file under $golden")
+    }
+  }
+
   SparkEntry.gates.sortBy(_.name).foreach { g =>
     test(s"query ${g.name} runs at sf0.001") {
       val df = g.plan(spark, sf0)

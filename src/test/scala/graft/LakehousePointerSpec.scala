@@ -542,7 +542,8 @@ class LakehousePointerSpec extends SparkSpec {
         bits = 6, partitions = 1)
     }
     assert(new java.io.File(path).listFiles().map(_.getName)
-      .filter(_.startsWith("gen")).forall(_.matches("gen\\d+-v\\d+-part\\d+\\.parquet")),
+      .filter(_.startsWith("gen"))
+      .forall(_.matches("gen\\d+-v\\d+-[0-9a-f]+p\\d+a\\d+\\.parquet")),
       "pointered generations land under commit-version-salted names")
     val inflight = Lakehouse.scan(spark, path) // resolves gens 0..2
     Lakehouse.rollback(spark, path, gen = 1L)

@@ -1023,13 +1023,10 @@ class LakehouseSpec extends SparkSpec {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     // healthy table: recover does nothing
     assert(Lakehouse.recover(spark, path).isEmpty)
-    // a crashed writer's staging: an empty rebuild dir and a staged
-    // generation under _incoming
-    f.mkdirs(p(s"${path}_rebuild"))
-    f.mkdirs(p(s"${path}_incoming/gen9"))
+    // a crashed writer's staging: a manifest slice under _incoming
+    f.mkdirs(p(s"${path}_incoming/manifest9"))
     val acts = Lakehouse.recover(spark, path)
     assert(acts.exists(_.contains("orphaned")), acts.mkString("; "))
-    assert(!f.exists(p(s"${path}_rebuild")))
     assert(!f.exists(p(s"${path}_incoming")))
     assert(Lakehouse.scan(spark, path)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq == before)
