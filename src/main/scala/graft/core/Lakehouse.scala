@@ -795,8 +795,9 @@ object Lakehouse {
       .select(FileCol, PosCol))
   }
 
-  /** Generation stamp in a tombstone file name `del<g>-<seq>.parquet`;
-    * −1 base-gen deletes are written as `del-1-<seq>` and parse back. */
+  /** Generation stamp in a tombstone file name `del<g>-<rest>.parquet`
+    * (`<rest>` holds no `-`); −1 base-gen deletes are written as
+    * `del-1-<rest>` and parse back. */
   private[core] def delGenOf(name: String): Long = {
     val body = name.stripPrefix("del").stripSuffix(".parquet")
     val dash = body.lastIndexOf('-')
@@ -858,14 +859,8 @@ object Lakehouse {
             Some(keyed.join(side, Seq(FileCol, PosCol), "left_anti")
               .drop(FileCol, PosCol))
           }
-        (cleanDf, touchedDf) match {
-          case (Some(cl), Some(t)) => cl.unionByName(t)
-          case (Some(cl), None) => cl
-          case (None, Some(t)) => t
-          case (None, None) =>
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
+        // `files` is non-empty, so one side at least is present
+        Seq(cleanDf, touchedDf).flatten.reduce(_ unionByName _)
     }
   }
 
@@ -994,9 +989,17 @@ object Lakehouse {
     if (sample.isEmpty) return Seq.empty
     // hashes through Spark's own xxhash64 at the key's exact type —
     // the build side hashed xxhash64(col(keyCol))
-    val hashes = spark.range(1)
+    bloomKept(spark, bDir, files, spark.range(1)
       .select(sample.toSeq.map(v => xxhash64(lit(v).cast(kt))): _*)
-      .head().toSeq.map(_.asInstanceOf[Long])
+      .head().toSeq.map(_.asInstanceOf[Long]))
+  }
+
+  /** The `files` the Bloom manifest at `bDir` cannot rule out for any
+    * of `hashes`: each manifested file whose sketch might hold one, and
+    * every file it does not name (appended after it was built). ONE
+    * manifest-sized job answers both. */
+  private def bloomKept(spark: SparkSession, bDir: String,
+                        files: Seq[String], hashes: Seq[Long]): Seq[String] = {
     val probed = spark.read.schema(Layout.BloomManifestSchema).parquet(bDir)
       .select(col("__file"),
         graft.expressions.GraftExpressions
@@ -1156,16 +1159,15 @@ object Lakehouse {
   private[core] def landSlice(spark: SparkSession, path: String,
                               slice: DataFrame, destDir: String,
                               name: String): Unit = {
-    val staged = new Path(s"${path}_incoming")
-    slice.coalesce(1).write.mode("overwrite").parquet(staged.toString)
+    val staged = s"${path}_incoming"
+    val part = new Path(staged, land(spark, slice.coalesce(1), staged,
+      "slice")._2.head)
     val f = fs(spark, destDir)
-    val part = f.listStatus(staged).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).head
     val dst = new Path(destDir, name)
     f.mkdirs(dst.getParent)
-    if (f.exists(dst)) f.delete(dst, false)
+    f.delete(dst, false)
     require(f.rename(part, dst), s"rename $part -> $dst failed")
-    f.delete(staged, true)
+    f.delete(new Path(staged), true)
   }
 
   /** Point lookup through the Bloom membership manifest
@@ -1188,7 +1190,6 @@ object Lakehouse {
     require(fs(spark, path).exists(new Path(bDir)),
       s"pointLookup: no Bloom manifest at $bDir — run " +
         s"Layout.writeBloomManifest(spark, path, \"$keyCol\") first")
-    val bm = spark.read.schema(Layout.BloomManifestSchema).parquet(bDir)
     val c = resolve(spark, path)
     val schema = schemaOf(spark, path, c)
     // probe hashes computed THROUGH Spark's own xxhash64 (one 1-row
@@ -1209,19 +1210,8 @@ object Lakehouse {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val typed = surviving.map(i => casted(i))
     val hashes = surviving.map(i => probeRow.getLong(2 * i + 1))
-    // ONE manifest-sized job answers both "which files are manifested"
-    // and "which might hold a probed key"
-    val probed = bm.select(col("__file"),
-        graft.expressions.GraftExpressions
-          .bloomMightContainAny(col("__bloom"), hashes).as("__might"))
-      .collect()
-    val manifested = probed.map(r => fileName(r.getString(0))).toSet
-    val kept = probed.filter(r => r.getAs[Any]("__might") == true)
-      .map(r => fileName(r.getString(0))).toSet
-    val files = livePaths(path, c)
-      .filter(f => kept.contains(fileName(f)) ||
-        !manifested.contains(fileName(f)))
-    readMinus(spark, path, c, files, schema)
+    readMinus(spark, path, c, bloomKept(spark, bDir, livePaths(path, c),
+      hashes), schema)
       // the re-applied exact predicate uses the SAME casts the hashes
       // rode, so probe typing can never split the two answers
       .filter(col(keyCol).isin(typed: _*))
@@ -1863,16 +1853,18 @@ object Lakehouse {
         removeDeletes = c.deletes.filter(n => delGenOf(n) > gen),
         epoch = c.epoch + 1)
       def genSlicesAfter(dir: String): Seq[Path] =
-        parquetFiles(spark, dir).filter { p =>
-          val digits = p.getName.stripPrefix("gen").stripSuffix(".parquet")
-          p.getName.startsWith("gen") && digits.nonEmpty &&
-            digits.forall(_.isDigit) && digits.toLong > gen
-        }
+        parquetFiles(spark, dir).filter(p => sliceGenOf(p).exists(_ > gen))
       genSlicesAfter(s"${path}_manifest").foreach(p => f.delete(p, false))
       bloomDirsOf(spark, path)
         .foreach(b => genSlicesAfter(b.toString)
           .foreach(p => f.delete(p, false)))
     }
+
+  /** The generation a manifest slice `gen<g>.parquet` covers. */
+  private def sliceGenOf(p: Path): Option[Long] =
+    Some(p.getName.stripPrefix("gen").stripSuffix(".parquet"))
+      .filter(d => p.getName.startsWith("gen") && d.nonEmpty &&
+        d.forall(_.isDigit)).map(_.toLong)
 
   /** The table's Bloom membership manifest directories
     * (`<path>_bloom_<keyCol>`), with their key column names. */
@@ -2067,11 +2059,8 @@ object Lakehouse {
     * stale-safe full keeps. */
   private def rebuildBloomManifests(spark: SparkSession, path: String,
                                     c: TableCommit): Unit =
-    bloomDirsOf(spark, path).foreach { p =>
-      val (keys, fpp) = Layout.bloomGeometry(spark, p.toString)
-      Layout.writeBloomManifestFrom(spark, path, c,
-        p.getName.stripPrefix(s"${new Path(path).getName}_bloom_"), keys,
-        fpp)
+    Layout.bloomManifestsOf(spark, path).foreach { case (_, key, keys, fpp) =>
+      Layout.writeBloomManifestFrom(spark, path, c, key, keys, fpp)
     }
 
   /** Retention-preserving compaction: fold the delete debt and small
@@ -2190,13 +2179,9 @@ object Lakehouse {
         // later tombstones addressing KEPT files carry over verbatim
         // (their files are untouched), re-landed under fresh names so
         // the old tombstone files can be vacuumed with the fold
-        val keepNamesDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(keep.map(
-            org.apache.spark.sql.Row(_)), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(FileCol,
-              org.apache.spark.sql.types.StringType))))
-        val onKept = ts.join(broadcast(keepNamesDf), Seq(FileCol))
+        val onKept = ts.join(
+          broadcast(spark.createDataFrame(keep.map(Tuple1(_))).toDF(FileCol)),
+          Seq(FileCol))
         val keptStamps = onKept.select(GenCol).distinct()
           .collect().map(_.getLong(0)).sorted
         keptStamps.foreach { st =>
@@ -2221,13 +2206,9 @@ object Lakehouse {
       // moved), land the new base's slice deterministically
       val mDir = s"${path}_manifest"
       if (f.exists(new Path(mDir))) {
-        parquetFiles(spark, mDir).foreach { p =>
-          val digits = p.getName.stripPrefix("gen").stripSuffix(".parquet")
-          val isKeptSlice = p.getName.startsWith("gen") &&
-            digits.nonEmpty && digits.forall(_.isDigit) &&
-            digits.toLong > retainAfter
-          if (!isKeptSlice) f.delete(p, false)
-        }
+        parquetFiles(spark, mDir)
+          .filterNot(p => sliceGenOf(p).exists(_ > retainAfter))
+          .foreach(f.delete(_, false))
         val baseFiles = (baseNames ++ doomNames)
           .map(n => new Path(path, n).toString)
         if (baseFiles.nonEmpty)

@@ -1,5 +1,9 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -417,24 +421,40 @@ object Layout {
       // just did): without the new files' sketches every appended
       // row's lookup degrades to a stale-safe full keep until a
       // compact. Sized under each manifest's own recorded geometry.
-      graft.core.Lakehouse.bloomDirsOf(spark, path).foreach { bDir =>
-        val key = bDir.getName.stripPrefix(
-          s"${new org.apache.hadoop.fs.Path(path).getName}_bloom_")
-        val (keys, fpp) = bloomGeometry(spark, bDir.toString)
+      bloomManifestsOf(spark, path).foreach { case (bDir, key, keys, fpp) =>
         bloomManifest(freshDf, key, keys, fpp)
           .coalesce(1).write.mode("append").parquet(bDir.toString)
       }
     }
   }
 
-  /** A Bloom manifest's recorded (expectedKeysPerFile, fpp) geometry —
-    * the sizing its extension slices and rebuilds must reproduce. */
-  private[core] def bloomGeometry(spark: org.apache.spark.sql.SparkSession,
-                                  bDir: String): (Long, Double) = {
-    spark.read.schema(BloomManifestSchema).parquet(bDir)
-      .select("__keys", "__fpp").filter(col("__keys").isNotNull)
-      .take(1).headOption
-      .map(r => (r.getLong(0), r.getDouble(1))).getOrElse((1L << 21, 0.01))
+  /** Each Bloom manifest of `path` as (dir, key column, recorded
+    * expectedKeysPerFile, fpp) — the geometry its extension slices and
+    * rebuilds must reproduce. Both geometry columns are constant in a
+    * manifest, so a slice's footer statistics hold them (min = max =
+    * the value): read on the driver, no job. A manifest built before
+    * those columns existed, or holding no rows, gets the defaults. */
+  private[core] def bloomManifestsOf(spark: org.apache.spark.sql.SparkSession,
+                                     path: String)
+      : Seq[(org.apache.hadoop.fs.Path, String, Long, Double)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val prefix = s"${new org.apache.hadoop.fs.Path(path).getName}_bloom_"
+    Lakehouse.bloomDirsOf(spark, path).map { dir =>
+      val (keys, fpp) = dir.getFileSystem(conf).listStatus(dir).iterator
+        .filter(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
+          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+          val mins = try r.getFooter.getBlocks.asScala
+              .flatMap(_.getColumns.asScala)
+              .filter(_.getStatistics.hasNonNullValue)
+              .map(c => c.getPath.toDotString -> c.getStatistics.genericGetMin)
+              .toMap
+            finally r.close()
+          for (k <- mins.get("__keys"); p <- mins.get("__fpp"))
+            yield (k.asInstanceOf[java.lang.Long].longValue,
+              p.asInstanceOf[java.lang.Double].doubleValue)
+        }.nextOption().getOrElse((1L << 21, 0.01))
+      (dir, dir.getName.stripPrefix(prefix), keys, fpp)
+    }
   }
 
   /** Idempotent per-generation append — the exactly-once building
@@ -501,10 +521,7 @@ object Layout {
       // replace-your-own-slice discipline (a replay rewrites exactly
       // its own gen<id>.parquet), so point lookups keep pruning
       // appended generations instead of stale-safe full-keeping them
-      graft.core.Lakehouse.bloomDirsOf(spark, path).foreach { bDir =>
-        val key = bDir.getName.stripPrefix(
-          s"${new org.apache.hadoop.fs.Path(path).getName}_bloom_")
-        val (keys, fpp) = bloomGeometry(spark, bDir.toString)
+      bloomManifestsOf(spark, path).foreach { case (bDir, key, keys, fpp) =>
         Lakehouse.landSlice(spark, path,
           bloomManifest(genDf, key, keys, fpp), bDir.toString,
           s"gen$gen.parquet")

@@ -494,6 +494,39 @@ class LakehouseSpec extends SparkSpec {
       == Seq(7L, 1234L, 3999L))
   }
 
+  test("a Bloom manifest's recorded geometry carries through appends, " +
+      "generation slices and compaction; one without it gets the " +
+      "defaults") {
+    val path = tmp("lake-bloomgeom")
+    val bDir = s"${path}_bloom_id"
+    val mk = (lo: Long, hi: Long) => spark.range(lo, hi).select(col("id"),
+      (col("id") % 100).cast("double").as("x"))
+    Lakehouse.appendAt(spark, path, mk(0L, 1000L), Seq("id"), gen = 0L,
+      bits = 6, partitions = 4)
+    Layout.writeBloomManifest(spark, path, "id",
+      expectedKeysPerFile = 1000L, fpp = 0.001)
+    def geometry = spark.read.parquet(bDir).select("__keys", "__fpp")
+      .distinct().collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+    // a generation slice, an appended slice, then a full rebuild
+    Lakehouse.appendAt(spark, path, mk(1000L, 1100L), Seq("id"),
+      gen = 1L, bits = 6, partitions = 1)
+    assert(geometry == Set((1000L, 0.001)))
+    Lakehouse.append(spark, path, mk(1100L, 1200L), Seq("id"), bits = 6,
+      partitions = 1)
+    assert(geometry == Set((1000L, 0.001)))
+    Lakehouse.compact(spark, path, Seq("id"), bits = 6, partitions = 2)
+    assert(geometry == Set((1000L, 0.001)))
+    assert(Lakehouse.pointLookup(spark, path, "id", Seq(7L, 1150L))
+      .count() == 2L)
+    // a manifest written before the geometry columns existed
+    Layout.bloomManifest(Lakehouse.scan(spark, path), "id", 1000L, 0.001)
+      .drop("__keys", "__fpp").write.mode("overwrite").parquet(bDir)
+    Lakehouse.compact(spark, path, Seq("id"), bits = 6, partitions = 2)
+    assert(geometry == Set((1L << 21, 0.01)))
+    assert(Lakehouse.pointLookup(spark, path, "id", Seq(7L, 1150L))
+      .count() == 2L)
+  }
+
   test("an all-null key file carries a NULL bloom sketch and is " +
       "skipped soundly") {
     val path = tmp("lake-nullkey")
